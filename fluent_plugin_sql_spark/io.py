@@ -152,6 +152,9 @@ def load_table(
     else:
         df = spark.read.parquet(path)
         if key is not None:
+            # an older (mtime, size) of this file can never hit again
+            for k in [k for k in _schema_cache if k[0] == path]:
+                del _schema_cache[k]
             _schema_cache[key] = df.schema
     for c in nanos:
         if keep_ns:
@@ -179,6 +182,12 @@ def load_table(
                     ),
                 )
     if tkey is not None:
+        # same rule for the plans: this session's entries for an older
+        # version of the file are dead weight (other sessions' entries
+        # are dropped by the size cap above)
+        for k in [k for k in _table_cache if k[0] == tkey[0] and k[2] == path]:
+            if k[3:] != tkey[3:]:
+                del _table_cache[k]
         _table_cache[tkey] = df
     return df
 

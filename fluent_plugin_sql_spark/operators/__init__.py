@@ -16,15 +16,4 @@ from .cluster import (  # noqa: F401
     semdedup_cap_stats,
     semdedup_prune,
 )
-from .native_codecs import native_image_decode, webp_available  # noqa: F401
 from .similarity import brute_force_topk, cosine, hyperplane_buckets, lsh_topk  # noqa: F401
-from .multimodal import (  # noqa: F401
-    gif_frames,
-    gif_pixels,
-    jpeg_pixels,
-    mjpeg_frame_spans,
-    png_pixels,
-    sample_video_frames,
-    tiff_pixels,
-    wav_pcm16_samples,
-)

@@ -116,6 +116,9 @@ class RollupStore:
                 raise ValueError(
                     f"hist_cols[{c!r}]: need hi > lo and nb > 0, got ({lo}, {hi}, {nb})"
                 )
+            # the bin projection quotes the name in backticks
+            if "`" in c:
+                raise ValueError(f"hist_cols[{c!r}]: column name must not contain '`'")
         # col -> k: mergeable top-k value tracking.  Partials keep the
         # top 8*k candidates per group (SpaceSaving-style truncation) —
         # merging truncated candidate sets can in principle demote a true
@@ -176,7 +179,13 @@ class RollupStore:
             # costs ~1 s of py4j round-trips per absorb (same driver
             # stall as similarity._hyperplane_bucket_sql documents).
             bin_projs = []
+            taken = {n.lower() for n in df.columns}
             for c, (lo, hi, nb) in self.hist_cols.items():
+                if f"_bin_{c}".lower() in taken:
+                    raise ValueError(
+                        f"hist_cols[{c!r}]: input already has a column "
+                        f"'_bin_{c}', which the histogram bin projection uses"
+                    )
                 bw = (hi - lo) / nb
                 bin_projs.append(
                     f"CASE WHEN `{c}` < {lo!r}D THEN 0 "

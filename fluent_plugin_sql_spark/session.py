@@ -34,19 +34,6 @@ def get_spark(
       deterministic and match the DuckDB oracle (naive-UTC).
     """
     cpus = default_parallelism()
-    # the 64 KB split-sizing floors below exist to fix measured
-    # single-task stages on SMALL single-file inputs in local mode; on a
-    # cluster master the Spark defaults (4 MB open cost, 1 MB AQE floor)
-    # are kept — many-small-file workloads there would otherwise
-    # multiply task counts.  The env overrides still apply to both.
-    eff_master = master or os.environ.get("SPARK_MASTER") or f"local[{cpus}]"
-    is_local = eff_master.startswith("local")
-    open_cost = os.environ.get(
-        "SPARK_GRAFT_OPEN_COST", str(64 * 1024) if is_local else None
-    )
-    min_part = os.environ.get(
-        "SPARK_GRAFT_MIN_PARTITION_SIZE", str(64 * 1024) if is_local else None
-    )
     builder = (
         SparkSession.builder.appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
@@ -80,34 +67,6 @@ def get_spark(
         # files outnumber cores and this is a no-op; on small inputs it
         # keeps every core busy.  AQE still coalesces downstream.
         .config("spark.sql.files.minPartitionNum", str(cpus))
-        # make the split floor actually bind (guide §6): maxSplitBytes =
-        # min(maxPartitionBytes, max(openCostInBytes, totalBytes/minPartitionNum)),
-        # so with the default 4 MB openCostInBytes every table under
-        # ~4 MB×cores still scans as a handful of splits — measured: the
-        # minhash signature stage and the ANN scoring stage each ran as
-        # ONE 0.6-1.0 s task with 31 cores idle at sf0.1.  64 KB keeps
-        # the floor at minPartitionNum for small files; at cluster scale
-        # totalBytes/minPartitionNum >> openCost so this is inert (its
-        # only cluster effect — the per-file packing charge for
-        # many-small-file tables — is sized by SPARK_GRAFT_OPEN_COST;
-        # deployments drowning in tiny files should set it back up and
-        # fix the file sizing upstream per guide §6).
-        .config(
-            "spark.sql.files.openCostInBytes",
-            open_cost or "4194304",  # Spark default when non-local
-        )
-        # AQE coalescing's floor on post-shuffle partition sizes: the
-        # default 1 MB collapses every small shuffle to ONE reduce task
-        # (measured: the MergingSessions stage of session_windows ran
-        # 0.3-0.4 s single-task behind a 1.9 MB exchange).  64 KB lets
-        # parallelismFirst spread small shuffles across the cores;
-        # inert at scale, where partitions are sized by
-        # advisoryPartitionSizeInBytes (parallelismFirst only shrinks
-        # below advisory when the shuffle is small relative to cores).
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            min_part or "1048576",  # Spark default when non-local
-        )
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
@@ -119,4 +78,48 @@ def get_spark(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    _set_split_floors(spark)
     return spark
+
+
+def _set_split_floors(spark: SparkSession) -> None:
+    """Lower two split-sizing floors to 64 KB when the session runs on a
+    local master.
+
+    The floors fix measured single-task stages on SMALL single-file
+    inputs in local mode.  On a cluster master the Spark defaults (4 MB
+    open cost, 1 MB AQE floor) or the deployment's own settings are
+    kept — many-small-file workloads there would otherwise multiply task
+    counts.  The decision reads the master the session actually runs on,
+    so a master set by spark-defaults.conf, ``spark-submit --master`` or
+    an already running session counts.  Both are runtime SQL confs, so
+    they can be set after the build.  The env overrides apply to both.
+
+    - ``spark.sql.files.openCostInBytes`` makes the ``minPartitionNum``
+      split floor actually bind (guide §6): maxSplitBytes =
+      min(maxPartitionBytes, max(openCostInBytes,
+      totalBytes/minPartitionNum)), so with the default 4 MB every table
+      under ~4 MB×cores still scans as a handful of splits — measured:
+      the minhash signature stage and the ANN scoring stage each ran as
+      ONE 0.6-1.0 s task with 31 cores idle at sf0.1.  Deployments
+      drowning in tiny files should leave it at the default and fix the
+      file sizing upstream.
+    - ``spark.sql.adaptive.coalescePartitions.minPartitionSize`` is AQE
+      coalescing's floor on post-shuffle partition sizes: the default
+      1 MB collapses every small shuffle to ONE reduce task (measured:
+      the MergingSessions stage of session_windows ran 0.3-0.4 s
+      single-task behind a 1.9 MB exchange).  64 KB lets
+      parallelismFirst spread small shuffles across the cores.
+    """
+    is_local = spark.sparkContext.master.startswith("local")
+    floor = str(64 * 1024) if is_local else None
+    for key, env in (
+        ("spark.sql.files.openCostInBytes", "SPARK_GRAFT_OPEN_COST"),
+        (
+            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
+            "SPARK_GRAFT_MIN_PARTITION_SIZE",
+        ),
+    ):
+        value = os.environ.get(env, floor)
+        if value is not None:
+            spark.conf.set(key, value)

@@ -48,7 +48,6 @@ SLOW_TESTS = {
     "tests/test_semdedup_recovery.py::TestCrossShardRecovery::test_recovers_cross_shard_prunes",
     "tests/test_semdedup_recovery.py::TestCrossShardRecovery::test_vectorized_mode_matches_fold",
     "tests/test_semdedup_recovery.py::TestCrossShardRecovery::test_noop_when_no_cap_engages",
-    "tests/test_codec_hook.py::test_injected_codec_output_feeds_builtin_chain",
     "tests/test_dirty_corpus.py::test_near_dedup_stream_survives_dirty_batches",
     "tests/test_advice_r10.py::TestSemdedupFlatCapValidation::test_valid_caps_still_accepted",
     "tests/test_stream_source.py::test_run_streaming_semantic_dedup_config",
@@ -61,12 +60,27 @@ SLOW_TESTS = {
 def pytest_configure(config):
     config.addinivalue_line(
         "markers",
-        "slow: long e2e/property test, skipped unless SPARK_GRAFT_RUN_SLOW=1",
+        "slow: long e2e/property test, skipped unless SPARK_GRAFT_RUN_SLOW=1 "
+        "or the -m expression selects slow",
+    )
+
+
+def _markexpr_selects_slow(config) -> bool:
+    """True when the ``-m`` expression selects the slow tier (``-m slow``,
+    ``-m "slow and not x"``): the tests it picks must then run, not skip."""
+    from _pytest.mark.expression import Expression
+
+    markexpr = config.getoption("markexpr", "")
+    return bool(markexpr) and Expression.compile(markexpr).evaluate(
+        lambda name, **_: name == "slow"
     )
 
 
 def pytest_collection_modifyitems(config, items):
-    run_slow = os.environ.get("SPARK_GRAFT_RUN_SLOW") == "1"
+    run_slow = (
+        os.environ.get("SPARK_GRAFT_RUN_SLOW") == "1"
+        or _markexpr_selects_slow(config)
+    )
     skip = pytest.mark.skip(
         reason="slow suite tail; set SPARK_GRAFT_RUN_SLOW=1 to run"
     )

@@ -36,30 +36,47 @@ def py_asof(left, right):
     return out
 
 
-@settings(max_examples=12, deadline=None)
-@given(left_events, right_events)
-def test_asof_matches_python_reference(spark, lefts, rights):
+def _check_against_reference(spark, lefts, rights):
     lefts = sorted(set(lefts))
     rights = sorted(set(rights))
     ldf = spark.createDataFrame(
         [(k, BASE + dt.timedelta(seconds=s), f"L{k}:{s}") for k, s in lefts],
         ["k", "t", "lname"],
     )
-    rows = [(k, BASE + dt.timedelta(seconds=s)) for k, s in rights]
+    rows = [(k, BASE + dt.timedelta(seconds=s), f"R{k}:{s}") for k, s in rights]
     rdf = (
-        spark.createDataFrame(rows, ["k", "t"])
+        spark.createDataFrame(rows, ["k", "t", "rname"])
         if rows
-        else spark.createDataFrame([], "k int, t timestamp")
+        else spark.createDataFrame([], "k long, t timestamp, rname string")
     )
     rdf = rdf.withColumn("rts", rdf["t"])
     got = {
-        (r["k"], r["t"]): r["rts_asof"]
+        (r["k"], r["t"]): (r["rts_asof"], r["rname_asof"], r["lname"])
         for r in asof_join(
-            ldf, rdf, on="k", left_ts="t", right_ts="t", right_cols=["rts"]
+            ldf, rdf, on="k", left_ts="t", right_ts="t", right_cols=["rts", "rname"]
         ).collect()
     }
     expected = py_asof(lefts, rights)
     assert len(got) == len(lefts)
     for (k, s), best in expected.items():
-        want = BASE + dt.timedelta(seconds=best) if best is not None else None
-        assert got[(k, BASE + dt.timedelta(seconds=s))] == want, (k, s)
+        want = (
+            (BASE + dt.timedelta(seconds=best), f"R{k}:{best}")
+            if best is not None
+            else (None, None)
+        )
+        assert got[(k, BASE + dt.timedelta(seconds=s))] == (*want, f"L{k}:{s}"), (k, s)
+
+
+def test_asof_fixed_case_matches_python_reference(spark):
+    """Default-run pin of the same property on one hand-picked input:
+    exact ts ties, a left row before every right row, a key with no
+    right rows and a right key with no left rows."""
+    lefts = [(0, 0), (0, 5), (0, 9), (1, 3), (1, 20), (2, 7)]
+    rights = [(0, 1), (0, 5), (0, 8), (1, 3), (1, 4), (3, 2)]
+    _check_against_reference(spark, lefts, rights)
+
+
+@settings(max_examples=12, deadline=None)
+@given(left_events, right_events)
+def test_asof_matches_python_reference(spark, lefts, rights):
+    _check_against_reference(spark, lefts, rights)

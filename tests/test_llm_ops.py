@@ -1260,6 +1260,19 @@ class TestDupClustersStar:
         assert a == b
         assert (6, 1) in b  # chain end reaches the chain min
         assert (33, 30) in b
+        # one seed of the (slow-tier) randomized cross-check: a 40-node
+        # random graph needs several contraction rounds, so the
+        # observe()-carried convergence checksum is exercised
+        import random
+
+        rng = random.Random(7)
+        edges = [(rng.randrange(40), rng.randrange(40)) for _ in range(50)]
+        pairs = spark.createDataFrame(
+            [(x, y) for x, y in edges if x != y], "doc_a long, doc_b long"
+        )
+        a = {(r["doc"], r["cluster_id"]) for r in dup_clusters(pairs).collect()}
+        b = {(r["doc"], r["cluster_id"]) for r in dup_clusters_star(pairs).collect()}
+        assert a == b
 
     def test_long_chain_converges_in_logarithmic_rounds(self, spark):
         """A 64-node chain needs ~63 label-propagation rounds but must

@@ -211,6 +211,25 @@ def test_batch_id_must_be_path_safe(spark, store_path):
         store.has_batch("x y")
 
 
+@pytest.mark.parametrize(
+    "hist_col, extra_col, match",
+    [
+        ("va`lue", None, "must not contain"),
+        ("value", "_bin_value", "already has a column"),
+    ],
+)
+def test_hist_cols_names_fail_fast(spark, store_path, hist_col, extra_col, match):
+    ev = _events(spark)
+    if extra_col is None:
+        with pytest.raises(ValueError, match=match):
+            _mk(spark, store_path, hist_cols={hist_col: (0.0, 1.0, 4)})
+        return
+    store = _mk(spark, store_path, hist_cols={hist_col: (0.0, 1.0, 4)})
+    with pytest.raises(ValueError, match=match):
+        store.absorb(ev.withColumn(extra_col, F.lit(1)), "b0")
+    assert not store.has_batch("b0")
+
+
 # property: arbitrary batch partitionings and event shapes
 
 
@@ -308,7 +327,8 @@ def test_histogram_quantiles_within_bin_width(spark, store_path):
     for b in range(3):
         store.absorb(ev.where(F.col("event_id") % 3 == b), f"b{b}")
     snap = store.snapshot().withColumn("p50", store.quantile_expr("value", 0.5))
-    got = {(r["w_start"], r["event_type"]): r["p50"] for r in snap.collect()}
+    rows = snap.collect()
+    got = {(r["w_start"], r["event_type"]): r["p50"] for r in rows}
     exact = {
         (r["w"], r["event_type"]): r["vals"]
         for r in ev.groupBy(F.date_trunc("day", "ts").alias("w"), "event_type")
@@ -317,6 +337,20 @@ def test_histogram_quantiles_within_bin_width(spark, store_path):
     }
     import math
 
+    # the merged bin counts equal a direct binning of the raw values
+    # (bin 0 underflow, nb + 1 overflow; NULL values land in no bin)
+    def bin_of(v):
+        if v < lo:
+            return 0
+        if v >= hi:
+            return nb + 1
+        return math.floor((v - lo) / bw) + 1
+
+    for r in rows:
+        want = [0] * (nb + 2)
+        for v in exact[(r["w_start"], r["event_type"])]:
+            want[bin_of(v)] += 1
+        assert r["hg_value"] == want, (r["w_start"], r["event_type"])
     for k, vals in exact.items():
         n = len(vals)
         emp = vals[max(0, math.ceil(0.5 * n) - 1)]

@@ -94,6 +94,22 @@ class TestCrossShardRecovery:
         assert fold == vec
 
 
+def test_vectorized_mode_matches_fold_small_capped_corpus(spark):
+    """Default-run cut of the parity above: a flat cap splits a 60-copy
+    cluster into shards, so both salted passes run in both modes."""
+    rows = [(i, [5.0] + [0.0] * (DIM - 1)) for i in range(60)]
+    for m in range(3):
+        for j in range(5):
+            v = [0.0] * DIM
+            v[m + 1] = 50.0 + j * 0.01
+            rows.append((1000 + m * 100 + j, v))
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    kw = dict(cross_shard_recovery=True, max_cluster_size=25)
+    fold = _keeps(df, **kw)
+    assert 1 <= sum(fold[i] for i in range(60)) < 60  # copies were pruned
+    assert _keeps(df, numeric_mode="vectorized", **kw) == fold
+
+
 def _keeps_small(df, **kw):
     return {
         r.vec_id: r.keep
