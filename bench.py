@@ -48,6 +48,126 @@ HEADLINE = [
 ]
 
 
+def bench_codecs(reps: int) -> dict[str, dict[str, float]]:
+    """Single-core decode throughput for the pure-python/numpy codecs
+    (MB/s and images/s per core) over a fixed deterministic corpus.
+    Decode runs per-core inside mapInPandas at scale, so per-core numbers
+    size a cluster directly: core-hours per 100 TB = 100e6 / (MB/s) /
+    3600.  Encoders come from the test suite (they exist only to feed
+    the decoders); corpus content is seeded → runs are comparable."""
+    import numpy as np
+
+    import struct
+
+    sys.path.insert(0, str(Path(__file__).resolve().parent / "tests"))
+    from test_gif_decode import encode_gif
+    from test_jpeg_decode import Q1, encode_jpeg
+    from test_jpeg_progressive import encode_jpeg_progressive
+    from test_png_decode import encode_png
+    from test_tiff_decode import encode_tiff
+
+    from fluent_plugin_sql_spark.operators.multimodal import (
+        gif_frames,
+        jpeg_pixels,
+        png_pixels,
+        tiff_pixels,
+        wav_pcm16_samples,
+        webp_pixels,
+    )
+
+    rng = np.random.default_rng(42)
+    # photo-like content (smooth gradients + mild texture), not raw
+    # noise: noise is the pathological worst case for entropy-coded
+    # formats and would understate real-corpus throughput ~3-5×
+    yy, xx = np.mgrid[0:96, 0:96]
+    base = (
+        96.0
+        + 60.0 * np.sin(xx / 17.0)[:, :, None]
+        + 50.0 * np.cos(yy / 23.0)[:, :, None]
+        + np.array([0.0, 20.0, -20.0])[None, None, :]
+    )
+    imgs = [
+        np.clip(base + rng.normal(0, 6, (96, 96, 3)), 0, 255).astype(np.uint8)
+        for _ in range(32)
+    ]
+    q_std = np.full(64, 16, np.int32)  # coarse flat table ≈ web quality
+    # GIF: quantize each image to a 256-color palette (the format's model)
+    pal = np.arange(256 * 3, dtype=np.uint8).reshape(256, 3) % 256
+    gifs = [encode_gif([im[:, :, 0]], pal) for im in imgs]
+    # G.711 µ-law WAV: 1 s of telephony audio (8 kHz) per asset
+    mu_frames = bytes([(0x80 + i) % 256 for i in range(8000)])
+    fmt = struct.pack("<HHIIHH", 7, 1, 8000, 8000, 1, 8)
+    body = (
+        b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt
+        + b"data" + struct.pack("<I", len(mu_frames)) + mu_frames
+    )
+    wavs = [b"RIFF" + struct.pack("<I", len(body)) + body] * 32
+    # IMA ADPCM WAV: 1 s of 8 kHz speech-like audio per asset
+    # (505 samples/block = whole 4-byte code groups)
+    from test_ima_adpcm import _sine, encode_ima_wav
+    from test_webp_decode import encode_vp8l
+
+    adpcm_wavs = [
+        encode_ima_wav(_sine(8080, 1, seed), samples_per_block=505)[0]
+        for seed in range(32)
+    ]
+    corpora = {
+        "jpeg": ([encode_jpeg(im, q_std) for im in imgs], jpeg_pixels),
+        # successive-approximation progressive (DC+AC refinement scans),
+        # the other Huffman JPEG variant found in web corpora
+        "jpeg_progressive": (
+            [encode_jpeg_progressive(im, q_std, dc_al=1, ac_al=1) for im in imgs],
+            jpeg_pixels,
+        ),
+        "png": ([encode_png(im, 2, [4] * 96) for im in imgs], png_pixels),
+        "tiff": ([encode_tiff(im) for im in imgs], tiff_pixels),
+        "gif": (gifs, gif_frames),
+        # WebP lossless: subtract-green + LZ77 + color cache, the
+        # typical cwebp -lossless feature set
+        "webp_lossless": (
+            [encode_vp8l(im, subtract_green=True, lz77=True, cache_bits=6)
+             for im in imgs],
+            webp_pixels,
+        ),
+        "wav_g711": (wavs, wav_pcm16_samples),
+        "wav_adpcm": (adpcm_wavs, wav_pcm16_samples),
+    }
+    # system libwebp (when present): the native-codec hook's side of
+    # the same VP8L corpus, plus lossy VP8 — quantifies the documented
+    # "native is ~2 orders of magnitude faster" cluster-sizing claim
+    # with a measured number on this box
+    from fluent_plugin_sql_spark.operators import native_codecs as nc
+
+    if nc.webp_available():
+        corpora["webp_lossless_native"] = (
+            [nc.webp_encode_lossless_rgb(im) for im in imgs],
+            nc.webp_decode_rgb,
+        )
+        corpora["webp_lossy_native"] = (
+            [nc.webp_encode_rgb(im, 80.0) for im in imgs],
+            nc.webp_decode_rgb,
+        )
+    out: dict[str, dict[str, float]] = {}
+    for fmt, (payloads, decode) in corpora.items():
+        total_mb = sum(len(p) for p in payloads) / 1e6
+        best = float("inf")
+        for _ in range(reps):
+            t0 = time.perf_counter()
+            for p in payloads:
+                assert decode(p) is not None
+            best = min(best, time.perf_counter() - t0)
+        out[fmt] = {
+            "mb_per_s_core": round(total_mb / best, 2),
+            "images_per_s_core": round(len(payloads) / best, 1),
+            "corpus_mb": round(total_mb, 2),
+        }
+        if not fmt.startswith("wav_"):  # pixel formats: 96×96 each
+            out[fmt]["megapixels_per_s_core"] = round(
+                96 * 96 * len(payloads) / best / 1e6, 2
+            )
+    return out
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
@@ -106,9 +226,11 @@ def main() -> None:
             "med": round(statistics.median(samples), 3),
             "max": round(max(samples), 3),
         }
-    # full blob first (spread for the record), then the short headline
-    # line LAST: a bounded TAIL capture of stdout then always ends with
-    # a complete headline JSON
+    # full blob first (spread + codec axes for the record), then the
+    # short headline line LAST: the driver records a bounded TAIL of
+    # stdout, and round 8's artifact was unparseable because the codec
+    # table grew past the window and cut the FRONT of the single line —
+    # any tail capture now always ends with a complete headline JSON
     print(
         json.dumps(
             {
@@ -119,6 +241,10 @@ def main() -> None:
                 "spread": spread,
                 "reps": reps,
                 "sf": sf,
+                # separate axis: single-core codec decode throughput —
+                # not part of `value` (keeps the headline comparable to
+                # BASELINE.md across rounds)
+                "codecs": bench_codecs(reps),
             }
         )
     )

@@ -24,8 +24,9 @@ Layout
 - ``operators``  dedup (exact/OPH-minhash/simhash/jaccard/embedding +
                  connected-component clustering), similarity search
                  (brute force, LSH, persistable IVF), as-of & range
-                 joins, skew salting, incremental rollups, k-means
-                 clustering.
+                 joins, skew salting, multimodal decode (pure-stdlib
+                 BMP/PPM/PNG incl. Adam7+16-bit, baseline+progressive
+                 JPEG, MJPEG frame sampling, PCM WAV).
 - ``plans``      analytics query catalog (TPC-H shapes, windows, set ops,
                  quality filters, packing, funnels) — each entry paired
                  with a DuckDB oracle.

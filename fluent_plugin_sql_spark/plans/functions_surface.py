@@ -310,6 +310,29 @@ def embedding_vector_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
+    "multimodal_binary_meta",
+    oracle="""
+    SELECT doc_id,
+           octet_length(encode(text)) AS n_bytes,
+           md5(text) AS checksum
+    FROM documents
+    """,
+)
+def multimodal_binary_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Multimodal plumbing, oracle-checkable slice: binary payload
+    metadata (size + checksum) — the typed-metadata half of
+    operators/multimodal (decode itself is stubbed, see §8 map)."""
+    from ..operators.multimodal import attach_binary
+
+    d = attach_binary(_t(spark, sf_dir, "documents"), "text")
+    return d.select(
+        "doc_id",
+        F.col("media_meta.n_bytes").alias("n_bytes"),
+        F.col("media_meta.checksum_md5").alias("checksum"),
+    )
+
+
+@query(
     "map_functions",
     oracle="""
     SELECT l_orderkey, l_linenumber,
@@ -409,3 +432,1364 @@ def struct_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
         s.getField("nest").getField("status").alias("status"),
         F.round(s.getField("total") * 0.1, 4).alias("tenth"),
     )
+
+
+@query(
+    "image_pipeline_dims",
+    oracle="""
+    SELECT doc_id,
+           8 AS width,
+           6 AS height,
+           CAST(doc_id % 256 AS DOUBLE) AS brightness
+    FROM documents
+    """,
+)
+def image_pipeline_dims(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """END-TO-END image pipeline through the REAL pixel operators
+    (operators/multimodal): synthesize a uniform-fill PPM per document
+    (fill = doc_id % 256, source dims varying with doc_id), nearest-
+    neighbor resize to 8×6, then extract pixel features — all real byte
+    and numpy work, no codec.  The oracle is exact arithmetic: a uniform
+    image's brightness survives resize unchanged, so DuckDB predicts the
+    output without touching pixels.  Scale shape: three Arrow-batched
+    mapInPandas stages, constant memory per task, zero shuffles."""
+    from ..operators.multimodal import extract_pixel_features, resize_images
+
+    def synth(batches):
+        import numpy as np
+        import pandas as pd_
+
+        for pdf in batches:
+            rows = []
+            for doc_id in pdf["doc_id"]:
+                d = int(doc_id)
+                w, h, v = 4 + d % 5, 3 + d % 4, d % 256
+                arr = np.full((h, w, 3), v, np.uint8)
+                rows.append((d, b"P6\n%d %d\n255\n" % (w, h) + arr.tobytes()))
+            yield pd_.DataFrame(rows, columns=["doc_id", "payload"])
+
+    docs = (
+        _t(spark, sf_dir, "documents")
+        .select("doc_id")
+        # NULL ids cannot parameterize a synthetic payload; filtering
+        # JVM-side also keeps the Arrow batch int64 (a null makes
+        # pandas widen to float64 and int(NaN) kills the task)
+        .where(F.col("doc_id").isNotNull())
+    )
+    ppm = docs.mapInPandas(synth, "doc_id long, payload binary")
+    resized = resize_images(ppm, 8, 6, strict=True)
+    feats = extract_pixel_features(resized, strict=True)
+    return feats.select("doc_id", "width", "height", "brightness")
+
+
+def _dc_only_gray_jpeg(w: int, h: int, v: int) -> bytes:
+    """A uniform-fill grayscale baseline JPEG built byte-by-byte: DC-only
+    blocks at q=1 quantize losslessly, so decode returns exactly ``v`` —
+    the arithmetic oracles below rely on that exactness.  Canonical
+    Huffman declared via DHT (DC categories 0..11 at length 4, a single
+    1-bit EOB for AC); entropy scan with spec 1-padding + byte stuffing."""
+    import struct
+
+    def seg(m, body):
+        return bytes([0xFF, m]) + struct.pack(">H", len(body) + 2) + body
+
+    head = (
+        b"\xff\xd8"
+        + seg(0xDB, bytes([0]) + bytes([1] * 64))
+        + seg(0xC4, bytes([0x00, 0, 0, 0, 12] + [0] * 12) + bytes(range(12)))
+        + seg(0xC4, bytes([0x10, 1] + [0] * 15) + bytes([0]))
+        + seg(
+            0xC0,
+            bytes([8]) + struct.pack(">HH", h, w) + bytes([1, 1, 0x11, 0]),
+        )
+        + seg(0xDA, bytes([1, 1, 0x00, 0, 63, 0]))
+    )
+    bits: list[int] = []
+
+    def put(code: int, n: int) -> None:
+        bits.extend((code >> i) & 1 for i in range(n - 1, -1, -1))
+
+    diff = 8 * (v - 128)  # orthonormal DC of a uniform block
+    for b in range(((w + 7) // 8) * ((h + 7) // 8)):
+        dd = diff if b == 0 else 0
+        c = abs(dd).bit_length()
+        put(c, 4)
+        if c:
+            put(dd if dd >= 0 else dd + (1 << c) - 1, c)
+        put(0, 1)  # EOB
+    while len(bits) % 8:
+        bits.append(1)  # spec 1-padding
+    data = bytearray()
+    for i in range(0, len(bits), 8):
+        byte = 0
+        for bt in bits[i : i + 8]:
+            byte = (byte << 1) | bt
+        data.append(byte)
+        if byte == 0xFF:
+            data.append(0)  # byte stuffing
+    return head + bytes(data) + b"\xff\xd9"
+
+
+@query(
+    "jpeg_pipeline_brightness",
+    oracle="""
+    SELECT doc_id,
+           8 + 8 * (doc_id % 3) AS width,
+           8 + 8 * (doc_id % 2) AS height,
+           CAST(doc_id % 256 AS DOUBLE) AS brightness
+    FROM documents
+    """,
+)
+def jpeg_pipeline_brightness(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """END-TO-END compressed-image pipeline through the REAL baseline
+    JPEG decoder (operators/multimodal.jpeg_pixels): synthesize a
+    DC-only grayscale JPEG per document (uniform fill = doc_id % 256,
+    dims varying with doc_id; canonical Huffman tables declared via
+    DHT, entropy-coded scan with byte stuffing), then Huffman-decode +
+    IDCT back to pixels and extract features — real bitstream work, no
+    codec library.  The oracle is exact arithmetic: a uniform image's
+    DC coefficient quantizes losslessly at q=1, so the decoded
+    brightness is exactly the fill value and DuckDB predicts every row
+    without touching pixels.  Scale shape: two Arrow-batched
+    mapInPandas stages, constant memory per task, zero shuffles."""
+    from ..operators.multimodal import extract_pixel_features
+
+    def synth(batches):
+        import pandas as pd_
+
+        for pdf in batches:
+            rows = []
+            for doc_id in pdf["doc_id"]:
+                d = int(doc_id)
+                rows.append(
+                    (
+                        d,
+                        _dc_only_gray_jpeg(
+                            8 + 8 * (d % 3), 8 + 8 * (d % 2), d % 256
+                        ),
+                    )
+                )
+            yield pd_.DataFrame(rows, columns=["doc_id", "payload"])
+
+    docs = (
+        _t(spark, sf_dir, "documents")
+        .select("doc_id")
+        # NULL ids cannot parameterize a synthetic payload; filtering
+        # JVM-side also keeps the Arrow batch int64 (a null makes
+        # pandas widen to float64 and int(NaN) kills the task)
+        .where(F.col("doc_id").isNotNull())
+    )
+    jpegs = docs.mapInPandas(synth, "doc_id long, payload binary")
+    feats = extract_pixel_features(jpegs, strict=True)
+    return feats.select("doc_id", "width", "height", "brightness")
+
+
+def _exif_app1(orientation: int) -> bytes:
+    """Minimal EXIF APP1 segment: TIFF header + a one-entry IFD0 whose
+    only tag is Orientation (274, SHORT)."""
+    import struct
+
+    tiff = (
+        b"II"
+        + struct.pack("<H", 42)
+        + struct.pack("<I", 8)
+        + struct.pack("<H", 1)
+        + struct.pack("<HHI", 274, 3, 1)
+        + struct.pack("<H", orientation)
+        + b"\x00\x00"
+        + struct.pack("<I", 0)
+    )
+    body = b"Exif\x00\x00" + tiff
+    return b"\xff\xe1" + struct.pack(">H", len(body) + 2) + body
+
+
+@query(
+    "exif_orientation_features",
+    oracle="""
+    SELECT doc_id,
+           CASE WHEN doc_id % 8 >= 4 THEN 8 ELSE 16 END AS width,
+           CASE WHEN doc_id % 8 >= 4 THEN 16 ELSE 8 END AS height,
+           CAST(doc_id % 256 AS DOUBLE) AS brightness
+    FROM documents
+    """,
+)
+def exif_orientation_features(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """EXIF-orientation-aware image features: each document becomes a
+    16×8 DC-only JPEG carrying an APP1 Orientation tag of
+    1 + doc_id % 8; the decoder (multimodal.jpeg_exif_orientation +
+    _apply_orientation) must rotate to the DISPLAY frame, so the
+    transposing orientations (5-8) swap the reported dimensions while
+    brightness — rotation-invariant on a uniform fill — stays exactly
+    the fill value.  The oracle predicts every row with closed-form
+    arithmetic, the same exact-DC argument as jpeg_pipeline_brightness."""
+    from ..operators.multimodal import extract_pixel_features
+
+    def synth(batches):
+        import pandas as pd_
+
+        for pdf in batches:
+            rows = []
+            for doc_id in pdf["doc_id"]:
+                d = int(doc_id)
+                j = _dc_only_gray_jpeg(16, 8, d % 256)
+                seg = _exif_app1(1 + d % 8)
+                rows.append((d, j[:2] + seg + j[2:]))
+            yield pd_.DataFrame(rows, columns=["doc_id", "payload"])
+
+    docs = (
+        _t(spark, sf_dir, "documents")
+        .select("doc_id")
+        .where(F.col("doc_id").isNotNull())
+    )
+    jpegs = docs.mapInPandas(synth, "doc_id long, payload binary")
+    feats = extract_pixel_features(jpegs, strict=True)
+    return feats.select("doc_id", "width", "height", "brightness")
+
+
+@query(
+    "mjpeg_frame_sample",
+    oracle="""
+    SELECT doc_id, f AS frame_idx, 6 AS n_frames,
+           16 AS width, 8 AS height,
+           CAST((doc_id + 40 * f) % 256 AS DOUBLE) AS brightness
+    FROM documents, LATERAL (SELECT unnest([0, 2, 4]) AS f) x
+    """,
+)
+def mjpeg_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """END-TO-END video pipeline over a REAL container format: each
+    document becomes a 6-frame MJPEG clip (back-to-back DC-only JPEG
+    frames, fill = (doc_id + 40*frame) % 256); the operator splits
+    frames with a destuffing-aware marker walk, decodes every 2nd frame
+    through the baseline JPEG decoder, and emits per-frame brightness.
+    The oracle is exact arithmetic: DC-only frames decode losslessly,
+    so DuckDB predicts every sampled frame's brightness without
+    touching bytes.  Scale shape: one synth map + one Arrow-batched
+    mapInPandas, zero shuffles; sampling bounds decode cost per asset
+    no matter the clip length."""
+    from ..operators.multimodal import sample_video_frames
+
+    def synth(batches):
+        import pandas as pd_
+
+        for pdf in batches:
+            rows = []
+            for doc_id in pdf["doc_id"]:
+                d = int(doc_id)
+                clip = b"".join(
+                    _dc_only_gray_jpeg(16, 8, (d + 40 * f) % 256)
+                    for f in range(6)
+                )
+                rows.append((d, clip))
+            yield pd_.DataFrame(rows, columns=["doc_id", "payload"])
+
+    docs = (
+        _t(spark, sf_dir, "documents")
+        .select("doc_id")
+        # NULL ids cannot parameterize a synthetic payload; filtering
+        # JVM-side also keeps the Arrow batch int64 (a null makes
+        # pandas widen to float64 and int(NaN) kills the task)
+        .where(F.col("doc_id").isNotNull())
+    )
+    clips = docs.mapInPandas(synth, "doc_id long, payload binary")
+    return sample_video_frames(clips, every_k=2, max_frames=8, strict=True)
+
+
+@query(
+    "gif_frame_sample",
+    oracle="""
+    SELECT doc_id, f AS frame_idx, 3 AS n_frames,
+           12 AS width, 6 AS height,
+           CAST((doc_id + 40 * f) % 256 AS DOUBLE) AS brightness
+    FROM documents, LATERAL (SELECT unnest([0, 1, 2]) AS f) x
+    """,
+)
+def gif_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """END-TO-END animated-GIF pipeline through the REAL LZW decoder
+    (operators/multimodal.gif_frames): each document becomes a 3-frame
+    12×6 GIF whose frame f is a uniform fill of gray level
+    (doc_id + 40*f) % 256 — the synthesizer emits each pixel as a
+    root LZW code separated by CLEAR codes (a legal stream needing no
+    dictionary bookkeeping), so the exact decode is pure arithmetic
+    for the DuckDB oracle.  Scale shape: one synth map + one
+    Arrow-batched mapInPandas, zero shuffles; GIF frames composite
+    through the same sampler as MJPEG clips."""
+    from ..operators.multimodal import sample_video_frames
+
+    def synth(batches):
+        import struct
+
+        import pandas as pd_
+
+        def frame_block(index_val, n_pixels, mcs):
+            # CLEAR before every literal code: width stays mcs+1, the
+            # decoder's dictionary never grows — trivially valid LZW
+            width = mcs + 1
+            clear, end = 1 << mcs, (1 << mcs) + 1
+            codes = []
+            for _ in range(n_pixels):
+                codes += [clear, index_val]
+            codes.append(end)
+            acc = n = 0
+            data = bytearray()
+            for c in codes:
+                acc |= c << n
+                n += width
+                while n >= 8:
+                    data.append(acc & 0xFF)
+                    acc >>= 8
+                    n -= 8
+            if n:
+                data.append(acc & 0xFF)
+            out = bytearray([mcs])
+            for i in range(0, len(data), 255):
+                chunk = data[i : i + 255]
+                out.append(len(chunk))
+                out += chunk
+            out.append(0)
+            return bytes(out)
+
+        for pdf in batches:
+            rows = []
+            for doc_id in pdf["doc_id"]:
+                d = int(doc_id)
+                fills = [(d + 40 * f) % 256 for f in range(3)]
+                gif = bytearray(b"GIF89a")
+                gif += struct.pack("<HH", 12, 6)
+                gif += bytes([0x81, 0, 0])  # GCT, 4 entries (depth 2)
+                for v in fills:
+                    gif += bytes([v, v, v])
+                gif += bytes([0, 0, 0])  # 4th palette slot
+                for f in range(3):
+                    gif += bytes([0x2C])  # image descriptor
+                    gif += struct.pack("<HHHH", 0, 0, 12, 6)
+                    gif += bytes([0])  # no LCT, no interlace
+                    gif += frame_block(f, 12 * 6, 2)
+                gif += b"\x3B"
+                rows.append((d, bytes(gif)))
+            yield pd_.DataFrame(rows, columns=["doc_id", "payload"])
+
+    docs = (
+        _t(spark, sf_dir, "documents")
+        .select("doc_id")
+        # NULL ids cannot parameterize a synthetic payload; filtering
+        # JVM-side also keeps the Arrow batch int64 (a null makes
+        # pandas widen to float64 and int(NaN) kills the task)
+        .where(F.col("doc_id").isNotNull())
+    )
+    clips = docs.mapInPandas(synth, "doc_id long, payload binary")
+    return sample_video_frames(clips, every_k=1, max_frames=3, strict=True)
+
+
+@query(
+    "webp_lossy_anim_frame_sample",
+    oracle="""
+    SELECT doc_id, f AS frame_idx, 3 AS n_frames,
+           12 AS width, 6 AS height,
+           TRUE AS brightness_close
+    FROM documents, LATERAL (SELECT unnest([0, 1, 2]) AS f) x
+    """,
+)
+def webp_lossy_anim_frame_sample(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """ANIMATED LOSSY WebP through the native-codec hook: each document
+    becomes a 3-frame animation whose ANMF sub-chunks are real VP8
+    streams (libwebp lossy encode of uniform fills, q=95), sampled via
+    ``sample_video_frames(vp8_decode=native_codecs.webp_decode_rgb)`` —
+    the per-frame raw-stream decode path the pure-python matrix cannot
+    serve.  Frame geometry is exact; brightness is the same |Δ| ≤ 4
+    contract boolean as `webp_lossy_native_roundtrip` (measured worst
+    case 1.0 at q=95).  Without libwebp the synth degrades to VP8L
+    uniform frames of the SAME fills (Δ exactly 0, hook unused), so the
+    oracle holds everywhere.  Scale shape: one synth map + one
+    Arrow-batched mapInPandas, zero shuffles; ``max_frames`` bounds
+    decode cost per asset."""
+    from ..operators.multimodal import sample_video_frames
+    from ..operators.native_codecs import webp_decode_rgb
+
+    def synth(batches):
+        import struct
+
+        import pandas as pd_
+
+        from ..operators.native_codecs import (
+            webp_available,
+            webp_encode_rgb,
+        )
+
+        use_native = webp_available()
+
+        def frame_chunk(w, h, v):
+            if use_native:
+                import numpy as np_
+
+                full = webp_encode_rgb(
+                    np_.full((h, w, 3), v, np_.uint8), 95.0
+                )
+                pos = 12
+                while pos + 8 <= len(full):
+                    fc = full[pos : pos + 4]
+                    (sz,) = struct.unpack_from("<I", full, pos + 4)
+                    if fc == b"VP8 ":
+                        return fc, full[pos + 8 : pos + 8 + sz]
+                    pos += 8 + sz + (sz % 2)
+                raise AssertionError("no VP8 chunk in lossy encode")
+            return b"VP8L", _vp8l_uniform_stream(w, h, v)
+
+        def anim_webp(w, h, fills):
+            chunks = []
+            vp8x = bytes([0x02, 0, 0, 0]) + (w - 1).to_bytes(
+                3, "little"
+            ) + (h - 1).to_bytes(3, "little")
+            chunks.append(b"VP8X" + struct.pack("<I", len(vp8x)) + vp8x)
+            anim = bytes([0, 0, 0, 255]) + struct.pack("<H", 0)
+            chunks.append(b"ANIM" + struct.pack("<I", len(anim)) + anim)
+            for v in fills:
+                fourcc, stream = frame_chunk(w, h, v)
+                sub = fourcc + struct.pack("<I", len(stream)) + stream
+                if len(stream) % 2:
+                    sub += b"\x00"
+                body = (
+                    (0).to_bytes(3, "little") * 2
+                    + (w - 1).to_bytes(3, "little")
+                    + (h - 1).to_bytes(3, "little")
+                    + (40).to_bytes(3, "little")
+                    + bytes([0])
+                    + sub
+                )
+                chunks.append(
+                    b"ANMF" + struct.pack("<I", len(body)) + body
+                )
+                if len(body) % 2:
+                    chunks.append(b"\x00")
+            payload = b"WEBP" + b"".join(chunks)
+            return b"RIFF" + struct.pack("<I", len(payload)) + payload
+
+        for pdf in batches:
+            rows = []
+            for doc_id in pdf["doc_id"]:
+                d = int(doc_id)
+                rows.append(
+                    (d, anim_webp(12, 6, [(d + 40 * f) % 256
+                                          for f in range(3)]))
+                )
+            yield pd_.DataFrame(rows, columns=["doc_id", "payload"])
+
+    docs = (
+        _t(spark, sf_dir, "documents")
+        .select("doc_id")
+        # NULL ids cannot parameterize a synthetic payload; filtering
+        # JVM-side also keeps the Arrow batch int64
+        .where(F.col("doc_id").isNotNull())
+    )
+    clips = docs.mapInPandas(synth, "doc_id long, payload binary")
+    frames = sample_video_frames(
+        clips, every_k=1, max_frames=8, strict=True,
+        vp8_decode=webp_decode_rgb,
+    )
+    # pmod FIRST: doc_id + 40 would ANSI-overflow at LONG_MAX ids (the
+    # dirty sweep caught exactly this), and pmod matches the synth's
+    # python `%` (non-negative) for negative ids where Spark's `%`
+    # would not
+    expected = F.pmod(F.pmod(F.col("doc_id"), 256)
+                      + 40 * F.col("frame_idx"), 256)
+    return frames.select(
+        "doc_id",
+        "frame_idx",
+        "n_frames",
+        "width",
+        "height",
+        (F.abs(F.col("brightness") - expected) <= F.lit(4.0)).alias(
+            "brightness_close"
+        ),
+    )
+
+
+@query(
+    "webp_frame_sample",
+    oracle="""
+    SELECT doc_id, f AS frame_idx, 3 AS n_frames,
+           12 AS width, 6 AS height,
+           CAST((doc_id + 40 * f) % 256 AS DOUBLE) AS brightness
+    FROM documents, LATERAL (SELECT unnest([0, 1, 2]) AS f) x
+    """,
+)
+def webp_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """END-TO-END animation sampling through the REAL animated-WebP
+    path (operators/multimodal.webp_frames → VP8L): each document
+    becomes a 3-frame 12×6 animated WebP — VP8X animation flag, ANIM
+    background, one ANMF chunk per frame wrapping a headers-only
+    uniform VP8L stream (fill = (doc_id + 40·frame) % 256).  Full-
+    canvas opaque frames composite to themselves, so per-frame
+    brightness is exact and DuckDB predicts every row arithmetically.
+    Scale shape: one synth map + one Arrow-batched mapInPandas, zero
+    shuffles; ``max_frames`` bounds decode cost per asset."""
+    from ..operators.multimodal import sample_video_frames
+
+    def synth(batches):
+        import struct
+
+        import pandas as pd_
+
+        def anim_webp(w, h, fills):
+            chunks = []
+            vp8x = bytes([0x02, 0, 0, 0]) + (w - 1).to_bytes(
+                3, "little"
+            ) + (h - 1).to_bytes(3, "little")
+            chunks.append(b"VP8X" + struct.pack("<I", len(vp8x)) + vp8x)
+            anim = bytes([0, 0, 0, 255]) + struct.pack("<H", 0)
+            chunks.append(b"ANIM" + struct.pack("<I", len(anim)) + anim)
+            for v in fills:
+                stream = _vp8l_uniform_stream(w, h, v)
+                sub = b"VP8L" + struct.pack("<I", len(stream)) + stream
+                if len(stream) % 2:
+                    sub += b"\x00"
+                body = (
+                    (0).to_bytes(3, "little") * 2
+                    + (w - 1).to_bytes(3, "little")
+                    + (h - 1).to_bytes(3, "little")
+                    + (40).to_bytes(3, "little")
+                    + bytes([0])
+                    + sub
+                )
+                chunks.append(
+                    b"ANMF" + struct.pack("<I", len(body)) + body
+                )
+                if len(body) % 2:
+                    chunks.append(b"\x00")
+            payload = b"WEBP" + b"".join(chunks)
+            return b"RIFF" + struct.pack("<I", len(payload)) + payload
+
+        for pdf in batches:
+            rows = []
+            for doc_id in pdf["doc_id"]:
+                d = int(doc_id)
+                rows.append(
+                    (d, anim_webp(12, 6, [(d + 40 * f) % 256
+                                          for f in range(3)]))
+                )
+            yield pd_.DataFrame(rows, columns=["doc_id", "payload"])
+
+    docs = (
+        _t(spark, sf_dir, "documents")
+        .select("doc_id")
+        # NULL ids cannot parameterize a synthetic payload; filtering
+        # JVM-side also keeps the Arrow batch int64 (a null makes
+        # pandas widen to float64 and int(NaN) kills the task)
+        .where(F.col("doc_id").isNotNull())
+    )
+    clips = docs.mapInPandas(synth, "doc_id long, payload binary")
+    return sample_video_frames(clips, every_k=1, max_frames=3, strict=True)
+
+
+@query(
+    "tiff_pipeline_brightness",
+    oracle="""
+    SELECT doc_id,
+           8 + (doc_id % 5) AS width,
+           4 + (doc_id % 3) AS height,
+           CAST(doc_id % 256 AS DOUBLE) AS brightness
+    FROM documents
+    """,
+)
+def tiff_pipeline_brightness(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """END-TO-END document-scan pipeline through the REAL TIFF decoder
+    (operators/multimodal.tiff_pixels): synthesize a single-strip
+    uncompressed grayscale TIFF per document (uniform fill =
+    doc_id % 256, dims varying with doc_id; little-endian IFD built
+    byte-by-byte), walk the IFD, assemble the strip, and extract pixel
+    features.  The oracle is exact arithmetic: an uncompressed uniform
+    image decodes losslessly, so DuckDB predicts every row without
+    touching bytes.  Scale shape: two Arrow-batched mapInPandas stages,
+    zero shuffles."""
+    from ..operators.multimodal import extract_pixel_features
+
+    def synth(batches):
+        import struct
+
+        import pandas as pd_
+
+        def tiff_gray(w, h, v):
+            strip = bytes([v]) * (w * h)
+            ifd_off = 8 + len(strip)
+            head = b"II" + struct.pack("<HI", 42, ifd_off)
+            entries = [
+                (256, 4, w), (257, 4, h), (258, 3, 8), (259, 3, 1),
+                (262, 3, 1), (273, 4, 8), (277, 3, 1), (278, 4, h),
+                (279, 4, len(strip)),
+            ]
+            ifd = struct.pack("<H", len(entries))
+            for tag, typ, val in entries:
+                ifd += struct.pack("<HHI", tag, typ, 1)
+                ifd += struct.pack("<I", val) if typ == 4 else struct.pack(
+                    "<HH", val, 0
+                )
+            ifd += struct.pack("<I", 0)
+            return head + strip + ifd
+
+        for pdf in batches:
+            rows = []
+            for doc_id in pdf["doc_id"]:
+                d = int(doc_id)
+                rows.append(
+                    (d, tiff_gray(8 + d % 5, 4 + d % 3, d % 256))
+                )
+            yield pd_.DataFrame(rows, columns=["doc_id", "payload"])
+
+    docs = (
+        _t(spark, sf_dir, "documents")
+        .select("doc_id")
+        # NULL ids cannot parameterize a synthetic payload; filtering
+        # JVM-side also keeps the Arrow batch int64 (a null makes
+        # pandas widen to float64 and int(NaN) kills the task)
+        .where(F.col("doc_id").isNotNull())
+    )
+    tiffs = docs.mapInPandas(synth, "doc_id long, payload binary")
+    feats = extract_pixel_features(tiffs, strict=True)
+    return feats.select("doc_id", "width", "height", "brightness")
+
+
+@query(
+    "tiff_jpeg_pipeline_brightness",
+    oracle="""
+    SELECT doc_id,
+           8 + 8 * (doc_id % 3) AS width,
+           16 AS height,
+           CAST(doc_id % 256 AS DOUBLE) AS brightness
+    FROM documents
+    """,
+)
+def tiff_jpeg_pipeline_brightness(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """END-TO-END pipeline through NEW-STYLE JPEG-IN-TIFF (compression
+    7, TIFF TechNote 2, operators/multimodal.tiff_pixels → jpeg_pixels):
+    each document becomes a two-strip TIFF whose strips are ABBREVIATED
+    JPEG streams sharing one tag-347 JPEGTables blob — the common
+    libtiff layout — built from the same DC-only grayscale JPEG the
+    baseline-JPEG query uses, split at the marker level.  A uniform
+    image's DC coefficient quantizes losslessly at q=1, so the decoded
+    brightness is exactly the fill value and DuckDB predicts every row
+    arithmetically.  Scale shape: two Arrow-batched mapInPandas stages,
+    zero shuffles."""
+    from ..operators.multimodal import extract_pixel_features
+
+    def synth(batches):
+        import struct
+
+        import pandas as pd_
+
+        def split_tables(stream):
+            # DQT/DHT hoist into an SOI..EOI tables-only stream (tag
+            # 347); frame/scan segments stay in the per-strip stream
+            tables = bytearray(b"\xff\xd8")
+            rest = bytearray(b"\xff\xd8")
+            pos = 2
+            while pos + 2 <= len(stream):
+                marker = stream[pos + 1]
+                if marker == 0xDA:
+                    rest += stream[pos:]
+                    break
+                (seg_len,) = struct.unpack_from(">H", stream, pos + 2)
+                seg = stream[pos : pos + 2 + seg_len]
+                (tables if marker in (0xDB, 0xC4) else rest).extend(seg)
+                pos += 2 + seg_len
+            tables += b"\xff\xd9"
+            return bytes(tables), bytes(rest)
+
+        def jpeg_tiff(w, h, v):
+            tables, strip = split_tables(_dc_only_gray_jpeg(w, h // 2, v))
+            strips = [strip, strip]  # both halves: same uniform fill
+            pos = 8
+            offs = []
+            for s in strips:
+                offs.append(pos)
+                pos += len(s)
+            ifd_off = pos + (pos % 2)
+            entries = [
+                (256, 4, [w]), (257, 4, [h]), (258, 3, [8]),
+                (259, 3, [7]), (262, 3, [1]), (273, 4, offs),
+                (277, 3, [1]), (278, 4, [h // 2]),
+                (279, 4, [len(s) for s in strips]),
+                (347, 7, list(tables)),
+            ]
+            tsize = {3: 2, 4: 4, 7: 1}
+            tcode = {3: "H", 4: "I", 7: "B"}
+            extra_base = ifd_off + 2 + 12 * len(entries) + 4
+            extra = bytearray()
+            ifd = struct.pack("<H", len(entries))
+            for tag, typ, values in entries:
+                total = tsize[typ] * len(values)
+                if total <= 4:
+                    packed = struct.pack(
+                        "<" + str(len(values)) + tcode[typ], *values
+                    ) + b"\x00" * (4 - total)
+                    ifd += struct.pack("<HHI", tag, typ, len(values))
+                    ifd += packed
+                else:
+                    ifd += struct.pack(
+                        "<HHII", tag, typ, len(values),
+                        extra_base + len(extra),
+                    )
+                    extra += struct.pack(
+                        "<" + str(len(values)) + tcode[typ], *values
+                    )
+            ifd += struct.pack("<I", 0)
+            body = bytearray(b"II" + struct.pack("<HI", 42, ifd_off))
+            for s in strips:
+                body += s
+            body += b"\x00" * (ifd_off - len(body))
+            return bytes(body + ifd + extra)
+
+        for pdf in batches:
+            rows = []
+            for doc_id in pdf["doc_id"]:
+                d = int(doc_id)
+                rows.append((d, jpeg_tiff(8 + 8 * (d % 3), 16, d % 256)))
+            yield pd_.DataFrame(rows, columns=["doc_id", "payload"])
+
+    docs = (
+        _t(spark, sf_dir, "documents")
+        .select("doc_id")
+        # NULL ids cannot parameterize a synthetic payload; filtering
+        # JVM-side also keeps the Arrow batch int64 (a null makes
+        # pandas widen to float64 and int(NaN) kills the task)
+        .where(F.col("doc_id").isNotNull())
+    )
+    tiffs = docs.mapInPandas(synth, "doc_id long, payload binary")
+    feats = extract_pixel_features(tiffs, strict=True)
+    return feats.select("doc_id", "width", "height", "brightness")
+
+
+def _vp8l_uniform_stream(w: int, h: int, v: int) -> bytes:
+    """A uniform-fill bare VP8L stream built bit-by-bit (RFC 9649): no
+    transforms, no cache, five simple-form SINGLE-SYMBOL Huffman codes
+    (green/red/blue = v, alpha = 255, distance = 0) — a one-symbol code
+    reads ZERO bits per literal, so the whole image is headers and the
+    lossless decode is exactly the fill value.  Shared by the still and
+    animated WebP gate queries."""
+    bits = []  # (value, nbits), LSB-first
+
+    def put(val, k):
+        bits.append((val, k))
+
+    put(w - 1, 14)
+    put(h - 1, 14)
+    put(0, 1)  # no alpha
+    put(0, 3)  # version
+    put(0, 1)  # no transforms
+    put(0, 1)  # no color cache
+    put(0, 1)  # no meta-huffman
+    for sym in (v, v, v, 255, 0):
+        put(1, 1)  # simple
+        put(0, 1)  # one symbol
+        if sym < 2:
+            put(0, 1)
+            put(sym, 1)
+        else:
+            put(1, 1)
+            put(sym, 8)
+    acc = n = 0
+    out = bytearray()
+    for val, k in bits:
+        acc |= val << n
+        n += k
+        while n >= 8:
+            out.append(acc & 0xFF)
+            acc >>= 8
+            n -= 8
+    if n:
+        out.append(acc & 0xFF)
+    return b"\x2f" + bytes(out)
+
+
+@query(
+    "image_quality_uniform",
+    oracle="""
+    SELECT doc_id,
+           6 + (doc_id % 4) AS width,
+           5 + (doc_id % 3) AS height,
+           CAST(doc_id % 256 AS DOUBLE) AS brightness,
+           CAST(0 AS DOUBLE) AS contrast,
+           CAST(0 AS DOUBLE) AS sharpness,
+           CAST(0 AS DOUBLE) AS colorfulness
+    FROM documents
+    """,
+)
+def image_quality_uniform(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """END-TO-END image-quality pipeline
+    (operators/multimodal.image_quality_features): synthesize a uniform
+    PPM per document.  A uniform image has ZERO contrast (gray std),
+    ZERO Laplacian-variance sharpness, and ZERO Hasler-Süsstrunk
+    colorfulness by construction, and brightness equals the fill value
+    exactly — so the quality metrics are arithmetic literals the oracle
+    states directly.  The non-trivial closed forms (checkerboard
+    Laplacian, colorfulness on random photos vs a numpy re-derivation)
+    live in tests/test_image_quality.py.  Scale shape: one synth map +
+    one Arrow-batched mapInPandas, zero shuffles."""
+    from ..operators.multimodal import image_quality_features
+
+    def synth(batches):
+        import pandas as pd_
+
+        def ppm(w, h, v):
+            return (
+                f"P6\n{w} {h}\n255\n".encode() + bytes([v] * (w * h * 3))
+            )
+
+        for pdf in batches:
+            rows = []
+            for doc_id in pdf["doc_id"]:
+                d = int(doc_id)
+                rows.append(
+                    (d, ppm(6 + d % 4, 5 + d % 3, d % 256))
+                )
+            yield pd_.DataFrame(rows, columns=["doc_id", "payload"])
+
+    docs = (
+        _t(spark, sf_dir, "documents")
+        .select("doc_id")
+        # NULL ids cannot parameterize a synthetic payload; filtering
+        # JVM-side also keeps the Arrow batch int64 (a null makes
+        # pandas widen to float64 and int(NaN) kills the task)
+        .where(F.col("doc_id").isNotNull())
+    )
+    imgs = docs.mapInPandas(synth, "doc_id long, payload binary")
+    return image_quality_features(imgs, strict=True)
+
+
+@query(
+    "webp_pipeline_brightness",
+    oracle="""
+    SELECT doc_id,
+           8 + (doc_id % 5) AS width,
+           4 + (doc_id % 3) AS height,
+           CAST(doc_id % 256 AS DOUBLE) AS brightness
+    FROM documents
+    """,
+)
+def webp_pipeline_brightness(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """END-TO-END web-image pipeline through the REAL WebP-lossless
+    decoder (operators/multimodal.webp_pixels, RFC 9649 VP8L):
+    synthesize a uniform-fill VP8L per document built bit-by-bit —
+    RIFF/WEBP container, 14-bit dimension fields, and five
+    single-symbol 'simple' Huffman codes, under which every literal
+    pixel costs ZERO bits, so the whole image is headers.  Lossless
+    decode means brightness is exactly the fill value and DuckDB
+    predicts every row arithmetically.  Scale shape: two Arrow-batched
+    mapInPandas stages, zero shuffles."""
+    from ..operators.multimodal import extract_pixel_features
+
+    def synth(batches):
+        import struct
+
+        import pandas as pd_
+
+        def vp8l_uniform(w, h, v):
+            stream = _vp8l_uniform_stream(w, h, v)
+            chunk = b"VP8L" + struct.pack("<I", len(stream)) + stream
+            if len(stream) % 2:
+                chunk += b"\x00"
+            body = b"WEBP" + chunk
+            return b"RIFF" + struct.pack("<I", len(body)) + body
+
+        for pdf in batches:
+            rows = []
+            for doc_id in pdf["doc_id"]:
+                d = int(doc_id)
+                rows.append(
+                    (d, vp8l_uniform(8 + d % 5, 4 + d % 3, d % 256))
+                )
+            yield pd_.DataFrame(rows, columns=["doc_id", "payload"])
+
+    docs = (
+        _t(spark, sf_dir, "documents")
+        .select("doc_id")
+        # NULL ids cannot parameterize a synthetic payload; filtering
+        # JVM-side also keeps the Arrow batch int64 (a null makes
+        # pandas widen to float64 and int(NaN) kills the task)
+        .where(F.col("doc_id").isNotNull())
+    )
+    webps = docs.mapInPandas(synth, "doc_id long, payload binary")
+    feats = extract_pixel_features(webps, strict=True)
+    return feats.select("doc_id", "width", "height", "brightness")
+
+
+@query(
+    "webp_native_lossless_brightness",
+    oracle="""
+    SELECT d.doc_id,
+           7 + (d.doc_id % 4) AS width,
+           4 + (d.doc_id % 3) AS height,
+           (SELECT AVG(CAST((d.doc_id + y.y) % 256 AS DOUBLE))
+              FROM (SELECT unnest(range(0, 4 + d.doc_id % 3)) AS y) y)
+             AS brightness
+    FROM documents d
+    """,
+)
+def webp_native_lossless_brightness(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """REAL-ENCODER cross-validation in the gate: per document a
+    row-gradient image (row y filled with (doc_id + y) % 256) is
+    compressed by the system libwebp REFERENCE lossless encoder
+    (operators/native_codecs.webp_encode_lossless_rgb — actual cwebp
+    output, whose transform choices we don't control) and decoded by
+    the FROM-SCRATCH VP8L decoder (multimodal.webp_pixels).  Lossless
+    means brightness is the exact mean of the constructed gradient,
+    which the oracle restates arithmetically — so a divergence between
+    the reference encoder's bitstream and our decoder hash-fails the
+    gate.  On a box with no libwebp the synth step degrades to PPM
+    bytes of the SAME pixels (decoded by the PPM path), keeping the
+    oracle exact.  Scale shape: two Arrow-batched mapInPandas stages,
+    zero shuffles."""
+    from ..operators.multimodal import extract_pixel_features
+
+    def synth(batches):
+        import numpy as np_
+        import pandas as pd_
+
+        from ..operators.native_codecs import (
+            webp_available,
+            webp_encode_lossless_rgb,
+        )
+
+        use_native = webp_available()
+
+        def img(d):
+            w, h = 7 + d % 4, 4 + d % 3
+            rows = (d + np_.arange(h)) % 256
+            px = np_.repeat(
+                rows.astype(np_.uint8)[:, None, None], w, axis=1
+            ).repeat(3, axis=2)
+            if use_native:
+                return webp_encode_lossless_rgb(px)
+            return f"P6\n{w} {h}\n255\n".encode() + px.tobytes()
+
+        for pdf in batches:
+            yield pd_.DataFrame(
+                [(int(d), img(int(d))) for d in pdf["doc_id"]],
+                columns=["doc_id", "payload"],
+            )
+
+    docs = (
+        _t(spark, sf_dir, "documents")
+        .select("doc_id")
+        .where(F.col("doc_id").isNotNull())
+    )
+    webps = docs.mapInPandas(synth, "doc_id long, payload binary")
+    feats = extract_pixel_features(webps, strict=True)
+    return feats.select("doc_id", "width", "height", "brightness")
+
+
+@query(
+    "webp_lossy_native_roundtrip",
+    oracle="""
+    SELECT doc_id,
+           10 + (doc_id % 4) AS width,
+           6 + (doc_id % 3) AS height,
+           TRUE AS brightness_close
+    FROM documents
+    """,
+)
+def webp_lossy_native_roundtrip(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """LOSSY VP8 — the one documented pure-python codec boundary —
+    exercised in the gate through the native-codec hook: uniform-fill
+    images are encoded with libwebp's lossy encoder (q=95) and decoded
+    via operators/native_codecs.native_image_decode.  Dimensions are
+    exact; brightness is a contract boolean (|decoded − fill| ≤ 4.0;
+    measured worst-case deviation over all 256 fills at q=95 is 1.0),
+    the same bounds-in-the-hash style as text_compression_ratio.
+    Without libwebp the synth degrades to PPM of the same pixels
+    (delta exactly 0).  Scale shape: two Arrow-batched mapInPandas
+    stages + one projection, zero shuffles."""
+    from ..operators.multimodal import extract_pixel_features
+
+    def synth(batches):
+        import numpy as np_
+        import pandas as pd_
+
+        from ..operators.native_codecs import (
+            webp_available,
+            webp_encode_rgb,
+        )
+
+        use_native = webp_available()
+
+        def img(d):
+            w, h, v = 10 + d % 4, 6 + d % 3, d % 256
+            if use_native:
+                return webp_encode_rgb(
+                    np_.full((h, w, 3), v, np_.uint8), 95.0
+                )
+            return f"P6\n{w} {h}\n255\n".encode() + bytes([v] * (w * h * 3))
+
+        for pdf in batches:
+            yield pd_.DataFrame(
+                [(int(d), img(int(d))) for d in pdf["doc_id"]],
+                columns=["doc_id", "payload"],
+            )
+
+    from ..operators.native_codecs import native_image_decode
+
+    docs = (
+        _t(spark, sf_dir, "documents")
+        .select("doc_id")
+        .where(F.col("doc_id").isNotNull())
+    )
+    webps = docs.mapInPandas(synth, "doc_id long, payload binary")
+    feats = extract_pixel_features(
+        webps, strict=True, decode=native_image_decode
+    )
+    return feats.select(
+        "doc_id",
+        "width",
+        "height",
+        (
+            F.abs(F.col("brightness") - (F.col("doc_id") % 256)) <= F.lit(4.0)
+        ).alias("brightness_close"),
+    )
+
+
+@query(
+    "audio_g711_rms",
+    oracle="""
+    SELECT doc_id, w AS window_idx, 64::BIGINT AS n_samples,
+           CAST(32124 AS DOUBLE) AS rms
+    FROM documents, LATERAL (SELECT unnest(range(0, 2)) AS w) x
+    """,
+)
+def audio_g711_rms(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """END-TO-END telephony-audio pipeline through the REAL G.711
+    mu-law expander (operators/multimodal): each document becomes an
+    8-bit mu-law WAV (fmt tag 7) alternating codes 0x80/0x00 — by the
+    published expansion these are exactly ±32124 (seg 7, mantissa 15:
+    ((15<<3)+132)<<7 - 132), so a square wave whose per-window RMS the
+    oracle states as a literal constant.  Scale shape: one synth map +
+    one Arrow-batched mapInPandas, zero shuffles."""
+    from ..operators.multimodal import audio_rms_windows
+
+    def synth(batches):
+        import struct
+
+        import pandas as pd_
+
+        frames = bytes([0x80, 0x00] * 64)
+        fmt = struct.pack("<HHIIHH", 7, 1, 8000, 8000, 1, 8)
+        body = (
+            b"WAVE"
+            + b"fmt "
+            + struct.pack("<I", len(fmt))
+            + fmt
+            + b"data"
+            + struct.pack("<I", len(frames))
+            + frames
+        )
+        wav = b"RIFF" + struct.pack("<I", len(body)) + body
+        for pdf in batches:
+            yield pd_.DataFrame(
+                [(int(d), wav) for d in pdf["doc_id"]],
+                columns=["doc_id", "payload"],
+            )
+
+    docs = (
+        _t(spark, sf_dir, "documents")
+        .select("doc_id")
+        # NULL ids cannot parameterize a synthetic payload; filtering
+        # JVM-side also keeps the Arrow batch int64 (a null makes
+        # pandas widen to float64 and int(NaN) kills the task)
+        .where(F.col("doc_id").isNotNull())
+    )
+    wavs = docs.mapInPandas(synth, "doc_id long, payload binary")
+    return audio_rms_windows(wavs, n_windows=2, strict=True)
+
+
+@query(
+    "audio_zcr_centroid",
+    oracle="""
+    SELECT doc_id, w AS window_idx, 64::BIGINT AS n_samples,
+           CAST(16000 AS DOUBLE) AS rms,
+           CASE doc_id % 3 WHEN 0 THEN 1.0
+                           WHEN 1 THEN round(31.0 / 63, 6)
+                           ELSE round(15.0 / 63, 6) END AS zcr,
+           CAST(CASE doc_id % 3 WHEN 0 THEN 4000.0
+                                WHEN 1 THEN 2000.0
+                                ELSE 1292.893219 END AS DOUBLE)
+             AS centroid_hz
+    FROM documents, LATERAL (SELECT unnest(range(0, 2)) AS w) x
+    """,
+)
+def audio_zcr_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """END-TO-END audio-analysis pipeline
+    (operators/multimodal.audio_features_windows): each document
+    becomes a 16-bit PCM WAV square wave with half-period k = 2^(d%3)
+    samples at 8 kHz.  Because the period divides the 64-sample window,
+    the DFT lands on exact bins — zero leakage — so zero-crossing rate
+    (⌊63/k⌋/63), RMS (exactly the amplitude), and spectral centroid
+    (4000 Hz at Nyquist; 2000 Hz; 1000·(4−√2)/(…) ≈ 1292.893219 Hz for
+    k=4, the square wave's odd-harmonic power mean) are closed-form
+    literals the oracle states directly.  Scale shape: one synth map +
+    one Arrow-batched mapInPandas, zero shuffles."""
+    from ..operators.multimodal import audio_features_windows
+
+    def synth(batches):
+        import struct
+
+        import numpy as np_
+        import pandas as pd_
+
+        def wav(k):
+            block = np_.tile(
+                np_.concatenate(
+                    [np_.full(k, 16000, np_.int16),
+                     np_.full(k, -16000, np_.int16)]
+                ),
+                128 // (2 * k),
+            )
+            data = block.tobytes()
+            fmt = struct.pack("<HHIIHH", 1, 1, 8000, 16000, 2, 16)
+            body = (
+                b"WAVE"
+                + b"fmt " + struct.pack("<I", len(fmt)) + fmt
+                + b"data" + struct.pack("<I", len(data)) + data
+            )
+            return b"RIFF" + struct.pack("<I", len(body)) + body
+
+        wavs = {k: wav(k) for k in (1, 2, 4)}
+        for pdf in batches:
+            yield pd_.DataFrame(
+                [(int(d), wavs[1 << (int(d) % 3)]) for d in pdf["doc_id"]],
+                columns=["doc_id", "payload"],
+            )
+
+    docs = (
+        _t(spark, sf_dir, "documents")
+        .select("doc_id")
+        # NULL ids cannot parameterize a synthetic payload; filtering
+        # JVM-side also keeps the Arrow batch int64 (a null makes
+        # pandas widen to float64 and int(NaN) kills the task)
+        .where(F.col("doc_id").isNotNull())
+    )
+    wavs = docs.mapInPandas(synth, "doc_id long, payload binary")
+    return audio_features_windows(wavs, n_windows=2, strict=True)
+
+
+@query(
+    "audio_adpcm_rms",
+    oracle="""
+    SELECT doc_id, w AS window_idx, 65::BIGINT AS n_samples,
+           CAST(doc_id % 128 AS DOUBLE) AS rms
+    FROM documents, LATERAL (SELECT unnest(range(0, 2)) AS w) x
+    """,
+)
+def audio_adpcm_rms(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """END-TO-END compressed-audio pipeline through the REAL IMA/DVI
+    ADPCM decoder (operators/multimodal._ima_adpcm_decode, WAV fmt 17):
+    each document becomes a mono two-block ADPCM WAV whose block
+    headers carry predictor = doc_id % 128 at step index 0 and whose
+    code nibbles are all zero — at the minimum step (7) code 0
+    dequantizes to diff = 7>>3 = 0, so every decoded sample equals the
+    header predictor EXACTLY and the per-window RMS is the predictor
+    itself, stated arithmetically by the oracle.  Scale shape: one
+    synth map + one Arrow-batched mapInPandas, zero shuffles."""
+    from ..operators.multimodal import audio_rms_windows
+
+    def synth(batches):
+        import struct
+
+        import pandas as pd_
+
+        def adpcm_wav(v):
+            # block: 4-byte header (pred, idx=0) + 32 zero code bytes
+            # -> 1 + 64 = 65 samples per block, two blocks
+            block = struct.pack("<hBB", v, 0, 0) + bytes(32)
+            data = block * 2
+            fmt = struct.pack("<HHIIHH", 17, 1, 8000, 4000, 36, 4)
+            body = (
+                b"WAVE"
+                + b"fmt " + struct.pack("<I", len(fmt)) + fmt
+                + b"data" + struct.pack("<I", len(data)) + data
+            )
+            return b"RIFF" + struct.pack("<I", len(body)) + body
+
+        for pdf in batches:
+            yield pd_.DataFrame(
+                [(int(d), adpcm_wav(int(d) % 128)) for d in pdf["doc_id"]],
+                columns=["doc_id", "payload"],
+            )
+
+    docs = (
+        _t(spark, sf_dir, "documents")
+        .select("doc_id")
+        # NULL ids cannot parameterize a synthetic payload; filtering
+        # JVM-side also keeps the Arrow batch int64 (a null makes
+        # pandas widen to float64 and int(NaN) kills the task)
+        .where(F.col("doc_id").isNotNull())
+    )
+    wavs = docs.mapInPandas(synth, "doc_id long, payload binary")
+    return audio_rms_windows(wavs, n_windows=2, strict=True)
+
+
+@query(
+    "audio_pipeline_rms",
+    oracle="""
+    SELECT doc_id, w AS window_idx, 128::BIGINT AS n_samples,
+           ((doc_id % 100 + 1) * 50 + w * 100)::DOUBLE AS rms
+    FROM documents, LATERAL (SELECT unnest(range(0, 4)) AS w) x
+    """,
+)
+def audio_pipeline_rms(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """END-TO-END audio pipeline through the REAL PCM operators
+    (operators/multimodal.audio_rms_windows): synthesize a 16-bit WAV
+    per document whose four segments are square waves of known
+    amplitude, then decode and compute windowed RMS — all real RIFF
+    walking and numpy signal math, no codec.  The oracle is exact
+    arithmetic: a ±A square wave's RMS is A, so DuckDB predicts every
+    output without touching audio bytes.  Scale shape: one synth map +
+    one Arrow-batched mapInPandas, zero shuffles."""
+    from ..operators.multimodal import audio_rms_windows
+
+    def synth(batches):
+        import io
+        import wave as wavmod
+
+        import numpy as np
+        import pandas as pd_
+
+        for pdf in batches:
+            rows = []
+            for doc_id in pdf["doc_id"]:
+                d = int(doc_id)
+                segs = []
+                for w in range(4):
+                    amp = (d % 100 + 1) * 50 + w * 100
+                    seg = np.empty(128, dtype="<i2")
+                    seg[0::2] = amp
+                    seg[1::2] = -amp
+                    segs.append(seg)
+                pcm = np.concatenate(segs).tobytes()
+                buf = io.BytesIO()
+                with wavmod.open(buf, "wb") as f:
+                    f.setnchannels(1)
+                    f.setsampwidth(2)
+                    f.setframerate(8000)
+                    f.writeframes(pcm)
+                rows.append((d, buf.getvalue()))
+            yield pd_.DataFrame(rows, columns=["doc_id", "payload"])
+
+    docs = (
+        _t(spark, sf_dir, "documents")
+        .select("doc_id")
+        # NULL ids cannot parameterize a synthetic payload; filtering
+        # JVM-side also keeps the Arrow batch int64 (a null makes
+        # pandas widen to float64 and int(NaN) kills the task)
+        .where(F.col("doc_id").isNotNull())
+    )
+    wavs = docs.mapInPandas(synth, "doc_id long, payload binary")
+    return audio_rms_windows(wavs, n_windows=4, strict=True)
+
+
+def _mp4_box(typ: bytes, payload: bytes) -> bytes:
+    import struct
+
+    return struct.pack(">I", len(payload) + 8) + typ + payload
+
+
+def _mp4_bytes(
+    width: int,
+    height: int,
+    duration_ms: int,
+    codec: bytes = b"avc1",
+    brand: bytes = b"isom",
+    n_audio_tracks: int = 0,
+) -> bytes:
+    """Minimal valid ISO-BMFF file: ftyp + moov(mvhd, video trak with
+    tkhd dims + stsd codec, optional audio traks) + mdat.  Movie
+    timescale is 1000, so the mvhd duration field IS duration_ms —
+    which is what makes the gate oracle closed-form."""
+    import struct
+
+    ftyp = _mp4_box(b"ftyp", brand + struct.pack(">I", 0) + b"mp42")
+    mvhd_body = bytearray(100)  # version 0 body is exactly 100 bytes
+    struct.pack_into(">I", mvhd_body, 12, 1000)  # timescale
+    struct.pack_into(">I", mvhd_body, 16, duration_ms)  # duration
+    mvhd = _mp4_box(b"mvhd", bytes(mvhd_body))
+
+    def trak(w: int, h: int, fourcc: bytes) -> bytes:
+        tkhd_body = bytearray(84)  # version 0 body is exactly 84 bytes
+        struct.pack_into(">I", tkhd_body, 76, w << 16)  # 16.16 fixed
+        struct.pack_into(">I", tkhd_body, 80, h << 16)
+        tkhd = _mp4_box(b"tkhd", bytes(tkhd_body))
+        entry = struct.pack(">I", 16) + fourcc + bytes(8)
+        stsd = _mp4_box(b"stsd", bytes(4) + struct.pack(">I", 1) + entry)
+        stbl = _mp4_box(b"stbl", stsd)
+        minf = _mp4_box(b"minf", stbl)
+        mdia = _mp4_box(b"mdia", minf)
+        return _mp4_box(b"trak", tkhd + mdia)
+
+    traks = trak(width, height, codec)
+    for _ in range(n_audio_tracks):
+        traks += trak(0, 0, b"mp4a")
+    moov = _mp4_box(b"moov", mvhd + traks)
+    mdat = _mp4_box(b"mdat", bytes(8))
+    return ftyp + moov + mdat
+
+
+@query(
+    "video_container_meta",
+    # closed-form oracle: every field is a deterministic function of
+    # doc_id because the synthesizer writes exactly those header fields
+    # (movie timescale 1000 makes mvhd duration == duration_ms)
+    oracle="""
+    SELECT doc_id,
+           CASE WHEN doc_id % 2 = 0 THEN 'isom' ELSE 'mp42' END AS major_brand,
+           1000 + (doc_id % 100) * 37 AS duration_ms,
+           CAST(1 + doc_id % 3 AS INT) AS n_tracks,
+           CAST(16 * (1 + doc_id % 8) AS INT) AS width,
+           CAST(16 * (1 + doc_id % 5) AS INT) AS height,
+           CASE WHEN doc_id % 2 = 0 THEN 'avc1' ELSE 'vp09' END AS codec
+    FROM documents
+    """,
+)
+def video_container_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """MP4/ISO-BMFF container metadata WITHOUT decode — duration,
+    resolution, codec fourcc, track count from the moov box walk
+    (operators/multimodal.parse_mp4_meta).  H.264/VP9 pixel decode is
+    the documented codec-library boundary; header metadata needs no
+    codec, and it is what corpus triage (resolution/duration filters,
+    codec mix reports) actually consumes.  Each document becomes a
+    synthetic MP4 (brand/dims/duration/codec/track-count parameterized
+    by doc_id, including multi-track files with audio traks); the walk
+    must recover every field exactly.  Scale shape: one synth map + one
+    Arrow-batched header scan, zero shuffles, constant memory."""
+    from ..operators.multimodal import video_container_meta as vcm
+
+    def synth(batches):
+        import pandas as pd_
+
+        for pdf in batches:
+            rows = []
+            for doc_id in pdf["doc_id"]:
+                d = int(doc_id)
+                rows.append(
+                    (
+                        d,
+                        _mp4_bytes(
+                            width=16 * (1 + d % 8),
+                            height=16 * (1 + d % 5),
+                            duration_ms=1000 + (d % 100) * 37,
+                            codec=b"avc1" if d % 2 == 0 else b"vp09",
+                            brand=b"isom" if d % 2 == 0 else b"mp42",
+                            n_audio_tracks=d % 3,
+                        ),
+                    )
+                )
+            yield pd_.DataFrame(rows, columns=["doc_id", "payload"])
+
+    docs = (
+        _t(spark, sf_dir, "documents")
+        .select("doc_id")
+        .where(F.col("doc_id").isNotNull())
+    )
+    clips = docs.mapInPandas(synth, "doc_id long, payload binary")
+    return vcm(clips, strict=True)

@@ -60,8 +60,8 @@ def _decode_offset_value(v: Any) -> Any:
 
 def _arrow_to_spark_type(t) -> str:
     """pyarrow→Spark SQL type mapping for the table types this engine
-    reads (TESTDATA.md tables + typical RDBMS scalar and binary columns
-    + the array/struct shapes of embedding tables)."""
+    reads (TESTDATA.md tables + typical RDBMS scalar columns + the
+    array/struct shapes of embedding and multimodal tables)."""
     import pyarrow as pa
 
     if pa.types.is_int64(t):

@@ -48,6 +48,7 @@ SLOW_TESTS = {
     "tests/test_semdedup_recovery.py::TestCrossShardRecovery::test_recovers_cross_shard_prunes",
     "tests/test_semdedup_recovery.py::TestCrossShardRecovery::test_vectorized_mode_matches_fold",
     "tests/test_semdedup_recovery.py::TestCrossShardRecovery::test_noop_when_no_cap_engages",
+    "tests/test_codec_hook.py::test_injected_codec_output_feeds_builtin_chain",
     "tests/test_dirty_corpus.py::test_near_dedup_stream_survives_dirty_batches",
     "tests/test_advice_r10.py::TestSemdedupFlatCapValidation::test_valid_caps_still_accepted",
     "tests/test_stream_source.py::test_run_streaming_semantic_dedup_config",

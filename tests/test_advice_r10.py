@@ -1,12 +1,14 @@
 """Round-10 advice fixes, each asserted directly:
 
-1. semdedup_prune / semdedup_cap_stats reject flat caps < 1 at entry
+1. parse_image_header reports DISPLAY-frame dims for orientation 5-8
+   TIFFs (it already did for JPEGs) — header and _read_pixels agree.
+2. semdedup_prune / semdedup_cap_stats reject flat caps < 1 at entry
    (0 previously reached F.ceil(_n/0) → ANSI DIVIDE_BY_ZERO at run).
-2. kmeans_parallel_centroids guards its driver-side refine collect
+3. kmeans_parallel_centroids guards its driver-side refine collect
    behind a documented element budget.
-3. The k-means|| two-level weighting path and assign_two_level's
+4. The k-means|| two-level weighting path and assign_two_level's
    empty result are string-id safe (the cell literal assumed int ids).
-4. Duplicate-id corpora: flat k-means (v inside the argmin struct) and
+5. Duplicate-id corpora: flat k-means (v inside the argmin struct) and
    the k-means|| pipeline (dedup before sampling/weighting) now match
    their DuckDB oracles EXACTLY — verified by running the real oracle
    SQL on a dup-id corpus, which diverged before the fix.
@@ -15,6 +17,7 @@
 from __future__ import annotations
 
 import duckdb
+import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -26,10 +29,40 @@ from fluent_plugin_sql_spark.operators.cluster import (
     semdedup_cap_stats,
     semdedup_prune,
 )
+from fluent_plugin_sql_spark.operators.multimodal import (
+    _read_pixels,
+    parse_image_header,
+)
 from fluent_plugin_sql_spark.plans.llm_pipeline import (
     _dd_kmeans_ctes,
     _dd_kmeans_parallel_ctes,
 )
+
+from test_tiff_decode import encode_tiff
+
+
+class TestTiffOrientationHeaderSwap:
+    @pytest.mark.parametrize("orientation", [5, 6, 7, 8])
+    def test_header_matches_decoded_shape(self, orientation):
+        img = (
+            np.arange(11 * 7 * 3, dtype=np.uint8).reshape(11, 7, 3) % 256
+        )
+        payload = encode_tiff(img, orientation=orientation)
+        fmt, w, h, ch = parse_image_header(payload)
+        assert fmt == "tiff"
+        arr = _read_pixels(payload)
+        # decoded array is (h, w, c) in the DISPLAY frame — the header
+        # must describe the same frame, not the coded one
+        assert (h, w, ch) == arr.shape
+        assert (w, h) == (11, 7)  # transposed vs the 7×11 coded dims
+
+    @pytest.mark.parametrize("orientation", [None, 1, 2, 3, 4])
+    def test_non_transposing_orientations_unchanged(self, orientation):
+        img = np.zeros((5, 9, 3), dtype=np.uint8)
+        payload = encode_tiff(img, orientation=orientation)
+        fmt, w, h, ch = parse_image_header(payload)
+        assert (fmt, w, h) == ("tiff", 9, 5)
+        assert _read_pixels(payload).shape == (5, 9, 3)
 
 
 def _emb_df(spark, rows):

@@ -1,19 +1,55 @@
 """Round-7 ADVICE regression tests — each fix from the round-6 advisor
 report gets a test that fails on the pre-fix behavior:
 
-1. dup_clusters_star: exhausting max_rounds without signature fixpoint
+1. wav_pcm16_samples / audio_rms_windows: NULL payload rows skip in
+   non-strict mode instead of crashing the job with a TypeError.
+2. dup_clusters_star: exhausting max_rounds without signature fixpoint
    raises instead of silently returning partially-contracted labels.
-2. RollupStore.regroup: a coarser window that is not a multiple of the
+3. RollupStore.regroup: a coarser window that is not a multiple of the
    stored grain raises instead of silently mis-bucketing partials.
-3. stream_asof_join: a non-integral left_id column raises up front
+4. stream_asof_join: a non-integral left_id column raises up front
    instead of silently NULLing the id in every emitted row.
-4. write_training_shards: a pre-existing 'shard' column raises instead
+5. write_training_shards: a pre-existing 'shard' column raises instead
    of being silently overwritten in the export.
 """
 
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
+
+
+def test_audio_null_payload_skips_in_nonstrict_mode(spark):
+    from fluent_plugin_sql_spark.operators.multimodal import (
+        audio_rms_windows,
+        parse_wav_header,
+        wav_pcm16_samples,
+    )
+
+    # unit level: None and sub-preamble fragments are "not a WAV"
+    assert wav_pcm16_samples(None) is None
+    assert wav_pcm16_samples(b"RIFF") is None
+    assert parse_wav_header(None) is None
+    assert parse_wav_header(b"RI") is None
+
+    # job level: the NULL row skips, the valid row still decodes
+    import io
+    import wave as wavmod
+
+    import numpy as np
+
+    buf = io.BytesIO()
+    with wavmod.open(buf, "wb") as f:
+        f.setnchannels(1)
+        f.setsampwidth(2)
+        f.setframerate(8000)
+        f.writeframes(np.full(64, 100, dtype="<i2").tobytes())
+    df = spark.createDataFrame(
+        [(1, bytearray(buf.getvalue())), (2, None)],
+        "doc_id long, payload binary",
+    )
+    out = audio_rms_windows(df, n_windows=1, strict=False).collect()
+    assert [(r["doc_id"], r["rms"]) for r in out] == [(1, 100.0)]
 
 
 def test_dup_clusters_star_raises_on_round_exhaustion(spark):

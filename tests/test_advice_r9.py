@@ -1,5 +1,7 @@
-"""Round-9 ADVICE regressions: the kmeans iters<1 crash and
-duplicate-vec_id determinism — plus the new safe-by-default
+"""Round-9 ADVICE regressions: the rate-0-WAV walk divergence between
+wav_pcm16_samples and parse_wav_header (an executor TypeError even with
+strict=False — a drop-contract violation), the kmeans iters<1 crash,
+and duplicate-vec_id determinism — plus the new safe-by-default
 SemDeDup mega-cluster salt cap (the round-8 verdict's weak mark)."""
 
 from __future__ import annotations
@@ -14,8 +16,47 @@ from fluent_plugin_sql_spark.operators.cluster import (
     semdedup_cap_stats,
     semdedup_prune,
 )
+from fluent_plugin_sql_spark.operators.multimodal import (
+    audio_features_windows,
+    parse_wav_header,
+    wav_pcm16_samples,
+)
+
+from test_audio_features import _wav, pcm16_wav, square
 
 DIM = 8
+
+
+class TestRate0WavDivergence:
+    def test_walks_diverge_on_rate0(self):
+        # the precondition the bug depends on: samples decode fine
+        # while the header walk rejects rate==0
+        payload = _wav(1, 16, np.arange(32, dtype=np.int16).tobytes(),
+                       rate=0)
+        assert wav_pcm16_samples(payload) is not None
+        assert parse_wav_header(payload) is None
+
+    def test_rate0_wav_dropped_not_typeerror(self, spark):
+        bad = _wav(1, 16, np.arange(256, dtype=np.int16).tobytes(),
+                   rate=0)
+        good = pcm16_wav(square(128, 2), rate=8000)
+        df = spark.createDataFrame(
+            [(1, bytearray(bad)), (2, bytearray(good))],
+            "doc_id long, payload binary",
+        )
+        rows = audio_features_windows(df, strict=False).collect()
+        # the rate-0 row is dropped (not a job-killing TypeError);
+        # the good row still produces its windows
+        assert {r.doc_id for r in rows} == {2}
+
+    def test_rate0_wav_strict_raises_cleanly(self, spark):
+        bad = _wav(1, 16, np.arange(64, dtype=np.int16).tobytes(),
+                   rate=0)
+        df = spark.createDataFrame(
+            [(1, bytearray(bad))], "doc_id long, payload binary"
+        )
+        with pytest.raises(Exception):
+            audio_features_windows(df, strict=True).collect()
 
 
 class TestKmeansItersGuard:

@@ -79,3 +79,36 @@ def test_injected_codec_output_feeds_builtin_chain(spark):
     feats = extract_pixel_features(resized).collect()  # built-in decode
     assert len(feats) == 8
     assert all(r["width"] == 3 and r["height"] == 3 for r in feats)
+
+
+def test_operators_import_leaves_codecs_unloaded():
+    """``import fluent_plugin_sql_spark.operators`` must not load the
+    codec modules; their re-exports resolve on first access."""
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    code = (
+        "import sys\n"
+        "import fluent_plugin_sql_spark.operators as ops\n"
+        "pre = 'fluent_plugin_sql_spark.operators.'\n"
+        "assert pre + 'multimodal' not in sys.modules\n"
+        "assert pre + 'native_codecs' not in sys.modules\n"
+        "from fluent_plugin_sql_spark.operators import jpeg_pixels, webp_available\n"
+        "from fluent_plugin_sql_spark.operators import multimodal, native_codecs\n"
+        "assert jpeg_pixels is multimodal.jpeg_pixels\n"
+        "assert webp_available is native_codecs.webp_available\n"
+        "assert 'wav_pcm16_samples' in dir(ops)\n"
+        "try:\n"
+        "    ops.no_such_name\n"
+        "except AttributeError:\n"
+        "    pass\n"
+        "else:\n"
+        "    raise AssertionError('unknown name resolved')\n"
+    )
+    subprocess.run(
+        [sys.executable, "-c", code],
+        check=True,
+        cwd=Path(__file__).resolve().parents[1],
+        timeout=60,
+    )

@@ -2,7 +2,8 @@
 query must SURVIVE an adversarial corpus — NULL keys, empty strings and
 arrays, zero-norm vectors, NaN/Inf, extreme timestamps — without
 raising.  The round-7 job-killer (one zero-norm embedding →
-DIVIDE_BY_ZERO) is exactly this class of bug.
+DIVIDE_BY_ZERO) is exactly this class of bug; the codec surface already
+has a fuzzed never-raise contract, this extends it to the SQL surface.
 
 Wrong-but-deterministic results on garbage rows are acceptable; an
 exception that would kill a 1000-executor job is not.

@@ -1,4 +1,4 @@
-"""As-of and interval join edge semantics, streaming smoke."""
+"""As-of join edge semantics, multimodal plumbing, streaming smoke."""
 
 from __future__ import annotations
 
@@ -9,6 +9,11 @@ from pyspark.sql import functions as F
 
 from fluent_plugin_sql_spark.io import load_table
 from fluent_plugin_sql_spark.operators.asof import asof_join, interval_join
+from fluent_plugin_sql_spark.operators.multimodal import (
+    attach_binary,
+    decode_images,
+    sample_frames,
+)
 
 SF = "/root/testdata/sf0.001"
 
@@ -46,6 +51,91 @@ class TestAsofJoin:
         )
         got = interval_join(events, iv, "t", "s", "e").select("id").collect()
         assert [r["id"] for r in got] == [1]  # start inclusive, end exclusive
+
+
+class TestMultimodal:
+    def test_attach_binary_metadata(self, spark):
+        d = attach_binary(load_table(spark, SF, "documents").limit(5), "text")
+        row = d.select("media_meta.*", F.octet_length("payload").alias("n")).first()
+        assert row["media_type"] == "image"
+        assert row["n_bytes"] == row["n"] > 0
+        assert len(row["checksum_md5"]) == 32
+
+    def test_decode_stub_strict_raises(self, spark):
+        d = attach_binary(load_table(spark, SF, "documents").limit(2), "text")
+        with pytest.raises(Exception, match="NotImplementedError|codec"):
+            decode_images(d, strict=True).collect()
+
+    def test_decode_fake_is_deterministic_and_batched(self, spark):
+        d = attach_binary(load_table(spark, SF, "documents").limit(20), "text")
+        out1 = {r["doc_id"]: (r["width"], r["height"], r["channels"], r["n_pixels"])
+                for r in decode_images(d).collect()}
+        out2 = {r["doc_id"]: (r["width"], r["height"], r["channels"], r["n_pixels"])
+                for r in decode_images(d.repartition(7)).collect()}
+        assert out1 == out2  # partitioning must not change results
+        for w, h, c, n in out1.values():
+            assert 16 <= w < 256 and 16 <= h < 256 and 1 <= c <= 4 and n == w * h * c
+
+    @staticmethod
+    def _bmp(w, h, bpp=24):
+        import struct
+
+        # minimal BITMAPINFOHEADER, no pixel data needed for header parse
+        return (b"BM" + struct.pack("<IHHI", 54, 0, 0, 54)
+                + struct.pack("<IiiHH", 40, w, -h, 1, bpp) + b"\x00" * 24)
+
+    @staticmethod
+    def _png(w, h, color_type=6):
+        import struct
+
+        ihdr = struct.pack(">II", w, h) + bytes([8, color_type, 0, 0, 0])
+        return (b"\x89PNG\r\n\x1a\n" + struct.pack(">I", 13) + b"IHDR"
+                + ihdr + b"\x00" * 4)
+
+    @staticmethod
+    def _wav(channels=2, rate=16000, bits=16, n_samples=8000):
+        import struct
+
+        data = b"\x00" * (n_samples * channels * (bits // 8))
+        fmt = struct.pack("<HHIIHH", 1, channels, rate,
+                          rate * channels * bits // 8, channels * bits // 8, bits)
+        body = (b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt
+                + b"data" + struct.pack("<I", len(data)) + data)
+        return b"RIFF" + struct.pack("<I", len(body)) + body
+
+    def test_real_header_decode_strict(self, spark):
+        """BMP/PPM/PNG headers decode FOR REAL (stdlib parsers) — strict
+        mode no longer raises for these formats."""
+        from fluent_plugin_sql_spark.operators.multimodal import parse_image_header
+
+        rows = [
+            (1, self._bmp(640, 480)),
+            (2, self._png(32, 64, color_type=2)),
+            (3, b"P6\n# cmt\n123 77\n255\n" + b"\x00" * 10),
+        ]
+        df = spark.createDataFrame(rows, "doc_id long, payload binary")
+        out = {r["doc_id"]: r for r in decode_images(df, strict=True).collect()}
+        assert (out[1]["width"], out[1]["height"], out[1]["channels"]) == (640, 480, 3)
+        assert (out[2]["width"], out[2]["height"], out[2]["channels"]) == (32, 64, 3)
+        assert (out[3]["width"], out[3]["height"], out[3]["channels"]) == (123, 77, 3)
+        assert parse_image_header(b"\xff\xd8\xff\xe0 jpeg") is None  # needs codec
+
+    def test_real_wav_decode_strict(self, spark):
+        from fluent_plugin_sql_spark.operators.multimodal import decode_audio
+
+        df = spark.createDataFrame(
+            [(7, self._wav(channels=2, rate=16000, bits=16, n_samples=8000))],
+            "doc_id long, payload binary",
+        )
+        r = decode_audio(df, strict=True).first()
+        assert (r["channels"], r["sample_rate_hz"], r["bits_per_sample"]) == (2, 16000, 16)
+        assert r["n_samples"] == 8000 and abs(r["duration_s"] - 0.5) < 1e-9
+
+    def test_sample_frames_bounded(self, spark):
+        d = attach_binary(load_table(spark, SF, "documents").limit(10), "text")
+        frames = sample_frames(d, max_frames=4)
+        per_doc = frames.groupBy("doc_id").count().collect()
+        assert all(1 <= r["count"] <= 4 for r in per_doc)
 
 
 class TestStreaming:
@@ -209,6 +299,105 @@ class TestEwmaChunkedFold:
             assert out[u] == pytest.approx(round(acc, 6), abs=2e-6), u
 
 
+class TestPixelOps:
+    """REAL pixel math on the uncompressed formats (PPM P6, 24-bit BMP):
+    features and nearest-neighbor resize verified against hand-computed
+    pixel arrays — no codec library involved."""
+
+    @staticmethod
+    def _ppm(arr):
+        h, w, _ = arr.shape
+        return b"P6\n%d %d\n255\n" % (w, h) + arr.tobytes()
+
+    @staticmethod
+    def _bmp24(arr):
+        """Bottom-up 24-bit BMP (BGR, 4-byte row padding) from an RGB
+        (h, w, 3) array."""
+        import struct
+
+        import numpy as np
+
+        h, w, _ = arr.shape
+        stride = (w * 3 + 3) // 4 * 4
+        rows = np.zeros((h, stride), np.uint8)
+        rows[:, : w * 3] = arr[:, :, ::-1].reshape(h, w * 3)  # RGB → BGR
+        body = rows[::-1].tobytes()  # bottom-up
+        return (
+            b"BM" + struct.pack("<IHHI", 54 + len(body), 0, 0, 54)
+            + struct.pack("<IiiHH", 40, w, h, 1, 24) + b"\x00" * 24
+            + body
+        )
+
+    def test_pixel_features_real(self, spark):
+        import numpy as np
+
+        from fluent_plugin_sql_spark.operators.multimodal import (
+            extract_pixel_features,
+        )
+
+        # 2x2: red, green / blue, white
+        px = np.array(
+            [[[255, 0, 0], [0, 255, 0]], [[0, 0, 255], [255, 255, 255]]],
+            np.uint8,
+        )
+        uniform = np.full((3, 4, 3), 77, np.uint8)
+        df = spark.createDataFrame(
+            [(1, self._ppm(px)), (2, self._bmp24(uniform))],
+            "doc_id long, payload binary",
+        )
+        out = {r["doc_id"]: r for r in extract_pixel_features(df, strict=True).collect()}
+        # doc 1: channel means = (510/4, 510/4, 510/4) = 127.5 each
+        assert out[1]["channel_means"] == [127.5, 127.5, 127.5]
+        assert out[1]["brightness"] == 127.5
+        # doc 2 (BMP round-trip): uniform 77 → std exactly 0
+        assert out[2]["channel_means"] == [77.0, 77.0, 77.0]
+        assert out[2]["channel_stds"] == [0.0, 0.0, 0.0]
+        assert (out[2]["width"], out[2]["height"]) == (4, 3)
+
+    def test_resize_nearest_neighbor_real(self, spark):
+        import numpy as np
+
+        from fluent_plugin_sql_spark.operators.multimodal import (
+            _read_pixels,
+            resize_images,
+        )
+
+        px = np.array(
+            [[[255, 0, 0], [0, 255, 0]], [[0, 0, 255], [255, 255, 255]]],
+            np.uint8,
+        )
+        df = spark.createDataFrame([(1, self._ppm(px))], "doc_id long, payload binary")
+        r = resize_images(df, 4, 4, strict=True).first()
+        assert (r["width"], r["height"]) == (4, 4)
+        got = _read_pixels(bytes(r["payload"]))
+        # nearest-neighbor 2x upscale: each source pixel → 2x2 block
+        expect = px.repeat(2, axis=0).repeat(2, axis=1)
+        assert (got == expect).all()
+        # BMP → resize round-trips through the BGR/bottom-up conversion
+        bmp_df = spark.createDataFrame(
+            [(2, self._bmp24(px))], "doc_id long, payload binary"
+        )
+        r2 = resize_images(bmp_df, 2, 2, strict=True).first()  # identity size
+        assert (_read_pixels(bytes(r2["payload"])) == px).all()
+
+    def test_compressed_formats_strict_boundary(self, spark):
+        import pytest
+
+        from fluent_plugin_sql_spark.operators.multimodal import (
+            extract_pixel_features,
+            resize_images,
+        )
+
+        png = (
+            b"\x89PNG\r\n\x1a\n" + b"\x00" * 4 + b"IHDR"
+            + b"\x00\x00\x00\x02\x00\x00\x00\x02" + bytes([8, 2, 0, 0, 0])
+        )
+        df = spark.createDataFrame([(1, png)], "doc_id long, payload binary")
+        with pytest.raises(Exception, match="codec"):
+            extract_pixel_features(df, strict=True).collect()
+        assert resize_images(df, 2, 2, strict=False).count() == 0  # dropped
+
+
 def test_interval_join_bucketized_matches_broadcast(spark):
     """J7 size guard (VERDICT r3/r4 item): a large interval side must NOT
     be broadcast — the bucketized equi-join path returns identical rows
@@ -334,3 +523,71 @@ def test_interval_join_size_hint_respects_disabled_broadcast(spark):
         assert out.count() == 1  # bucketized path, same answer
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+
+
+def test_audio_rms_windows_real_signal_math(spark):
+    """Real PCM decode + RMS: a synthesized stereo WAV with known
+    window amplitudes must produce exact RMS values; non-WAV payloads
+    raise in strict mode and drop otherwise."""
+    import io
+    import wave as wavmod
+
+    import numpy as np
+    import pytest as _pytest
+
+    from fluent_plugin_sql_spark.operators.multimodal import audio_rms_windows
+
+    # stereo: L = +A/-A square, R = silence -> mono mean amplitude A/2
+    segs = []
+    for w, amp in enumerate((200, 400)):
+        left = np.empty(64, dtype="<i2")
+        left[0::2], left[1::2] = amp, -amp
+        right = np.zeros(64, dtype="<i2")
+        inter = np.empty(128, dtype="<i2")
+        inter[0::2], inter[1::2] = left, right
+        segs.append(inter)
+    buf = io.BytesIO()
+    with wavmod.open(buf, "wb") as f:
+        f.setnchannels(2)
+        f.setsampwidth(2)
+        f.setframerate(16000)
+        f.writeframes(np.concatenate(segs).tobytes())
+
+    df = spark.createDataFrame([(1, bytearray(buf.getvalue()))],
+                               "doc_id long, payload binary")
+    got = {r["window_idx"]: r for r in audio_rms_windows(df, n_windows=2).collect()}
+    assert got[0]["rms"] == 100.0 and got[1]["rms"] == 200.0
+    assert got[0]["n_samples"] == 64
+
+    bad = spark.createDataFrame([(2, bytearray(b"not audio at all"))],
+                                "doc_id long, payload binary")
+    with _pytest.raises(Exception, match="codec"):
+        audio_rms_windows(bad, strict=True).collect()
+    assert audio_rms_windows(bad, strict=False).count() == 0
+
+
+def test_audio_truncated_payload_follows_strict_contract(spark):
+    """A WAV whose data chunk claims more bytes than exist (odd-length
+    remainder) must flow through the strict/drop contract, not crash
+    numpy's frombuffer."""
+    import io
+    import struct
+    import wave as wavmod
+
+    import numpy as np
+    import pytest as _pytest
+
+    from fluent_plugin_sql_spark.operators.multimodal import audio_rms_windows
+
+    buf = io.BytesIO()
+    with wavmod.open(buf, "wb") as f:
+        f.setnchannels(1)
+        f.setsampwidth(2)
+        f.setframerate(8000)
+        f.writeframes(np.full(64, 100, dtype="<i2").tobytes())
+    payload = bytearray(buf.getvalue())[:-3]  # truncate mid-sample
+
+    df = spark.createDataFrame([(1, payload)], "doc_id long, payload binary")
+    # still decodes the whole samples that remain — no crash
+    out = audio_rms_windows(df, n_windows=1, strict=False).collect()
+    assert len(out) == 1 and out[0]["rms"] == 100.0
