@@ -1379,10 +1379,33 @@ class MinHashDedupStore:
         )
         return internal if dup_ids is None else dup_ids.unionByName(internal).distinct()
 
-    def _absorb_sig(self, sig_keep: DataFrame) -> None:
-        """Append accepted signatures' state under the writer lock.
-        ``repartition`` on the bucket column first, so each append lands
-        ONE file per touched bucket instead of one per (task × bucket)."""
+    def absorb(
+        self,
+        survivors: DataFrame,
+        text_col: str,
+        id_col: str,
+        sig: DataFrame | None = None,
+    ) -> None:
+        """Mutating half of the split contract: record ``survivors`` (rows
+        the caller has already probed AND sunk) as accepted.
+
+        ``sig``: optionally the :meth:`sign` output for a SUPERSET of
+        ``survivors`` (the probe half's batch) — absorb then appends its
+        semi-join on the survivor ids instead of re-signing.  Signing is
+        deterministic per row, so the stored state is bit-identical to
+        the re-signed path; replay safety is unchanged (a replayed
+        caller without the handoff just re-signs).  Without ``sig`` the
+        rows are signed here — a pure map, callable on any
+        replayed/pinned DataFrame."""
+        if sig is None:
+            sig_keep = minhash_signatures(
+                survivors, text_col, id_col, self.num_hashes, self.k
+            )
+        else:
+            keep = survivors.select(F.col(id_col).alias("doc"))
+            sig_keep = sig.join(keep, "doc", "left_semi")
+        # repartition on the bucket column first, so each append lands
+        # ONE file per touched bucket instead of one per (task × bucket)
         with self._store_fs.lock("absorb"):
             self._write_meta_if_absent()
             (
@@ -1402,32 +1425,6 @@ class MinHashDedupStore:
                 .parquet(f"{self.path}/signatures")
             )
 
-    def absorb(
-        self,
-        survivors: DataFrame,
-        text_col: str,
-        id_col: str,
-        sig: DataFrame | None = None,
-    ) -> None:
-        """Mutating half of the split contract: record ``survivors`` (rows
-        the caller has already probed AND sunk) as accepted.
-
-        ``sig``: optionally the :meth:`sign` output for a SUPERSET of
-        ``survivors`` (the probe half's batch) — absorb then appends its
-        semi-join on the survivor ids instead of re-signing.  Signing is
-        deterministic per row, so the stored state is bit-identical to
-        the re-signed path; replay safety is unchanged (a replayed
-        caller without the handoff just re-signs).  Without ``sig`` the
-        rows are signed here — a pure map, callable on any
-        replayed/pinned DataFrame."""
-        if sig is not None:
-            keep = survivors.select(F.col(id_col).alias("doc"))
-            self._absorb_sig(sig.join(keep, "doc", "left_semi"))
-            return
-        self._absorb_sig(
-            minhash_signatures(survivors, text_col, id_col, self.num_hashes, self.k)
-        )
-
     def process_batch(self, df: DataFrame, text_col: str, id_col: str) -> DataFrame:
         """Probe + absorb in one call (batch jobs, gate queries): return
         the near-dup-free subset of ``df`` and absorb it into the store.
@@ -1435,17 +1432,12 @@ class MinHashDedupStore:
         split ``probe_dups`` → sink → ``absorb`` sequence instead — this
         form mutates the store before the caller can sink, so a crash in
         between drops the batch on replay (see class docstring)."""
-        sig = minhash_signatures(
-            df, text_col, id_col, self.num_hashes, self.k
-        ).localCheckpoint(eager=True)  # feeds 3 consumers; compute once
-        dup_ids = self._dup_ids(sig)
-
+        sig = self.sign(df, text_col, id_col)
+        dups = self.probe_dups(df, text_col, id_col, sig=sig)
         survivors = df.join(
-            dup_ids.withColumnRenamed("dup", id_col), id_col, "left_anti"
+            dups.withColumnRenamed("dup", id_col), id_col, "left_anti"
         ).localCheckpoint(eager=True)  # pin BEFORE the store mutates
-
-        keep = survivors.select(F.col(id_col).alias("doc"))
-        self._absorb_sig(sig.join(keep, "doc", "left_semi"))
+        self.absorb(survivors, text_col, id_col, sig=sig)
         return survivors
 
     def compact(self, files_per_bucket: int = 1) -> None:
@@ -1608,21 +1600,13 @@ class ExactDedupStore:
         within the batch by lowest id) and absorb the survivors' content
         hashes.  Output columns = input columns.  Streaming callers
         should sink between ``probe_new`` and ``absorb`` instead."""
-        survivors = self.probe_new(df, text_col, id_col).localCheckpoint(
-            eager=True
-        )  # pin BEFORE the store mutates
-        with self._store_fs.lock("absorb"):
-            self._write_meta_if_absent()
-            (
-                survivors.select("content_hash")
-                .distinct()
-                .withColumn("bkt", self._bucket())
-                .repartition(F.col("bkt"))
-                .write.mode("append")
-                .partitionBy("bkt")
-                .parquet(f"{self.path}/hashes")
-            )
-        return survivors.drop("content_hash")
+        survivors = (
+            self.probe_new(df, text_col, id_col)
+            .drop("content_hash")
+            .localCheckpoint(eager=True)  # pin BEFORE the store mutates
+        )
+        self.absorb(survivors, text_col, id_col)
+        return survivors
 
     def compact(self, files_per_bucket: int = 1) -> None:
         """Rewrite the hash table with ``files_per_bucket`` files per
@@ -2472,10 +2456,7 @@ class SimHashDedupStore:
         """Record ``survivors`` (already probed and sunk) as accepted.
         Re-derives the sketches — a pure map, so the method stays
         callable on a replayed/pinned DataFrame with no handoff state."""
-        sk = self._sketch(survivors, text_col, id_col)
-        self._absorb_blocks(self._block_rows(sk))
-
-    def _absorb_blocks(self, blocks: DataFrame) -> None:
+        blocks = self._block_rows(self._sketch(survivors, text_col, id_col))
         with self._store_fs.lock("absorb"):
             self._write_meta_if_absent()
             (
@@ -2491,14 +2472,11 @@ class SimHashDedupStore:
         """Probe + absorb in one call (batch jobs, gate queries): return
         the near-dup-free subset of ``df`` and absorb it.  Streaming
         callers should sink between ``probe_dups`` and ``absorb``."""
-        sk = self._sketch(df, text_col, id_col).localCheckpoint(eager=True)
-        blocks = self._block_rows(sk)
-        dup_ids = self._dup_ids(blocks)
+        dups = self.probe_dups(df, text_col, id_col)
         survivors = df.join(
-            dup_ids.withColumnRenamed("dup", id_col), id_col, "left_anti"
+            dups.withColumnRenamed("dup", id_col), id_col, "left_anti"
         ).localCheckpoint(eager=True)  # pin BEFORE the store mutates
-        keep = survivors.select(F.col(id_col).alias("doc"))
-        self._absorb_blocks(blocks.join(keep, "doc", "left_semi"))
+        self.absorb(survivors, text_col, id_col)
         return survivors
 
     def compact(self, files_per_bucket: int = 1) -> None:

@@ -335,180 +335,24 @@ class Pipeline:
         through the streaming-native incremental source (offsets in the
         Spark checkpoint, NOT the engine StateStore), every micro-batch
         routes through the same tag-routed sink as batch mode.  Returns
-        the list of running ``StreamingQuery`` handles.
+        the list of running ``StreamingQuery`` handles, one per table.
 
         Single-table parquet sources only (the streaming source reads one
         table per query); JDBC sources keep the poll-loop mode.
 
-        Optional ``source.near_dedup: {path, text_col, id_col, ...}``
-        interposes a :class:`~.operators.dedup.MinHashDedupStore` per
-        table (store state under ``path/<table>``): each micro-batch is
-        LSH near-dedup-filtered against everything previously accepted
-        before it reaches the sink — the continuous-ingestion dedup stage
-        of an LLM-data pipeline, expressed as one config block.
-
-        Optional ``source.exact_dedup: {path, text_col, id_col}``
-        interposes the cheaper :class:`~.operators.dedup.ExactDedupStore`
-        the same way (durable content-hash first-occurrence), and
-        ``source.simhash_dedup: {path, text_col, id_col, max_hamming}``
-        the :class:`~.operators.dedup.SimHashDedupStore` (exact-recall
-        pigeonhole near-dedup on the 60-bit sketch).  All may be
-        configured together, probing cheapest-first: exact (hash) →
-        simhash (one sketch join) → MinHash near → embedding.
-
-        Optional ``source.quality_filter: {text_col, min_tokens,
-        max_tokens, min_ttr, max_stop_ratio}`` drops low-quality rows
-        (Gopher-style length / type-token-ratio / stopword-mass
-        thresholds, functions.text) BEFORE any dedup store probes — the
-        cheapest stage runs first, so junk never costs a store lookup
-        or state append.  Pure codegen; omit any threshold to skip it.
-
-        Optional ``source.semantic_dedup: {path, vec_col, id_col, tau,
-        k, nprobe}`` interposes the SemDeDup-style streaming stage: an
-        :class:`~.operators.dedup.EmbeddingDedupStore` whose frozen
-        centroids are k-means-TRAINED on the first absorbed batch
-        (``centroid_mode`` "kmeans", or "kmeans_parallel" for large
-        ``k``) so buckets are semantic clusters, probed same-cluster
-        (``nprobe`` defaults to 1 — the paper's within-cluster prune)
-        with cosine ≥ ``tau``.  Same at-least-once split as the other
-        stores (read-only probe → sink → absorb) and the same
-        replay-convergence contract as ``source.ivf_index``: a replayed
-        batch probes as dups of itself, so state is exactly-once by id.
-        This is the streaming twin of the batch curation runner's
-        ``semantic_dedup`` step.
-
-        Optional ``source.ivf_index: {path, vec_col, id_col,
-        num_centroids}`` maintains a persisted, searchable IVF
-        similarity index over the rows that reach the sink: the first
-        micro-batch builds it (centroids freeze then), later batches
-        fold in via :func:`~.operators.similarity.append_ivf_index`,
-        whose id-dedup probe makes replayed batches no-ops — so the
-        index is exactly-once by id under the at-least-once sink.
-
-        Optional ``source.rollup: {path, time_col, window, dims,
-        sum_cols, hll_cols}`` maintains a
-        :class:`~.operators.rollup.RollupStore` continuous aggregate over
-        the rows that reach the sink (post-dedup).  Keyed by epoch id,
-        the store's atomic-rename commit makes the rollup exactly-once
-        under micro-batch replay even though the sink is
-        at-least-once."""
+        Optional ``source`` blocks (``quality_filter``, ``exact_dedup``,
+        ``simhash_dedup``, ``near_dedup``, ``embedding_dedup``,
+        ``semantic_dedup``, ``rollup``, ``ivf_index``) add curation
+        stages; CONFIG.md lists their keys, the stage order and the
+        at-least-once contract (streaming.stages)."""
         src = self.config["source"]
         if "path" not in src:
             raise ValueError("run_streaming requires a parquet-dir source (path:)")
         from .sources.stream_source import incremental_stream
+        from .streaming.stages import stage_handler, stages_from_config
 
-        qf_cfg = src.get("quality_filter")
-
-        nd_cfg = src.get("near_dedup")
-        stores: dict[str, Any] = {}
-        if nd_cfg:
-            from .operators.dedup import MinHashDedupStore
-
-            for t in self.in_cfg.tables:
-                stores[t.table] = MinHashDedupStore(
-                    self.spark,
-                    f"{nd_cfg['path']}/{t.table}",
-                    num_hashes=int(nd_cfg.get("num_hashes", 24)),
-                    bands=int(nd_cfg.get("bands", 6)),
-                    k=int(nd_cfg.get("k", 3)),
-                    sig_match_frac=float(nd_cfg.get("sig_match_frac", 0.5)),
-                )
-        xd_cfg = src.get("exact_dedup")
-        xstores: dict[str, Any] = {}
-        if xd_cfg:
-            from .operators.dedup import ExactDedupStore
-
-            for t in self.in_cfg.tables:
-                xstores[t.table] = ExactDedupStore(
-                    self.spark, f"{xd_cfg['path']}/{t.table}"
-                )
-        sd_cfg = src.get("simhash_dedup")
-        sstores: dict[str, Any] = {}
-        if sd_cfg:
-            from .operators.dedup import SimHashDedupStore
-
-            for t in self.in_cfg.tables:
-                sstores[t.table] = SimHashDedupStore(
-                    self.spark,
-                    f"{sd_cfg['path']}/{t.table}",
-                    max_hamming=int(sd_cfg.get("max_hamming", 6)),
-                )
-        ed_cfg = src.get("embedding_dedup")
-        estores: dict[str, Any] = {}
-        if ed_cfg:
-            from .operators.dedup import EmbeddingDedupStore
-
-            for t in self.in_cfg.tables:
-                estores[t.table] = EmbeddingDedupStore(
-                    self.spark,
-                    f"{ed_cfg['path']}/{t.table}",
-                    threshold=float(ed_cfg.get("threshold", 0.9)),
-                    num_centroids=int(ed_cfg.get("num_centroids", 16)),
-                    nprobe=int(ed_cfg.get("nprobe", 2)),
-                    store_replicas=int(ed_cfg.get("store_replicas", 2)),
-                    centroid_mode=ed_cfg.get("centroid_mode", "hash"),
-                    # "vectorized" routes centroid training through the
-                    # numpy-GEMM path (operators/dense) — the production
-                    # arithmetic; fold stays the default/oracle mode
-                    numeric_mode=ed_cfg.get("numeric_mode", "fold"),
-                )
-
-        smd_cfg = src.get("semantic_dedup")
-        smstores: dict[str, Any] = {}
-        if smd_cfg:
-            from .operators.dedup import EmbeddingDedupStore
-
-            # optional drift-triggered recluster: with
-            # `recluster_drift_ratio` set, every absorb records the
-            # batch's mean home-centroid cosine and the store recluster
-            # (the IVF maintenance path) fires automatically when the
-            # rolling mean decays below ratio × the train-time baseline
-            # — the escape hatch from first-batch-frozen centroids
-            # under distribution shift, without operator intervention
-            _drift = smd_cfg.get("recluster_drift_ratio")
-            for t in self.in_cfg.tables:
-                smstores[t.table] = EmbeddingDedupStore(
-                    self.spark,
-                    f"{smd_cfg['path']}/{t.table}",
-                    threshold=float(smd_cfg.get("tau", 0.95)),
-                    num_centroids=int(
-                        smd_cfg.get("k", smd_cfg.get("num_centroids", 16))
-                    ),
-                    nprobe=int(smd_cfg.get("nprobe", 1)),
-                    store_replicas=int(smd_cfg.get("store_replicas", 2)),
-                    centroid_mode=smd_cfg.get("centroid_mode", "kmeans"),
-                    track_drift=_drift is not None,
-                    numeric_mode=smd_cfg.get("numeric_mode", "fold"),
-                )
-
-        iv_cfg = src.get("ivf_index")
-
-        ru_cfg = src.get("rollup")
-        rstores: dict[str, Any] = {}
-        if ru_cfg:
-            from .operators.rollup import RollupStore
-
-            for t in self.in_cfg.tables:
-                rstores[t.table] = RollupStore(
-                    self.spark,
-                    f"{ru_cfg['path']}/{t.table}",
-                    ru_cfg.get("time_col", t.resolve_update_column()),
-                    window=ru_cfg.get("window", "1 hour"),
-                    dims=tuple(ru_cfg.get("dims", ())),
-                    sum_cols=tuple(ru_cfg.get("sum_cols", ())),
-                    hll_cols=tuple(ru_cfg.get("hll_cols", ())),
-                    hist_cols={
-                        c: (float(lo), float(hi), int(nb))
-                        for c, (lo, hi, nb) in dict(
-                            ru_cfg.get("hist_cols", {})
-                        ).items()
-                    },
-                    top_cols={
-                        c: int(k)
-                        for c, k in dict(ru_cfg.get("top_cols", {})).items()
-                    },
-                )
-
+        # 0/None disables
+        compact_every = int(src.get("dedup_compact_every", 64) or 0)
         queries = []
         for t in self.in_cfg.tables:
             df = incremental_stream(
@@ -517,231 +361,17 @@ class Pipeline:
                 t.resolve_update_column(),
                 self.in_cfg.select_limit,
             )
-            tag = self.in_cfg.tag_for(t)
+            filters, followers = stages_from_config(
+                self.spark, src, t.table, t.resolve_update_column()
+            )
 
-            n_batches = {"n": 0}
-            # parse once, outside the per-batch handler; 0/None disables
-            _raw_every = src.get("dedup_compact_every", 64)
-            compact_every = int(_raw_every) if _raw_every else 0
-
-            def handle(
-                batch_df: DataFrame,
-                epoch_id: int,
-                _tag: str = tag,
-                _store: Any = stores.get(t.table),
-                _xstore: Any = xstores.get(t.table),
-                _sstore: Any = sstores.get(t.table),
-                _estore: Any = estores.get(t.table),
-                _smstore: Any = smstores.get(t.table),
-                _rstore: Any = rstores.get(t.table),
-                _ivcfg: Any = iv_cfg,
-                _table: str = t.table,
-                _n: dict = n_batches,
-                _every: int = compact_every,
-            ) -> None:
-                # at-least-once ordering: every store PROBE is read-only;
-                # the sink write happens on the pinned survivor set BEFORE
-                # any store absorbs it.  A crash between sink and absorb
-                # re-emits one batch's dups on replay (at-least-once); the
-                # reverse order would make a replayed batch look like dups
-                # of itself and silently drop it (at-most-once loss).
-                survivors = batch_df
-                if qf_cfg is not None:
-                    # stateless quality gate first: junk rows never pay
-                    # a store probe or append state
-                    from .functions.text import quality_predicate
-
-                    survivors = survivors.where(
-                        quality_predicate(qf_cfg, qf_cfg.get("text_col", "text"))
-                    )
-                if _xstore is not None:
-                    survivors = _xstore.probe_new(
-                        survivors,
-                        xd_cfg.get("text_col", "text"),
-                        xd_cfg.get("id_col", "doc_id"),
-                    ).drop("content_hash")
-                if _sstore is not None:
-                    _id = sd_cfg.get("id_col", "doc_id")
-                    dups = _sstore.probe_dups(
-                        survivors, sd_cfg.get("text_col", "text"), _id
-                    )
-                    survivors = survivors.join(
-                        dups.withColumnRenamed("dup", _id), _id, "left_anti"
-                    )
-                _nd_sig = None
-                if _store is not None:
-                    _id = nd_cfg.get("id_col", "doc_id")
-                    # sign once; the absorb below reuses the handoff
-                    # (deterministic per row — identical store state)
-                    _nd_sig = _store.sign(
-                        survivors, nd_cfg.get("text_col", "text"), _id
-                    )
-                    dups = _store.probe_dups(
-                        survivors, nd_cfg.get("text_col", "text"), _id,
-                        sig=_nd_sig,
-                    )
-                    survivors = survivors.join(
-                        dups.withColumnRenamed("dup", _id), _id, "left_anti"
-                    )
-                _ed_assigned = None
-                if _estore is not None:
-                    _id = ed_cfg.get("id_col", "vec_id")
-                    _vec = ed_cfg.get("vec_col", "embedding")
-                    # assign once against the frozen centroids; the
-                    # absorb below reuses the handoff (None on the
-                    # first batch → plain paths)
-                    _ed_assigned = _estore.assign_probes(survivors, _vec, _id)
-                    dups = _estore.probe_dups(
-                        survivors, _vec, _id, probes=_ed_assigned
-                    )
-                    survivors = survivors.join(
-                        dups.withColumnRenamed("dup", _id), _id, "left_anti"
-                    )
-                _sm_assigned = None
-                if _smstore is not None:
-                    _id = smd_cfg.get("id_col", "vec_id")
-                    _vec = smd_cfg.get("vec_col", "embedding")
-                    _sm_assigned = _smstore.assign_probes(survivors, _vec, _id)
-                    dups = _smstore.probe_dups(
-                        survivors, _vec, _id, probes=_sm_assigned
-                    )
-                    survivors = survivors.join(
-                        dups.withColumnRenamed("dup", _id), _id, "left_anti"
-                    )
-                survivors = survivors.localCheckpoint(eager=True)  # pin
-                self.output.write_batch(survivors.withColumn("tag", F.lit(_tag)))
-                if _rstore is not None:
-                    # continuous aggregate over what actually REACHED the
-                    # sink; epoch_id is stable across foreachBatch
-                    # replays, so the store's atomic-rename commit makes
-                    # the rollup EXACTLY-once even though the sink path
-                    # is at-least-once.  Absorbed BEFORE any dedup store
-                    # mutates: a crash after dedup absorbs would make the
-                    # replayed batch look like dups of itself (survivors
-                    # empty), and a rollup absorbed after that point
-                    # would commit an empty generation for rows that DID
-                    # reach the sink — permanent undercount
-                    _rstore.absorb(survivors, f"{_table}-e{epoch_id}")
-                if _ivcfg is not None:
-                    # searchable similarity index over what reached the
-                    # sink; append's id-dedup probe makes a replayed
-                    # batch a no-op (exactly-once by id), so ordering
-                    # relative to the other absorbs doesn't matter —
-                    # but it still runs before the dedup stores mutate
-                    # so a crash here can't orphan sink rows
-                    from .operators.similarity import (
-                        append_ivf_index,
-                        build_ivf_index,
-                    )
-
-                    _ipath = f"{_ivcfg['path']}/{_table}"
-                    _vec = _ivcfg.get("vec_col", "embedding")
-                    _vid = _ivcfg.get("id_col", "vec_id")
-                    from .operators.dedup import _StoreFS
-
-                    if _StoreFS(self.spark, _ipath).has_data("centroids"):
-                        append_ivf_index(self.spark, _ipath, survivors, _vec, _vid)
-                    else:
-                        # an empty first batch must NOT build: it would
-                        # freeze ZERO centroids and every later append
-                        # would assign against nothing — build waits for
-                        # the first non-empty survivor set (the count is
-                        # one cheap job over the pinned checkpoint)
-                        _nc = int(_ivcfg.get("num_centroids", 16))
-                        _nrows = survivors.count()
-                        if _nrows > 0:
-                            if _nrows < _nc:
-                                log.warning(
-                                    "ivf_index %s: first micro-batch has "
-                                    "%d rows < num_centroids=%d — the "
-                                    "index freezes with %d centroids and "
-                                    "probe pruning degrades; rebuild "
-                                    "offline with build_ivf_index over "
-                                    "the full corpus when convenient",
-                                    _ipath, _nrows, _nc, _nrows,
-                                )
-                            build_ivf_index(
-                                survivors, _ipath, _vec, _vid,
-                                num_centroids=_nc,
-                            )
-                if _xstore is not None:
-                    _xstore.absorb(
-                        survivors,
-                        xd_cfg.get("text_col", "text"),
-                        xd_cfg.get("id_col", "doc_id"),
-                    )
-                if _store is not None:
-                    _store.absorb(
-                        survivors,
-                        nd_cfg.get("text_col", "text"),
-                        nd_cfg.get("id_col", "doc_id"),
-                        sig=_nd_sig,
-                    )
-                if _sstore is not None:
-                    _sstore.absorb(
-                        survivors,
-                        sd_cfg.get("text_col", "text"),
-                        sd_cfg.get("id_col", "doc_id"),
-                    )
-                if _estore is not None:
-                    _estore.absorb(
-                        survivors,
-                        ed_cfg.get("vec_col", "embedding"),
-                        ed_cfg.get("id_col", "vec_id"),
-                        assigned=_ed_assigned,
-                    )
-                if _smstore is not None:
-                    # first absorb trains + freezes the k-means
-                    # centroids from this survivor set
-                    _smstore.absorb(
-                        survivors,
-                        smd_cfg.get("vec_col", "embedding"),
-                        smd_cfg.get("id_col", "vec_id"),
-                        assigned=_sm_assigned,
-                    )
-                    _ratio = smd_cfg.get("recluster_drift_ratio")
-                    if _ratio is not None and _smstore.maybe_recluster(
-                        trigger_ratio=float(_ratio),
-                        min_batches=int(
-                            smd_cfg.get("recluster_min_batches", 3)
-                        ),
-                    ):
-                        log.warning(
-                            "semantic_dedup %s: home-similarity drift "
-                            "crossed %.3f of the train baseline — store "
-                            "reclustered and re-baselined",
-                            _table, float(_ratio),
-                        )
-                # every micro-batch appends one small file per touched
-                # store bucket; periodic compaction keeps probe latency
-                # from decaying into file-open overhead on long streams
-                _n["n"] += 1
-                if _every and _n["n"] % _every == 0:
-                    for st_ in (
-                        _store, _xstore, _sstore, _estore, _smstore, _rstore
-                    ):
-                        if st_ is not None:
-                            st_.compact()
-                    if _ivcfg is not None:
-                        from .operators.dedup import _StoreFS
-                        from .operators.similarity import compact_ivf_index
-
-                        _ipath = f"{_ivcfg['path']}/{_table}"
-                        if _StoreFS(self.spark, _ipath).has_data("postings"):
-                            compact_ivf_index(self.spark, _ipath)
-                    # retention rides the compaction cadence: expire() is
-                    # a directory listing + deletes, not worth paying
-                    # every micro-batch
-                    _ret = (ru_cfg or {}).get("retention_days")
-                    if _rstore is not None and _ret:
-                        import datetime as _dt
-
-                        _rstore.expire(
-                            _dt.date.today() - _dt.timedelta(days=int(_ret))
-                        )
+            def sink(pinned: DataFrame, epoch_id: int, _tag: str = self.in_cfg.tag_for(t)):
+                self.output.write_batch(pinned.withColumn("tag", F.lit(_tag)))
 
             writer = (
-                df.writeStream.foreachBatch(handle)
+                df.writeStream.foreachBatch(
+                    stage_handler(filters, followers, sink, compact_every)
+                )
                 .option("checkpointLocation", f"{checkpoint_dir}/{t.table}")
             )
             if trigger_seconds:

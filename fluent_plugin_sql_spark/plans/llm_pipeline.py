@@ -583,6 +583,7 @@ def chained_dedup_stores(spark: SparkSession, sf_dir: str) -> DataFrame:
         ExactDedupStore,
         MinHashDedupStore,
     )
+    from ..streaming.stages import EmbeddingStage, ExactStage, MinHashStage, run_stages
 
     docs = _docs(spark, sf_dir)
     emb = _emb(spark, sf_dir)
@@ -591,39 +592,24 @@ def chained_dedup_stores(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("doc_id", "text", "embedding")
     path = tempfile.mkdtemp(prefix="chained_dedup_gate_")
     try:
-        xstore = ExactDedupStore(spark, f"{path}/exact")
-        nstore = MinHashDedupStore(spark, f"{path}/near", sig_match_frac=0.5)
-        estore = EmbeddingDedupStore(
-            spark,
-            f"{path}/emb",
-            threshold=0.48,
-            num_centroids=16,
-            nprobe=6,
-            store_replicas=3,
-        )
+        stages = [
+            ExactStage(ExactDedupStore(spark, f"{path}/exact"), "text", "doc_id"),
+            MinHashStage(
+                MinHashDedupStore(spark, f"{path}/near", sig_match_frac=0.5),
+                "text", "doc_id",
+            ),
+            EmbeddingStage(
+                EmbeddingDedupStore(
+                    spark, f"{path}/emb", threshold=0.48, num_centroids=16,
+                    nprobe=6, store_replicas=3,
+                ),
+                "embedding", "doc_id",
+            ),
+        ]
         out = None
         for batch in (0, 1):
             b = corpus.where(F.col("doc_id") % 2 == batch)
-            surv = xstore.probe_new(b, "text", "doc_id").drop("content_hash")
-            # sign once, hand the signatures to probe AND absorb —
-            # signing is the cycle's expensive map and deterministic
-            # per row, so the absorbed state is identical
-            nsig = nstore.sign(surv, "text", "doc_id")
-            dups = nstore.probe_dups(surv, "text", "doc_id", sig=nsig)
-            surv = surv.join(
-                dups.withColumnRenamed("dup", "doc_id"), "doc_id", "left_anti"
-            )
-            # same handoff for the embedding store: assign once against
-            # the frozen centroids (None on the first batch — the plain
-            # paths then probe ephemerally / train-and-freeze)
-            eassigned = estore.assign_probes(surv, "embedding", "doc_id")
-            dups = estore.probe_dups(surv, "embedding", "doc_id", probes=eassigned)
-            surv = surv.join(
-                dups.withColumnRenamed("dup", "doc_id"), "doc_id", "left_anti"
-            ).localCheckpoint(eager=True)  # pin: sink-then-absorb point
-            xstore.absorb(surv, "text", "doc_id")
-            nstore.absorb(surv, "text", "doc_id", sig=nsig)
-            estore.absorb(surv, "embedding", "doc_id", assigned=eassigned)
+            surv = run_stages(stages, [], b, lambda _: None, batch)
             s = surv.select("doc_id", (F.col("doc_id") % 2).alias("batch"))
             out = s if out is None else out.unionByName(s)
         return out

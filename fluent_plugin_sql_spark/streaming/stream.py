@@ -164,37 +164,18 @@ def near_dedup_stream(
     dedup misses, with state that is O(signature) per accepted doc, not
     O(text).
 
-    Delivery is TRUE at-least-once: each micro-batch is (1) probed
-    read-only against the store, (2) the pinned survivor set is written
-    to ``sink``, and only then (3) absorbed into the store.  A crash
-    between sink and absorb re-emits one batch's near-dups on replay —
-    the replayed batch re-probes, already-accepted docs look like dups
-    of themselves and are filtered, so replays converge.  (The reverse
-    order — absorb before sink — would make a replayed batch look like
-    dups of ITSELF and silently drop it: at-most-once loss.)
+    Delivery is at-least-once and replays converge: the store is probed
+    read-only, the pinned survivors are sunk, and only then absorbed
+    (:func:`~.stages.run_stages` states the contract).
 
     ``compact_every``: every N batches the store's state tables are
     rewritten to one file per bucket (``MinHashDedupStore.compact``) —
     each batch appends one small file per touched bucket, so an
     uncompacted long-running stream decays into file-open overhead.
     None disables (run compaction from a separate maintenance job)."""
-    batches_seen = {"n": 0}
+    from .stages import MinHashStage, stage_handler
 
-    def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        # sign once per batch; probe and absorb share the signatures
-        # (deterministic per row — identical store state, half the
-        # signing work of the cycle)
-        sig = store.sign(batch_df, text_col, id_col)
-        dups = store.probe_dups(batch_df, text_col, id_col, sig=sig)
-        survivors = batch_df.join(
-            dups.withColumnRenamed("dup", id_col), id_col, "left_anti"
-        ).localCheckpoint(eager=True)  # pin before sink + absorb
-        sink(survivors, epoch_id)
-        store.absorb(survivors, text_col, id_col, sig=sig)
-        batches_seen["n"] += 1
-        if compact_every and batches_seen["n"] % compact_every == 0:
-            store.compact()
-
+    handle = stage_handler([MinHashStage(store, text_col, id_col)], [], sink, compact_every)
     writer = df.writeStream.foreachBatch(handle).option(
         "checkpointLocation", checkpoint_dir
     )
