@@ -1031,6 +1031,44 @@ class _StoreFS:
         finally:
             out.close()
 
+    def pin_layout(self, store, keys: tuple[str, ...]) -> dict | None:
+        """Set ``store``'s layout constants ``keys`` to the values the
+        store was CREATED with, warning when the caller asked for others.
+        Bucket ids live in directory names and the constants shape the
+        stored keys, so probing with any other value would push filters
+        that match no stored row and SILENTLY miss every duplicate.
+        Returns the metadata (None before the first absorb, or for a
+        store that predates metadata)."""
+        meta = self.read_meta()
+        if meta is None:
+            return None
+        for key in keys:
+            if meta[key] != getattr(store, key):
+                import logging
+
+                logging.getLogger(__name__).warning(
+                    "store %s was created with %s=%s; overriding the "
+                    "requested %s", self.path, key, meta[key], getattr(store, key),
+                )
+            setattr(store, key, int(meta[key]))
+        return meta
+
+    def write_meta_if_absent(self, store, keys: tuple[str, ...]) -> None:
+        """Record ``store``'s layout constants ``keys`` on first absorb."""
+        if self.read_meta() is None:
+            self.write_meta({key: getattr(store, key) for key in keys})
+
+    def append(self, sub: str, df: DataFrame, part_col: str) -> None:
+        """Append ``df`` to ``{path}/{sub}``, directory-partitioned by
+        ``part_col``.  Repartitioning on the partition column first lands
+        ONE file per touched bucket instead of one per (task × bucket)."""
+        (
+            df.repartition(F.col(part_col))
+            .write.mode("append")
+            .partitionBy(part_col)
+            .parquet(f"{self.path}/{sub}")
+        )
+
     def heal_on_open(self, *subs: str) -> bool:
         """Run :meth:`recover` for ``subs`` UNLESS another session's
         writer lock is present.  Healing deletes staging trees; doing
@@ -1072,25 +1110,107 @@ class _StoreFS:
         self._fs.delete(self._jpath(old), True)
 
 
+class _KeyTable:
+    """One bucketed state table of the text dedup stores: the single
+    owner of their on-disk format.
+
+    A table is an append-only parquet tree ``{path}/{sub}`` whose rows
+    are hash-bucketed into ``{part}=<id>`` directories by their probe
+    key.  ``n`` is the store's creation-time ``num_buckets``, pinned in
+    ``_meta.json`` (:meth:`_StoreFS.pin_layout`).
+
+    ==========  ====  ============  ===========================  ============
+    table       part  key           bucket                       sort key
+    ==========  ====  ============  ===========================  ============
+    band_keys   bkt   bkh           pmod(bkh, n)                 bkh
+    signatures  sbkt  doc           pmod(hash(doc), n)           doc
+    hashes      bkt   content_hash  pmod(hash(content_hash), n)  content_hash
+    blocks      bkt   bvh           pmod(bvh, n)                 bvh
+    ==========  ====  ============  ===========================  ============
+
+    ``band_keys`` and ``signatures`` belong to :class:`MinHashDedupStore`,
+    ``hashes`` to :class:`ExactDedupStore` and ``blocks`` to
+    :class:`SimHashDedupStore`.  ``bkh`` and ``bvh`` are already 64-bit
+    hashes, so they bucket without re-hashing.
+
+    Scale contract of every probe (:meth:`scan`):
+    - store I/O is pruned at two levels: the probe keys' bucket ids push
+      as a partition filter (directory pruning), and the keys themselves
+      push as ``In(key, …)``, which parquet evaluates against page and
+      row-group min-max statistics.  :meth:`compact` sorts each bucket
+      by its key, so a small probe reads o(store) even when its keys
+      touch every bucket directory;
+    - both levels over-approximate: the caller's join on the key stays
+      the correctness gate;
+    - callers broadcast the batch side, so the store is never shuffled:
+      it streams through a BroadcastHashJoin.
+
+    ``num_buckets`` sizing: probes read ``touched_buckets / n`` of the
+    files, so buckets bound I/O for small probes and the pushed ``In``
+    bounds it for large ones.  256 (the default) suits up to ~10^8
+    accepted docs; use 1024–16384 at 10^9+ so bucket directories stay a
+    few GB.  Directory bucketing rather than ``bucketBy``/``saveAsTable``
+    keeps a store self-contained on disk: there is no metastore entry
+    to lose, and a fresh session re-opens the path with pruning intact.
+    """
+
+    def __init__(
+        self, fs: _StoreFS, sub: str, part: str, key: str, num_buckets: int,
+        hash_key: bool,
+    ):
+        self.fs = fs
+        self.sub = sub
+        self.part = part
+        self.key = key
+        self.num_buckets = num_buckets
+        self.hash_key = hash_key
+
+    def bucket(self, key):
+        """The bucket id of a key column (see the class table)."""
+        return F.pmod(F.hash(key) if self.hash_key else key, F.lit(self.num_buckets))
+
+    def scan(self, keys: DataFrame) -> DataFrame:
+        """The two-level-pruned read of the table for the probe keys in
+        ``keys`` (one column, named like the key).  One driver collect
+        fetches the distinct (key, bucket) pairs; past
+        ``_MAX_PUSHED_KEYS`` of them the scan keeps the partition filter
+        only, from one collect of the distinct buckets."""
+        k = F.col(self.key)
+        pairs = (
+            keys.select(k, self.bucket(k)).distinct()
+            .limit(_MAX_PUSHED_KEYS + 1).collect()
+        )
+        store = self.fs.spark.read.parquet(f"{self.fs.path}/{self.sub}")
+        part = F.col(self.part)
+        if len(pairs) <= _MAX_PUSHED_KEYS:
+            buckets = sorted({b for _, b in pairs})
+            return store.where(part.isin(buckets) & k.isin([key for key, _ in pairs]))
+        # degenerate mega-batch: keep the partition filter only
+        buckets = [r[0] for r in keys.select(self.bucket(k)).distinct().collect()]
+        return store.where(part.isin(buckets))
+
+    def append(self, rows: DataFrame) -> None:
+        """Append ``rows`` (which carry the key column) with their bucket."""
+        self.fs.append(
+            self.sub, rows.withColumn(self.part, self.bucket(F.col(self.key))), self.part
+        )
+
+    def compact(self, files_per_bucket: int) -> None:
+        """Rewrite the table to ``files_per_bucket`` files per bucket,
+        each sorted by the key (see :meth:`_StoreFS.compact_table`)."""
+        self.fs.compact_table(
+            self.sub, self.part, self.num_buckets * files_per_bucket, sort_col=self.key
+        )
+
+
 class MinHashDedupStore:
     """Incremental near-dedup for CONTINUOUS ingestion — the missing
     piece between batch ``minhash_lsh_dup_pairs`` (one corpus, one shot)
     and a poll-loop/streaming pipeline that must ask, per batch: "have we
     already accepted something near-identical, possibly months ago?".
 
-    State is two append-only parquet tables under ``path`` — band keys
-    hash-bucketed by ``pmod(hash(band, band_key), num_buckets)`` and full
-    signatures hash-bucketed by ``pmod(hash(doc), num_buckets)``.  The
-    bucket id is a *directory partition column*, so the per-batch probe
-    pushes the (≤ ``num_buckets``) bucket ids it needs as a partition
-    filter and Spark prunes every other directory at planning time — the
-    probe reads O(matching buckets), not O(store), and NEVER shuffles the
-    store side: the batch side is explicitly broadcast, so both probe
-    joins are BroadcastHashJoin with the store streaming through.
-    (Directory bucketing instead of ``bucketBy``/``saveAsTable`` keeps the
-    store self-contained on disk — no metastore entry to lose between
-    sessions; a fresh SparkSession re-opens the same path and pruning
-    still works.)  Per batch:
+    State is the ``band_keys`` and ``signatures`` tables under ``path``
+    (layout and probe scale contract: :class:`_KeyTable`).  Per batch:
 
     1. sign the batch (OPH MinHash, O(1)/shingle);
     2. candidates = band-key collisions batch×store (shuffle bounded by
@@ -1120,16 +1240,11 @@ class MinHashDedupStore:
     form on any path where replay loss matters.
 
     ``num_buckets`` sizes the directory-partition fan-out of the state
-    tables.  Guidance: probes read ``touched_buckets / num_buckets`` of
-    the store's FILES (partition pruning) and, within those, only the
-    pages whose min-max straddle a pushed band-key hash (the second-level
-    ``In`` prune; see :meth:`_candidate_pairs`) — so buckets bound file-
-    level I/O for SMALL probes while the pushed filter bounds it for
-    large ones.  256 (default) suits up to ~10^8 accepted docs; use
-    1024–16384 at 10^9+ so per-bucket directories stay a few GB and
-    small probes prune proportionally.  Buckets are fixed at store
-    creation (bucket ids live in directory names).
+    tables (sizing guidance: :class:`_KeyTable`).  Buckets are fixed at
+    store creation (bucket ids live in directory names).
     """
+
+    _LAYOUT = ("num_buckets",)
 
     def __init__(
         self,
@@ -1150,22 +1265,8 @@ class MinHashDedupStore:
         self.num_buckets = num_buckets
         self._store_fs = _StoreFS(spark, self.path)
         self._store_fs.heal_on_open("band_keys", "signatures")
-        meta = self._store_fs.read_meta()
-        if meta is not None:
-            # the on-disk directory layout was hashed with the CREATION-
-            # time bucket count; probing with any other modulus would
-            # push partition filters that match no directory and
-            # SILENTLY miss every stored duplicate
-            if meta["num_buckets"] != self.num_buckets:
-                import logging
-
-                logging.getLogger(__name__).warning(
-                    "store %s was created with num_buckets=%s; overriding "
-                    "the requested %s", self.path, meta["num_buckets"],
-                    self.num_buckets,
-                )
-            self.num_buckets = int(meta["num_buckets"])
-        elif self._store_fs.has_data("band_keys"):
+        meta = self._store_fs.pin_layout(self, self._LAYOUT)
+        if meta is None and self._store_fs.has_data("band_keys"):
             # pre-metadata state: verify it carries the bkh probe column
             # (the v2 layout) instead of failing later — or worse,
             # probing wrongly
@@ -1176,10 +1277,12 @@ class MinHashDedupStore:
                     "rebuild it (re-absorb the corpus) — in-place "
                     "migration is not supported"
                 )
-
-    def _write_meta_if_absent(self) -> None:
-        if self._store_fs.read_meta() is None:
-            self._store_fs.write_meta({"num_buckets": self.num_buckets})
+        self._band_keys = _KeyTable(
+            self._store_fs, "band_keys", "bkt", "bkh", self.num_buckets, hash_key=False
+        )
+        self._signatures = _KeyTable(
+            self._store_fs, "signatures", "sbkt", "doc", self.num_buckets, hash_key=True
+        )
 
     def _exists(self, sub: str) -> bool:
         return self._store_fs.has_data(sub)
@@ -1206,26 +1309,10 @@ class MinHashDedupStore:
         probe sides."""
         return F.xxhash64("band", "band_key")
 
-    def _sig_bucket(self, col: str = "doc"):
-        return F.pmod(F.hash(col), F.lit(self.num_buckets))
-
     def _candidate_pairs(self, bk: DataFrame) -> DataFrame:
-        """(new doc, old doc) band-key collisions batch × store.
-
-        Store-side I/O is pruned at TWO levels before the (broadcast)
-        join even sees a row:
-        1. directory partitions — the distinct bucket ids the batch's
-           band keys hash to, pushed as a partition filter;
-        2. a pushed ``In(bkh, …)`` data filter on the batch's band-key
-           hashes, which parquet evaluates against page/row-group
-           min-max statistics — after :meth:`compact` sorts each bucket
-           by ``bkh``, non-matching pages are skipped outright, so a
-           500-row probe reads o(store) even when its ~3000 band keys
-           touch every bucket directory (the regime where partition
-           pruning alone degenerates to a full-store read).
-        Both levels are safe over-approximations: the equi-join on
-        (band, band_key) remains the correctness gate.
-        """
+        """(new doc, old doc) band-key collisions batch × store: the
+        pruned ``band_keys`` scan (:meth:`_KeyTable.scan`) joined to the
+        broadcast batch on (band, band_key)."""
         return (
             self._pruned_band_key_scan(bk)
             .withColumnRenamed("doc", "old_doc")
@@ -1235,79 +1322,22 @@ class MinHashDedupStore:
         )
 
     def _pruned_band_key_scan(self, bk: DataFrame) -> DataFrame:
-        """The two-level-pruned read of the band_keys state table for a
-        probe batch ``bk`` — separated out so tests can execute the scan
-        alone and assert its I/O metrics stay bounded as the store
+        """The pruned band_keys read for a probe batch ``bk``, separated
+        out so tests can assert its I/O stays bounded as the store
         grows."""
-        probe_keys = [
-            r[0]
-            for r in bk.select(self._bk_hash().alias("bkh"))
-            .distinct()
-            .limit(_MAX_PUSHED_KEYS + 1)
-            .collect()
-        ]
-        store_bk = self.spark.read.parquet(f"{self.path}/band_keys")
-        if len(probe_keys) <= _MAX_PUSHED_KEYS:
-            bkts = sorted({k % self.num_buckets for k in probe_keys})
-            return store_bk.where(
-                F.col("bkt").isin(bkts) & F.col("bkh").isin(probe_keys)
-            )
-        # degenerate mega-batch: keep the partition filter only
-        bkts = [
-            r[0]
-            for r in bk.select(
-                F.pmod(self._bk_hash(), F.lit(self.num_buckets)).alias("b")
-            )
-            .distinct()
-            .collect()
-        ]
-        return store_bk.where(F.col("bkt").isin(bkts))
+        return self._band_keys.scan(bk.select(self._bk_hash().alias("bkh")))
 
     def _cross_batch_dups(self, bk: DataFrame, sig: DataFrame) -> DataFrame | None:
-        """Batch ids that near-match something already in the store.
-
-        Scale contract (the probe is the hot path of continuous ingest):
-        - the store is NEVER shuffled: the batch side is broadcast, so both
-          joins are BroadcastHashJoin with the store streaming through;
-        - the store is barely even READ: the probe collects the ≤
-          ``num_buckets`` bucket ids its keys hash to (bounded by the
-          bucket count, not the batch size) and pushes them as a partition
-          filter, so directory pruning skips every non-matching bucket.
-        """
+        """Batch ids that near-match something already in the store:
+        band-key candidates, verified against the candidates' stored
+        signatures (both scans pruned per :class:`_KeyTable`)."""
         if not self._exists("band_keys"):
             return None
         cand = self._candidate_pairs(bk).localCheckpoint(
             eager=True
-        )  # small; feeds bucket-collect + join
-        old_docs = [
-            r[0]
-            for r in cand.select("old_doc").distinct().limit(_MAX_PUSHED_KEYS + 1).collect()
-        ]
-        store_sig = self.spark.read.parquet(f"{self.path}/signatures")
-        if len(old_docs) <= _MAX_PUSHED_KEYS:
-            # candidate ids pushed straight into the signature scan:
-            # partition prune on their buckets + In(doc, …) page prune
-            # (compact sorts each bucket by doc) — the probe reads the
-            # candidates' signatures, not the bucket's
-            sig_bkts = sorted(
-                {
-                    r[0]
-                    for r in cand.select(self._sig_bucket("old_doc").alias("b"))
-                    .distinct()
-                    .collect()
-                }
-            )
-            store_sig = store_sig.where(
-                F.col("sbkt").isin(sig_bkts) & F.col("doc").isin(old_docs)
-            )
-        else:
-            sig_bkts = [
-                r[0]
-                for r in cand.select(self._sig_bucket("old_doc").alias("b"))
-                .distinct()
-                .collect()
-            ]
-            store_sig = store_sig.where(F.col("sbkt").isin(sig_bkts))
+        )  # small; feeds the signature-key collect + join
+        # the probe reads the candidates' signatures, not their buckets'
+        store_sig = self._signatures.scan(cand.select(F.col("old_doc").alias("doc")))
         return (
             store_sig.alias("o")
             .join(
@@ -1404,26 +1434,13 @@ class MinHashDedupStore:
         else:
             keep = survivors.select(F.col(id_col).alias("doc"))
             sig_keep = sig.join(keep, "doc", "left_semi")
-        # repartition on the bucket column first, so each append lands
-        # ONE file per touched bucket instead of one per (task × bucket)
         with self._store_fs.lock("absorb"):
-            self._write_meta_if_absent()
-            (
+            self._store_fs.write_meta_if_absent(self, self._LAYOUT)
+            self._band_keys.append(
                 _band_key_rows(sig_keep, self.num_hashes, self.bands)
                 .withColumn("bkh", self._bk_hash())
-                .withColumn("bkt", F.pmod(F.col("bkh"), F.lit(self.num_buckets)))
-                .repartition(F.col("bkt"))
-                .write.mode("append")
-                .partitionBy("bkt")
-                .parquet(f"{self.path}/band_keys")
             )
-            (
-                sig_keep.withColumn("sbkt", self._sig_bucket())
-                .repartition(F.col("sbkt"))
-                .write.mode("append")
-                .partitionBy("sbkt")
-                .parquet(f"{self.path}/signatures")
-            )
+            self._signatures.append(sig_keep)
 
     def process_batch(self, df: DataFrame, text_col: str, id_col: str) -> DataFrame:
         """Probe + absorb in one call (batch jobs, gate queries): return
@@ -1454,13 +1471,8 @@ class MinHashDedupStore:
         after; crash safety per :meth:`_StoreFS.recover`.
         """
         with self._store_fs.lock("compact"):
-            for sub, part, sort in (
-                ("band_keys", "bkt", "bkh"),
-                ("signatures", "sbkt", "doc"),
-            ):
-                self._store_fs.compact_table(
-                    sub, part, self.num_buckets * files_per_bucket, sort_col=sort
-                )
+            for table in (self._band_keys, self._signatures):
+                table.compact(files_per_bucket)
 
 
 class ExactDedupStore:
@@ -1470,15 +1482,11 @@ class ExactDedupStore:
     watermark passes; this store remembers every accepted document's
     content hash forever, at ~16 bytes/doc, never the text).
 
-    Same scale contract as :class:`MinHashDedupStore` — state is one
-    append-only parquet table hash-bucketed into partition directories
-    (``pmod(hash(content_hash), num_buckets)``); the per-batch probe
-    collects its ≤ ``num_buckets`` bucket ids, pushes them as a
-    partition filter (directory pruning), and broadcasts the batch
-    side, so the store is never shuffled and barely read.  Crash
-    contract: state appends AFTER the survivor set is pinned; a replay
-    re-probes and its own hashes now look like dups — replays converge
-    instead of double-inserting (self-healing at-least-once).
+    State is the ``hashes`` table (layout and probe scale contract:
+    :class:`_KeyTable`).  Crash contract: state appends AFTER the
+    survivor set is pinned; a replay re-probes and its own hashes now
+    look like dups — replays converge instead of double-inserting
+    (self-healing at-least-once).
 
     Reference parity: this is the poll-loop dedup a fluentd user
     approximates with downstream unique filters; here it is exact,
@@ -1487,45 +1495,27 @@ class ExactDedupStore:
     store absorbs).
     """
 
+    _LAYOUT = ("num_buckets",)
+
     def __init__(self, spark, path: str, num_buckets: int = 256):
         self.spark = spark
         self.path = path.rstrip("/")
         self.num_buckets = num_buckets
         self._store_fs = _StoreFS(spark, self.path)
         self._store_fs.heal_on_open("hashes")
-        meta = self._store_fs.read_meta()
-        if meta is not None:
-            # same layout contract as MinHashDedupStore: probe pruning
-            # must use the creation-time bucket modulus or it silently
-            # prunes AWAY the real state directories
-            if meta["num_buckets"] != self.num_buckets:
-                import logging
-
-                logging.getLogger(__name__).warning(
-                    "store %s was created with num_buckets=%s; overriding "
-                    "the requested %s", self.path, meta["num_buckets"],
-                    self.num_buckets,
-                )
-            self.num_buckets = int(meta["num_buckets"])
-
-    def _write_meta_if_absent(self) -> None:
-        if self._store_fs.read_meta() is None:
-            self._store_fs.write_meta({"num_buckets": self.num_buckets})
+        self._store_fs.pin_layout(self, self._LAYOUT)
+        self._hashes = _KeyTable(
+            self._store_fs, "hashes", "bkt", "content_hash", self.num_buckets,
+            hash_key=True,
+        )
 
     def _exists(self) -> bool:
         return self._store_fs.has_data("hashes")
 
-    def _bucket(self):
-        return F.pmod(F.hash("content_hash"), F.lit(self.num_buckets))
-
     def probe_new(self, df: DataFrame, text_col: str, id_col: str) -> DataFrame:
         """Read-only: the subset of ``df`` that is NOT already in the
         store and NOT a lower-id duplicate within the batch.  The store
-        scan is pruned at two levels: partition filter on the batch's
-        bucket ids, plus a pushed ``In(content_hash, …)`` that parquet
-        evaluates against page statistics (:meth:`compact` sorts each
-        bucket by content_hash), so probe I/O stays o(store) even when
-        the batch's hashes touch every bucket directory."""
+        scan is pruned per :class:`_KeyTable`."""
         hashed = df.withColumn("content_hash", F.md5(F.col(text_col)))
         # batch-internal: keep the lowest id per content hash (groupBy-min
         # + broadcast join back keeps map-side combine; renamed key avoids
@@ -1540,35 +1530,9 @@ class ExactDedupStore:
         ).drop("_ch", "_keep_id")
         if not self._exists():
             return firsts
-        probe_hashes = [
-            r[0]
-            for r in hashed.select("content_hash")
-            .distinct()
-            .limit(_MAX_PUSHED_KEYS + 1)
-            .collect()
-        ]
-        store = self.spark.read.parquet(f"{self.path}/hashes")
-        if len(probe_hashes) <= _MAX_PUSHED_KEYS:
-            probe_bkts = sorted(
-                {
-                    r[0]
-                    for r in hashed.select(self._bucket().alias("b"))
-                    .distinct()
-                    .collect()
-                }
-            )
-            store = store.where(
-                F.col("bkt").isin(probe_bkts)
-                & F.col("content_hash").isin(probe_hashes)
-            )
-        else:
-            probe_bkts = [
-                r[0]
-                for r in hashed.select(self._bucket().alias("b")).distinct().collect()
-            ]
-            store = store.where(F.col("bkt").isin(probe_bkts))
         seen = (
-            store.join(
+            self._hashes.scan(hashed.select("content_hash"))
+            .join(
                 F.broadcast(hashed.select("content_hash").distinct()),
                 "content_hash",
                 "left_semi",
@@ -1583,15 +1547,9 @@ class ExactDedupStore:
         as accepted — the mutating half of the at-least-once split (sink
         BEFORE absorb; see :class:`MinHashDedupStore` docstring)."""
         with self._store_fs.lock("absorb"):
-            self._write_meta_if_absent()
-            (
-                survivors.select(F.md5(F.col(text_col)).alias("content_hash"))
-                .distinct()
-                .withColumn("bkt", self._bucket())
-                .repartition(F.col("bkt"))
-                .write.mode("append")
-                .partitionBy("bkt")
-                .parquet(f"{self.path}/hashes")
+            self._store_fs.write_meta_if_absent(self, self._LAYOUT)
+            self._hashes.append(
+                survivors.select(F.md5(F.col(text_col)).alias("content_hash")).distinct()
             )
 
     def process_batch(self, df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -1614,12 +1572,7 @@ class ExactDedupStore:
         pushed ``In`` filter page-prunes (see
         :meth:`MinHashDedupStore.compact` — same contract)."""
         with self._store_fs.lock("compact"):
-            self._store_fs.compact_table(
-                "hashes",
-                "bkt",
-                self.num_buckets * files_per_bucket,
-                sort_col="content_hash",
-            )
+            self._hashes.compact(files_per_bucket)
 
 
 class EmbeddingDedupStore:
@@ -1999,10 +1952,9 @@ class EmbeddingDedupStore:
             # share the assignment between the postings write and
             # the drift aggregate instead of re-running it
             assigned = assigned.localCheckpoint(eager=False)
-        homes = assigned.select("bucket", "doc", "vec")
-        homes.repartition(F.col("bucket")).write.mode("append").partitionBy(
-            "bucket"
-        ).parquet(f"{self.path}/postings")
+        self._store_fs.append(
+            "postings", assigned.select("bucket", "doc", "vec"), "bucket"
+        )
         if self.track_drift:
             self._update_drift(assigned, creating)
 
@@ -2270,17 +2222,11 @@ class SimHashDedupStore:
     verification happen in the same bucket-pruned join; unlike the
     MinHash store there is no second state table to read.
 
-    Probe scale contract (same as the sibling stores):
-    - store side is NEVER shuffled: batch blocks broadcast, store
-      streams through a BroadcastHashJoin;
-    - store I/O is pruned at two levels: the batch's block-key hashes'
-      bucket ids push as a partition filter, and the key hashes
-      themselves push as ``In(bvh, …)`` that parquet evaluates against
-      page min-max stats (:meth:`compact` sorts buckets by ``bvh``).
-    - recall is exact, not probabilistic: pigeonhole guarantees two
-      sketches within ``max_hamming`` agree on ≥ 1 of the
-      ``max_hamming + 1`` blocks, so a true near-dup cannot be missed
-      by blocking (the MinHash store's banding is probabilistic).
+    Layout and probe scale contract: :class:`_KeyTable`.  Recall is
+    exact, not probabilistic: pigeonhole guarantees two sketches within
+    ``max_hamming`` agree on ≥ 1 of the ``max_hamming + 1`` blocks, so a
+    true near-dup cannot be missed by blocking (the MinHash store's
+    banding is probabilistic).
 
     Sketches use the engine-portable md5-derived 60-bit token hashes
     (functions.text), so acceptance decisions are reproducible across
@@ -2306,6 +2252,8 @@ class SimHashDedupStore:
     in_sql.rb:136-161 like the other stores (SURVEY §2.9 T5).
     """
 
+    _LAYOUT = ("num_buckets", "max_hamming")
+
     def __init__(
         self,
         spark,
@@ -2319,32 +2267,16 @@ class SimHashDedupStore:
         self.num_buckets = num_buckets
         self._store_fs = _StoreFS(spark, self.path)
         self._store_fs.heal_on_open("blocks")
-        meta = self._store_fs.read_meta()
-        if meta is not None:
-            # layout constants are creation-time-pinned: bucket ids live
-            # in directory names, and block boundaries define blk_val —
-            # probing with different values would silently miss state
-            import logging
-
-            for key in ("num_buckets", "max_hamming"):
-                if meta[key] != getattr(self, key):
-                    logging.getLogger(__name__).warning(
-                        "store %s was created with %s=%s; overriding the "
-                        "requested %s", self.path, key, meta[key],
-                        getattr(self, key),
-                    )
-                    setattr(self, key, int(meta[key]))
+        # block boundaries define blk_val, so max_hamming is layout too
+        self._store_fs.pin_layout(self, self._LAYOUT)
+        self._blocks = _KeyTable(
+            self._store_fs, "blocks", "bkt", "bvh", self.num_buckets, hash_key=False
+        )
 
     # block boundaries: max_hamming+1 contiguous slices of the 60 bits
     def _bounds(self) -> list[int]:
         nb = self.max_hamming + 1
         return [i * 60 // nb for i in range(nb)] + [60]
-
-    def _write_meta_if_absent(self) -> None:
-        if self._store_fs.read_meta() is None:
-            self._store_fs.write_meta(
-                {"num_buckets": self.num_buckets, "max_hamming": self.max_hamming}
-            )
 
     def _exists(self) -> bool:
         return self._store_fs.has_data("blocks")
@@ -2389,30 +2321,9 @@ class SimHashDedupStore:
         )
 
     def _pruned_block_scan(self, blocks: DataFrame) -> DataFrame:
-        """Two-level-pruned read of the blocks state table for a probe
-        batch — separated out so tests can assert its I/O metrics."""
-        probe_keys = [
-            r[0]
-            for r in blocks.select(self._bvh().alias("bvh"))
-            .distinct()
-            .limit(_MAX_PUSHED_KEYS + 1)
-            .collect()
-        ]
-        store = self.spark.read.parquet(f"{self.path}/blocks")
-        if len(probe_keys) <= _MAX_PUSHED_KEYS:
-            bkts = sorted({k % self.num_buckets for k in probe_keys})
-            return store.where(
-                F.col("bkt").isin(bkts) & F.col("bvh").isin(probe_keys)
-            )
-        bkts = [
-            r[0]
-            for r in blocks.select(
-                F.pmod(self._bvh(), F.lit(self.num_buckets)).alias("b")
-            )
-            .distinct()
-            .collect()
-        ]
-        return store.where(F.col("bkt").isin(bkts))
+        """The pruned blocks read for a probe batch, separated out so
+        tests can assert its I/O metrics."""
+        return self._blocks.scan(blocks.select(self._bvh().alias("bvh")))
 
     def _dup_ids(self, blocks: DataFrame) -> DataFrame:
         """Batch ids that are within ``max_hamming`` of the store OR of a
@@ -2458,15 +2369,8 @@ class SimHashDedupStore:
         callable on a replayed/pinned DataFrame with no handoff state."""
         blocks = self._block_rows(self._sketch(survivors, text_col, id_col))
         with self._store_fs.lock("absorb"):
-            self._write_meta_if_absent()
-            (
-                blocks.withColumn("bvh", self._bvh())
-                .withColumn("bkt", F.pmod(F.col("bvh"), F.lit(self.num_buckets)))
-                .repartition(F.col("bkt"))
-                .write.mode("append")
-                .partitionBy("bkt")
-                .parquet(f"{self.path}/blocks")
-            )
+            self._store_fs.write_meta_if_absent(self, self._LAYOUT)
+            self._blocks.append(blocks.withColumn("bvh", self._bvh()))
 
     def process_batch(self, df: DataFrame, text_col: str, id_col: str) -> DataFrame:
         """Probe + absorb in one call (batch jobs, gate queries): return
@@ -2484,7 +2388,4 @@ class SimHashDedupStore:
         bucket, sorted by ``bvh`` so pushed ``In`` filters prune pages.
         Bucket ids are preserved; crash safety per _StoreFS.recover."""
         with self._store_fs.lock("compact"):
-            self._store_fs.compact_table(
-                "blocks", "bkt", self.num_buckets * files_per_bucket,
-                sort_col="bvh",
-            )
+            self._blocks.compact(files_per_bucket)

@@ -735,7 +735,8 @@ def append_ivf_index(
     )
     from .dedup import _StoreFS
 
-    if skip_existing_ids and _StoreFS(spark, index_path).has_data("postings"):
+    fs = _StoreFS(spark, index_path)
+    if skip_existing_ids and fs.has_data("postings"):
         touched = [r[0] for r in posting.select("bucket").distinct().collect()]
         existing = spark.read.parquet(f"{index_path}/postings").where(
             F.col("bucket").isin(touched)
@@ -750,12 +751,7 @@ def append_ivf_index(
             .distinct()
         )
         posting = posting.join(F.broadcast(seen), "match_id", "left_anti")
-    (
-        posting.repartition(F.col("bucket"))  # one file per touched bucket
-        .write.mode("append")
-        .partitionBy("bucket")
-        .parquet(f"{index_path}/postings")
-    )
+    fs.append("postings", posting, "bucket")
 
 
 def compact_ivf_index(spark, index_path: str, files_per_bucket: int = 1) -> None:

@@ -51,6 +51,36 @@ def _decode_value(v: Any) -> Any:
     return v
 
 
+def _parse_state(text: str, path: str) -> dict[str, dict[str, Any]]:
+    """Decode a non-empty state file.  A corrupt one raises rather than
+    reading as "no state", which would silently re-ingest every table
+    from the beginning."""
+    try:
+        data = json.loads(text)
+    except json.JSONDecodeError as e:
+        raise _corrupt_state(path, e) from e
+    records = data.get("last_records", {}) if isinstance(data, dict) else None
+    if not isinstance(records, dict) or not all(
+        isinstance(rec, dict) for rec in records.values()
+    ):
+        raise _corrupt_state(
+            path, 'expected {"last_records": {table: {column: value}}}'
+        )
+    return {
+        table: {k: _decode_value(v) for k, v in rec.items()}
+        for table, rec in records.items()
+    }
+
+
+def _corrupt_state(path: str, why: object) -> ValueError:
+    return ValueError(
+        f"state file {path} is corrupt ({why}); restore it, or delete it to "
+        "restart without state (every table is then re-ingested from the "
+        "beginning; SQLInput.reset_to moves a table's watermark to an "
+        "explicit point)"
+    )
+
+
 class StateStore:
     """File-backed ``{table → last_record}`` map (reference StateStore,
     in_sql.rb:280-320)."""
@@ -62,11 +92,8 @@ class StateStore:
             with open(path) as f:
                 text = f.read().strip()
             # empty state file is valid and means "no state" (in_sql.rb:291-295)
-            data = json.loads(text) if text else {}
-            self.last_records = {
-                table: {k: _decode_value(v) for k, v in rec.items()}
-                for table, rec in data.get("last_records", {}).items()
-            }
+            if text:
+                self.last_records = _parse_state(text, path)
 
     def last_record(self, table: str) -> dict[str, Any] | None:
         return self.last_records.get(table)
