@@ -53,10 +53,10 @@ from pyspark.sql import functions as F
 from .config import SinkRoute, SourceTable, SQLInputConfig, SQLOutputConfig
 from .session import get_spark
 from .sinks.router import SQLOutput
-
-log = logging.getLogger(__name__)
 from .sources.incremental import SQLInput, discover_tables
 from .sources.jdbc import read_jdbc, write_jdbc
+
+log = logging.getLogger(__name__)
 
 
 def load_config(path: str) -> dict[str, Any]:
@@ -200,9 +200,18 @@ def _jdbc_props(block: dict[str, Any]) -> dict[str, str]:
 
 def build_jdbc_scans(spark: SparkSession, src: dict[str, Any], cfg: SQLInputConfig):
     """Pushdown scans for JDBC sources: the poll query executes in the
-    database (dialect-aware row cap; see sources.jdbc)."""
+    database (dialect-aware row cap; see sources.jdbc).  The pushed query
+    has a single-column watermark, so a ``tiebreak_column`` is rejected
+    rather than ignored (ignoring it would skip rows tied at a batch
+    boundary)."""
     from .sources.jdbc import JdbcIncrementalScan
 
+    for t in cfg.tables:
+        if t.tiebreak_column:
+            raise ValueError(
+                f"source table {t.table!r}: tiebreak_column is supported for "
+                "parquet (path:) sources only, not JDBC sources"
+            )
     url = jdbc_url(src)
     dialect = src.get("dialect") or src.get("adapter", "postgresql")
     return {

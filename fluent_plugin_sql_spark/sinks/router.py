@@ -9,19 +9,23 @@ Reference semantics rebuilt:
 - P3 ``column_mapping`` projection/rename that DROPS unmapped fields
   (out_sql.rb:64-72, 140-148).
 - S8 degraded one-by-one load with bounded retries on deterministic
-  errors (out_sql.rb:103-136) — implemented as a ``foreachPartition``
-  writer so the fallback runs executor-side, per partition, at scale.
+  errors (out_sql.rb:103-136) — :func:`resilient_rows_writer` builds it as
+  a ``foreachPartition`` function, but the Pipeline's JDBC sink does not
+  use it yet: that sink is a plain bulk ``write_jdbc``.
 
 Spark design: routing is a single ``CASE WHEN`` column (one pass over the
-data, whole-stage codegen, no per-route rescans), then one write per route
-filtered on that column.  In streaming mode, wrap :meth:`SQLOutput.write_batch`
-in ``foreachBatch``.
+data, whole-stage codegen, no per-route rescans).  The routed batch is
+cached; one collect of that column fills the cache and counts the rows
+per route, then each non-empty route writes its slice, filtered on that
+column.  In streaming mode, wrap :meth:`SQLOutput.write_batch` in
+``foreachBatch``.
 """
 
 from __future__ import annotations
 
 import logging
 import time as _time
+from collections import Counter
 from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame
@@ -120,23 +124,26 @@ class SQLOutput:
     def write_batch(self, df: DataFrame, tag_col: str = "tag") -> dict[str, int]:
         """Route one micro-batch/chunk to its tables (out_sql.rb:226-237).
 
-        The routed frame is cached once (bounded: one micro-batch), then
-        each ROUTE writes its slice through its OWN column_mapping — N
-        small writes off one shared scan, not N rescans of the source.
-        Counts aggregate per table (two routes may share a table).
+        The routed frame is cached once (bounded: one micro-batch), and
+        one collect of its route column fills that cache and gives the
+        rows per route.  Each non-empty ROUTE then writes its slice
+        through its OWN column_mapping — small writes off one shared
+        scan, none for an empty slice.  Counts aggregate per table (two
+        routes may share a table); an empty route's table reports 0.
         """
         routed = self.prepare(df, tag_col).cache()
         written: dict[str, int] = {}
         try:
+            per_route = Counter(r[0] for r in routed.select("_route_idx").collect())
             slices = list(enumerate(self.config.pattern_routes))
             slices.append((-1, self.config.default_route))
             for idx, route in slices:
-                part = routed.where(F.col("_route_idx") == idx).drop("_route_idx")
-                mapping = route.mapping_pairs()
-                if mapping:
-                    part = apply_column_mapping(part, mapping)
-                n = part.count()
+                n = per_route[idx]
                 if n:
+                    part = routed.where(F.col("_route_idx") == idx).drop("_route_idx")
+                    mapping = route.mapping_pairs()
+                    if mapping:
+                        part = apply_column_mapping(part, mapping)
                     self.write(part, route.table)
                 written[route.table] = written.get(route.table, 0) + n
             return written

@@ -20,9 +20,11 @@ Spark design: the scan itself is a declarative DataFrame plan —
 ``where > lit`` / ``orderBy`` / ``limit`` — which Catalyst pushes into the
 source (JDBC: into the generated SQL; Parquet: filter pushdown + TakeOrdered).
 The poll loop is driver-side orchestration only; each batch is bounded by
-``select_limit`` so caching it before the emit/checkpoint pair is O(limit),
-independent of table size — this is what makes the design 100 TB-safe: we
-never materialize more than one batch.
+``select_limit``, so caching it before the emit/checkpoint pair and
+collecting its watermark columns are O(limit), independent of table size
+— this is what makes the design 100 TB-safe: we never materialize more
+than one batch.  A poll runs one Spark action of its own: that collect
+fills the cache and yields both the row count and the checkpoint tail.
 """
 
 from __future__ import annotations
@@ -41,6 +43,17 @@ from ..state import MemoryStateStore, StateStore
 log = logging.getLogger(__name__)
 
 EmitFn = Callable[[str, DataFrame], None]
+
+
+def _desc_order_key(v: Any) -> tuple:
+    """Sort key giving a Python value the rank Spark's ``desc`` order
+    gives it: NULL below every value (``desc`` puts NULLs last) and NaN
+    above every other float."""
+    if v is None:
+        return (0, 0)
+    if isinstance(v, float) and v != v:
+        return (2, 0)
+    return (1, v)
 
 
 class IncrementalScan:
@@ -189,8 +202,10 @@ class SQLInput:
             )
 
     def poll_table(self, name: str) -> int:
-        """One poll of one table: plan → cache bounded batch → emit →
-        advance checkpoint to the last emitted row.  Returns rows emitted."""
+        """One poll of one table: plan → cache the bounded batch and
+        collect its watermark columns (the row count and the tail) → emit → advance the checkpoint to the last emitted row, the
+        max ``(update_column[, tiebreak_column])`` with NULLs lowest, as
+        Spark's ``desc`` order ranks them.  Returns rows emitted."""
         table, scan = self.scans[name]
         last = self.state.last_record(name)
         last_value = last.get(scan.update_column) if last else None
@@ -205,26 +220,23 @@ class SQLInput:
             getattr(table, "time_parse_format", None),
         )
         batch = batch.withColumn("tag", F.lit(self.config.tag_for(table)))
-        # the batch is ≤ select_limit rows by construction — caching it is
-        # O(limit) regardless of table size, so emit and checkpoint see the
-        # same rows without a rescan.
+        # ≤ select_limit rows by construction: one collect of the watermark
+        # columns fills the cache and gives the row count and the tail, so
+        # emit and checkpoint see the same rows without a rescan.
+        keys = [scan.update_column]
+        if scan.tiebreak_column:
+            keys.append(scan.tiebreak_column)
         batch = batch.cache()
         try:
-            rows = batch.count()
-            if rows == 0:
+            wm = batch.select(*keys).collect()
+            if not wm:
                 return 0
             self.emit(self.config.tag_for(table), batch)
             # last *emitted* row, by (update_column [, tiebreak]) order
             # (in_sql.rb:151-158)
-            tail_order = [F.col(scan.update_column).desc()]
-            if scan.tiebreak_column:
-                tail_order.append(F.col(scan.tiebreak_column).desc())
-            tail = batch.orderBy(*tail_order).limit(1).collect()
-            new_last = {scan.update_column: tail[0][scan.update_column]}
-            if scan.tiebreak_column:
-                new_last[scan.tiebreak_column] = tail[0][scan.tiebreak_column]
-            self.state.update(name, new_last)
-            return rows
+            tail = max(wm, key=lambda r: tuple(_desc_order_key(v) for v in r))
+            self.state.update(name, dict(zip(keys, tail)))
+            return len(wm)
         finally:
             batch.unpersist()
 
@@ -341,8 +353,6 @@ def snapshot_bootstrap(
     (also persisted to ``state`` under ``table`` when given, so a
     subsequent ``SQLInput.run_once`` resumes from it).
     """
-    from pyspark.sql import functions as F
-
     if tiebreak_column:
         tail = (
             df.orderBy(F.desc(update_column), F.desc(tiebreak_column))

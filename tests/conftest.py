@@ -1,6 +1,8 @@
 from __future__ import annotations
 
+import contextlib
 import os
+from types import SimpleNamespace
 
 import pytest
 
@@ -92,6 +94,25 @@ def pytest_collection_modifyitems(config, items):
             item.add_marker(pytest.mark.slow)
             if not run_slow:
                 item.add_marker(skip)
+
+
+@contextlib.contextmanager
+def spark_jobs(spark):
+    """Count the Spark jobs submitted inside the ``with`` block: the delta
+    of the driver scheduler's next job id, which rises by one per job
+    (from every thread, so run nothing else concurrently).
+
+        with spark_jobs(spark) as c:
+            df.count()
+        assert c.jobs == 1
+    """
+    dag = spark.sparkContext._jsc.sc().dagScheduler()  # noqa: SLF001
+    count = SimpleNamespace(jobs=0)
+    start = int(dag.nextJobId())
+    try:
+        yield count
+    finally:
+        count.jobs = int(dag.nextJobId()) - start
 
 
 @pytest.fixture(scope="session")

@@ -7,6 +7,7 @@ checks, tie handling at the watermark, time fallback, state-file resume.
 from __future__ import annotations
 
 import datetime as dt
+import math
 
 import pytest
 from pyspark.sql import functions as F
@@ -214,6 +215,47 @@ def test_composite_watermark_exact_resume_on_ties(spark, sf_dir, tmp_path):
     # state holds the composite pair
     st = StateStore(str(tmp_path / "state.json")).last_record("events")
     assert set(st) == {"ts_hour", "event_id"}
+
+
+@pytest.mark.parametrize(
+    "schema, rows, tiebreak, limit, expected",
+    [
+        # asc order puts the NULL row first in the batch; the checkpoint
+        # is the max non-NULL value
+        ("id INT, upd INT", [(1, None), (2, 5), (3, 3), (4, 7)], None, 3,
+         {"upd": 5}),
+        # ties on upd: the max (upd, tie) pair; a NULL tie ranks lowest
+        ("id INT, upd INT, tie INT",
+         [(1, 1, 8), (2, 2, 9), (3, 2, None), (4, 2, 3), (5, 3, None)], "tie", 4,
+         {"upd": 2, "tie": 9}),
+        # NaN ranks above every float, as in Spark's ordering
+        ("id INT, upd DOUBLE", [(1, 1.5), (2, float("nan")), (3, 0.5)], None, 10,
+         {"upd": float("nan")}),
+    ],
+    ids=["null_update", "tiebreak_pair", "nan_update"],
+)
+def test_poll_checkpoints_batch_tail(spark, tmp_path, schema, rows, tiebreak, limit, expected):
+    """The checkpoint a parquet poll persists is the batch's max
+    (update_column[, tiebreak_column]) as Spark's ``desc`` order ranks it:
+    NULLs lowest, NaN highest."""
+    path = str(tmp_path / "t.parquet")
+    spark.createDataFrame(rows, schema).write.parquet(path)
+    state_file = str(tmp_path / "state.json")
+    cfg = SQLInputConfig(
+        tables=[SourceTable(table="t", update_column="upd", tiebreak_column=tiebreak)],
+        select_limit=limit,
+        state_file=state_file,
+    )
+    inp = SQLInput(
+        spark, cfg, {"t": lambda: spark.read.parquet(path)},
+        emit=lambda tag, df: None, now=NOW,
+    )
+    assert inp.poll_table("t") == min(limit, len(rows))
+    got = StateStore(state_file).last_record("t")
+    assert set(got) == set(expected)
+    for k, v in expected.items():
+        assert type(got[k]) is type(v), k
+        assert got[k] == v or (math.isnan(got[k]) and math.isnan(v)), k
 
 
 def test_reset_to_replays_from_watermark(spark, sf_dir, tmp_path):

@@ -371,6 +371,103 @@ def test_incremental_poll_decimal_and_timestamp_watermarks_live(spark, derby_url
     assert [r["id"] for r in tb] == list(range(30, 40))  # strictly after
 
 
+@pytest.mark.parametrize("column", ["amount", "updated"])
+def test_poll_table_persists_typed_watermark_live(spark, derby_url, tmp_path, column):
+    """A database-executed poll checkpoints the last row's DECIMAL or
+    TIMESTAMP value with its Python type intact across a state-file
+    reload, and the next poll resumes strictly after it."""
+    import datetime as dtm
+    from decimal import Decimal
+
+    from fluent_plugin_sql_spark.sources.jdbc import JdbcIncrementalScan
+    from fluent_plugin_sql_spark.state import StateStore
+
+    rows = [
+        (i, Decimal(f"{i}.25"), dtm.datetime(2024, 1, 1) + dtm.timedelta(minutes=i, microseconds=7))
+        for i in range(40)
+    ]
+    df = spark.createDataFrame(rows, "id INT, amount DECIMAL(10,2), updated TIMESTAMP")
+    write_jdbc(df, derby_url, "wm_poll", DRIVER, mode="overwrite", num_partitions=1)
+
+    state_file = str(tmp_path / "state.json")
+    cfg = SQLInputConfig(
+        tables=[SourceTable(table="wm_poll", update_column=column)],
+        select_limit=15,
+        state_file=state_file,
+    )
+    scan = JdbcIncrementalScan(
+        spark, derby_url, "wm_poll", column, select_limit=15,
+        properties=DRIVER, dialect="derby", quote_identifiers=True,
+    )
+    seen: list[int] = []
+
+    def poller():
+        return SQLInput(
+            spark, cfg, {}, scans={"wm_poll": scan},
+            emit=lambda tag, b: seen.extend(r["id"] for r in b.select("id").collect()),
+        )
+
+    assert poller().poll_table("wm_poll") == 15
+    last = rows[14][1 if column == "amount" else 2]
+    wm = StateStore(state_file).last_record("wm_poll")[column]
+    assert type(wm) is type(last)
+    assert wm == last
+    assert poller().poll_table("wm_poll") == 15  # resumes from the reloaded state
+    assert sorted(seen) == list(range(30))
+
+
+def test_poll_routes_and_writes_in_three_spark_jobs(spark, derby_url):
+    """One poll of a batch below ``select_limit``, routed over a pattern
+    route and a default route whose slice is empty, runs at most three
+    Spark jobs — the poll's watermark collect, the route-count collect
+    and the INSERT — and writes only the non-empty slice."""
+    from conftest import spark_jobs
+
+    from fluent_plugin_sql_spark.config import SinkRoute, SQLOutputConfig
+    from fluent_plugin_sql_spark.sinks.router import SQLOutput
+    from fluent_plugin_sql_spark.sources.jdbc import JdbcIncrementalScan
+
+    src = spark.range(30).selectExpr("id", "id * 2 AS upd", "CAST(id AS DOUBLE) AS amount")
+    write_jdbc(src, derby_url, "jobs_src", DRIVER, mode="overwrite", num_partitions=1)
+    writes: list[str] = []
+
+    def write(df, table):
+        writes.append(table)
+        write_jdbc(df, derby_url, table, DRIVER, num_partitions=1)
+
+    out = SQLOutput(
+        SQLOutputConfig(
+            routes=[
+                SinkRoute(table="jobs_orders", pattern="orders",
+                          column_mapping="id:order_id,upd,amount"),
+                SinkRoute(table="jobs_other", column_mapping="id,upd"),
+            ],
+            remove_tag_prefix="shop",
+        ),
+        write,
+    )
+    inp = SQLInput(
+        spark,
+        SQLInputConfig(
+            tables=[SourceTable(table="jobs_src", tag="orders", update_column="upd")],
+            tag_prefix="shop",
+            select_limit=50,
+        ),
+        {},
+        emit=lambda tag, df: out.write_batch(df),
+        scans={"jobs_src": JdbcIncrementalScan(
+            spark, derby_url, "jobs_src", "upd", select_limit=50,
+            properties=DRIVER, dialect="derby", quote_identifiers=True,
+        )},
+    )
+    with spark_jobs(spark) as c:
+        assert inp.poll_table("jobs_src") == 30
+    assert c.jobs <= 3
+    assert writes == ["jobs_orders"]
+    assert read_jdbc(spark, derby_url, "jobs_orders", DRIVER).count() == 30
+    assert inp.state.last_record("jobs_src") == {"upd": 58}
+
+
 def test_discover_search_path_order_derby(spark, tmp_path):
     """Full schema_search_path semantics (in_sql.rb:43 via ActiveRecord):
     discovery walks schemas in DECLARED order, first-match-wins — a table

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import json
 
+import pytest
 from pyspark.sql import functions as F
 
 from fluent_plugin_sql_spark.io import load_table
@@ -135,6 +136,27 @@ def test_pool_smaller_than_write_parallelism_warns(spark, caplog):
     with caplog.at_level(logging.WARNING, logger="fluent_plugin_sql_spark.pipeline"):
         build_writer(spark, {"url": "jdbc:derby:memory:poolok;create=true", "pool": 4})
     assert not caplog.records
+
+
+def test_jdbc_source_rejects_tiebreak_column(spark):
+    """A JDBC source polls on its update column alone, so a configured
+    tiebreak_column would be ignored and rows tied at a batch boundary
+    skipped.  Pipeline construction fails instead, naming the table;
+    building the JDBC scans and writer opens no connection."""
+    url = "jdbc:derby:memory:tiebreak_rejected;create=true"
+    cfg = {
+        "source": {
+            "url": url,
+            "dialect": "derby",
+            "tables": [
+                {"table": "plain", "update_column": "id"},
+                {"table": "orders", "update_column": "upd", "tiebreak_column": "id"},
+            ],
+        },
+        "sink": {"url": url, "tables": [{"table": "sink"}]},
+    }
+    with pytest.raises(ValueError, match="'orders'.*tiebreak_column"):
+        Pipeline(spark, cfg)
 
 
 def test_upsert_lake_sink_mode(spark, tmp_path):

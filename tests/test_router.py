@@ -117,6 +117,27 @@ def test_two_routes_same_table_keep_own_mappings(spark, tagged_df):
     assert counts == {"t_shared": 4}  # per-table counts aggregate
 
 
+def test_empty_route_reports_zero_and_is_not_written(spark, tagged_df):
+    """A route whose slice is empty reports 0 rows for its table and never
+    reaches ``write``; the routes that matched are written once each."""
+    writes = []
+
+    def write(df, table):
+        writes.append((table, sorted(r["id"] for r in df.select("id").collect())))
+
+    cfg = SQLOutputConfig(
+        routes=[
+            SinkRoute(table="t_refunds", pattern="refunds"),  # matches no tag
+            SinkRoute(table="t_clicks", pattern="clicks"),
+            SinkRoute(table="t_default"),
+        ],
+        remove_tag_prefix="db",
+    )
+    counts = SQLOutput(cfg, write).write_batch(tagged_df)
+    assert counts == {"t_refunds": 0, "t_clicks": 2, "t_default": 2}
+    assert sorted(writes) == [("t_clicks", [1, 2]), ("t_default", [3, 4])]
+
+
 def test_resilient_writer_bulk_then_row_fallback():
     # out_sql.rb:103-136 / test_out_sql.rb:83-119: bulk raises → one-by-one,
     # poison row retried num_retries times then dropped.
