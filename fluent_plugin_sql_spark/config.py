@@ -95,7 +95,6 @@ class SourceTable:
     # when update_column has duplicates (see sources.incremental)
     tiebreak_column: str | None = None
     time_column: str | None = None
-    time_format: str = "yyyy-MM-dd HH:mm:ss.SSSSSSxx"  # ≙ '%Y-%m-%d %H:%M:%S.%6N%z'
     # engine extension: explicit PARSE pattern for non-standard time
     # columns (Spark datetime pattern).  The reference's Time.parse and
     # Spark's try_cast both accept standard ISO/zone forms without this;
@@ -170,7 +169,6 @@ class SQLOutputConfig:
     remove_tag_prefix: str | None = None
     num_retries: int = 5  # out_sql.rb:49
     pool: int = 5  # out_sql.rb:32-33
-    timeout_ms: int = 5000  # out_sql.rb:34-35
     enable_fallback: bool = True  # out_sql.rb:30-31
 
     def __post_init__(self) -> None:

@@ -900,11 +900,43 @@ class ConcurrentStoreWriterError(RuntimeError):
 
 
 class _StoreFS:
-    """Hadoop-FS plumbing shared by the incremental dedup stores:
-    existence checks, the crash-safe compaction swap, and the
-    single-writer mutation lock.  Uses the Hadoop FileSystem API, so the
-    stores work unchanged on any Hadoop-compatible filesystem (local,
-    HDFS, object stores)."""
+    """Hadoop-FS access for every state or lake table the engine rewrites
+    in place: the dedup, rollup and IVF stores are rooted at ``path``, a
+    lake table at its parent directory.  Uses the Hadoop
+    FileSystem API, so it works unchanged on any Hadoop-compatible
+    filesystem (local, HDFS, object stores).  Paths passed to every
+    method are relative to ``path``.
+
+    **Staged swap.**  A rewrite of the live table ``sub`` writes the
+    complete new table to a staged sibling, then :meth:`swap` renames
+    live → old, staged → live, and deletes old.  Each rename is atomic on
+    POSIX/HDFS (an O(data) copy on S3A — use a table format there); the
+    pair is not, and :meth:`recover` heals a crash at any point:
+
+    - live present: any staged tree is an unswapped or partial rewrite
+      and any old tree a finished swap's leftover — drop both;
+    - live missing (crashed between the renames): roll forward from a
+      staged tree that has ``_SUCCESS``, else roll back from old; then
+      drop what is left.
+
+    Writers run :meth:`recover` under :meth:`lock` before staging; a
+    read-only open heals only while no writer holds the lock
+    (:meth:`heal_on_open`).  The staged and old names per table:
+
+    ==================================  ============================  ============================
+    table                               staged                        old
+    ==================================  ============================  ============================
+    store tables (dedup, rollup, IVF)   ``_compact_{sub}``            ``_old_{sub}``
+    embedding-store ``drift``           ``_drift_staged``             ``_old_drift``
+    lake table ``{name}`` (sinks.lake)  ``{name}.__compact_tmp__``    ``{name}.__compact_old__``
+    ==================================  ============================  ============================
+
+    Two callers keep their own protocol on the primitives below
+    (:meth:`exists`, :meth:`list`, :meth:`rename`, :meth:`delete`,
+    :meth:`mkdirs`, :meth:`touch`, :meth:`read_text`, :meth:`write_text`):
+    the embedding store's recluster swaps two tables under one marker,
+    and the lake's partitioned merge swaps single partition directories.
+    """
 
     LOCK = "_writer.lock"
 
@@ -917,8 +949,15 @@ class _StoreFS:
             spark._jsc.hadoopConfiguration()  # noqa: SLF001
         )
 
+    def _p(self, sub: str):
+        return self._jpath(f"{self.path}/{sub}" if sub else self.path)
+
     def exists(self, sub: str) -> bool:
-        return self._fs.exists(self._jpath(f"{self.path}/{sub}"))
+        return self._fs.exists(self._p(sub))
+
+    def list(self, sub: str = "") -> list[str]:
+        """Names of the entries directly under ``sub`` (which must exist)."""
+        return [st.getPath().getName() for st in self._fs.listStatus(self._p(sub))]
 
     def has_data(self, sub: str) -> bool:
         """True iff ``sub`` exists AND contains at least one non-marker
@@ -929,50 +968,89 @@ class _StoreFS:
         next probe into ``spark.read.parquet`` on a data-less dir —
         UNABLE_TO_INFER_SCHEMA, wedging every subsequent batch.  One
         driver-side listStatus; no Spark job."""
-        jp = self._jpath(f"{self.path}/{sub}")
-        if not self._fs.exists(jp):
+        if not self.exists(sub):
             return False
-        for st in self._fs.listStatus(jp):
-            if not st.getPath().getName().startswith("_"):
-                return True
-        return False
+        return any(not name.startswith("_") for name in self.list(sub))
 
-    def _rename(self, src: str, dst: str) -> None:
+    def rename(self, src: str, dst: str) -> None:
         """rename() with its boolean result CHECKED — Hadoop's rename
         reports failure (e.g. a pre-existing destination) by returning
         False, and an unchecked first rename would make the second one
         nest the staged dir inside the live path."""
-        if not self._fs.rename(self._jpath(src), self._jpath(dst)):
-            raise IOError(f"rename failed: {src} -> {dst}")
+        if not self._fs.rename(self._p(src), self._p(dst)):
+            raise IOError(f"rename failed: {self.path}/{src} -> {self.path}/{dst}")
 
-    def recover(self, sub: str) -> None:
-        """Repair an interrupted compaction swap so a crash at ANY point
-        leaves (or restores) a complete live table:
+    def delete(self, sub: str, recursive: bool = True) -> bool:
+        return self._fs.delete(self._p(sub), recursive)
 
-        - live + ``_compact_`` present, no ``_old_``: crashed before the
-          swap — the staged rewrite may be partial; live is
-          authoritative, drop the staging dir.
-        - no live, ``_old_`` present: crashed mid-swap — the staged tree
-          (if complete) finishes the swap forward, else the ``_old_``
-          tree rolls it back.  Either way live exists again.
-        - live + ``_old_``: crashed after the swap, before cleanup —
-          drop the leftover ``_old_``.
+    def mkdirs(self, sub: str = "") -> None:
+        self._fs.mkdirs(self._p(sub))
 
-        Called on store open and before every compaction, so the
-        docstring contract "a crash mid-compact just re-runs" is
-        actually true rather than aspirational."""
-        live, staged, old = sub, f"_compact_{sub}", f"_old_{sub}"
-        if not self.exists(live):
-            if self.exists(staged) and self.exists(f"{staged}/_SUCCESS"):
-                # swap was in flight and the rewrite had committed:
-                # finish it forward
-                self._rename(f"{self.path}/{staged}", f"{self.path}/{live}")
+    def touch(self, sub: str) -> bool:
+        """Atomically create an empty file; False if it already exists."""
+        return self._fs.createNewFile(self._p(sub))
+
+    def read_text(self, sub: str) -> str | None:
+        """UTF-8 contents of file ``sub``; None when it does not exist."""
+        if not self.exists(sub):
+            return None
+        jvm = self.spark._jvm  # noqa: SLF001
+        reader = jvm.java.io.BufferedReader(
+            jvm.java.io.InputStreamReader(self._fs.open(self._p(sub)), "UTF-8")
+        )
+        lines = []
+        try:
+            line = reader.readLine()
+            while line is not None:
+                lines.append(line)
+                line = reader.readLine()
+        finally:
+            reader.close()
+        return "\n".join(lines)
+
+    def write_text(self, sub: str, text: str) -> None:
+        """Create or overwrite file ``sub`` with UTF-8 ``text``."""
+        out = self._fs.create(self._p(sub), True)
+        try:
+            out.write(bytearray(text, "utf-8"))
+        finally:
+            out.close()
+
+    def swap(self, sub: str, staged: str | None = None, old: str | None = None) -> None:
+        """Make the complete staged table ``staged`` (default
+        ``_compact_{sub}``) the live table ``sub``: rename live → ``old``
+        (default ``_old_{sub}``), staged → live, then delete old.  A
+        failed second rename rolls back at once.  Run :meth:`recover`
+        before staging, so no old tree is in the way."""
+        staged = staged or f"_compact_{sub}"
+        old = old or f"_old_{sub}"
+        had_live = self.exists(sub)
+        if had_live:
+            self.rename(sub, old)
+        try:
+            self.rename(staged, sub)
+        except Exception:
+            if had_live:
+                self.rename(old, sub)
+            raise
+        if had_live:
+            self.delete(old)
+
+    def recover(self, sub: str, staged: str | None = None, old: str | None = None) -> None:
+        """Heal an interrupted :meth:`swap` of ``sub`` (names as there) so
+        a crash at ANY point leaves or restores a complete live table:
+        with live missing, roll forward from a staged tree that has
+        ``_SUCCESS``, else back from old; then drop the leftovers."""
+        staged = staged or f"_compact_{sub}"
+        old = old or f"_old_{sub}"
+        if not self.exists(sub):
+            if self.exists(f"{staged}/_SUCCESS"):
+                self.rename(staged, sub)
             elif self.exists(old):
-                # roll back to the pre-compact tree
-                self._rename(f"{self.path}/{old}", f"{self.path}/{live}")
+                self.rename(old, sub)
         for leftover in (staged, old):
-            if self.exists(live) and self.exists(leftover):
-                self._fs.delete(self._jpath(f"{self.path}/{leftover}"), True)
+            if self.exists(leftover):
+                self.delete(leftover)
 
     def lock(self, op: str = "mutate"):
         """Exclusive store-mutation lock (atomic ``createNewFile``).
@@ -981,15 +1059,11 @@ class _StoreFS:
         single-writer contract, enforced."""
         import contextlib
 
-        fs, jp = self._fs, self._jpath
-
         @contextlib.contextmanager
         def _held():
-            lock_path = jp(f"{self.path}/{self.LOCK}")
-            jp_parent = jp(self.path)
-            if not fs.exists(jp_parent):
-                fs.mkdirs(jp_parent)
-            if not fs.createNewFile(lock_path):
+            if not self.exists(""):
+                self.mkdirs()
+            if not self.touch(self.LOCK):
                 raise ConcurrentStoreWriterError(
                     f"store {self.path} is locked by another writer "
                     f"(op={op}); if that writer crashed, delete "
@@ -998,7 +1072,7 @@ class _StoreFS:
             try:
                 yield
             finally:
-                fs.delete(lock_path, False)
+                self.delete(self.LOCK, recursive=False)
 
         return _held()
 
@@ -1009,27 +1083,13 @@ class _StoreFS:
         the store predates metadata or doesn't exist yet."""
         import json
 
-        jp = self._jpath(f"{self.path}/{self.META}")
-        if not self._fs.exists(jp):
-            return None
-        jvm = self.spark._jvm  # noqa: SLF001
-        reader = jvm.java.io.BufferedReader(
-            jvm.java.io.InputStreamReader(self._fs.open(jp), "UTF-8")
-        )
-        try:
-            line = reader.readLine()
-        finally:
-            reader.close()
-        return json.loads(line) if line else None
+        text = self.read_text(self.META)
+        return json.loads(text) if text else None
 
     def write_meta(self, meta: dict) -> None:
         import json
 
-        out = self._fs.create(self._jpath(f"{self.path}/{self.META}"), True)
-        try:
-            out.write(bytearray(json.dumps(meta), "utf-8"))
-        finally:
-            out.close()
+        self.write_text(self.META, json.dumps(meta))
 
     def pin_layout(self, store, keys: tuple[str, ...]) -> dict | None:
         """Set ``store``'s layout constants ``keys`` to the values the
@@ -1093,21 +1153,19 @@ class _StoreFS:
         rewritten file so parquet page/row-group min-max statistics
         become selective for the probe's pushed ``In`` filter — the
         second-level prune that keeps probe I/O o(store) even when a
-        large batch touches every bucket directory.  Crash safety: see
-        :meth:`recover` (run first), plus checked renames."""
+        large batch touches every bucket directory.  Crash safety: the
+        staged swap (class docstring)."""
         self.recover(sub)
         if not self.exists(sub):
             return
-        live = f"{self.path}/{sub}"
-        staged = f"{self.path}/_compact_{sub}"
-        df = self.spark.read.parquet(live).repartition(num_files, F.col(part_col))
+        df = self.spark.read.parquet(f"{self.path}/{sub}")
+        df = df.repartition(num_files, F.col(part_col))
         if sort_col is not None:
             df = df.sortWithinPartitions(part_col, sort_col)
-        df.write.mode("overwrite").partitionBy(part_col).parquet(staged)
-        old = f"{self.path}/_old_{sub}"
-        self._rename(live, old)
-        self._rename(staged, live)
-        self._fs.delete(self._jpath(old), True)
+        df.write.mode("overwrite").partitionBy(part_col).parquet(
+            f"{self.path}/_compact_{sub}"
+        )
+        self.swap(sub)
 
 
 class _KeyTable:
@@ -1690,14 +1748,14 @@ class EmbeddingDedupStore:
     _RECLUSTER_MARK = "_recluster_inflight"
 
     def _recluster_recover(self) -> None:
-        """Heal a crash inside :meth:`recluster`'s two-table swap.  The
-        commit point is the CENTROIDS swap (done last, with both
-        ``_old_`` trees retained until after it): while the staged
-        centroids (``_compact_centroids``) still exist the swap has not
-        committed — roll both tables BACK from their ``_old_`` trees;
-        once the staged centroids are gone the new pair is live — roll
-        FORWARD by just deleting leftovers.  Either way the store ends
-        with a centroid set and the postings homed under it."""
+        """Heal a crash inside :meth:`recluster`'s two-table swap (the
+        staged and old names of :class:`_StoreFS`).  The commit point is
+        the CENTROIDS swap (done last, with both ``_old_`` trees retained
+        until after it): while the staged centroids still exist the swap
+        has not committed — roll both tables BACK from their ``_old_``
+        trees; once the staged centroids are gone the new pair is live —
+        roll FORWARD by just deleting leftovers.  Either way the store
+        ends with a centroid set and the postings homed under it."""
         sfs = self._store_fs
         if not sfs.exists(self._RECLUSTER_MARK):
             return
@@ -1706,12 +1764,12 @@ class EmbeddingDedupStore:
             live, old, staged = sub, f"_old_{sub}", f"_compact_{sub}"
             if roll_back and sfs.exists(old):
                 if sfs.exists(live):
-                    sfs._fs.delete(sfs._jpath(f"{self.path}/{live}"), True)
-                sfs._rename(f"{self.path}/{old}", f"{self.path}/{live}")
+                    sfs.delete(live)
+                sfs.rename(old, live)
             for leftover in (staged,) if roll_back else (staged, old):
                 if sfs.exists(leftover):
-                    sfs._fs.delete(sfs._jpath(f"{self.path}/{leftover}"), True)
-        sfs._fs.delete(sfs._jpath(f"{self.path}/{self._RECLUSTER_MARK}"), False)
+                    sfs.delete(leftover)
+        sfs.delete(self._RECLUSTER_MARK, recursive=False)
 
     def _exists(self, sub: str) -> bool:
         return self._store_fs.has_data(sub)
@@ -1993,10 +2051,11 @@ class EmbeddingDedupStore:
         return None if row is None else row.asDict()
 
     def _heal_drift(self, locked: bool = False) -> None:
-        """Finish (or discard) an interrupted drift swap: live missing
-        but a complete staged table present → promote it; an incomplete
-        staged leftover → drop it.  Advisory state, so any unresolvable
-        shape just degrades to 'no drift state' (fresh baseline).
+        """Finish (or discard) an interrupted drift swap — the
+        :meth:`_StoreFS.recover` rules, after dropping a data-less
+        ``drift`` husk an interrupted delete can leave.  Advisory state,
+        so any unresolvable shape just degrades to 'no drift state'
+        (fresh baseline).
 
         Healing MUTATES the store, and ``_read_drift`` is reachable from
         read-only APIs (``drift_ratio``, ``maybe_recluster``): when the
@@ -2010,14 +2069,10 @@ class EmbeddingDedupStore:
         fs = self._store_fs
         if not locked and fs.exists(_StoreFS.LOCK):
             return  # live (or crashed-but-unrecovered) writer owns the swap
-        live, staged = f"{self.path}/drift", f"{self.path}/_drift_staged"
         try:
-            if fs.has_data("_drift_staged") and not fs.has_data("drift"):
-                if fs.exists("drift"):  # fileless husk from an old interrupt
-                    fs._fs.delete(fs._jpath(live), True)
-                fs._rename(staged, live)
-            elif fs.exists("_drift_staged"):
-                fs._fs.delete(fs._jpath(staged), True)
+            if not fs.has_data("drift") and fs.exists("drift"):
+                fs.delete("drift")
+            fs.recover("drift", staged="_drift_staged")
         except Exception:
             # two lock-free readers can race each other's heal; losing
             # the race leaves either a healed store or a leftover staged
@@ -2025,24 +2080,17 @@ class EmbeddingDedupStore:
             pass
 
     def _write_drift(self, train_mean, ewma, n_batches: int) -> None:
-        # staged write + checked-rename swap (the store's compaction
-        # discipline): a caller interrupted mid-write — e.g. a streaming
-        # query stopped during the batch's tail absorb — can no longer
-        # destroy the PREVIOUS drift state the way an in-place
-        # mode("overwrite") truncate-then-write could.  The unprotected
-        # window shrinks from the whole parquet write to two renames,
-        # and _heal_drift resolves either side of an interrupt there.
+        # the _StoreFS staged swap: a caller interrupted mid-write — e.g.
+        # a streaming query stopped during the batch's tail absorb —
+        # cannot destroy the PREVIOUS drift state, and _heal_drift
+        # resolves either side of an interrupt between the renames
         fs = self._store_fs
-        live, staged = f"{self.path}/drift", f"{self.path}/_drift_staged"
-        if fs.exists("_drift_staged"):
-            fs._fs.delete(fs._jpath(staged), True)
+        fs.recover("drift", staged="_drift_staged")
         self.spark.createDataFrame(
             [(float(train_mean), float(ewma), int(n_batches))],
             "train_mean double, ewma double, n_batches long",
-        ).coalesce(1).write.mode("overwrite").parquet(staged)
-        if fs.exists("drift"):
-            fs._fs.delete(fs._jpath(live), True)
-        fs._rename(staged, live)
+        ).coalesce(1).write.mode("overwrite").parquet(f"{self.path}/_drift_staged")
+        fs.swap("drift", staged="_drift_staged")
 
     def _batch_home_mean(self, assigned: DataFrame):
         """Mean home-centroid cosine of one assignment (rank-1 rows;
@@ -2131,11 +2179,10 @@ class EmbeddingDedupStore:
         sizing table).  Deterministic (hash-ordered seeding, no RNG), so
         two runs over the same state converge to the same centroids.
 
-        Swap discipline mirrors :meth:`_StoreFS.compact_table`: the new
-        centroids and re-homed postings are staged next to the live
-        trees and swapped in with checked renames, so probes stay
-        consistent until the swap and a crash at any point is healed by
-        the recovery pass on the next store open."""
+        The new centroids and re-homed postings are staged and swapped
+        in under the :class:`_StoreFS` names, both tables at once (see
+        :meth:`_recluster_recover`), so probes stay consistent until the
+        swap and a crash at any point heals on the next store open."""
         with self._store_fs.lock("recluster"):
             self._recluster_recover()
             self._store_fs.recover("postings")
@@ -2199,13 +2246,13 @@ class EmbeddingDedupStore:
             # while the staged centroids still exist, roll FORWARD once
             # the centroid swap (the commit point) has happened.
             sfs = self._store_fs
-            sfs._fs.createNewFile(sfs._jpath(f"{self.path}/{self._RECLUSTER_MARK}"))
+            sfs.touch(self._RECLUSTER_MARK)
             for sub in ("postings", "centroids"):  # centroids last = commit
-                sfs._rename(f"{self.path}/{sub}", f"{self.path}/_old_{sub}")
-                sfs._rename(f"{self.path}/_compact_{sub}", f"{self.path}/{sub}")
+                sfs.rename(sub, f"_old_{sub}")
+                sfs.rename(f"_compact_{sub}", sub)
             for sub in ("postings", "centroids"):
-                sfs._fs.delete(sfs._jpath(f"{self.path}/_old_{sub}"), True)
-            sfs._fs.delete(sfs._jpath(f"{self.path}/{self._RECLUSTER_MARK}"), False)
+                sfs.delete(f"_old_{sub}")
+            sfs.delete(self._RECLUSTER_MARK, recursive=False)
             self.num_centroids = n
 
 

@@ -22,9 +22,8 @@ Scale contract (the whole point of the design):
   map-side-combinable aggregation over surviving partials — never the
   raw events.
 - **compact** re-merges accumulated per-batch partials so state size
-  converges to O(groups), not O(batches x groups), via the same
-  crash-safe staging swap as the dedup stores (_StoreFS.recover heals
-  interrupted swaps on open).
+  converges to O(groups), not O(batches x groups), via the staged swap
+  of ``dedup._StoreFS`` (an interrupted swap heals on open).
 
 Exactly-once absorbs (stronger than the dedup stores' at-least-once,
 because double-absorbing partials DOUBLE-COUNTS instead of converging):
@@ -134,12 +133,9 @@ class RollupStore:
         # schema, fixed by the store's config, is reused)
         self._data_schema = None
         self._fs = _StoreFS(spark, self.path)
-        # Healing on open is a MUTATION: when another session's writer
-        # lock is present (live compact/absorb in flight — or a crashed
-        # one, whose documented recovery is deleting the lock), opening
-        # for read must not delete its staging trees out from under it.
-        if not self._fs.exists(_StoreFS.LOCK):
-            self._fs.recover("data")  # heal an interrupted compact swap
+        # heal an interrupted compact swap and sweep absorb staging —
+        # unless another session's writer holds the lock
+        if self._fs.heal_on_open("data"):
             self._sweep_staging()
 
     # ------------------------------------------------------------------ fs
@@ -151,14 +147,11 @@ class RollupStore:
         """Delete uncommitted absorb staging dirs (crash leftovers).
         Safe anytime: a staging dir is unreferenced until its atomic
         rename into ``data/``."""
-        jp, fs = self._fs._jpath, self._fs._fs
-        root = jp(self.path)
-        if not fs.exists(root):
+        if not self._fs.exists(""):
             return
-        for st in fs.listStatus(root):
-            name = st.getPath().getName()
+        for name in self._fs.list():
             if name.startswith("_absorb_"):
-                fs.delete(st.getPath(), True)
+                self._fs.delete(name)
 
     # ----------------------------------------------------------- partials
 
@@ -328,16 +321,8 @@ class RollupStore:
         )
 
     def _mark_committed(self, bid: str) -> None:
-        jp, fs = self._fs._jpath, self._fs._fs
-        fs.mkdirs(jp(f"{self.path}/_ledger"))
-        fs.createNewFile(jp(f"{self.path}/_ledger/{bid}"))
-
-    def _staged_has_files(self, staging: str) -> bool:
-        jp, fs = self._fs._jpath, self._fs._fs
-        for st in fs.listStatus(jp(staging)):
-            if st.getPath().getName().startswith("pday="):
-                return True
-        return False
+        self._fs.mkdirs("_ledger")
+        self._fs.touch(f"_ledger/{bid}")
 
     def absorb(self, df: DataFrame, batch_id: str) -> bool:
         """Fold one micro-batch into the store, exactly once.
@@ -363,27 +348,27 @@ class RollupStore:
             if self.has_batch(bid):
                 self._mark_committed(bid)
                 return False
-            staging = f"{self.path}/_absorb_{uuid.uuid4().hex}"
+            staging = f"_absorb_{uuid.uuid4().hex}"
             (
                 self._partials(df)
                 .repartition(F.col("pday"))  # one file per touched day
                 .write.mode("overwrite")
                 .partitionBy("pday")
-                .parquet(staging)
+                .parquet(f"{self.path}/{staging}")
             )
-            jp, fs = self._fs._jpath, self._fs._fs
-            if not self._staged_has_files(staging):
-                fs.delete(jp(staging), True)
+            if not any(n.startswith("pday=") for n in self._fs.list(staging)):
+                self._fs.delete(staging)
                 self._mark_committed(bid)
                 return True
-            dest = jp(f"{self.path}/data/batch={bid}")
-            fs.mkdirs(jp(f"{self.path}/data"))
-            if not fs.rename(jp(staging), dest):
-                fs.delete(jp(staging), True)
+            self._fs.mkdirs("data")
+            try:
+                self._fs.rename(staging, f"data/batch={bid}")
+            except IOError:
+                self._fs.delete(staging)
                 if self.has_batch(bid):
                     self._mark_committed(bid)
                     return False
-                raise IOError(f"commit rename failed: {staging} -> {dest}")
+                raise
             self._mark_committed(bid)
         return True
 
@@ -614,20 +599,19 @@ class RollupStore:
         cutoff = day.strftime("%Y-%m-%d")
         if not self._exists():
             return 0
-        jp, fs = self._fs._jpath, self._fs._fs
+        fs = self._fs
         dropped = 0
-        with self._fs.lock("expire"):
-            for gen in fs.listStatus(jp(f"{self.path}/data")):
-                if not gen.getPath().getName().startswith("batch="):
+        with fs.lock("expire"):
+            for gen in fs.list("data"):
+                if not gen.startswith("batch="):
                     continue
                 # ledger the id before any delete can empty this
                 # generation — its dir may be removed below
-                self._mark_committed(gen.getPath().getName()[len("batch="):])
+                self._mark_committed(gen[len("batch="):])
                 remaining = 0
-                for dstat in fs.listStatus(gen.getPath()):
-                    name = dstat.getPath().getName()
+                for name in fs.list(f"data/{gen}"):
                     if name.startswith("pday=") and name[5:] < cutoff:
-                        fs.delete(dstat.getPath(), True)
+                        fs.delete(f"data/{gen}/{name}")
                         dropped += 1
                     elif name.startswith("pday="):
                         remaining += 1
@@ -635,14 +619,11 @@ class RollupStore:
                     # a data-file-less generation breaks parquet schema
                     # inference once every generation is empty; its
                     # exactly-once memory lives in the ledger now
-                    fs.delete(gen.getPath(), True)
-            if not any(
-                st.getPath().getName().startswith("batch=")
-                for st in fs.listStatus(jp(f"{self.path}/data"))
-            ):
+                    fs.delete(f"data/{gen}")
+            if not any(n.startswith("batch=") for n in fs.list("data")):
                 # fully-expired store reads as empty (documented
                 # ValueError) instead of failing schema inference
-                fs.delete(jp(f"{self.path}/data"), True)
+                fs.delete("data")
         return dropped
 
     # ------------------------------------------------------------ compact
@@ -650,9 +631,9 @@ class RollupStore:
     def compact(self, files_per_day: int = 1) -> None:
         """Re-merge per-batch partials so state converges to O(groups):
         read all committed partials, merge-aggregate, rewrite as a single
-        ``batch=compacted-*`` generation via the _StoreFS staging swap
-        (crash at any point leaves or restores a complete ``data`` tree;
-        see _StoreFS.recover).  Snapshots before and after are
+        ``batch=compacted-*`` generation via the staged swap of
+        ``_StoreFS`` (a crash at any point leaves or restores a complete
+        ``data`` tree).  Snapshots before and after are
         equivalent — count/sum/min/max merge losslessly and HLL union is
         associative, so even the sketch estimates are bit-identical."""
         with self._fs.lock("compact"):
@@ -663,9 +644,7 @@ class RollupStore:
             # the swap below erases the per-batch dirs — make sure every
             # committed id is in the ledger FIRST, or a post-compact
             # replay of one of them would re-absorb (double-count)
-            jp, fs = self._fs._jpath, self._fs._fs
-            for st in fs.listStatus(jp(f"{self.path}/data")):
-                name = st.getPath().getName()
+            for name in self._fs.list("data"):
                 if name.startswith("batch="):
                     self._mark_committed(name[len("batch="):])
             gen = f"compacted-{uuid.uuid4().hex[:12]}"
@@ -684,12 +663,7 @@ class RollupStore:
                 )
                 .sortWithinPartitions("pday", "w_start")
             )
-            staged = f"{self.path}/_compact_data"
             merged.write.mode("overwrite").partitionBy("batch", "pday").parquet(
-                staged
+                f"{self.path}/_compact_data"
             )
-            live = f"{self.path}/data"
-            old = f"{self.path}/_old_data"
-            self._fs._rename(live, old)
-            self._fs._rename(staged, live)
-            self._fs._fs.delete(self._fs._jpath(old), True)
+            self._fs.swap("data")

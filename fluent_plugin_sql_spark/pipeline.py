@@ -54,7 +54,7 @@ from .config import SinkRoute, SourceTable, SQLInputConfig, SQLOutputConfig
 from .session import get_spark
 from .sinks.router import SQLOutput
 from .sources.incremental import SQLInput, discover_tables
-from .sources.jdbc import read_jdbc, write_jdbc
+from .sources.jdbc import write_jdbc
 
 log = logging.getLogger(__name__)
 
@@ -142,7 +142,9 @@ def build_output_config(sink: dict[str, Any]) -> SQLOutputConfig:
 def build_readers(
     spark: SparkSession, src: dict[str, Any], cfg: SQLInputConfig
 ) -> dict[str, Callable[[], DataFrame]]:
-    """Parquet-dir sources (``path:``) or JDBC sources (``database:``)."""
+    """Readers for parquet-dir sources (``path:``).  A JDBC source
+    (``database:``) polls through :func:`build_jdbc_scans` instead, so it
+    gets none; with ``all_tables`` this only discovers its tables."""
     if "path" in src:
         from .io import load_table
 
@@ -177,10 +179,7 @@ def build_readers(
             SourceTable(table=n, update_column=src.get("update_column"))
             for n in names
         )
-    return {
-        t.table: (lambda t=t: read_jdbc(spark, url, t.table, props))
-        for t in cfg.tables
-    }
+    return {}
 
 
 def _jdbc_props(block: dict[str, Any]) -> dict[str, str]:
@@ -200,7 +199,8 @@ def _jdbc_props(block: dict[str, Any]) -> dict[str, str]:
 
 def build_jdbc_scans(spark: SparkSession, src: dict[str, Any], cfg: SQLInputConfig):
     """Pushdown scans for JDBC sources: the poll query executes in the
-    database (dialect-aware row cap; see sources.jdbc).  The pushed query
+    database (dialect-aware row cap and identifier quoting; see
+    sources.jdbc.JdbcIncrementalScan).  The pushed query
     has a single-column watermark, so a ``tiebreak_column`` is rejected
     rather than ignored (ignoring it would skip rows tied at a batch
     boundary)."""
@@ -217,7 +217,7 @@ def build_jdbc_scans(spark: SparkSession, src: dict[str, Any], cfg: SQLInputConf
     return {
         t.table: JdbcIncrementalScan(
             spark, url, t.table, t.resolve_update_column(), cfg.select_limit,
-            _jdbc_props(src), dialect, bool(src.get("quote_identifiers", False)),
+            _jdbc_props(src), dialect,
         )
         for t in cfg.tables
     }

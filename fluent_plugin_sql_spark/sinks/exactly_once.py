@@ -30,7 +30,7 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.jdbc import resolve_dialect, write_jdbc
+from ..sources.jdbc import jdbc_connection, resolve_dialect, write_jdbc
 
 MARKER_TABLE = "fpss_epochs"
 
@@ -109,15 +109,7 @@ class EpochMarkerStore:
         self._ensure_marker_table()
 
     def _conn(self):
-        jvm = self.spark._sc._jvm  # noqa: SLF001
-        if "driver" in self.properties:
-            jvm.java.lang.Class.forName(self.properties["driver"])
-        user = self.properties.get("user")
-        if user is not None:
-            return jvm.java.sql.DriverManager.getConnection(
-                self.url, user, self.properties.get("password", "")
-            )
-        return jvm.java.sql.DriverManager.getConnection(self.url)
+        return jdbc_connection(self.spark, self.url, self.properties)
 
     def _execute(
         self,

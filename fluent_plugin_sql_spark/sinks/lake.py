@@ -66,17 +66,12 @@ def compact_parquet_dir(
 
     Rewrites the directory to ``ceil(rows / target_rows_per_file)`` files
     (optionally sorted, so downstream range predicates benefit from
-    parquet row-group min/max pruning), staging into a sibling directory
-    and swapping via the Hadoop ``FileSystem`` API — scheme-agnostic, so
-    the same code works for ``file:``, ``hdfs:``, ``s3a:`` paths.  The
-    swap is two renames (live→old, staging→live): each rename is atomic
-    on POSIX/HDFS (on S3A it is an O(data) copy — use a table format
-    there), but the PAIR is not — a crash between them leaves no live
-    directory.  That window is self-healing: on entry the function
-    detects the leftover ``.__compact_old__``/``.__compact_tmp__``
-    markers and rolls the previous attempt back/forward before starting.
-    Concurrent READERS of the old listing are fine; pause writers (or
-    compact between polls) since appends during compaction would be lost.
+    parquet row-group min/max pruning), staging into the sibling
+    ``{path}.__compact_tmp__`` and swapping it in with the staged swap of
+    ``operators.dedup._StoreFS`` — scheme-agnostic, and a crash at any
+    point is healed on the next call, before it starts.  Concurrent
+    READERS of the old listing are fine; pause writers (or compact
+    between polls) since appends during compaction would be lost.
     Returns the new file count.
 
     At real scale this is the nightly-compaction shape; table formats
@@ -84,8 +79,8 @@ def compact_parquet_dir(
     """
     import math
 
-    fs, hpath, staging, old = _swap_paths(spark, path)
-    _recover_swap(fs, hpath, staging, old)
+    fs, name, swap = _table_fs(spark, path)
+    fs.recover(name, **swap)
 
     df = spark.read.parquet(path)
     n = df.count()
@@ -98,53 +93,22 @@ def compact_parquet_dir(
         )
     else:
         out = df.repartition(n_files)
-    out.write.mode("overwrite").parquet(str(staging))
-    _swap_live(fs, hpath, staging, old, path)
+    out.write.mode("overwrite").parquet(f"{fs.path}/{swap['staged']}")
+    fs.swap(name, **swap)
     return n_files
 
 
-def _swap_paths(spark, path: str):
-    """Hadoop FileSystem handles for the staged-rewrite swap protocol
-    (scheme-agnostic: file:, hdfs:, s3a:)."""
-    jvm = spark._jvm  # noqa: SLF001
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())  # noqa: SLF001
-    staging = jvm.org.apache.hadoop.fs.Path(path.rstrip("/") + ".__compact_tmp__")
-    old = jvm.org.apache.hadoop.fs.Path(path.rstrip("/") + ".__compact_old__")
-    return fs, hpath, staging, old
+def _table_fs(spark, path: str):
+    """``(fs, name, swap)``: a ``_StoreFS`` on the table's parent
+    directory, the table's name in it, and the staged/old names of its
+    swap (the sibling ``{name}.__compact_tmp__``/``.__compact_old__``)."""
+    import posixpath
 
+    from ..operators.dedup import _StoreFS
 
-def _recover_swap(fs, hpath, staging, old) -> None:
-    """Crash-window recovery from a previous staged rewrite, in causal
-    order:
-    - old exists, live missing → crashed between the two renames: roll
-      back (old → live); the stale staging is deleted below.
-    - old exists, live exists → crashed after the swap, before cleanup:
-      the rewrite completed, just drop old.
-    - staging exists → a crashed write or unswapped rewrite: drop it
-      (the live directory is still authoritative)."""
-    if fs.exists(old):
-        if not fs.exists(hpath):
-            if not fs.rename(old, hpath):
-                raise IOError(f"recovery rename failed: {old} -> {hpath}")
-        else:
-            fs.delete(old, True)
-    if fs.exists(staging):
-        fs.delete(staging, True)
-
-
-def _swap_live(fs, hpath, staging, old, path: str) -> None:
-    """Two-rename swap (live→old, staging→live).  Each rename is atomic
-    on POSIX/HDFS; the PAIR is not — the crash window between them is
-    healed by :func:`_recover_swap` on the next invocation."""
-    if not fs.rename(hpath, old):
-        raise IOError(f"swap rename failed: {path} -> {old}")
-    if not fs.rename(staging, hpath):
-        # roll back so the live path never stays missing longer than the
-        # failure itself
-        fs.rename(old, hpath)
-        raise IOError(f"swap rename failed: {staging} -> {path}")
-    fs.delete(old, True)
+    parent, name = posixpath.split(path.rstrip("/"))
+    swap = {"staged": f"{name}.__compact_tmp__", "old": f"{name}.__compact_old__"}
+    return _StoreFS(spark, parent or "."), name, swap
 
 
 def _check_partition_value(col: str, v) -> None:
@@ -168,19 +132,17 @@ def _check_partition_value(col: str, v) -> None:
         )
 
 
-def _leaf_dirs(fs, jpath, root: str, depth: int) -> list[str]:
-    """Relative paths of directories exactly ``depth`` levels under
-    ``root`` (the col=value partition leaves)."""
+def _leaf_dirs(fs, root: str, depth: int) -> list[str]:
+    """Relative paths of the ``col=value`` directories exactly ``depth``
+    levels under ``root`` (the partition leaves)."""
     rels = [""]
     for _ in range(depth):
-        nxt = []
-        for rel in rels:
-            p = jpath(f"{root}/{rel}" if rel else root)
-            for st in fs.listStatus(p):
-                if st.isDirectory():
-                    name = st.getPath().getName()
-                    nxt.append(f"{rel}/{name}" if rel else name)
-        rels = nxt
+        rels = [
+            f"{rel}/{name}" if rel else name
+            for rel in rels
+            for name in fs.list(f"{root}/{rel}" if rel else root)
+            if "=" in name
+        ]
     return rels
 
 
@@ -198,8 +160,8 @@ def merge_into_parquet(
 
     Two physical strategies:
 
-    - **Unpartitioned**: merge against the whole table and atomically
-      swap the rewritten directory (same staged two-rename protocol as
+    - **Unpartitioned**: merge against the whole table and swap the
+      rewritten directory in (the staged swap of
       :func:`compact_parquet_dir`, crash-window self-healing included).
       O(table) per merge — fine for dimensions, wrong for facts.
     - **Partitioned** (``partition_cols`` given): rewrite ONLY the
@@ -220,15 +182,16 @@ def merge_into_parquet(
     Partition values must be simple scalars (int/string) — the touched
     list is rendered into ``col=value`` directory names.
     """
+    import posixpath
+
     from pyspark.sql import functions as F
 
     from ..operators.scale import merge_upsert
 
-    fs, hpath, staging, old = _swap_paths(spark, path)
+    fs, name, swap = _table_fs(spark, path)
+    staging = swap["staged"]
     if partition_cols:
-        jvm = spark._jvm  # noqa: SLF001
-        jpath = jvm.org.apache.hadoop.fs.Path
-        backup_root = jpath(path.rstrip("/") + ".__merge_old__")
+        backup = f"{name}.__merge_old__"
         # crash-window recovery from a previous partitioned merge — the
         # backups live OUTSIDE the live tree (a marker dir inside it
         # would corrupt partition-value inference), keyed by the same
@@ -237,17 +200,14 @@ def merge_into_parquet(
         #    two renames: restore the backup.
         #  - backup exists, live exists → crashed after the swap, before
         #    cleanup: the new data is live, drop the backup.
-        if fs.exists(backup_root):
-            for rel in _leaf_dirs(fs, jpath, str(backup_root), len(partition_cols)):
-                live_p = jpath(f"{path.rstrip('/')}/{rel}")
-                back_p = jpath(f"{backup_root}/{rel}")
-                if not fs.exists(live_p):
-                    fs.mkdirs(live_p.getParent())
-                    if not fs.rename(back_p, live_p):
-                        raise IOError(f"recovery failed: {back_p} -> {live_p}")
-            fs.delete(backup_root, True)
+        if fs.exists(backup):
+            for rel in _leaf_dirs(fs, backup, len(partition_cols)):
+                if not fs.exists(f"{name}/{rel}"):
+                    fs.mkdirs(posixpath.dirname(f"{name}/{rel}"))
+                    fs.rename(f"{backup}/{rel}", f"{name}/{rel}")
+            fs.delete(backup)
         if fs.exists(staging):
-            fs.delete(staging, True)
+            fs.delete(staging)
         # one small driver-side list of touched partition values bounds
         # the read to affected directories (pushed partition filter);
         # validated BEFORE the first write too, so a fresh table can't
@@ -259,7 +219,7 @@ def merge_into_parquet(
         for vals in touched:
             for c, v in zip(partition_cols, vals):
                 _check_partition_value(c, v)
-        if not fs.exists(hpath):
+        if not fs.exists(name):
             updates.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
             return
         pred = F.lit(False)
@@ -275,33 +235,34 @@ def merge_into_parquet(
         # would both trip Spark's read-your-own-overwrite guard and lose
         # the untouched partitions)
         merged.write.mode("overwrite").partitionBy(*partition_cols).parquet(
-            str(staging)
+            f"{fs.path}/{staging}"
         )
         for vals in touched:
             rel = "/".join(f"{c}={v}" for c, v in zip(partition_cols, vals))
-            live_p = jpath(f"{path.rstrip('/')}/{rel}")
-            stag_p = jpath(f"{staging}/{rel}")
-            back_p = jpath(f"{backup_root}/{rel}")
-            if fs.exists(live_p):
-                fs.mkdirs(back_p.getParent())
-                if not fs.rename(live_p, back_p):
-                    raise IOError(f"partition swap failed: {live_p} -> {back_p}")
+            live_p, stag_p, back_p = f"{name}/{rel}", f"{staging}/{rel}", f"{backup}/{rel}"
+            had_live = fs.exists(live_p)
+            if had_live:
+                fs.mkdirs(posixpath.dirname(back_p))
+                fs.rename(live_p, back_p)
             if fs.exists(stag_p):
-                fs.mkdirs(live_p.getParent())
-                if not fs.rename(stag_p, live_p):
-                    fs.rename(back_p, live_p)  # roll this partition back
-                    raise IOError(f"partition swap failed: {stag_p} -> {live_p}")
-        fs.delete(backup_root, True)
-        fs.delete(staging, True)
+                fs.mkdirs(posixpath.dirname(live_p))
+                try:
+                    fs.rename(stag_p, live_p)
+                except IOError:
+                    if had_live:
+                        fs.rename(back_p, live_p)  # roll this partition back
+                    raise
+        fs.delete(backup)
+        fs.delete(staging)
         return
-    _recover_swap(fs, hpath, staging, old)
-    if not fs.exists(hpath):
+    fs.recover(name, **swap)
+    if not fs.exists(name):
         updates.write.mode("overwrite").parquet(path)
         return
     base = spark.read.parquet(path)
     merged = merge_upsert(base, updates, key_cols)
-    merged.write.mode("overwrite").parquet(str(staging))
-    _swap_live(fs, hpath, staging, old, path)
+    merged.write.mode("overwrite").parquet(f"{fs.path}/{staging}")
+    fs.swap(name, **swap)
 
 
 # ---------------------------------------------------------------- z-order
@@ -474,10 +435,5 @@ def write_training_shards(
     }
     from ..operators.dedup import _StoreFS
 
-    fs = _StoreFS(spark, path)
-    outs = fs._fs.create(fs._jpath(f"{path}/_manifest.json"), True)
-    try:
-        outs.write(bytearray(json.dumps(manifest), "utf-8"))
-    finally:
-        outs.close()
+    _StoreFS(spark, path).write_text("_manifest.json", json.dumps(manifest))
     return manifest

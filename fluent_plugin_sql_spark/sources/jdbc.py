@@ -242,6 +242,26 @@ def write_jdbc(
     writer.save()
 
 
+def jdbc_connection(spark: SparkSession, url: str, properties: dict[str, str] | None = None):
+    """Open one driver-side JDBC connection (py4j, in the JVM that holds
+    the JDBC drivers) with EVERY property the readers and writers take —
+    user/password, and the rest too (pgJDBC ``currentSchema``, Derby
+    ``create``), so control SQL reaches the same database and schema as
+    Spark's own reads and writes.  ``driver`` names the class to load
+    first; it is not a connection property.  The caller closes it."""
+    jvm = spark._jvm  # noqa: SLF001
+    props = dict(properties or {})
+    driver = props.pop("driver", None)
+    if driver:
+        jvm.java.lang.Class.forName(
+            driver, True, jvm.java.lang.Thread.currentThread().getContextClassLoader()
+        )
+    jprops = jvm.java.util.Properties()
+    for k, v in props.items():
+        jprops.setProperty(str(k), str(v))
+    return jvm.java.sql.DriverManager.getConnection(url, jprops)
+
+
 def jdbc_health_probe(
     spark: SparkSession,
     url: str,
@@ -255,23 +275,13 @@ def jdbc_health_probe(
     asks the driver's own ``Connection.isValid`` — raises on any failure,
     which ``run_forever`` turns into a skipped cycle + backoff.
 
-    ``properties`` is the same dict the readers/writers take — user/
-    password/etc. are forwarded to the driver (an unauthenticated probe
-    against an authenticated database would fail every cycle and stall
-    the poll loop forever on a perfectly healthy server)."""
-    driver = (properties or {}).get("driver")
-    props = {k: v for k, v in (properties or {}).items() if k != "driver"}
+    ``properties`` is the same dict the readers/writers take, forwarded
+    by :func:`jdbc_connection` (an unauthenticated probe against an
+    authenticated database would fail every cycle and stall the poll
+    loop forever on a perfectly healthy server)."""
 
     def probe() -> None:
-        jvm = spark._jvm  # noqa: SLF001
-        if driver:
-            jvm.java.lang.Class.forName(
-                driver, True, jvm.java.lang.Thread.currentThread().getContextClassLoader()
-            )
-        jprops = jvm.java.util.Properties()
-        for k, v in props.items():
-            jprops.setProperty(str(k), str(v))
-        conn = jvm.java.sql.DriverManager.getConnection(url, jprops)
+        conn = jdbc_connection(spark, url, properties)
         try:
             if not conn.isValid(timeout_s):
                 raise ConnectionError(f"JDBC connection to {url} is not valid")
@@ -373,9 +383,18 @@ class JdbcIncrementalScan:
     ``sources.incremental.IncrementalScan`` wherever the poll loop takes a
     scan (``SQLInput(scans=...)``).
 
-    ``dialect``: 'limit' (PostgreSQL/MySQL/SQLite) or 'fetch'
-    (Derby/Oracle/DB2/SQL Server); quote per the target DB's identifier
-    case rules.
+    ``dialect``: an adapter name from :data:`DIALECTS` (row-cap syntax,
+    literal escaping, identifier quote character).
+
+    The pushed query always QUOTES the update column, spelled as the
+    table reports it: the first :meth:`batch_plan` reads the table's JDBC
+    schema once and matches ``update_column`` case-insensitively, an
+    exact match winning.  One spelling then works for every table kind —
+    a table created by Spark's JDBC writer has quoted lower-case columns
+    (``upd``), a DDL-created one on an upper-folding database (Derby,
+    Oracle, DB2) reports ``UPD``, and neither unquoted nor quoted
+    ``upd`` alone resolves on both.  The watermark's state-file key stays
+    the configured name.
     """
 
     def __init__(
@@ -387,15 +406,34 @@ class JdbcIncrementalScan:
         select_limit: int = 500,
         properties: dict[str, str] | None = None,
         dialect: str = "limit",
-        quote_identifiers: bool = False,
     ):
+        self.spark = spark
+        self.url = url
+        self.table = table
         self.update_column = update_column
         self.select_limit = select_limit
+        self.properties = properties
+        self.dialect = dialect
         self.tiebreak_column = None  # composite watermark: parquet path only
-        self._fetch = incremental_jdbc_reader(
-            spark, url, table, update_column, select_limit, properties,
-            dialect, quote_identifiers,
-        )
+        self._column = None  # update_column as the table reports it
+
+    def _column_as_reported(self) -> str:
+        cols = read_jdbc(self.spark, self.url, self.table, self.properties).columns
+        if self.update_column in cols:
+            return self.update_column
+        folded = [c for c in cols if c.lower() == self.update_column.lower()]
+        if len(folded) != 1:
+            raise ValueError(
+                f"table {self.table!r}: update_column {self.update_column!r} "
+                f"matches {len(folded)} of its columns {cols}"
+            )
+        return folded[0]
 
     def batch_plan(self, last_value: Any | None, last_tiebreak: Any | None = None):
-        return self._fetch(last_value)
+        if self._column is None:
+            self._column = self._column_as_reported()
+        q = incremental_query(
+            self.table, self._column, last_value, self.select_limit, self.dialect,
+            quote_identifiers=True,
+        )
+        return read_jdbc(self.spark, self.url, q, self.properties)

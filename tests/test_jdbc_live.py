@@ -352,7 +352,7 @@ def test_incremental_poll_decimal_and_timestamp_watermarks_live(spark, derby_url
     # DECIMAL watermark: unquoted fixed-point literal, strict >, exact resume
     scan = JdbcIncrementalScan(
         spark, derby_url, "wm_types", "amount", select_limit=15,
-        properties=DRIVER, dialect="derby", quote_identifiers=True,
+        properties=DRIVER, dialect="derby",
     )
     b1 = scan.batch_plan(None).collect()
     assert [r["id"] for r in b1] == list(range(15))
@@ -364,7 +364,7 @@ def test_incremental_poll_decimal_and_timestamp_watermarks_live(spark, derby_url
     # TIMESTAMP watermark: microsecond literal executed in-database
     tscan = JdbcIncrementalScan(
         spark, derby_url, "wm_types", "updated", select_limit=100,
-        properties=DRIVER, dialect="derby", quote_identifiers=True,
+        properties=DRIVER, dialect="derby",
     )
     twm = dtm.datetime(2024, 1, 1, 0, 29)  # row id=29's timestamp
     tb = tscan.batch_plan(twm).collect()
@@ -397,7 +397,7 @@ def test_poll_table_persists_typed_watermark_live(spark, derby_url, tmp_path, co
     )
     scan = JdbcIncrementalScan(
         spark, derby_url, "wm_poll", column, select_limit=15,
-        properties=DRIVER, dialect="derby", quote_identifiers=True,
+        properties=DRIVER, dialect="derby",
     )
     seen: list[int] = []
 
@@ -457,7 +457,7 @@ def test_poll_routes_and_writes_in_three_spark_jobs(spark, derby_url):
         emit=lambda tag, df: out.write_batch(df),
         scans={"jobs_src": JdbcIncrementalScan(
             spark, derby_url, "jobs_src", "upd", select_limit=50,
-            properties=DRIVER, dialect="derby", quote_identifiers=True,
+            properties=DRIVER, dialect="derby",
         )},
     )
     with spark_jobs(spark) as c:
@@ -552,3 +552,73 @@ def test_discover_empty_search_path_clear_error(spark):
         discover_jdbc_tables(spark, "jdbc:postgresql://h/db", {}, schema="")
     with pytest.raises(ValueError, match="schema_search_path"):
         discover_jdbc_tables(spark, "jdbc:postgresql://h/db", {}, schema=" , ")
+
+
+def test_pipeline_polls_writer_and_ddl_tables_without_quote_key(spark, derby_url, tmp_path):
+    """One config polls both table kinds on an upper-folding database: a
+    table created by the package's own ``write_jdbc`` reports quoted
+    lower-case columns (``upd``), a DDL-created one reports ``UPD``.
+    The scan quotes the column as the table reports it, so neither needs
+    a quoting key, and the state file keeps the configured name."""
+    from fluent_plugin_sql_spark.pipeline import Pipeline
+    from fluent_plugin_sql_spark.state import StateStore
+
+    src = spark.range(12).selectExpr("id", "id * 10 AS upd")
+    write_jdbc(src, derby_url, "kind_writer", DRIVER, mode="overwrite", num_partitions=1)
+    conn = spark._jvm.java.sql.DriverManager.getConnection(derby_url)
+    try:
+        st = conn.createStatement()
+        st.execute("CREATE TABLE kind_ddl (id BIGINT, upd BIGINT)")
+        st.execute(
+            "INSERT INTO kind_ddl VALUES " + ",".join(f"({i}, {i * 10})" for i in range(7))
+        )
+        st.close()
+    finally:
+        conn.close()
+    assert read_jdbc(spark, derby_url, "kind_ddl", DRIVER).columns == ["ID", "UPD"]
+
+    state_file = tmp_path / "state.json"
+    cfg = {
+        "source": {
+            "url": derby_url,
+            "driver": DRIVER["driver"],
+            "dialect": "derby",
+            "select_limit": 5,
+            "state_file": str(state_file),
+            "tables": [
+                {"table": "kind_writer", "update_column": "upd"},
+                {"table": "kind_ddl", "update_column": "upd"},
+            ],
+        },
+        "sink": {"path": str(tmp_path / "out"), "tables": [{"table": "all_kinds"}]},
+        "logical_now": "2024-06-01 00:00:00",
+    }
+    assert Pipeline(spark, cfg).run_once(drain=True) == {"kind_writer": 12, "kind_ddl": 7}
+    state = StateStore(str(state_file))
+    assert state.last_record("kind_writer") == {"upd": 110}
+    assert state.last_record("kind_ddl") == {"upd": 60}
+    assert Pipeline(spark, cfg).run_once() == {"kind_writer": 0, "kind_ddl": 0}
+    assert spark.read.parquet(str(tmp_path / "out" / "all_kinds")).count() == 19
+
+
+def test_jdbc_scan_unknown_update_column_names_table(spark, derby_url):
+    from fluent_plugin_sql_spark.sources.jdbc import JdbcIncrementalScan
+
+    scan = JdbcIncrementalScan(
+        spark, derby_url, "events", "no_such_col", properties=DRIVER, dialect="derby"
+    )
+    with pytest.raises(ValueError, match="'events'"):
+        scan.batch_plan(None)
+
+
+def test_epoch_marker_store_forwards_every_connection_property(spark, tmp_path):
+    """The marker store's control connection gets the same properties as
+    Spark's writes: Derby's ``create`` property (not in the URL) creates
+    the database, where forwarding only user/password would fail with
+    'Database not found'."""
+    from fluent_plugin_sql_spark.sinks.exactly_once import EpochMarkerStore
+
+    url = f"jdbc:derby:{tmp_path / 'fresh_db'}"
+    store = EpochMarkerStore(spark, url, {**DRIVER, "create": "true"}, dialect="derby")
+    store.mark("t", 7)
+    assert store.committed("t", 7) and not store.committed("t", 8)
