@@ -23,7 +23,7 @@ Scale contract (the whole point of the design):
   raw events.
 - **compact** re-merges accumulated per-batch partials so state size
   converges to O(groups), not O(batches x groups), via the staged swap
-  of ``dedup._StoreFS`` (an interrupted swap heals on open).
+  of ``fs._StoreFS`` (an interrupted swap heals on open).
 
 Exactly-once absorbs (stronger than the dedup stores' at-least-once,
 because double-absorbing partials DOUBLE-COUNTS instead of converging):
@@ -49,7 +49,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .dedup import _StoreFS
+from ..fs import _StoreFS
 
 
 def _sanitize_batch_id(batch_id: str) -> str:

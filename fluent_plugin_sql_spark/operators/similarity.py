@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..fs import _StoreFS
+
 
 def portable_id_hash(col: Column) -> Column:
     """60-bit hash of an id, identical in every engine that has md5 —
@@ -733,8 +735,6 @@ def append_ivf_index(
         .where(F.col("_rn") == 1)
         .select(F.col("centroid_id").alias("bucket"), "match_id", "cvec")
     )
-    from .dedup import _StoreFS
-
     fs = _StoreFS(spark, index_path)
     if skip_existing_ids and fs.has_data("postings"):
         touched = [r[0] for r in posting.select("bucket").distinct().collect()]
@@ -757,11 +757,9 @@ def append_ivf_index(
 def compact_ivf_index(spark, index_path: str, files_per_bucket: int = 1) -> None:
     """Bound small-file decay from repeated appends: rewrite the posting
     lists preserving bucket partitioning via the crash-safe staging swap
-    (dedup._StoreFS — an interrupted compact is healed on the next
+    (fs._StoreFS — an interrupted compact is healed on the next
     compact).  Bucket ids are unchanged, so probe pruning is identical
     before and after."""
-    from .dedup import _StoreFS
-
     fs = _StoreFS(spark, index_path)
     with fs.lock("compact"):
         n_buckets = spark.read.parquet(f"{index_path}/centroids").count()

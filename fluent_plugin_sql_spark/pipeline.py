@@ -142,44 +142,19 @@ def build_output_config(sink: dict[str, Any]) -> SQLOutputConfig:
 def build_readers(
     spark: SparkSession, src: dict[str, Any], cfg: SQLInputConfig
 ) -> dict[str, Callable[[], DataFrame]]:
-    """Readers for parquet-dir sources (``path:``).  A JDBC source
-    (``database:``) polls through :func:`build_jdbc_scans` instead, so it
-    gets none; with ``all_tables`` this only discovers its tables."""
-    if "path" in src:
-        from .io import load_table
+    """Readers for a parquet-dir source (``path:``); with ``all_tables``
+    the tables are discovered under the base path first."""
+    from .io import load_table
 
-        base = src["path"]
-        names = (
-            discover_tables(spark, base)
-            if cfg.all_tables
-            else [t.table for t in cfg.tables]
-        )
-        if cfg.all_tables and not cfg.tables:
-            cfg.tables.extend(SourceTable(table=n, update_column=src.get("update_column")) for n in names)
-        return {n: (lambda n=n: load_table(spark, base, n)) for n in names}
-    url = jdbc_url(src)
-    props = _jdbc_props(src)
+    base = src["path"]
+    names = (
+        discover_tables(spark, base)
+        if cfg.all_tables
+        else [t.table for t in cfg.tables]
+    )
     if cfg.all_tables and not cfg.tables:
-        # S3 all_tables against the DB catalog (in_sql.rb:214-230):
-        # every discovered table polls on its primary key / update_column
-        from .sources.jdbc import discover_jdbc_tables
-
-        # full search path, walked in declared order with first-match-wins
-        # (in_sql.rb:43 semantics via ActiveRecord) — truncating to the
-        # first schema would silently miss multi-schema users' tables
-        names = discover_jdbc_tables(
-            spark, url, props,
-            # None when the key is absent: the sentinel is ABSENCE, not
-            # the string "public" — Derby treats None as no-filter while
-            # an explicit "public" filters (a creatable schema there)
-            schema=src.get("schema_search_path"),
-            dialect=src.get("catalog_dialect", "information_schema"),
-        )
-        cfg.tables.extend(
-            SourceTable(table=n, update_column=src.get("update_column"))
-            for n in names
-        )
-    return {}
+        cfg.tables.extend(SourceTable(table=n, update_column=src.get("update_column")) for n in names)
+    return {n: (lambda n=n: load_table(spark, base, n)) for n in names}
 
 
 def _jdbc_props(block: dict[str, Any]) -> dict[str, str]:
@@ -198,26 +173,44 @@ def _jdbc_props(block: dict[str, Any]) -> dict[str, str]:
 
 
 def build_jdbc_scans(spark: SparkSession, src: dict[str, Any], cfg: SQLInputConfig):
-    """Pushdown scans for JDBC sources: the poll query executes in the
-    database (dialect-aware row cap and identifier quoting; see
-    sources.jdbc.JdbcIncrementalScan).  The pushed query
-    has a single-column watermark, so a ``tiebreak_column`` is rejected
-    rather than ignored (ignoring it would skip rows tied at a batch
-    boundary)."""
-    from .sources.jdbc import JdbcIncrementalScan
+    """Pushdown scans for a JDBC source: the poll query executes in the
+    database (dialect-aware row cap, identifier quoting from the
+    connection; see sources.jdbc.JdbcIncrementalScan); with
+    ``all_tables`` the tables are discovered in the database catalog
+    first.  The pushed query has a single-column watermark, so a
+    ``tiebreak_column`` is rejected rather than ignored (ignoring it
+    would skip rows tied at a batch boundary)."""
+    from .sources.jdbc import JdbcIncrementalScan, discover_jdbc_tables
 
+    url = jdbc_url(src)
+    props = _jdbc_props(src)
+    if cfg.all_tables and not cfg.tables:
+        # S3 all_tables against the DB catalog (in_sql.rb:214-230): every
+        # discovered table polls on its primary key / update_column.  The
+        # full search path is walked in declared order, first match wins
+        # (in_sql.rb:43 semantics via ActiveRecord); schema=None when the
+        # key is absent — Derby treats None as no filter, while an
+        # explicit "public" filters (a creatable schema there)
+        names = discover_jdbc_tables(
+            spark, url, props,
+            schema=src.get("schema_search_path"),
+            dialect=src.get("catalog_dialect", "information_schema"),
+        )
+        cfg.tables.extend(
+            SourceTable(table=n, update_column=src.get("update_column"))
+            for n in names
+        )
     for t in cfg.tables:
         if t.tiebreak_column:
             raise ValueError(
                 f"source table {t.table!r}: tiebreak_column is supported for "
                 "parquet (path:) sources only, not JDBC sources"
             )
-    url = jdbc_url(src)
     dialect = src.get("dialect") or src.get("adapter", "postgresql")
     return {
         t.table: JdbcIncrementalScan(
             spark, url, t.table, t.resolve_update_column(), cfg.select_limit,
-            _jdbc_props(src), dialect,
+            props, dialect,
         )
         for t in cfg.tables
     }
@@ -313,8 +306,10 @@ class Pipeline:
         self.out_cfg = build_output_config(config["sink"])
         self.output = SQLOutput(self.out_cfg, build_writer(spark, config["sink"]))
         src = config["source"]
-        readers = build_readers(spark, src, self.in_cfg)
-        scans = None if "path" in src else build_jdbc_scans(spark, src, self.in_cfg)
+        if "path" in src:
+            readers, scans = build_readers(spark, src, self.in_cfg), None
+        else:
+            readers, scans = {}, build_jdbc_scans(spark, src, self.in_cfg)
         quarantine = bool(src.get("quarantine_time_fallback", False))
 
         def emit(tag, df):

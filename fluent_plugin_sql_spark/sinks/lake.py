@@ -18,6 +18,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+from ..fs import _StoreFS
+
 
 def write_partitioned(
     df: DataFrame,
@@ -68,7 +70,7 @@ def compact_parquet_dir(
     (optionally sorted, so downstream range predicates benefit from
     parquet row-group min/max pruning), staging into the sibling
     ``{path}.__compact_tmp__`` and swapping it in with the staged swap of
-    ``operators.dedup._StoreFS`` — scheme-agnostic, and a crash at any
+    ``fs._StoreFS`` — scheme-agnostic, and a crash at any
     point is healed on the next call, before it starts.  Concurrent
     READERS of the old listing are fine; pause writers (or compact
     between polls) since appends during compaction would be lost.
@@ -103,8 +105,6 @@ def _table_fs(spark, path: str):
     directory, the table's name in it, and the staged/old names of its
     swap (the sibling ``{name}.__compact_tmp__``/``.__compact_old__``)."""
     import posixpath
-
-    from ..operators.dedup import _StoreFS
 
     parent, name = posixpath.split(path.rstrip("/"))
     swap = {"staged": f"{name}.__compact_tmp__", "old": f"{name}.__compact_old__"}
@@ -433,7 +433,5 @@ def write_training_shards(
             for i in range(num_shards)
         },
     }
-    from ..operators.dedup import _StoreFS
-
     _StoreFS(spark, path).write_text("_manifest.json", json.dumps(manifest))
     return manifest

@@ -384,17 +384,22 @@ class JdbcIncrementalScan:
     scan (``SQLInput(scans=...)``).
 
     ``dialect``: an adapter name from :data:`DIALECTS` (row-cap syntax,
-    literal escaping, identifier quote character).
+    literal escaping).
 
     The pushed query always QUOTES the update column, spelled as the
-    table reports it: the first :meth:`batch_plan` reads the table's JDBC
-    schema once and matches ``update_column`` case-insensitively, an
-    exact match winning.  One spelling then works for every table kind —
-    a table created by Spark's JDBC writer has quoted lower-case columns
+    table reports it and quoted as the connection quotes identifiers: the
+    first :meth:`batch_plan` opens one driver-side connection, reads the
+    table's columns and ``DatabaseMetaData.getIdentifierQuoteString()``,
+    and matches ``update_column`` case-insensitively, an exact match
+    winning.  One spelling then works for every table kind — a table
+    created by Spark's JDBC writer has quoted lower-case columns
     (``upd``), a DDL-created one on an upper-folding database (Derby,
-    Oracle, DB2) reports ``UPD``, and neither unquoted nor quoted
-    ``upd`` alone resolves on both.  The watermark's state-file key stays
-    the configured name.
+    Oracle, DB2) reports ``UPD``, and neither unquoted nor quoted ``upd``
+    alone resolves on both.  The quote character comes from the
+    connection, not the configured dialect, so a MySQL/MariaDB source
+    gets backticks even when configured by ``url`` alone (a ``"upd"``
+    there is a string literal: the poll would silently match nothing).
+    The watermark's state-file key stays the configured name.
     """
 
     def __init__(
@@ -415,25 +420,38 @@ class JdbcIncrementalScan:
         self.properties = properties
         self.dialect = dialect
         self.tiebreak_column = None  # composite watermark: parquet path only
-        self._column = None  # update_column as the table reports it
+        self._fetch = None  # built on the first batch_plan
 
-    def _column_as_reported(self) -> str:
-        cols = read_jdbc(self.spark, self.url, self.table, self.properties).columns
+    def _quoted_column(self) -> str:
+        conn = jdbc_connection(self.spark, self.url, self.properties)
+        try:
+            quote = conn.getMetaData().getIdentifierQuoteString().strip()
+            st = conn.createStatement()
+            try:
+                md = st.executeQuery(f"SELECT * FROM {self.table} WHERE 1=0").getMetaData()
+                cols = [md.getColumnLabel(i) for i in range(1, md.getColumnCount() + 1)]
+            finally:
+                st.close()
+        finally:
+            conn.close()
         if self.update_column in cols:
-            return self.update_column
-        folded = [c for c in cols if c.lower() == self.update_column.lower()]
-        if len(folded) != 1:
-            raise ValueError(
-                f"table {self.table!r}: update_column {self.update_column!r} "
-                f"matches {len(folded)} of its columns {cols}"
-            )
-        return folded[0]
+            col = self.update_column
+        else:
+            folded = [c for c in cols if c.lower() == self.update_column.lower()]
+            if len(folded) != 1:
+                raise ValueError(
+                    f"table {self.table!r}: update_column {self.update_column!r} "
+                    f"matches {len(folded)} of its columns {cols}"
+                )
+            col = folded[0]
+        # a blank quote string means the database does not quote
+        return f"{quote}{col.replace(quote, quote * 2)}{quote}" if quote else col
 
     def batch_plan(self, last_value: Any | None, last_tiebreak: Any | None = None):
-        if self._column is None:
-            self._column = self._column_as_reported()
-        q = incremental_query(
-            self.table, self._column, last_value, self.select_limit, self.dialect,
-            quote_identifiers=True,
-        )
-        return read_jdbc(self.spark, self.url, q, self.properties)
+        if self._fetch is None:
+            # the column arrives quoted, so the query must not quote it again
+            self._fetch = incremental_jdbc_reader(
+                self.spark, self.url, self.table, self._quoted_column(),
+                self.select_limit, self.properties, self.dialect,
+            )
+        return self._fetch(last_value)

@@ -24,13 +24,13 @@ from typing import Any
 
 from pyspark.sql import DataFrame
 
+from ..fs import _StoreFS
 from ..functions.text import quality_predicate
 from ..operators.dedup import (
     EmbeddingDedupStore,
     ExactDedupStore,
     MinHashDedupStore,
     SimHashDedupStore,
-    _StoreFS,
 )
 from ..operators.rollup import RollupStore
 from ..operators.similarity import append_ivf_index, build_ivf_index, compact_ivf_index

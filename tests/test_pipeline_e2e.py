@@ -159,6 +159,68 @@ def test_jdbc_source_rejects_tiebreak_column(spark):
         Pipeline(spark, cfg)
 
 
+class _FakeConnection:
+    """The slice of java.sql.Connection a JDBC scan's column lookup uses,
+    answering as MySQL Connector/J does: backtick identifier quotes."""
+
+    def __init__(self, columns, quote="`"):
+        self.columns, self.quote, self.queries = columns, quote, []
+
+    def getMetaData(self):
+        return self
+
+    def getIdentifierQuoteString(self):
+        return self.quote
+
+    def createStatement(self):
+        return self
+
+    def executeQuery(self, q):
+        self.queries.append(q)
+        return self
+
+    def getColumnCount(self):
+        return len(self.columns)
+
+    def getColumnLabel(self, i):
+        return self.columns[i - 1]
+
+    def close(self):
+        pass
+
+
+def test_jdbc_scan_quotes_update_column_as_the_connection_does(monkeypatch):
+    """A source configured by a jdbc:mysql URL alone (no adapter, so the
+    postgresql dialect) must still quote the update column with MySQL's
+    backtick: a double-quoted "upd" is a string literal there, and the
+    poll would order by a constant and never pass its watermark.  The
+    quote character comes from the connection's metadata, the spelling
+    from the table's columns."""
+    from fluent_plugin_sql_spark.pipeline import build_input_config, build_jdbc_scans
+    from fluent_plugin_sql_spark.sources import jdbc
+
+    conn = _FakeConnection(["id", "UPD"])
+    pushed = []
+    monkeypatch.setattr(jdbc, "jdbc_connection", lambda spark, url, props: conn)
+    monkeypatch.setattr(
+        jdbc, "read_jdbc", lambda spark, url, dbtable, props=None: pushed.append(dbtable)
+    )
+    src = {
+        "url": "jdbc:mysql://localhost/shop",
+        "select_limit": 10,
+        "tables": [{"table": "orders", "update_column": "upd"}],
+    }
+    scan = build_jdbc_scans(None, src, build_input_config(src))["orders"]
+    scan.batch_plan(None)
+    scan.batch_plan(5)
+    assert conn.queries == ["SELECT * FROM orders WHERE 1=0"]  # looked up once
+    assert pushed == [
+        "(SELECT * FROM orders ORDER BY `UPD` ASC LIMIT 10) AS fpss_src",
+        "(SELECT * FROM orders WHERE `UPD` > 5 ORDER BY `UPD` ASC LIMIT 10) AS fpss_src",
+    ]
+    assert scan.update_column == "upd"  # the state-file key stays as configured
+
+
 def test_upsert_lake_sink_mode(spark, tmp_path):
     """CDC-to-lake shape: sink mode 'upsert' MERGEs each emitted batch
     into the per-table parquet dir instead of appending — re-polled or

@@ -1,4 +1,4 @@
-"""Crash windows of the one staged swap (``operators.dedup._StoreFS``)
+"""Crash windows of the one staged swap (``fs._StoreFS``)
 across every table rewritten through it.
 
 Each user first runs its rewrite once, so the live table holds its final
