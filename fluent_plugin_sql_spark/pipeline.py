@@ -41,6 +41,7 @@ engine — offsets live in the Spark checkpoint instead of ``state_file``).
 
 from __future__ import annotations
 
+import difflib
 import json
 import logging
 import sys
@@ -69,14 +70,22 @@ def load_config(path: str) -> dict[str, Any]:
     return json.loads(text)
 
 
-# Dialect resolution lives in sources.jdbc.DIALECTS (adapter names map
-# directly to row-cap/escaping/quoting rules).
+# The keys each config block reads, one set per block; CONFIG.md's key
+# tables name the same keys.  Pipeline warns about any other key
+# (warn_unknown_keys).
+CONFIG_KEYS = frozenset({"source", "sink", "logical_now"})
+CONNECTION_KEYS = frozenset({
+    "url", "adapter", "host", "port", "database", "username", "password",
+    "driver", "socket", "schema_search_path",
+})
 
 
 def jdbc_url(src: dict[str, Any]) -> str:
     """Compose a JDBC URL from the reference's connection params
     (adapter/host/port/database, in_sql.rb:28-43); an explicit ``url``
-    passes through untouched (embedded DBs like Derby)."""
+    passes through untouched (embedded DBs like Derby).  The only place
+    that knows adapter aliases: the SQL rules follow the URL's
+    subprotocol (sources.jdbc.dialect_for_url)."""
     if "url" in src:
         return src["url"]
     adapter = src.get("adapter", "postgresql")
@@ -89,13 +98,27 @@ def jdbc_url(src: dict[str, Any]) -> str:
             "use host/port (or an explicit 'url' with a driver-specific "
             "socketFactory)"
         )
-    scheme = {
-        "postgres": "postgresql", "postgresql": "postgresql",
-        "mysql": "mysql", "mysql2": "mysql", "sqlite": "sqlite",
-    }.get(adapter, adapter)
+    # Rails adapter names → JDBC subprotocol
+    scheme = {"postgres": "postgresql", "mysql2": "mysql", "trilogy": "mysql"}.get(
+        adapter, adapter
+    )
     host = src.get("host", "localhost")
-    port = src.get("port") or {"postgresql": 5432, "mysql": 3306}.get(scheme, 5432)
+    port = src.get("port") or {"mysql": 3306, "mariadb": 3306}.get(scheme, 5432)
     return f"jdbc:{scheme}://{host}:{port}/{src['database']}"
+
+
+SOURCE_KEYS = CONNECTION_KEYS | {
+    "path", "tables", "tag_prefix", "select_interval", "select_limit",
+    "state_file", "all_tables", "update_column", "quarantine_time_fallback",
+    "dedup_compact_every",
+    # streaming stage blocks (streaming.stages.stages_from_config)
+    "quality_filter", "exact_dedup", "simhash_dedup", "near_dedup",
+    "embedding_dedup", "semantic_dedup", "rollup", "ivf_index",
+}
+SOURCE_TABLE_KEYS = frozenset({
+    "table", "tag", "update_column", "tiebreak_column", "time_column",
+    "time_parse_format", "primary_key",
+})
 
 
 def build_input_config(src: dict[str, Any]) -> SQLInputConfig:
@@ -119,6 +142,38 @@ def build_input_config(src: dict[str, Any]) -> SQLInputConfig:
         state_file=src.get("state_file"),
         all_tables=bool(src.get("all_tables", False)),
     )
+
+
+SINK_KEYS = CONNECTION_KEYS | {
+    "path", "tables", "mode", "merge_keys", "partition_cols", "order_column",
+    "remove_tag_prefix", "num_retries", "pool", "enable_fallback",
+    "num_partitions", "batchsize",
+}
+SINK_TABLE_KEYS = frozenset({"table", "pattern", "column_mapping"})
+
+
+def warn_unknown_keys(config: dict[str, Any]) -> None:
+    """Log one WARNING per key that no config block reads, naming the
+    nearest known key: a misspelt ``select_limt`` would otherwise be
+    ignored without a word and the engine run on the default.  A warning
+    rather than an error, so a config that still sets a retired key
+    (``dialect``, ``quote_identifiers``) keeps running.  Stage sub-blocks
+    are not checked."""
+    src, sink = config.get("source", {}), config.get("sink", {})
+    blocks = [("", config, CONFIG_KEYS), ("source.", src, SOURCE_KEYS),
+              ("sink.", sink, SINK_KEYS)]
+    blocks += [(f"source.tables[{i}].", t, SOURCE_TABLE_KEYS)
+               for i, t in enumerate(src.get("tables", []))]
+    blocks += [(f"sink.tables[{i}].", t, SINK_TABLE_KEYS)
+               for i, t in enumerate(sink.get("tables", []))]
+    for where, block, known in blocks:
+        for key in block:
+            if key not in known:
+                near = difflib.get_close_matches(key, known, n=1)
+                log.warning(
+                    "unknown config key '%s%s' is ignored%s", where, key,
+                    f"; did you mean {near[0]!r}?" if near else "",
+                )
 
 
 def build_output_config(sink: dict[str, Any]) -> SQLOutputConfig:
@@ -174,8 +229,8 @@ def _jdbc_props(block: dict[str, Any]) -> dict[str, str]:
 
 def build_jdbc_scans(spark: SparkSession, src: dict[str, Any], cfg: SQLInputConfig):
     """Pushdown scans for a JDBC source: the poll query executes in the
-    database (dialect-aware row cap, identifier quoting from the
-    connection; see sources.jdbc.JdbcIncrementalScan); with
+    database (row cap and escaping from the URL, identifier quoting from
+    the connection; see sources.jdbc.JdbcIncrementalScan); with
     ``all_tables`` the tables are discovered in the database catalog
     first.  The pushed query has a single-column watermark, so a
     ``tiebreak_column`` is rejected rather than ignored (ignoring it
@@ -189,13 +244,8 @@ def build_jdbc_scans(spark: SparkSession, src: dict[str, Any], cfg: SQLInputConf
         # discovered table polls on its primary key / update_column.  The
         # full search path is walked in declared order, first match wins
         # (in_sql.rb:43 semantics via ActiveRecord); schema=None when the
-        # key is absent — Derby treats None as no filter, while an
-        # explicit "public" filters (a creatable schema there)
-        names = discover_jdbc_tables(
-            spark, url, props,
-            schema=src.get("schema_search_path"),
-            dialect=src.get("catalog_dialect", "information_schema"),
-        )
+        # key is absent means the connection's own tables
+        names = discover_jdbc_tables(spark, url, props, schema=src.get("schema_search_path"))
         cfg.tables.extend(
             SourceTable(table=n, update_column=src.get("update_column"))
             for n in names
@@ -206,11 +256,9 @@ def build_jdbc_scans(spark: SparkSession, src: dict[str, Any], cfg: SQLInputConf
                 f"source table {t.table!r}: tiebreak_column is supported for "
                 "parquet (path:) sources only, not JDBC sources"
             )
-    dialect = src.get("dialect") or src.get("adapter", "postgresql")
     return {
         t.table: JdbcIncrementalScan(
-            spark, url, t.table, t.resolve_update_column(), cfg.select_limit,
-            props, dialect,
+            spark, url, t.table, t.resolve_update_column(), cfg.select_limit, props
         )
         for t in cfg.tables
     }
@@ -302,6 +350,7 @@ class Pipeline:
     def __init__(self, spark: SparkSession, config: dict[str, Any]):
         self.spark = spark
         self.config = config
+        warn_unknown_keys(config)
         self.in_cfg = build_input_config(config["source"])
         self.out_cfg = build_output_config(config["sink"])
         self.output = SQLOutput(self.out_cfg, build_writer(spark, config["sink"]))

@@ -30,7 +30,7 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.jdbc import jdbc_connection, resolve_dialect, write_jdbc
+from ..sources.jdbc import dialect_for_url, jdbc_connection, write_jdbc
 
 MARKER_TABLE = "fpss_epochs"
 
@@ -55,10 +55,9 @@ MISSING_OBJECT_SQLSTATES = frozenset(
 EXISTS_SQLSTATES = frozenset({"X0Y32", "42P07", "42S01", "42710", "S0001"})
 # Oracle flattens both ORA-00942 (does not exist) and ORA-00955 (already
 # exists) — and plain syntax errors — into the generic SQLState 42000, so
-# tolerating 42000 is gated on dialect='oracle' rather than global (on
+# tolerating 42000 is gated on a jdbc:oracle URL rather than global (on
 # every other system 42000 is a real error that must abort the batch)
-DIALECT_MISSING_EXTRA = {"oracle": frozenset({"42000"})}
-DIALECT_EXISTS_EXTRA = {"oracle": frozenset({"42000"})}
+ORACLE_SQLSTATES = frozenset({"42000"})
 
 
 def _sqlstates(exc: Exception):
@@ -81,7 +80,13 @@ def _sqlstates(exc: Exception):
 
 
 class EpochMarkerStore:
-    """Driver-side control-plane statements for the marker protocol."""
+    """Driver-side control-plane statements for the marker protocol.
+
+    The identifier quote character and the tolerated SQLStates follow the
+    URL (``sources.jdbc.dialect_for_url``): on MySQL/MariaDB the
+    retry cleanup must name ``_epoch`` in backticks, since a
+    double-quoted ``"_epoch"`` there is a string literal and the DELETE
+    would match no row."""
 
     def __init__(
         self,
@@ -89,23 +94,19 @@ class EpochMarkerStore:
         url: str,
         properties: dict[str, str] | None = None,
         marker_table: str = MARKER_TABLE,
-        dialect: str = "limit",
     ):
         self.spark = spark
         self.url = url
         self.properties = properties or {}
         self.marker_table = _check_ident(marker_table)
-        # identifier quote char only: Spark's JDBC writer QUOTES column
-        # names (preserving case), so control SQL must quote them too on
-        # case-folding databases (Derby/Oracle uppercase unquoted idents)
-        self.quote = resolve_dialect(dialect).quote_char
-        d = resolve_dialect(dialect).name
-        self._missing_states = MISSING_OBJECT_SQLSTATES | DIALECT_MISSING_EXTRA.get(
-            d, frozenset()
-        )
-        self._exists_states = EXISTS_SQLSTATES | DIALECT_EXISTS_EXTRA.get(
-            d, frozenset()
-        )
+        d = dialect_for_url(url)
+        # Spark's JDBC writer QUOTES column names (preserving case), so
+        # control SQL must quote them too on case-folding databases
+        # (Derby/Oracle uppercase unquoted idents)
+        self.quote = d.quote_char
+        extra = ORACLE_SQLSTATES if d.name == "oracle" else frozenset()
+        self._missing_states = MISSING_OBJECT_SQLSTATES | extra
+        self._exists_states = EXISTS_SQLSTATES | extra
         self._ensure_marker_table()
 
     def _conn(self):
@@ -211,12 +212,11 @@ def idempotent_jdbc_writer(
     batchsize: int = 1000,
     num_partitions: int | None = None,
     marker_store: EpochMarkerStore | None = None,
-    dialect: str = "limit",
 ):
     """Build a ``foreachBatch``-compatible ``(df, epoch_id) -> None``
     handler delivering each epoch effectively-once into ``table`` (rows
     gain an ``_epoch`` BIGINT column — the retry-cleanup key)."""
-    store = marker_store or EpochMarkerStore(spark, url, properties, dialect=dialect)
+    store = marker_store or EpochMarkerStore(spark, url, properties)
 
     def handle(batch_df: DataFrame, epoch_id: int) -> None:
         if store.committed(table, epoch_id):

@@ -9,8 +9,8 @@ like activerecord-import (out_sql.rb:104).
 
 Live-tested against embedded Apache Derby (tests/test_jdbc_live.py) — the
 Derby driver ships on Spark's classpath — covering the real poll→write loop
-with in-database pushdown; PostgreSQL/MySQL need only their driver jar and
-the matching ``dialect`` arguments.
+with in-database pushdown; PostgreSQL/MySQL need only their driver jar.
+The SQL rules follow the JDBC URL's subprotocol (:func:`dialect_for_url`).
 """
 
 from __future__ import annotations
@@ -37,22 +37,14 @@ class Dialect(NamedTuple):
 
 
 DIALECTS: dict[str, Dialect] = {
-    # bare row-cap styles kept for backward compatibility
-    "limit": Dialect("limit", "limit", False, '"'),
-    "fetch": Dialect("fetch", "fetch", False, '"'),
-    # named adapters (reference supports every ActiveRecord adapter;
-    # these are the ones its CI exercises plus the ANSI mainstays)
-    "postgres": Dialect("postgres", "limit", False, '"'),
+    # keyed by JDBC subprotocol (jdbc:<name>:...), see dialect_for_url
     "postgresql": Dialect("postgresql", "limit", False, '"'),
     "mysql": Dialect("mysql", "limit", True, "`"),
-    "mysql2": Dialect("mysql2", "limit", True, "`"),
     "mariadb": Dialect("mariadb", "limit", True, "`"),
-    "trilogy": Dialect("trilogy", "limit", True, "`"),  # Rails' MySQL adapter
     "sqlite": Dialect("sqlite", "limit", False, '"'),
     "derby": Dialect("derby", "fetch", False, '"', "func"),
     "oracle": Dialect("oracle", "fetch", False, '"'),
     "db2": Dialect("db2", "fetch", False, '"'),
-    "mssql": Dialect("mssql", "fetch", False, '"'),
 }
 
 
@@ -72,7 +64,22 @@ def resolve_dialect(name: str | Dialect) -> Dialect:
         ) from None
 
 
-def sql_literal(value: Any, dialect: str | Dialect = "limit") -> str:
+def dialect_for_url(url: str) -> Dialect:
+    """The SQL rules of the database a JDBC URL names: its subprotocol
+    (``jdbc:<name>:...``) picks the :data:`DIALECTS` row, so the SQL can
+    never disagree with the database it is sent to.  An unknown
+    subprotocol raises, as :func:`resolve_dialect` does for a name."""
+    scheme, _, rest = url.partition(":")
+    name = rest.partition(":")[0].lower() if scheme.lower() == "jdbc" else ""
+    if name not in DIALECTS:
+        raise ValueError(
+            f"no SQL dialect for JDBC URL subprotocol {name!r} (jdbc:<subprotocol>:...); "
+            f"supported: {', '.join(DIALECTS)}"
+        )
+    return DIALECTS[name]
+
+
+def sql_literal(value: Any, dialect: str | Dialect = "postgresql") -> str:
     """Render a Python value as a SQL literal for pushdown composition.
 
     The value is DATA-derived (the watermark = last emitted row's
@@ -126,7 +133,7 @@ def incremental_query(
     update_column: str,
     last_value: Any | None,
     limit: int,
-    dialect: str | Dialect = "limit",
+    dialect: str | Dialect = "postgresql",
     quote_identifiers: bool = False,
 ) -> str:
     """The exact reference query shape (README.md:34), embedded as a
@@ -134,10 +141,9 @@ def incremental_query(
     total pushdown, same as the reference's ActiveRecord relation
     (in_sql.rb:130-135).
 
-    ``dialect``: a name from :data:`DIALECTS` — an adapter name
-    ('postgres', 'mysql', 'derby', ...) or a bare row-cap style
-    ('limit'/'fetch') — controlling row-cap syntax, literal escaping,
-    and the identifier quote character.
+    ``dialect``: a name from :data:`DIALECTS` ('postgresql', 'mysql',
+    'derby', ...) or a :class:`Dialect`, controlling row-cap syntax,
+    literal escaping, and the identifier quote character.
     ``quote_identifiers``: wrap COLUMN names in the dialect's quote
     character — needed when the table was created by Spark's JDBC
     writer, which quotes column identifiers (preserving lowercase) but
@@ -170,7 +176,7 @@ def incremental_jdbc_reader(
     update_column: str,
     limit: int,
     properties: dict[str, str] | None = None,
-    dialect: str = "limit",
+    dialect: str | Dialect = "postgresql",
     quote_identifiers: bool = False,
 ):
     """Build a ``last_value -> DataFrame`` factory running the S1 poll
@@ -297,7 +303,6 @@ def discover_jdbc_tables(
     properties: dict[str, str] | None = None,
     schema: str | None = None,
     skip: tuple[str, ...] = ("schema_migrations",),
-    dialect: str = "information_schema",
 ) -> list[str]:
     """S3 ``all_tables`` against an RDBMS catalog (in_sql.rb:214-230).
 
@@ -309,69 +314,60 @@ def discover_jdbc_tables(
     from the earlier schema — discovering both would double-poll one
     logical table under the search-path resolution the read side uses.
 
-    ``dialect``: ``information_schema`` (PostgreSQL/MySQL/SQL Server) or
-    ``derby`` (SYS.SYSTABLES joined to SYS.SYSSCHEMAS).  One catalog
-    query regardless of path length; ordering resolves client-side over
-    the (name, schema) rows.
+    The catalog follows the URL: ``jdbc:derby`` reads SYS.SYSTABLES
+    joined to SYS.SYSSCHEMAS, every other database
+    ``information_schema.tables``.  One catalog query regardless of path
+    length; ordering resolves client-side over the (name, schema) rows.
 
-    ``schema=None`` (config key absent) defaults to ``public`` for
-    information_schema dialects and to NO schema filter for Derby, which
-    has no "public" schema.  The sentinel is absence, not the string
-    "public": Derby users CAN create a schema named ``public``, and an
-    explicit ``schema_search_path="public"`` must filter to it rather
-    than silently return every schema's tables."""
-    if dialect == "derby":
-        # None = no filter (the pre-search-path behavior: every user
-        # table).  Any explicit path filters, matched case-insensitively —
-        # Derby folds unquoted identifiers upper, so config "app,legacy"
-        # finds APP/LEGACY.
-        path = (
-            []
-            if schema is None
-            else [s.strip() for s in schema.split(",") if s.strip()]
+    ``schema=None`` (config key absent) means the tables of the current
+    connection: ``public`` on PostgreSQL and the other
+    information_schema databases, the connection's database
+    (``DATABASE()``) on MySQL/MariaDB, whose ``table_schema`` holds
+    database names, and NO schema filter on Derby, which has no
+    "public" schema.  The sentinel is absence, not the string "public":
+    Derby users CAN create a schema named ``public``, and an explicit
+    ``schema_search_path="public"`` must filter to it rather than
+    silently return every schema's tables."""
+    d = dialect_for_url(url)
+    path = None if schema is None else [s.strip() for s in schema.split(",") if s.strip()]
+    if path == []:
+        # '' or ',' would otherwise push the invalid SQL `IN ()` and fail
+        # with an opaque database error at discovery time
+        raise ValueError(
+            "schema_search_path must name at least one schema for "
+            f"catalog discovery (got {schema!r})"
         )
-        if schema is not None and not path:
-            raise ValueError(
-                "schema_search_path must name at least one schema for "
-                f"catalog discovery (got {schema!r})"
-            )
+    if d.name == "derby":
+        # Derby folds unquoted identifiers upper, so config "app,legacy"
+        # finds APP/LEGACY
         q = (
             "(SELECT t.tablename AS table_name, s.schemaname AS table_schema "
             "FROM SYS.SYSTABLES t JOIN SYS.SYSSCHEMAS s "
             "ON t.schemaid = s.schemaid WHERE t.tabletype = 'T') AS t"
         )
-        rank = {s.upper(): i for i, s in enumerate(path)}
         norm = str.upper
     else:
-        if schema is None:
-            schema = "public"  # the reference's documented default path
-        path = [s.strip() for s in schema.split(",") if s.strip()]
-        if not path:
-            # '' or ',' would otherwise push the invalid SQL `IN ()`
-            # and fail with an opaque database error at discovery time
-            raise ValueError(
-                "schema_search_path must name at least one schema for "
-                f"catalog discovery (got {schema!r})"
-            )
-        in_list = ", ".join(sql_literal(s) for s in path)
-        q = (
-            "(SELECT table_name, table_schema FROM information_schema.tables "
-            f"WHERE table_schema IN ({in_list})) AS t"
+        if path is None and d.name not in ("mysql", "mariadb"):
+            path = ["public"]  # the reference's documented default path
+        where = (
+            "table_schema = DATABASE()"
+            if path is None
+            else f"table_schema IN ({', '.join(sql_literal(s, d) for s in path)})"
         )
-        rank = {s: i for i, s in enumerate(path)}
+        q = f"(SELECT table_name, table_schema FROM information_schema.tables WHERE {where}) AS t"
         norm = str
+    # no path: every row is in scope (Derby's no-filter mode, MySQL's
+    # current database)
+    rank = {norm(s): i for i, s in enumerate(path or [])}
     rows = read_jdbc(spark, url, q, properties).collect()
     best: dict[str, int] = {}
     for r in rows:
         name, sch = r[0], r[1]
         if name.lower() in skip:
             continue
-        if rank:
-            i = rank.get(norm(sch))
-            if i is None:
-                continue  # table lives outside the declared path
-        else:
-            i = 0  # derby no-filter mode
+        i = rank.get(norm(sch)) if rank else 0
+        if i is None:
+            continue  # table lives outside the declared path
         if name not in best or i < best[name]:
             best[name] = i
     return sorted(best)
@@ -383,8 +379,9 @@ class JdbcIncrementalScan:
     ``sources.incremental.IncrementalScan`` wherever the poll loop takes a
     scan (``SQLInput(scans=...)``).
 
-    ``dialect``: an adapter name from :data:`DIALECTS` (row-cap syntax,
-    literal escaping).
+    Row-cap syntax and literal escaping follow the URL
+    (:func:`dialect_for_url`): an unknown subprotocol raises here, before
+    any connection opens.
 
     The pushed query always QUOTES the update column, spelled as the
     table reports it and quoted as the connection quotes identifiers: the
@@ -396,9 +393,9 @@ class JdbcIncrementalScan:
     (``upd``), a DDL-created one on an upper-folding database (Derby,
     Oracle, DB2) reports ``UPD``, and neither unquoted nor quoted ``upd``
     alone resolves on both.  The quote character comes from the
-    connection, not the configured dialect, so a MySQL/MariaDB source
-    gets backticks even when configured by ``url`` alone (a ``"upd"``
-    there is a string literal: the poll would silently match nothing).
+    connection's metadata (on MySQL/MariaDB it is the backtick: a
+    ``"upd"`` there is a string literal, and the poll would silently
+    match nothing).
     The watermark's state-file key stays the configured name.
     """
 
@@ -410,7 +407,6 @@ class JdbcIncrementalScan:
         update_column: str,
         select_limit: int = 500,
         properties: dict[str, str] | None = None,
-        dialect: str = "limit",
     ):
         self.spark = spark
         self.url = url
@@ -418,7 +414,7 @@ class JdbcIncrementalScan:
         self.update_column = update_column
         self.select_limit = select_limit
         self.properties = properties
-        self.dialect = dialect
+        self.dialect = dialect_for_url(url)
         self.tiebreak_column = None  # composite watermark: parquet path only
         self._fetch = None  # built on the first batch_plan
 

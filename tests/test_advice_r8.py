@@ -154,12 +154,12 @@ def test_derby_explicit_public_schema_filters(spark, tmp_path):
 
     # explicit "public" → only the public schema's tables
     assert discover_jdbc_tables(
-        spark, url, DRIVER, schema="public", dialect="derby"
+        spark, url, DRIVER, schema="public"
     ) == ["PTAB"]
     # absent key (None) → historical no-filter behavior
     assert set(
-        discover_jdbc_tables(spark, url, DRIVER, dialect="derby")
+        discover_jdbc_tables(spark, url, DRIVER)
     ) == {"PTAB", "OTAB"}
     # empty path is a config error for derby too
     with pytest.raises(ValueError, match="schema_search_path"):
-        discover_jdbc_tables(spark, url, DRIVER, schema=" , ", dialect="derby")
+        discover_jdbc_tables(spark, url, DRIVER, schema=" , ")

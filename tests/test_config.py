@@ -68,7 +68,46 @@ def test_jdbc_url_adapter_aliases_and_socket_rejection():
         jdbc_url({"adapter": "mysql2", "host": "h", "database": "d"})
         == "jdbc:mysql://h:3306/d"
     )
+    # Rails' trilogy adapter speaks MySQL; MariaDB listens on 3306
+    assert (
+        jdbc_url({"adapter": "trilogy", "host": "h", "database": "d"})
+        == "jdbc:mysql://h:3306/d"
+    )
+    assert (
+        jdbc_url({"adapter": "mariadb", "host": "h", "database": "d"})
+        == "jdbc:mariadb://h:3306/d"
+    )
     assert jdbc_url({"url": "jdbc:derby:/tmp/x;create=true"}).startswith("jdbc:derby:")
     # reference `socket` param (in_sql.rb:41) has no JDBC equivalent
     with pytest.raises(ValueError, match="socket"):
         jdbc_url({"adapter": "mysql", "socket": "/var/run/mysqld.sock", "database": "d"})
+
+
+def test_config_md_key_tables_name_the_known_keys():
+    """CONFIG.md's key tables and the sets Pipeline checks keys against
+    name the same ``source.*`` / ``sink.*`` keys, so neither can drift:
+    a documented key the code does not read would draw an unknown-key
+    warning, an undocumented one would be a hidden option."""
+    from pathlib import Path
+
+    from fluent_plugin_sql_spark import pipeline
+
+    text = (Path(__file__).resolve().parents[1] / "CONFIG.md").read_text()
+    named: dict[str, set[str]] = {}
+    for line in text.splitlines():
+        cells = line.split("|")
+        if not line.startswith("|") or len(cells) < 4:
+            continue
+        # the Engine key column
+        for key in re.findall(r"`((?:source|sink)\.[^`]+)`", cells[2]):
+            block, _, name = key.rpartition(".")
+            named.setdefault(block, set()).add(name)
+            if block.endswith("[]"):  # source.tables[].x names source.tables too
+                parent, _, child = block[:-2].partition(".")
+                named.setdefault(parent, set()).add(child)
+    assert named == {
+        "source": set(pipeline.SOURCE_KEYS),
+        "source.tables[]": set(pipeline.SOURCE_TABLE_KEYS),
+        "sink": set(pipeline.SINK_KEYS),
+        "sink.tables[]": set(pipeline.SINK_TABLE_KEYS),
+    }

@@ -53,7 +53,7 @@ def test_postgres_poll_loop_covers_table_exactly_once(con):
 
     got, last = [], None
     for _ in range(100):
-        q = incremental_query("logs", "updated_at", last, 10, "postgres")
+        q = incremental_query("logs", "updated_at", last, 10, "postgresql")
         batch = run_poll(con, q)
         if not batch:
             break
@@ -91,7 +91,7 @@ def test_string_watermark_injection_safe_on_live_parser(con):
     last = None
     got = []
     for _ in range(10):
-        q = incremental_query("docs", "name", last, 2, "postgres")
+        q = incremental_query("docs", "name", last, 2, "postgresql")
         batch = run_poll(con, q)
         if not batch:
             break
@@ -117,9 +117,9 @@ def test_timestamptz_watermark_normalizes_to_utc_live(con):
     # watermark expressed in a non-UTC zone: +05:30 ahead of 12:00 UTC
     ist = dt.timezone(dt.timedelta(hours=5, minutes=30))
     wm = dt.datetime(2024, 1, 1, 17, 30, 0, tzinfo=ist)  # == 12:00 UTC
-    lit = sql_literal(wm, "postgres")
+    lit = sql_literal(wm, "postgresql")
     assert "+00:00" in lit
-    q = incremental_query("ev", "ts", wm, 10, "postgres")
+    q = incremental_query("ev", "ts", wm, 10, "postgresql")
     assert [r[1] for r in run_poll(con, q)] == [2]  # strictly greater
 
 
@@ -130,7 +130,7 @@ def test_decimal_watermark_unquoted_live(con):
         [(Decimal("1.5000"), 1), (Decimal("1.5001"), 2), (Decimal("2"), 3)],
     )
     assert sql_literal(Decimal("1.5000")) == "1.5000"
-    q = incremental_query("d", "amt", Decimal("1.5000"), 10, "postgres")
+    q = incremental_query("d", "amt", Decimal("1.5000"), 10, "postgresql")
     assert [r[1] for r in run_poll(con, q)] == [2, 3]
 
 
@@ -139,6 +139,6 @@ def test_quoted_identifiers_preserve_case_live(con):
     ANSI engine resolves (Spark's JDBC writer quotes lowercase names)."""
     con.execute('CREATE TABLE q ("Updated" BIGINT, v VARCHAR)')
     con.executemany("INSERT INTO q VALUES (?, ?)", [(1, "a"), (2, "b")])
-    q = incremental_query("q", "Updated", 1, 5, "postgres", quote_identifiers=True)
+    q = incremental_query("q", "Updated", 1, 5, "postgresql", quote_identifiers=True)
     assert '"Updated"' in q
     assert run_poll(con, q) == [(2, "b")]

@@ -50,7 +50,7 @@ def test_incremental_pushdown_executes_in_database(spark, derby_url):
     Spark receives exactly the batch."""
     fetch = incremental_jdbc_reader(
         spark, derby_url, "events", "event_id", limit=100, properties=DRIVER,
-        dialect="fetch", quote_identifiers=True,
+        dialect="derby", quote_identifiers=True,
     )
     batch = fetch(49).collect()
     ids = [r["event_id"] for r in batch]
@@ -63,7 +63,7 @@ def test_full_poll_loop_jdbc_to_jdbc(spark, derby_url, tmp_path):
     → route → bulk-append into another RDBMS table, with state resume."""
     fetch = incremental_jdbc_reader(
         spark, derby_url, "events", "event_id", limit=120, properties=DRIVER,
-        dialect="fetch", quote_identifiers=True,
+        dialect="derby", quote_identifiers=True,
     )
 
     class JdbcScan(IncrementalScan):
@@ -102,7 +102,7 @@ def test_full_poll_loop_jdbc_to_jdbc(spark, derby_url, tmp_path):
 
 
 def test_discover_tables_derby_catalog(spark, derby_url):
-    names = discover_jdbc_tables(spark, derby_url, DRIVER, dialect="derby")
+    names = discover_jdbc_tables(spark, derby_url, DRIVER)
     assert any(n.lower() == "events" for n in names)
 
 
@@ -115,9 +115,6 @@ def test_pipeline_jdbc_to_jdbc_config(spark, derby_url, tmp_path):
         "source": {
             "url": derby_url,
             "driver": "org.apache.derby.jdbc.EmbeddedDriver",
-            # named adapter dialect (resolves row-cap FETCH + ANSI quoting)
-            "dialect": "derby",
-            "quote_identifiers": True,
             "select_limit": 150,
             "state_file": str(tmp_path / "state.json"),
             "tables": [{"table": "events", "update_column": "event_id"}],
@@ -154,7 +151,7 @@ def test_idempotent_sink_effectively_once(spark, derby_url):
         "event_id", "event_type", "value"
     )
     handle = idempotent_jdbc_writer(
-        spark, derby_url, "eo_events", DRIVER, num_partitions=1, dialect="derby"
+        spark, derby_url, "eo_events", DRIVER, num_partitions=1
     )
     handle(events, 1)
     handle(events, 1)  # foreachBatch redelivery of a committed epoch
@@ -176,7 +173,7 @@ def test_idempotent_sink_effectively_once(spark, derby_url):
     assert per_epoch == {1: 100, 2: 100}
 
     # marker store state is what makes restarts idempotent
-    store = EpochMarkerStore(spark, derby_url, DRIVER, dialect="derby")
+    store = EpochMarkerStore(spark, derby_url, DRIVER)
     assert store.committed("eo_events", 1) and store.committed("eo_events", 2)
     assert not store.committed("eo_events", 3)
 
@@ -194,9 +191,6 @@ def test_pipeline_all_tables_jdbc_discovery(spark, derby_url, tmp_path):
         "source": {
             "url": derby_url,
             "driver": "org.apache.derby.jdbc.EmbeddedDriver",
-            "dialect": "derby",
-            "catalog_dialect": "derby",
-            "quote_identifiers": True,
             "all_tables": True,
             "update_column": "event_id",
             "select_limit": 200,
@@ -235,7 +229,7 @@ def test_partitioned_jdbc_read_range_slices(spark, derby_url):
 def test_epoch_marker_prune(spark, derby_url):
     from fluent_plugin_sql_spark.sinks.exactly_once import EpochMarkerStore
 
-    store = EpochMarkerStore(spark, derby_url, DRIVER, dialect="derby")
+    store = EpochMarkerStore(spark, derby_url, DRIVER)
     for e in range(10):
         store.mark("prune_t", e)
     store.prune("prune_t", keep_last=3)
@@ -283,7 +277,7 @@ def test_snapshot_bootstrap_live_source_no_gap(spark, derby_url, tmp_path):
     # the 10 concurrent rows flow through the incremental tail — no gap
     fetch = incremental_jdbc_reader(
         spark, derby_url, "boot_events", "event_id", limit=100,
-        properties=DRIVER, dialect="fetch", quote_identifiers=True,
+        properties=DRIVER, dialect="derby", quote_identifiers=True,
     )
     tail_ids = [r["event_id"] for r in fetch(rec["event_id"]).collect()]
     assert len(tail_ids) == 10 and min(tail_ids) > max_seed
@@ -301,7 +295,7 @@ def test_clear_epoch_swallows_only_missing_table(spark, derby_url):
         _sqlstates,
     )
 
-    store = EpochMarkerStore(spark, derby_url, DRIVER, dialect="derby")
+    store = EpochMarkerStore(spark, derby_url, DRIVER)
     # table-not-found (Derby 42X05) → swallowed: very first epoch has no
     # target table yet
     store.clear_epoch("no_such_table_xyz", 1)
@@ -352,7 +346,7 @@ def test_incremental_poll_decimal_and_timestamp_watermarks_live(spark, derby_url
     # DECIMAL watermark: unquoted fixed-point literal, strict >, exact resume
     scan = JdbcIncrementalScan(
         spark, derby_url, "wm_types", "amount", select_limit=15,
-        properties=DRIVER, dialect="derby",
+        properties=DRIVER,
     )
     b1 = scan.batch_plan(None).collect()
     assert [r["id"] for r in b1] == list(range(15))
@@ -364,7 +358,7 @@ def test_incremental_poll_decimal_and_timestamp_watermarks_live(spark, derby_url
     # TIMESTAMP watermark: microsecond literal executed in-database
     tscan = JdbcIncrementalScan(
         spark, derby_url, "wm_types", "updated", select_limit=100,
-        properties=DRIVER, dialect="derby",
+        properties=DRIVER,
     )
     twm = dtm.datetime(2024, 1, 1, 0, 29)  # row id=29's timestamp
     tb = tscan.batch_plan(twm).collect()
@@ -397,7 +391,7 @@ def test_poll_table_persists_typed_watermark_live(spark, derby_url, tmp_path, co
     )
     scan = JdbcIncrementalScan(
         spark, derby_url, "wm_poll", column, select_limit=15,
-        properties=DRIVER, dialect="derby",
+        properties=DRIVER,
     )
     seen: list[int] = []
 
@@ -457,7 +451,7 @@ def test_poll_routes_and_writes_in_three_spark_jobs(spark, derby_url):
         emit=lambda tag, df: out.write_batch(df),
         scans={"jobs_src": JdbcIncrementalScan(
             spark, derby_url, "jobs_src", "upd", select_limit=50,
-            properties=DRIVER, dialect="derby",
+            properties=DRIVER,
         )},
     )
     with spark_jobs(spark) as c:
@@ -499,19 +493,19 @@ def test_discover_search_path_order_derby(spark, tmp_path):
 
     # path hits both schemas: shared dedupes to one entry, S3 excluded
     names = discover_jdbc_tables(
-        spark, url, DRIVER, schema="s1,s2", dialect="derby"
+        spark, url, DRIVER, schema="s1,s2"
     )
     assert names == ["ONLY_B", "SHARED"]
     # single-schema path sees only its own tables
     assert discover_jdbc_tables(
-        spark, url, DRIVER, schema="s1", dialect="derby"
+        spark, url, DRIVER, schema="s1"
     ) == ["SHARED"]
     assert discover_jdbc_tables(
-        spark, url, DRIVER, schema="s3", dialect="derby"
+        spark, url, DRIVER, schema="s3"
     ) == ["HIDDEN"]
     # untouched default stays the historical no-filter behavior
     assert set(
-        discover_jdbc_tables(spark, url, DRIVER, dialect="derby")
+        discover_jdbc_tables(spark, url, DRIVER)
     ) == {"SHARED", "ONLY_B", "HIDDEN"}
 
 
@@ -543,6 +537,33 @@ def test_discover_search_path_info_schema_sql_and_order(spark, monkeypatch):
     )
     assert names == ["extra", "orders"]
     assert "IN ('app', 'legacy')" in captured["q"]
+
+
+def test_discover_mysql_defaults_to_current_database(spark, monkeypatch):
+    """On MySQL/MariaDB ``information_schema.tables.table_schema`` holds
+    database names, so with no schema_search_path discovery takes the
+    tables of the connection's database, not of a schema ``public``; an
+    explicit path still filters by name."""
+    import fluent_plugin_sql_spark.sources.jdbc as jdbc_mod
+
+    captured = []
+
+    class _Fake:
+        def collect(self):
+            return [("orders", "shop"), ("schema_migrations", "shop"), ("users", "shop")]
+
+    def fake_read(spark_, url, q, props):
+        captured.append(q)
+        return _Fake()
+
+    monkeypatch.setattr(jdbc_mod, "read_jdbc", fake_read)
+    for url in ("jdbc:mysql://h/shop", "jdbc:mariadb://h/shop"):
+        assert jdbc_mod.discover_jdbc_tables(spark, url, {}) == ["orders", "users"]
+        assert "WHERE table_schema = DATABASE()" in captured[-1]
+    assert jdbc_mod.discover_jdbc_tables(spark, "jdbc:mysql://h/x", {}, schema="shop") == [
+        "orders", "users"
+    ]
+    assert "WHERE table_schema IN ('shop')" in captured[-1]
 
 
 def test_discover_empty_search_path_clear_error(spark):
@@ -582,7 +603,6 @@ def test_pipeline_polls_writer_and_ddl_tables_without_quote_key(spark, derby_url
         "source": {
             "url": derby_url,
             "driver": DRIVER["driver"],
-            "dialect": "derby",
             "select_limit": 5,
             "state_file": str(state_file),
             "tables": [
@@ -605,7 +625,7 @@ def test_jdbc_scan_unknown_update_column_names_table(spark, derby_url):
     from fluent_plugin_sql_spark.sources.jdbc import JdbcIncrementalScan
 
     scan = JdbcIncrementalScan(
-        spark, derby_url, "events", "no_such_col", properties=DRIVER, dialect="derby"
+        spark, derby_url, "events", "no_such_col", properties=DRIVER
     )
     with pytest.raises(ValueError, match="'events'"):
         scan.batch_plan(None)
@@ -619,6 +639,6 @@ def test_epoch_marker_store_forwards_every_connection_property(spark, tmp_path):
     from fluent_plugin_sql_spark.sinks.exactly_once import EpochMarkerStore
 
     url = f"jdbc:derby:{tmp_path / 'fresh_db'}"
-    store = EpochMarkerStore(spark, url, {**DRIVER, "create": "true"}, dialect="derby")
+    store = EpochMarkerStore(spark, url, {**DRIVER, "create": "true"})
     store.mark("t", 7)
     assert store.committed("t", 7) and not store.committed("t", 8)

@@ -147,7 +147,6 @@ def test_jdbc_source_rejects_tiebreak_column(spark):
     cfg = {
         "source": {
             "url": url,
-            "dialect": "derby",
             "tables": [
                 {"table": "plain", "update_column": "id"},
                 {"table": "orders", "update_column": "upd", "tiebreak_column": "id"},
@@ -160,8 +159,9 @@ def test_jdbc_source_rejects_tiebreak_column(spark):
 
 
 class _FakeConnection:
-    """The slice of java.sql.Connection a JDBC scan's column lookup uses,
-    answering as MySQL Connector/J does: backtick identifier quotes."""
+    """The slice of java.sql.Connection that a JDBC scan's column lookup
+    and the epoch-marker store use, answering as MySQL Connector/J does:
+    backtick identifier quotes, empty result sets."""
 
     def __init__(self, columns, quote="`"):
         self.columns, self.quote, self.queries = columns, quote, []
@@ -184,6 +184,12 @@ class _FakeConnection:
 
     def getColumnLabel(self, i):
         return self.columns[i - 1]
+
+    def execute(self, q):
+        self.queries.append(q)
+
+    def next(self):
+        return False  # an empty result set
 
     def close(self):
         pass
@@ -219,6 +225,99 @@ def test_jdbc_scan_quotes_update_column_as_the_connection_does(monkeypatch):
         "(SELECT * FROM orders WHERE `UPD` > 5 ORDER BY `UPD` ASC LIMIT 10) AS fpss_src",
     ]
     assert scan.update_column == "upd"  # the state-file key stays as configured
+
+
+def test_jdbc_mysql_url_escapes_watermark_as_mysql(monkeypatch):
+    """A source set by a jdbc:mysql URL alone renders its watermark by
+    MySQL's rules: the backslash is doubled, so a watermark ending in
+    ``\\'`` stays one literal instead of closing it and running the
+    rest as SQL."""
+    from test_properties import _mysql_unquote
+
+    from fluent_plugin_sql_spark.pipeline import build_input_config, build_jdbc_scans
+    from fluent_plugin_sql_spark.sources import jdbc
+
+    conn = _FakeConnection(["id", "sku"])
+    pushed = []
+    monkeypatch.setattr(jdbc, "jdbc_connection", lambda spark, url, props: conn)
+    monkeypatch.setattr(
+        jdbc, "read_jdbc", lambda spark, url, dbtable, props=None: pushed.append(dbtable)
+    )
+    src = {
+        "url": "jdbc:mysql://localhost/shop",
+        "select_limit": 10,
+        "tables": [{"table": "orders", "update_column": "sku"}],
+    }
+    wm = "ab\\' OR 1=1 -- "
+    build_jdbc_scans(None, src, build_input_config(src))["orders"].batch_plan(wm)
+    head, lit = pushed[0].split("WHERE `sku` > ", 1)
+    lit, tail = lit.rsplit(" ORDER BY ", 1)
+    assert head == "(SELECT * FROM orders "
+    assert tail == "`sku` ASC LIMIT 10) AS fpss_src"
+    assert _mysql_unquote(lit) == wm  # one literal, the whole watermark
+
+
+def test_idempotent_writer_clears_epoch_with_url_quote(spark, monkeypatch):
+    """On a jdbc:mysql URL the retry cleanup names ``_epoch`` in
+    backticks: a double-quoted ``"_epoch"`` is a string literal there,
+    and the DELETE would leave a crashed attempt's rows in place."""
+    from fluent_plugin_sql_spark.sinks import exactly_once
+
+    conn = _FakeConnection([])
+    monkeypatch.setattr(exactly_once, "jdbc_connection", lambda spark, url, props: conn)
+    monkeypatch.setattr(exactly_once, "write_jdbc", lambda df, url, table, *a, **k: None)
+    handle = exactly_once.idempotent_jdbc_writer(spark, "jdbc:mysql://h/shop", "t")
+    handle(spark.range(1), 7)
+    assert "DELETE FROM t WHERE `_epoch` = 7" in conn.queries
+
+
+def test_jdbc_source_with_unknown_subprotocol_fails_before_connecting(spark, monkeypatch):
+    """The JDBC URL picks the SQL dialect; a subprotocol without one
+    fails at Pipeline construction, naming it, and opens no connection."""
+    from fluent_plugin_sql_spark.sources import jdbc
+
+    def no_connection(*a, **k):
+        raise AssertionError("a connection was opened")
+
+    monkeypatch.setattr(jdbc, "jdbc_connection", no_connection)
+    monkeypatch.setattr(jdbc, "read_jdbc", no_connection)
+    for all_tables in (False, True):
+        cfg = {
+            "source": {
+                "url": "jdbc:h2:mem:x",
+                "all_tables": all_tables,
+                "tables": [] if all_tables else [{"table": "t", "update_column": "id"}],
+            },
+            "sink": {"path": "/nonexistent", "tables": [{"table": "out"}]},
+        }
+        with pytest.raises(ValueError, match="'h2'.*supported: postgresql"):
+            Pipeline(spark, cfg)
+
+
+def test_unknown_config_keys_warn_with_nearest_key(spark, caplog, tmp_path):
+    """Every key no block reads draws one WARNING naming the nearest
+    known key; known keys and stage sub-blocks draw none."""
+    import logging
+
+    cfg = {
+        "source": {
+            "path": str(tmp_path / "src"),
+            "select_limt": 10,
+            "tables": [{"table": "a", "primary_key": "id", "update_colum": "id"}],
+            "exact_dedup": {"path": str(tmp_path / "x"), "anything": 1},
+        },
+        "sink": {"path": str(tmp_path / "out"), "tables": [{"table": "o", "patern": "x"}]},
+        "logical_nwo": "2024-06-01 00:00:00",
+    }
+    with caplog.at_level(logging.WARNING, logger="fluent_plugin_sql_spark.pipeline"):
+        Pipeline(spark, cfg)
+    assert sorted(r.getMessage() for r in caplog.records) == [
+        "unknown config key 'logical_nwo' is ignored; did you mean 'logical_now'?",
+        "unknown config key 'sink.tables[0].patern' is ignored; did you mean 'pattern'?",
+        "unknown config key 'source.select_limt' is ignored; did you mean 'select_limit'?",
+        "unknown config key 'source.tables[0].update_colum' is ignored; "
+        "did you mean 'update_column'?",
+    ]
 
 
 def test_upsert_lake_sink_mode(spark, tmp_path):

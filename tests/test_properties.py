@@ -127,12 +127,12 @@ def test_sql_literal_mysql_roundtrip_no_injection(s):
 def test_sql_literal_backslash_dialects():
     # MySQL: backslash doubled; standard dialects: left alone
     assert sql_literal("a\\'b", "mysql") == "'a\\\\''b'"
-    assert sql_literal("a\\'b", "postgres") == "'a\\''b'"
+    assert sql_literal("a\\'b", "postgresql") == "'a\\''b'"
     assert sql_literal("a\\'b") == "'a\\''b'"
 
 
 def test_incremental_query_dialects():
-    q_pg = incremental_query("logs", "id", 42, 500, "postgres", True)
+    q_pg = incremental_query("logs", "id", 42, 500, "postgresql", True)
     assert q_pg == '(SELECT * FROM logs WHERE "id" > 42 ORDER BY "id" ASC LIMIT 500) AS fpss_src'
     q_my = incremental_query("logs", "id", 42, 500, "mysql", True)
     assert q_my == "(SELECT * FROM logs WHERE `id` > 42 ORDER BY `id` ASC LIMIT 500) AS fpss_src"
@@ -191,13 +191,45 @@ def test_resolve_dialect_strict_and_aliases():
     # MySQL-family server would disable backslash escaping (injection)
     with pytest.raises(ValueError, match="unknown SQL dialect"):
         resolve_dialect("msyql")
-    # mariadb and trilogy are MySQL-family: backslash escapes + backticks
-    for name in ("mariadb", "trilogy", "mysql", "mysql2"):
+    # rows that name no JDBC subprotocol are gone (pipeline.jdbc_url maps
+    # the Rails adapter aliases to a subprotocol)
+    for name in ("mysql2", "trilogy", "postgres", "limit", "fetch", "mssql"):
+        with pytest.raises(ValueError, match="unknown SQL dialect"):
+            resolve_dialect(name)
+    # mariadb is MySQL-family: backslash escapes + backticks
+    for name in ("mariadb", "mysql"):
         d = resolve_dialect(name)
         assert d.backslash_escapes and d.quote_char == "`"
     assert resolve_dialect("PostgreSQL").quote_char == '"'  # case-folded
     custom = Dialect("custom", "fetch", True, '"')
     assert resolve_dialect(custom) is custom  # escape hatch for new adapters
+
+
+def test_dialect_for_url_takes_the_subprotocol():
+    """The JDBC URL's subprotocol is the one thing that picks the SQL
+    rules; an unknown one raises, naming it and the supported list."""
+    import pytest
+
+    from fluent_plugin_sql_spark.sources.jdbc import DIALECTS, dialect_for_url
+
+    assert list(DIALECTS) == [
+        "postgresql", "mysql", "mariadb", "sqlite", "derby", "oracle", "db2"
+    ]
+    for url, name in [
+        ("jdbc:postgresql://h:5432/d", "postgresql"),
+        ("jdbc:mysql://h/shop", "mysql"),
+        ("jdbc:MariaDB://h:3306/d", "mariadb"),
+        ("jdbc:sqlite:/var/db.sqlite", "sqlite"),
+        ("jdbc:derby:memory:x;create=true", "derby"),
+        ("jdbc:oracle:thin:@h:1521:orcl", "oracle"),
+        ("jdbc:db2://h:50000/d", "db2"),
+    ]:
+        assert dialect_for_url(url) is DIALECTS[name]
+    for url, named in [("jdbc:h2:mem:x", "'h2'"),
+                       ("jdbc:sqlserver://h;databaseName=d", "'sqlserver'"),
+                       ("postgresql://h/d", "''")]:
+        with pytest.raises(ValueError, match=f"{named}.*supported: postgresql, mysql"):
+            dialect_for_url(url)
 
 
 def test_sql_literal_decimal_watermark():
@@ -209,7 +241,7 @@ def test_sql_literal_decimal_watermark():
     assert sql_literal(Decimal("42.50")) == "42.50"
     assert sql_literal(Decimal("1E+2")) == "100"
     assert sql_literal(Decimal("-0.000001")) == "-0.000001"
-    q = incremental_query("t", "amount", Decimal("99.95"), 10, "postgres")
+    q = incremental_query("t", "amount", Decimal("99.95"), 10, "postgresql")
     assert "amount > 99.95" in q
 
 
@@ -219,7 +251,7 @@ def test_sql_literal_timestamptz_offsets():
     the poll window by the session zone."""
     aware = dt.datetime(2024, 3, 1, 10, 30, 0, 123456,
                         tzinfo=dt.timezone(dt.timedelta(hours=-5)))
-    lit = sql_literal(aware, "postgres")
+    lit = sql_literal(aware, "postgresql")
     assert lit == "TIMESTAMP '2024-03-01 15:30:00.123456+00:00'"
     utc = dt.datetime(2024, 3, 1, 10, 30, tzinfo=dt.timezone.utc)
     assert sql_literal(utc, "mysql") == "TIMESTAMP '2024-03-01 10:30:00.000000+00:00'"
@@ -240,7 +272,7 @@ def test_incremental_query_quoted_mixed_case_identifiers():
     """Mixed-case update columns (created by Spark's quoting JDBC writer)
     must keep their case inside dialect quotes in BOTH the WHERE and the
     ORDER BY."""
-    q_pg = incremental_query("t", "UpdatedAt", 5, 10, "postgres", True)
+    q_pg = incremental_query("t", "UpdatedAt", 5, 10, "postgresql", True)
     assert 'WHERE "UpdatedAt" > 5' in q_pg and 'ORDER BY "UpdatedAt" ASC' in q_pg
     q_my = incremental_query("t", "UpdatedAt", 5, 10, "mariadb", True)
     assert "WHERE `UpdatedAt` > 5" in q_my and "ORDER BY `UpdatedAt` ASC" in q_my
@@ -257,7 +289,7 @@ def test_incremental_query_awkward_types_parse_shape():
 
     aware = dt.datetime(2024, 6, 1, 0, 0, 0, 1, tzinfo=dt.timezone.utc)
     for dialect, wm in [
-        ("postgres", Decimal("1.5")), ("postgres", aware),
+        ("postgresql", Decimal("1.5")), ("postgresql", aware),
         ("mariadb", Decimal("1.5")), ("mariadb", aware),
         ("mysql", "O'Brien\\"), ("derby", dt.date(2024, 6, 1)),
     ]:
