@@ -91,6 +91,10 @@ class _StoreFS:
             return False
         return any(not name.startswith("_") for name in self.list(sub))
 
+    def size(self, sub: str) -> int:
+        """Total bytes of the files under ``sub``."""
+        return self._fs.getContentSummary(self._p(sub)).getLength()
+
     def rename(self, src: str, dst: str) -> None:
         """rename() with its boolean result CHECKED — Hadoop's rename
         reports failure (e.g. a pre-existing destination) by returning
@@ -210,18 +214,40 @@ class _StoreFS:
 
         self.write_text(self.META, json.dumps(meta))
 
-    def pin_layout(self, store, keys: tuple[str, ...]) -> dict | None:
+    def pin_layout(
+        self, store, keys: tuple[str, ...], tables: tuple[str, ...] = ()
+    ) -> dict | None:
         """Set ``store``'s layout constants ``keys`` to the values the
         store was CREATED with, warning when the caller asked for others.
-        Bucket ids live in directory names and the constants shape the
-        stored keys, so probing with any other value would push filters
-        that match no stored row and SILENTLY miss every duplicate.
-        Returns the metadata (None before the first absorb, or for a
-        store that predates metadata)."""
+        Stored rows carry bucket ids and the constants shape the stored
+        keys, so probing with any other value would push filters that
+        match no stored row and SILENTLY miss every duplicate.
+
+        ``layout``, when in ``keys``, is the on-disk format version and
+        is checked, not warned about: the metadata's value, or 1 when it
+        has no ``layout`` key or predates metadata while ``tables``
+        hold data; a fresh store keeps ``store.layout``, and a version
+        newer than it raises.  Returns the metadata (None before the
+        first absorb, or for a store that predates metadata)."""
         meta = self.read_meta()
+        if "layout" in keys:
+            if meta is not None:
+                version = int(meta.get("layout", 1))
+            elif any(self.has_data(t) for t in tables):
+                version = 1
+            else:
+                version = store.layout
+            if version > store.layout:
+                raise ValueError(
+                    f"store {self.path} has layout {version}; this engine "
+                    f"reads layouts up to {store.layout}"
+                )
+            store.layout = version
         if meta is None:
             return None
         for key in keys:
+            if key == "layout":
+                continue
             if meta[key] != getattr(store, key):
                 import logging
 

@@ -25,6 +25,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..fs import ConcurrentStoreWriterError, _StoreFS  # noqa: F401
 from ..functions.text import md5_long, simhash60_from_hashes, token_hashes, tokens
@@ -868,10 +869,20 @@ def remove_duplicate_spans(
 
 
 # Upper bound on driver-collected key lists pushed into store scans as
-# In(...) filters (second-level prune).  ~100k longs is <1 MB on the
-# driver and parses to a single InSet; beyond that the probe falls back
-# to bucket-level partition pruning alone.
+# In(...) filters (second-level prune).  ~100k longs is ~2.5 MB of
+# filter text on the driver; beyond that the probe falls back to the
+# bucket filter alone.
 _MAX_PUSHED_KEYS = 100_000
+
+# Target bytes per file of a compacted state table: Spark's default
+# spark.sql.files.maxPartitionBytes and parquet's default row-group
+# size, so a compacted file is one scan split.
+_COMPACT_FILE_BYTES = 128 << 20
+
+# Rows per parquet page of a compacted state table (parquet's default
+# is 20,000): a probe's bucket and key filters skip whole pages only, so
+# small pages let them skip most of a bucket of a few thousand rows.
+_COMPACT_PAGE_ROWS = 1_000
 
 
 def _band_key_rows(sig: DataFrame, num_hashes: int, bands: int) -> DataFrame:
@@ -890,50 +901,102 @@ def _band_key_rows(sig: DataFrame, num_hashes: int, bands: int) -> DataFrame:
     return sig.select("doc", *band_cols).selectExpr("doc", stack_expr)
 
 
+def _sql_lit(v) -> str:
+    """A probe key as a Spark SQL literal: a long, or a hex digest."""
+    if isinstance(v, str):
+        return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    return f"{v}L"
+
+
+def _in_runs(col: str, values: list[int]) -> str:
+    """SQL for ``col`` being one of the sorted ints ``values``, as an OR
+    of their contiguous runs.  Spark hands an ``isin`` of more than
+    ``spark.sql.parquet.pushdown.inFilterThreshold`` (10) values to
+    parquet as ONE min-max range, which on a probe touching buckets 3
+    and 250 keeps every page between them; each run here pushes as its
+    own page filter.  SQL text rather than Column calls: one JVM call,
+    where a Column tree costs one per node, and the parser balances the
+    OR chain."""
+    runs: list[list[int]] = []
+    for v in values:
+        if runs and v == runs[-1][1] + 1:
+            runs[-1][1] = v
+        else:
+            runs.append([v, v])
+    return " OR ".join(
+        f"`{col}` = {a}" if a == b else f"(`{col}` >= {a} AND `{col}` <= {b})"
+        for a, b in runs
+    ) or "false"
+
 
 class _KeyTable:
-    """One bucketed state table of the text dedup stores: the single
-    owner of their on-disk format.
+    """One state table of the text dedup stores: the single owner of
+    their on-disk format.
 
-    A table is an append-only parquet tree ``{path}/{sub}`` whose rows
-    are hash-bucketed into ``{part}=<id>`` directories by their probe
-    key.  ``n`` is the store's creation-time ``num_buckets``, pinned in
-    ``_meta.json`` (:meth:`_StoreFS.pin_layout`).
+    A table is a flat, append-only parquet directory ``{path}/{sub}``.
+    Every row carries its probe key and the key's bucket id in column
+    ``part`` (type ``int``).  ``n`` is the store's creation-time
+    ``num_buckets``, pinned in ``_meta.json``
+    (:meth:`_StoreFS.pin_layout`).
 
-    ==========  ====  ============  ===========================  ============
+    ==========  ====  ============  ===========================  =================
     table       part  key           bucket                       sort key
-    ==========  ====  ============  ===========================  ============
-    band_keys   bkt   bkh           pmod(bkh, n)                 bkh
-    signatures  sbkt  doc           pmod(hash(doc), n)           doc
-    hashes      bkt   content_hash  pmod(hash(content_hash), n)  content_hash
-    blocks      bkt   bvh           pmod(bvh, n)                 bvh
-    ==========  ====  ============  ===========================  ============
+    ==========  ====  ============  ===========================  =================
+    band_keys   bkt   bkh           pmod(bkh, n)                 bkt, bkh
+    signatures  sbkt  doc           pmod(hash(doc), n)           sbkt, doc
+    hashes      bkt   content_hash  pmod(hash(content_hash), n)  bkt, content_hash
+    blocks      bkt   bvh           pmod(bvh, n)                 bkt, bvh
+    ==========  ====  ============  ===========================  =================
 
     ``band_keys`` and ``signatures`` belong to :class:`MinHashDedupStore`,
     ``hashes`` to :class:`ExactDedupStore` and ``blocks`` to
     :class:`SimHashDedupStore`.  ``bkh`` and ``bvh`` are already 64-bit
     hashes, so they bucket without re-hashing.
 
+    Every file is sorted by (bucket, key): :meth:`append` writes ONE file
+    per absorb, and :meth:`compact` rewrites the table into files that
+    each cover a contiguous bucket range.  ``_meta.json`` records this
+    format as ``"layout": 2``.  A store whose metadata has no ``layout``
+    key is layout 1: its rows sit in ``{part}=<id>`` directories.
+    :meth:`scan` reads both layouts, and the store's first mutation
+    rewrites a layout-1 store once to layout 2
+    (:meth:`_KeyTableStore._compact_tables`).
+
     Scale contract of every probe (:meth:`scan`):
-    - store I/O is pruned at two levels: the probe keys' bucket ids push
-      as a partition filter (directory pruning), and the keys themselves
-      push as ``In(key, …)``, which parquet evaluates against page and
-      row-group min-max statistics.  :meth:`compact` sorts each bucket
-      by its key, so a small probe reads o(store) even when its keys
-      touch every bucket directory;
-    - both levels over-approximate: the caller's join on the key stays
-      the correctness gate;
+    - store I/O is pruned by parquet page statistics.  The probe keys'
+      bucket ids push as one filter per run of adjacent buckets
+      (:func:`_in_runs`), and each touched bucket with its own keys as
+      ``part = b AND key IN (…)``.  Files sorted by (bucket, key) in
+      pages of ``_COMPACT_PAGE_ROWS`` rows give each page a narrow
+      bucket range and, within a bucket, a narrow key range, so a probe
+      reads the pages that hold its keys; a bucket with more than
+      ``spark.sql.parquet.pushdown.inFilterThreshold`` (10) keys is read
+      over their min-max range.  Beyond those pages a read costs an
+      amount that grows with the store (parquet's per-page index data;
+      measured below).  On a layout-1 tree the bucket runs are a
+      partition filter (directory pruning);
+    - both predicates over-approximate: the caller's join on the key
+      stays the correctness gate;
     - callers broadcast the batch side, so the store is never shuffled:
       it streams through a BroadcastHashJoin.
 
-    ``num_buckets`` sizing: probes read ``touched_buckets / n`` of the
-    files, so buckets bound I/O for small probes and the pushed ``In``
-    bounds it for large ones.  256 (the default) suits up to ~10^8
-    accepted docs; use 1024–16384 at 10^9+ so bucket directories stay a
-    few GB.  Directory bucketing rather than ``bucketBy``/``saveAsTable``
-    keeps a store self-contained on disk: there is no metastore entry
-    to lose, and a fresh session re-opens the path with pruning intact.
+    ``num_buckets`` sizing: a probe's keys spread over the buckets (a
+    MinHash doc has 6 band keys), so keep ``n`` above a tenth of a
+    batch's keys for each bucket's list to push as equality filters;
+    the default 256 fits batches of a few hundred docs.  Measured at
+    10^6 accepted docs with the default (``tests/test_scale_r8.py``): a
+    one-doc probe read 4.7 MB and a 4-doc probe (17 buckets) 10.6 MB of
+    a 347 MB ``band_keys`` table.  An un-compacted table is read one file per absorb, which
+    compaction bounds.  A flat directory rather than
+    ``bucketBy``/``saveAsTable`` keeps a store self-contained on disk:
+    there is no metastore entry to lose, and a fresh session re-opens
+    the path with pruning intact.
+    Flat rather than directory-bucketed, because a read of more than 32
+    bucket directories lists them in a Spark job, and an absorb would
+    write a file per touched bucket.
     """
+
+    LAYOUT = 2
 
     def __init__(
         self, fs: _StoreFS, sub: str, part: str, key: str, num_buckets: int,
@@ -945,46 +1008,131 @@ class _KeyTable:
         self.key = key
         self.num_buckets = num_buckets
         self.hash_key = hash_key
+        # the table's schema, known after its first append or read: a
+        # read with it skips the one-task schema-inference job
+        self.schema = None
 
     def bucket(self, key):
         """The bucket id of a key column (see the class table)."""
-        return F.pmod(F.hash(key) if self.hash_key else key, F.lit(self.num_buckets))
+        return F.pmod(
+            F.hash(key) if self.hash_key else key, F.lit(self.num_buckets)
+        ).cast("int")
+
+    def _read(self) -> DataFrame:
+        reader = self.fs.spark.read
+        if self.schema is not None:
+            reader = reader.schema(self.schema)
+        store = reader.parquet(f"{self.fs.path}/{self.sub}")
+        self.schema = store.schema
+        return store
 
     def scan(self, keys: DataFrame) -> DataFrame:
-        """The two-level-pruned read of the table for the probe keys in
-        ``keys`` (one column, named like the key).  One driver collect
-        fetches the distinct (key, bucket) pairs; past
-        ``_MAX_PUSHED_KEYS`` of them the scan keeps the partition filter
-        only, from one collect of the distinct buckets."""
+        """The pruned read of the table for the probe keys in ``keys``
+        (one column, named like the key).  One driver collect fetches
+        the distinct (key, bucket) pairs; past ``_MAX_PUSHED_KEYS`` of
+        them the scan keeps the bucket filter only, from one collect of
+        the distinct buckets."""
         k = F.col(self.key)
         pairs = (
             keys.select(k, self.bucket(k)).distinct()
             .limit(_MAX_PUSHED_KEYS + 1).collect()
         )
-        store = self.fs.spark.read.parquet(f"{self.fs.path}/{self.sub}")
-        part = F.col(self.part)
+        store = self._read()
         if len(pairs) <= _MAX_PUSHED_KEYS:
-            buckets = sorted({b for _, b in pairs})
-            return store.where(part.isin(buckets) & k.isin([key for key, _ in pairs]))
-        # degenerate mega-batch: keep the partition filter only
+            by_bucket: dict[int, list] = {}
+            for key, b in pairs:
+                by_bucket.setdefault(b, []).append(key)
+            # each bucket with its own keys: a key's value range meets a
+            # page in EVERY bucket, so one key list for all buckets would
+            # keep each touched bucket whole.  The runs stay a conjunct of
+            # their own, the form a layout-1 tree prunes directories by.
+            per_bucket = " OR ".join(
+                f"(`{self.part}` = {b} AND `{self.key}` IN "
+                f"({', '.join(map(_sql_lit, ks))}))"
+                for b, ks in sorted(by_bucket.items())
+            ) or "false"
+            return store.where(
+                F.expr(f"({_in_runs(self.part, sorted(by_bucket))}) AND ({per_bucket})")
+            )
+        # degenerate mega-batch: keep the bucket filter only
         buckets = [r[0] for r in keys.select(self.bucket(k)).distinct().collect()]
-        return store.where(part.isin(buckets))
+        return store.where(F.expr(_in_runs(self.part, sorted(buckets))))
 
     def append(self, rows: DataFrame) -> None:
-        """Append ``rows`` (which carry the key column) with their bucket."""
-        self.fs.append(
-            self.sub, rows.withColumn(self.part, self.bucket(F.col(self.key))), self.part
+        """Append ``rows`` (which carry the key column) with their bucket,
+        as one file sorted by (bucket, key).  ``repartition(1)`` rather
+        than ``coalesce(1)``: the shuffle keeps the stage that computes
+        the rows (MinHash signing, the SimHash fold) parallel, and only
+        the sort and the write run in one task."""
+        rows = rows.withColumn(self.part, self.bucket(F.col(self.key)))
+        (
+            rows.repartition(1).sortWithinPartitions(self.part, self.key)
+            .write.mode("append").parquet(f"{self.fs.path}/{self.sub}")
         )
+        if self.schema is None:  # as a read reports it: all nullable
+            self.schema = T.StructType(
+                [T.StructField(f.name, f.dataType) for f in rows.schema]
+            )
 
-    def compact(self, files_per_bucket: int) -> None:
-        """Rewrite the table to ``files_per_bucket`` files per bucket,
-        each sorted by the key (see :meth:`_StoreFS.compact_table`)."""
-        self.fs.compact_table(
-            self.sub, self.part, self.num_buckets * files_per_bucket, sort_col=self.key
+    def compact(self) -> None:
+        """Rewrite the table flat, range-partitioned on the bucket into
+        one file per ``_COMPACT_FILE_BYTES`` of table data, each sorted
+        by (bucket, key) in pages of ``_COMPACT_PAGE_ROWS`` rows.  Reads
+        either layout, so it is also the layout-1 rewrite.  Crash safety:
+        the staged swap (:class:`_StoreFS`)."""
+        fs = self.fs
+        fs.recover(self.sub)
+        if not fs.has_data(self.sub):
+            return
+        num_files = max(1, -(-fs.size(self.sub) // _COMPACT_FILE_BYTES))
+        (
+            self._read()
+            .repartitionByRange(num_files, self.part)
+            .sortWithinPartitions(self.part, self.key)
+            .write.option("parquet.page.row.count.limit", _COMPACT_PAGE_ROWS)
+            .mode("overwrite").parquet(f"{fs.path}/_compact_{self.sub}")
         )
+        fs.swap(self.sub)
 
 
-class MinHashDedupStore:
+class _KeyTableStore:
+    """The layout version and compaction shared by the stores whose
+    state is :class:`_KeyTable` tables (exact, MinHash, SimHash).  A
+    subclass sets ``_store_fs``, ``_tables`` and ``_LAYOUT`` (which
+    names ``layout``) in ``__init__``."""
+
+    layout = _KeyTable.LAYOUT
+
+    def _begin_absorb(self) -> None:
+        """Under the writer lock, before an absorb appends: record a new
+        store's layout, or rewrite a layout-1 store once to layout 2."""
+        self._store_fs.write_meta_if_absent(self, self._LAYOUT)
+        if self.layout < _KeyTable.LAYOUT:
+            self._compact_tables()
+
+    def _compact_tables(self) -> None:
+        for table in self._tables:
+            table.compact()
+        if self.layout < _KeyTable.LAYOUT:
+            self.layout = _KeyTable.LAYOUT
+            meta = self._store_fs.read_meta() or {
+                key: getattr(self, key) for key in self._LAYOUT
+            }
+            self._store_fs.write_meta({**meta, "layout": self.layout})
+
+    def compact(self) -> None:
+        """Rewrite every state table (:meth:`_KeyTable.compact`).  Each
+        absorb appends one file per table, so a long-running ingest
+        gathers O(batches) files and probe latency decays into
+        file-open cost.  Run this periodically (e.g. every N batches,
+        or from a maintenance job): probes are identical before and
+        after.  The first compaction of a layout-1 store also records
+        layout 2; crash safety per :meth:`_StoreFS.recover`."""
+        with self._store_fs.lock("compact"):
+            self._compact_tables()
+
+
+class MinHashDedupStore(_KeyTableStore):
     """Incremental near-dedup for CONTINUOUS ingestion — the missing
     piece between batch ``minhash_lsh_dup_pairs`` (one corpus, one shot)
     and a poll-loop/streaming pipeline that must ask, per batch: "have we
@@ -1020,12 +1168,12 @@ class MinHashDedupStore:
     the gate queries) absorbs before the caller can sink; use the split
     form on any path where replay loss matters.
 
-    ``num_buckets`` sizes the directory-partition fan-out of the state
-    tables (sizing guidance: :class:`_KeyTable`).  Buckets are fixed at
-    store creation (bucket ids live in directory names).
+    ``num_buckets`` sets the bucket grain of the state tables (sizing
+    guidance: :class:`_KeyTable`).  Buckets are fixed at store creation
+    (stored rows carry their bucket ids).
     """
 
-    _LAYOUT = ("num_buckets",)
+    _LAYOUT = ("num_buckets", "layout")
 
     def __init__(
         self,
@@ -1046,11 +1194,12 @@ class MinHashDedupStore:
         self.num_buckets = num_buckets
         self._store_fs = _StoreFS(spark, self.path)
         self._store_fs.heal_on_open("band_keys", "signatures")
-        meta = self._store_fs.pin_layout(self, self._LAYOUT)
+        meta = self._store_fs.pin_layout(
+            self, self._LAYOUT, ("band_keys", "signatures")
+        )
         if meta is None and self._store_fs.has_data("band_keys"):
             # pre-metadata state: verify it carries the bkh probe column
-            # (the v2 layout) instead of failing later — or worse,
-            # probing wrongly
+            # instead of failing later — or worse, probing wrongly
             schema = spark.read.parquet(f"{self.path}/band_keys").schema
             if "bkh" not in schema.names:
                 raise ValueError(
@@ -1064,6 +1213,7 @@ class MinHashDedupStore:
         self._signatures = _KeyTable(
             self._store_fs, "signatures", "sbkt", "doc", self.num_buckets, hash_key=True
         )
+        self._tables = (self._band_keys, self._signatures)
 
     def _exists(self, sub: str) -> bool:
         return self._store_fs.has_data(sub)
@@ -1208,6 +1358,8 @@ class MinHashDedupStore:
         caller without the handoff just re-signs).  Without ``sig`` the
         rows are signed here — a pure map, callable on any
         replayed/pinned DataFrame."""
+        if survivors.isEmpty():  # an append of no rows still writes a file
+            return
         if sig is None:
             sig_keep = minhash_signatures(
                 survivors, text_col, id_col, self.num_hashes, self.k
@@ -1216,7 +1368,7 @@ class MinHashDedupStore:
             keep = survivors.select(F.col(id_col).alias("doc"))
             sig_keep = sig.join(keep, "doc", "left_semi")
         with self._store_fs.lock("absorb"):
-            self._store_fs.write_meta_if_absent(self, self._LAYOUT)
+            self._begin_absorb()
             self._band_keys.append(
                 _band_key_rows(sig_keep, self.num_hashes, self.bands)
                 .withColumn("bkh", self._bk_hash())
@@ -1238,25 +1390,8 @@ class MinHashDedupStore:
         self.absorb(survivors, text_col, id_col, sig=sig)
         return survivors
 
-    def compact(self, files_per_bucket: int = 1) -> None:
-        """Rewrite both state tables with ``files_per_bucket`` files per
-        bucket directory, each bucket SORTED by its probe key (``bkh`` /
-        ``doc``) so parquet page statistics make the probe's pushed
-        ``In`` filters skip non-matching pages.
 
-        Every absorb appends one file per touched bucket, so a
-        long-running ingest accumulates O(batches) files per bucket and
-        probe latency decays into file-open overhead.  Run this
-        periodically (e.g. every N batches, or from a maintenance job) —
-        bucket ids are preserved, so probes are identical before and
-        after; crash safety per :meth:`_StoreFS.recover`.
-        """
-        with self._store_fs.lock("compact"):
-            for table in (self._band_keys, self._signatures):
-                table.compact(files_per_bucket)
-
-
-class ExactDedupStore:
+class ExactDedupStore(_KeyTableStore):
     """Incremental EXACT dedup for continuous ingestion — the
     cross-restart complement of ``streaming.stream.dedup_stream``
     (``dropDuplicatesWithinWatermark`` only holds keys until the
@@ -1276,7 +1411,7 @@ class ExactDedupStore:
     store absorbs).
     """
 
-    _LAYOUT = ("num_buckets",)
+    _LAYOUT = ("num_buckets", "layout")
 
     def __init__(self, spark, path: str, num_buckets: int = 256):
         self.spark = spark
@@ -1284,11 +1419,12 @@ class ExactDedupStore:
         self.num_buckets = num_buckets
         self._store_fs = _StoreFS(spark, self.path)
         self._store_fs.heal_on_open("hashes")
-        self._store_fs.pin_layout(self, self._LAYOUT)
+        self._store_fs.pin_layout(self, self._LAYOUT, ("hashes",))
         self._hashes = _KeyTable(
             self._store_fs, "hashes", "bkt", "content_hash", self.num_buckets,
             hash_key=True,
         )
+        self._tables = (self._hashes,)
 
     def _exists(self) -> bool:
         return self._store_fs.has_data("hashes")
@@ -1327,8 +1463,10 @@ class ExactDedupStore:
         """Record ``survivors`` (already probed and sunk by the caller)
         as accepted — the mutating half of the at-least-once split (sink
         BEFORE absorb; see :class:`MinHashDedupStore` docstring)."""
+        if survivors.isEmpty():  # an append of no rows still writes a file
+            return
         with self._store_fs.lock("absorb"):
-            self._store_fs.write_meta_if_absent(self, self._LAYOUT)
+            self._begin_absorb()
             self._hashes.append(
                 survivors.select(F.md5(F.col(text_col)).alias("content_hash")).distinct()
             )
@@ -1346,14 +1484,6 @@ class ExactDedupStore:
         )
         self.absorb(survivors, text_col, id_col)
         return survivors
-
-    def compact(self, files_per_bucket: int = 1) -> None:
-        """Rewrite the hash table with ``files_per_bucket`` files per
-        bucket, sorted by content_hash within each bucket so the probe's
-        pushed ``In`` filter page-prunes (see
-        :meth:`MinHashDedupStore.compact` — same contract)."""
-        with self._store_fs.lock("compact"):
-            self._hashes.compact(files_per_bucket)
 
 
 class EmbeddingDedupStore:
@@ -1499,7 +1629,9 @@ class EmbeddingDedupStore:
 
     def compact(self, files_per_bucket: int = 1) -> None:
         """Rewrite the postings table with ``files_per_bucket`` files
-        per centroid bucket (see :meth:`MinHashDedupStore.compact`)."""
+        per centroid bucket directory (:meth:`_StoreFS.compact_table`):
+        each absorb appends one file per touched bucket, and this bounds
+        the files a probe opens."""
         with self._store_fs.lock("compact"):
             self._store_fs.compact_table(
                 "postings", "bucket", self.num_centroids * files_per_bucket
@@ -1979,7 +2111,7 @@ class EmbeddingDedupStore:
             self.num_centroids = n
 
 
-class SimHashDedupStore:
+class SimHashDedupStore(_KeyTableStore):
     """Incremental SimHash near-dedup for continuous ingestion — the
     durable store form of :func:`simhash_dup_pairs`, completing the
     store family (exact / MinHash / SimHash / embedding).
@@ -1989,7 +2121,7 @@ class SimHashDedupStore:
     on every row — (doc, sk, blk_idx, blk_val, bvh, bkt), ``max_hamming
     + 1`` rows ≈ 250 bytes per accepted doc, never the text.  Because
     the sketch rides along, candidate generation AND hamming
-    verification happen in the same bucket-pruned join; unlike the
+    verification happen in the same pruned join; unlike the
     MinHash store there is no second state table to read.
 
     Layout and probe scale contract: :class:`_KeyTable`.  Recall is
@@ -2022,7 +2154,7 @@ class SimHashDedupStore:
     in_sql.rb:136-161 like the other stores (SURVEY §2.9 T5).
     """
 
-    _LAYOUT = ("num_buckets", "max_hamming")
+    _LAYOUT = ("num_buckets", "max_hamming", "layout")
 
     def __init__(
         self,
@@ -2038,10 +2170,11 @@ class SimHashDedupStore:
         self._store_fs = _StoreFS(spark, self.path)
         self._store_fs.heal_on_open("blocks")
         # block boundaries define blk_val, so max_hamming is layout too
-        self._store_fs.pin_layout(self, self._LAYOUT)
+        self._store_fs.pin_layout(self, self._LAYOUT, ("blocks",))
         self._blocks = _KeyTable(
             self._store_fs, "blocks", "bkt", "bvh", self.num_buckets, hash_key=False
         )
+        self._tables = (self._blocks,)
 
     # block boundaries: max_hamming+1 contiguous slices of the 60 bits
     def _bounds(self) -> list[int]:
@@ -2137,9 +2270,11 @@ class SimHashDedupStore:
         """Record ``survivors`` (already probed and sunk) as accepted.
         Re-derives the sketches — a pure map, so the method stays
         callable on a replayed/pinned DataFrame with no handoff state."""
+        if survivors.isEmpty():  # an append of no rows still writes a file
+            return
         blocks = self._block_rows(self._sketch(survivors, text_col, id_col))
         with self._store_fs.lock("absorb"):
-            self._store_fs.write_meta_if_absent(self, self._LAYOUT)
+            self._begin_absorb()
             self._blocks.append(blocks.withColumn("bvh", self._bvh()))
 
     def process_batch(self, df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -2152,10 +2287,3 @@ class SimHashDedupStore:
         ).localCheckpoint(eager=True)  # pin BEFORE the store mutates
         self.absorb(survivors, text_col, id_col)
         return survivors
-
-    def compact(self, files_per_bucket: int = 1) -> None:
-        """Rewrite the blocks table to ``files_per_bucket`` files per
-        bucket, sorted by ``bvh`` so pushed ``In`` filters prune pages.
-        Bucket ids are preserved; crash safety per _StoreFS.recover."""
-        with self._store_fs.lock("compact"):
-            self._blocks.compact(files_per_bucket)

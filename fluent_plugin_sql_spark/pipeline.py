@@ -80,12 +80,26 @@ CONNECTION_KEYS = frozenset({
 })
 
 
+# JDBC subprotocol -> (URL form, default port); sqlite's URL is a file
+JDBC_URL_FORMS = {
+    "postgresql": ("jdbc:postgresql://{host}:{port}/{db}", 5432),
+    "mysql": ("jdbc:mysql://{host}:{port}/{db}", 3306),
+    "mariadb": ("jdbc:mariadb://{host}:{port}/{db}", 3306),
+    "oracle": ("jdbc:oracle:thin:@//{host}:{port}/{db}", 1521),
+    "db2": ("jdbc:db2://{host}:{port}/{db}", 50000),
+    "derby": ("jdbc:derby://{host}:{port}/{db}", 1527),
+    "sqlite": ("jdbc:sqlite:{db}", None),
+}
+
+
 def jdbc_url(src: dict[str, Any]) -> str:
     """Compose a JDBC URL from the reference's connection params
-    (adapter/host/port/database, in_sql.rb:28-43); an explicit ``url``
-    passes through untouched (embedded DBs like Derby).  The only place
-    that knows adapter aliases: the SQL rules follow the URL's
-    subprotocol (sources.jdbc.dialect_for_url)."""
+    (adapter/host/port/database, in_sql.rb:28-43) in the form each
+    driver expects (:data:`JDBC_URL_FORMS`); an explicit ``url`` passes
+    through untouched (embedded DBs like Derby).  The only place that
+    knows adapter aliases: the SQL rules follow the URL's subprotocol
+    (sources.jdbc.dialect_for_url), so an adapter with no
+    :data:`JDBC_URL_FORMS` row raises here."""
     if "url" in src:
         return src["url"]
     adapter = src.get("adapter", "postgresql")
@@ -102,9 +116,17 @@ def jdbc_url(src: dict[str, Any]) -> str:
     scheme = {"postgres": "postgresql", "mysql2": "mysql", "trilogy": "mysql"}.get(
         adapter, adapter
     )
-    host = src.get("host", "localhost")
-    port = src.get("port") or {"mysql": 3306, "mariadb": 3306}.get(scheme, 5432)
-    return f"jdbc:{scheme}://{host}:{port}/{src['database']}"
+    if scheme not in JDBC_URL_FORMS:
+        raise ValueError(
+            f"no SQL dialect for adapter {adapter!r} (JDBC subprotocol "
+            f"{scheme!r}); supported: {', '.join(JDBC_URL_FORMS)}, or give a full 'url'"
+        )
+    form, default_port = JDBC_URL_FORMS[scheme]
+    return form.format(
+        host=src.get("host", "localhost"),
+        port=src.get("port") or default_port,
+        db=src["database"],
+    )
 
 
 SOURCE_KEYS = CONNECTION_KEYS | {

@@ -226,8 +226,10 @@ def stage_handler(
 ) -> Callable[[DataFrame, int], None]:
     """``foreachBatch`` handler: :func:`run_stages` keyed by epoch id,
     then every stage's ``compact()`` after each ``compact_every``-th batch
-    (0/None disables).  Each absorb appends small files per touched
-    bucket; compaction keeps probes from decaying into file-open cost."""
+    (0/None disables).  Each absorb of survivors appends one small file
+    per state table (the IVF and embedding stores: one per touched
+    bucket);
+    compaction keeps probes from decaying into file-open cost."""
     batches = [0]
 
     def handle(batch_df: DataFrame, epoch_id: int) -> None:

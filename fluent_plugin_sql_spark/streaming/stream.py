@@ -169,10 +169,11 @@ def near_dedup_stream(
     (:func:`~.stages.run_stages` states the contract).
 
     ``compact_every``: every N batches the store's state tables are
-    rewritten to one file per bucket (``MinHashDedupStore.compact``) —
-    each batch appends one small file per touched bucket, so an
-    uncompacted long-running stream decays into file-open overhead.
-    None disables (run compaction from a separate maintenance job)."""
+    rewritten into sorted files of contiguous bucket ranges
+    (``MinHashDedupStore.compact``) — each batch appends one small file
+    per table, so an uncompacted long-running stream decays into
+    file-open overhead.  None disables (run compaction from a separate
+    maintenance job)."""
     from .stages import MinHashStage, stage_handler
 
     handle = stage_handler([MinHashStage(store, text_col, id_col)], [], sink, compact_every)

@@ -115,6 +115,35 @@ def spark_jobs(spark):
         count.jobs = int(dag.nextJobId()) - start
 
 
+def full_plan(df) -> str:
+    """``df``'s executed plan with each scan's metadata (``PushedFilters``
+    and the rest) printed whole rather than cut at
+    ``spark.sql.maxMetadataStringLength`` (100 characters)."""
+    conf = df.sparkSession.conf
+    key = "spark.sql.maxMetadataStringLength"
+    old = conf.get(key)
+    conf.set(key, "1000000")
+    try:
+        return df._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001
+    finally:
+        conf.set(key, old)
+
+
+def scan_rows(df) -> int:
+    """Run ``df`` and sum ``numOutputRows`` over its file scans: the rows
+    parquet returned after its row-group and page filters, before the
+    Filter above drops the rows that do not match."""
+    df.collect()
+    total = 0
+    nodes = [df._jdf.queryExecution().executedPlan()]  # noqa: SLF001
+    while nodes:
+        node = nodes.pop()
+        if "Scan" in node.nodeName():
+            total += int(node.metrics().apply("numOutputRows").value())
+        nodes.extend(node.children().apply(i) for i in range(node.children().size()))
+    return total
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark("fpss-tests")

@@ -58,7 +58,8 @@ def test_composite_pk_rejected():
 
 
 def test_jdbc_url_adapter_aliases_and_socket_rejection():
-    from fluent_plugin_sql_spark.pipeline import jdbc_url
+    from fluent_plugin_sql_spark.pipeline import JDBC_URL_FORMS, jdbc_url
+    from fluent_plugin_sql_spark.sources.jdbc import dialect_for_url
 
     assert (
         jdbc_url({"adapter": "postgres", "host": "h", "database": "d"})
@@ -81,6 +82,26 @@ def test_jdbc_url_adapter_aliases_and_socket_rejection():
     # reference `socket` param (in_sql.rb:41) has no JDBC equivalent
     with pytest.raises(ValueError, match="socket"):
         jdbc_url({"adapter": "mysql", "socket": "/var/run/mysqld.sock", "database": "d"})
+    # every other adapter gets its driver's own URL form and port
+    assert (
+        jdbc_url({"adapter": "oracle", "host": "h", "database": "d"})
+        == "jdbc:oracle:thin:@//h:1521/d"
+    )
+    assert jdbc_url({"adapter": "db2", "host": "h", "database": "d"}) == "jdbc:db2://h:50000/d"
+    assert jdbc_url({"adapter": "derby", "host": "h", "database": "d"}) == "jdbc:derby://h:1527/d"
+    assert jdbc_url({"adapter": "sqlite", "database": "/var/db/app.sqlite"}) == (
+        "jdbc:sqlite:/var/db/app.sqlite"
+    )
+    assert jdbc_url({"adapter": "db2", "host": "h", "port": 50001, "database": "d"}) == (
+        "jdbc:db2://h:50001/d"
+    )
+    # each composed URL picks its own dialect
+    for adapter in JDBC_URL_FORMS:
+        url = jdbc_url({"adapter": adapter, "host": "h", "database": "d"})
+        assert dialect_for_url(url).name == adapter, url
+    # an adapter with no dialect raises and names the supported ones
+    with pytest.raises(ValueError, match="sqlserver.*supported: .*oracle"):
+        jdbc_url({"adapter": "sqlserver", "host": "h", "database": "d"})
 
 
 def test_config_md_key_tables_name_the_known_keys():

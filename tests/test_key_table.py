@@ -1,13 +1,20 @@
-"""The dedup stores' shared bucketed-table probe (``_KeyTable.scan``):
-its partition-only fallback above ``_MAX_PUSHED_KEYS`` and its one
-driver collect per pruned scan, pinned for the Exact, MinHash and
-SimHash stores over the same store contents and probe batch."""
+"""The dedup stores' shared state-table format (``_KeyTable``): its
+bucket-only fallback above ``_MAX_PUSHED_KEYS``, its one driver collect
+per pruned scan, one appended file per table per absorb (none for no
+rows), the pages a probe of many buckets reads, and the layout-1
+(directory-bucketed) stores it still reads and rewrites once, pinned
+for the Exact, MinHash and SimHash stores over the same store contents
+and probe batch."""
 
 from __future__ import annotations
 
+import glob
+import json
+import os
 import re
 
 import pytest
+from conftest import full_plan, scan_rows
 
 from fluent_plugin_sql_spark.operators import dedup
 
@@ -23,6 +30,31 @@ THIRD = (
     "yet another unrelated document mentioning watermarks streaming "
     "state stores checkpoints and exactly once sinks for pipelines"
 )
+NOVEL = (
+    "an unrelated note on tide tables harbour cranes and container "
+    "ships unloading grain before the autumn storms reach the coast"
+)
+STORES = {
+    "exact": dedup.ExactDedupStore,
+    "minhash": dedup.MinHashDedupStore,
+    "simhash": dedup.SimHashDedupStore,
+}
+# a layout-1 table's bucket directory column, per table
+V1_PARTS = {"band_keys": "bkt", "signatures": "sbkt", "hashes": "bkt", "blocks": "bkt"}
+
+
+def write_v1_copy(spark, src: str, dst: str) -> None:
+    """A layout-1 copy of the store at ``src``: every state table
+    rewritten with ``partitionBy`` into ``{part}=<id>`` directories, and
+    ``_meta.json`` without a ``layout`` key."""
+    for sub, part in V1_PARTS.items():
+        if os.path.isdir(f"{src}/{sub}"):
+            spark.read.parquet(f"{src}/{sub}").write.partitionBy(part).parquet(f"{dst}/{sub}")
+    with open(f"{src}/_meta.json") as f:
+        meta = json.load(f)
+    del meta["layout"]
+    with open(f"{dst}/_meta.json", "w") as f:
+        json.dump(meta, f)
 
 
 @pytest.fixture(scope="module")
@@ -59,11 +91,13 @@ def _dup_ids(kind, store, batch):
     return {r["dup"] for r in got.collect()}
 
 
+def _data_files(path: str, sub: str) -> int:
+    return len(glob.glob(f"{path}/{sub}/**/*.parquet", recursive=True))
+
+
 def _scan_plans(kind, store, batch):
     """(executed plan, partition column, key column) per pruned scan."""
-    def plan(df):
-        return df._jdf.queryExecution().executedPlan().toString()
-
+    plan = full_plan
     if kind == "exact":
         return [(plan(store.probe_new(batch, "text", "doc_id")), "bkt", "content_hash")]
     if kind == "minhash":
@@ -83,8 +117,17 @@ def _pushes_key(plan, key):
 
 
 def _prunes_buckets(plan, part):
+    """Each run of touched buckets pushes as ``EqualTo`` or as an
+    ``And(GreaterThanOrEqual, LessThanOrEqual)`` range (``_in_runs``)."""
     return re.search(
-        rf"PartitionFilters: \[[^\]\n]*\b{part}#\d+ (IN \(|INSET |= )", plan
+        rf"PushedFilters: \[[^\n]*\b(EqualTo|GreaterThanOrEqual)\({part},", plan
+    )
+
+
+def _prunes_bucket_dirs(plan, part):
+    """The layout-1 form: the bucket is a directory partition filter."""
+    return re.search(
+        rf"PartitionFilters: \[[^\]\n]*\b{part}#\d+ (IN \(|INSET |= |>= )", plan
     )
 
 
@@ -120,3 +163,93 @@ def test_one_collect_per_pruned_scan(spark, stores, kind, collects, monkeypatch)
     monkeypatch.setattr(frame_cls, "collect", counting_collect)
     _probe(kind, store, batch, sig)
     assert len(calls) == collects
+
+
+@pytest.mark.parametrize("kind", ["exact", "minhash", "simhash"])
+def test_v1_store_probes_unchanged_and_first_absorb_rewrites_it(
+    spark, stores, kind, tmp_path
+):
+    built, batch = stores
+    expected = _dup_ids(kind, built[kind], batch)
+    path = str(tmp_path / kind)
+    write_v1_copy(spark, built[kind].path, path)
+
+    store = STORES[kind](spark, path)
+    assert store.layout == 1
+    assert _dup_ids(kind, store, batch) == expected
+    for plan, part, key in _scan_plans(kind, store, batch):
+        assert _prunes_bucket_dirs(plan, part) and _pushes_key(plan, key), plan
+
+    store.absorb(
+        spark.createDataFrame([(100, NOVEL)], "doc_id LONG, text STRING"), "text", "doc_id"
+    )
+    assert not [d for _, dirs, _ in os.walk(path) for d in dirs if "=" in d]
+    with open(f"{path}/_meta.json") as f:
+        assert json.load(f)["layout"] == 2
+    reopened = STORES[kind](spark, path)
+    assert reopened.layout == 2
+    assert _dup_ids(kind, reopened, batch) == expected
+    for plan, part, key in _scan_plans(kind, reopened, batch):
+        assert _prunes_buckets(plan, part) and _pushes_key(plan, key), plan
+
+
+@pytest.mark.parametrize("kind", ["exact", "minhash", "simhash"])
+def test_absorb_appends_one_file_per_table(spark, kind, tmp_path):
+    path = str(tmp_path / kind)
+    store = STORES[kind](spark, path)
+    store.process_batch(
+        spark.createDataFrame([(1, BASE), (2, OTHER)], "doc_id LONG, text STRING"),
+        "text", "doc_id",
+    )
+    subs = [t.sub for t in store._tables]
+    before = {sub: _data_files(path, sub) for sub in subs}
+    store.absorb(
+        spark.createDataFrame(
+            [(3, THIRD), (4, NOVEL), (5, BASE.replace("fox", "cat"))],
+            "doc_id LONG, text STRING",
+        ),
+        "text", "doc_id",
+    )
+    assert {sub: _data_files(path, sub) - before[sub] for sub in subs} == dict.fromkeys(subs, 1)
+
+
+@pytest.mark.parametrize("kind", ["exact", "minhash", "simhash"])
+def test_empty_absorb_adds_no_file(spark, kind, tmp_path):
+    path = str(tmp_path / kind)
+    store = STORES[kind](spark, path)
+    store.process_batch(
+        spark.createDataFrame([(1, BASE), (2, OTHER)], "doc_id LONG, text STRING"),
+        "text", "doc_id",
+    )
+    subs = [t.sub for t in store._tables]
+    before = {sub: _data_files(path, sub) for sub in subs}
+    store.absorb(spark.createDataFrame([], "doc_id LONG, text STRING"), "text", "doc_id")
+    # a batch of nothing but dups: process_batch absorbs no survivor
+    store.process_batch(
+        spark.createDataFrame([(3, BASE), (4, OTHER)], "doc_id LONG, text STRING"),
+        "text", "doc_id",
+    )
+    assert {sub: _data_files(path, sub) for sub in subs} == before
+
+
+def test_probe_of_many_buckets_reads_only_their_pages(spark, tmp_path):
+    """Past ``spark.sql.parquet.pushdown.inFilterThreshold`` (10 values)
+    Spark hands an ``isin`` to parquet as one min-max range, so an
+    ``isin`` of buckets 0 and 60 would keep every page between them.
+    A probe of 13 scattered buckets must still read only about their
+    share of a compacted table, at page granularity."""
+    n, rows, page = 64, 128_000, dedup._COMPACT_PAGE_ROWS
+    table = dedup._KeyTable(
+        dedup._StoreFS(spark, str(tmp_path)), "t", "bkt", "k", n, hash_key=False
+    )
+    table.append(spark.range(rows).withColumnRenamed("id", "k"))
+    table.compact()  # a bucket of 2,000 rows spans 2-3 pages
+    touched = list(range(0, n, 5))
+    # the first and last key of each bucket: one key list over all
+    # buckets would span the whole table as a min-max range
+    keys = [k for b in touched for k in (b, rows - n + b)]
+    scan = table.scan(spark.createDataFrame([(k,) for k in keys], "k LONG"))
+    assert sorted(r["k"] for r in scan.collect()) == sorted(keys)
+    read = scan_rows(scan)
+    # each touched bucket: its own rows plus at most a page on each side
+    assert read <= len(touched) * (rows // n + 2 * page), (read, rows)

@@ -5,6 +5,7 @@ text functions — including the properties the oracle can't check
 from __future__ import annotations
 
 import pytest
+from conftest import full_plan, scan_rows
 from pyspark.sql import functions as F
 
 from fluent_plugin_sql_spark.io import load_table
@@ -263,23 +264,21 @@ def test_dedup_store_probe_never_shuffles_store_side(spark, tmp_path):
 
     # stage 1: band-key collision lookup (the O(store)-risk join)
     cand_plan = (
-        store._candidate_pairs(bk)._jdf.queryExecution().executedPlan().toString()
+        full_plan(store._candidate_pairs(bk))
     )
     assert "SortMergeJoin" not in cand_plan
     assert "ShuffledHashJoin" not in cand_plan
     assert "BroadcastHashJoin" in cand_plan
-    cand_pfs = re.findall(r"PartitionFilters: \[([^\]]*)\]", cand_plan)
-    assert any("bkt" in p for p in cand_pfs), cand_plan
+    assert re.search(r"PushedFilters: \[[^\n]*\b(EqualTo|GreaterThanOrEqual)\(bkt,", cand_plan), cand_plan
 
     # stage 2: signature verification against the store
     probe = store._cross_batch_dups(bk, sig)
     assert probe is not None
-    plan = probe._jdf.queryExecution().executedPlan().toString()
+    plan = full_plan(probe)
     assert "SortMergeJoin" not in plan
     assert "ShuffledHashJoin" not in plan
     assert "BroadcastHashJoin" in plan
-    pfs = re.findall(r"PartitionFilters: \[([^\]]*)\]", plan)
-    assert any("sbkt" in p for p in pfs), plan
+    assert re.search(r"PushedFilters: \[[^\n]*\b(EqualTo|GreaterThanOrEqual)\(sbkt,", plan), plan
 
     # and the probe still finds the cross-batch dup
     assert {r["dup"] for r in probe.collect()} == {3}
@@ -327,9 +326,9 @@ def test_dedup_store_compact_preserves_probes(spark, tmp_path):
             "text",
             "doc_id",
         )
-    before = len(glob.glob(f"{path}/band_keys/*/*.parquet"))
+    before = len(glob.glob(f"{path}/band_keys/**/*.parquet", recursive=True))
     store.compact()
-    after = len(glob.glob(f"{path}/band_keys/*/*.parquet"))
+    after = len(glob.glob(f"{path}/band_keys/**/*.parquet", recursive=True))
     assert after < before
 
     # probe decisions identical post-compact: near-copy of doc 0 dropped,
@@ -386,7 +385,7 @@ def test_exact_dedup_store_incremental_and_replay(spark, tmp_path):
 def test_exact_dedup_store_probe_never_shuffles_store_side(spark, tmp_path):
     """Same scale contract as the MinHash store: the content-hash probe
     broadcasts the batch side (store streams through a BroadcastHashJoin)
-    and pushes bucket ids as a partition filter on the store scan."""
+    and pushes bucket ids as an In filter into the store scan."""
     import re
 
     from fluent_plugin_sql_spark.operators.dedup import ExactDedupStore
@@ -403,12 +402,11 @@ def test_exact_dedup_store_probe_never_shuffles_store_side(spark, tmp_path):
         "text",
         "doc_id",
     )
-    plan = probe._jdf.queryExecution().executedPlan().toString()
+    plan = full_plan(probe)
     assert "SortMergeJoin" not in plan
     assert "ShuffledHashJoin" not in plan
     assert "BroadcastHashJoin" in plan
-    pfs = re.findall(r"PartitionFilters: \[([^\]]*)\]", plan)
-    assert any("bkt" in p for p in pfs), plan
+    assert re.search(r"PushedFilters: \[[^\n]*\b(EqualTo|GreaterThanOrEqual)\(bkt,", plan), plan
     assert {r["doc_id"] for r in probe.collect()} == {4}
 
 
@@ -584,10 +582,16 @@ def _scan_num_files(df) -> int:
 
 def test_dedup_store_probe_io_bounded_as_store_grows(spark, tmp_path):
     """The probe's store read must be o(store): growing the store by
-    more batches must NOT grow the files a (compacted) probe reads —
-    partition pruning bounds it by the probe's touched buckets, and the
-    pushed In(bkh) filter bounds rows within them."""
+    more batches must NOT grow the files a (compacted) probe reads, and
+    a probe of more than 10 buckets (past Spark's parquet In threshold,
+    where an isin pushes as one min-max range) reads only about its
+    touched buckets' share of the rows — each run of buckets pushes as
+    its own page filter, and each bucket's pushed bkh keys bound the
+    rows within it."""
+    import re
+
     from fluent_plugin_sql_spark.operators.dedup import (
+        _COMPACT_PAGE_ROWS,
         MinHashDedupStore,
         _band_key_rows,
         minhash_signatures,
@@ -596,50 +600,66 @@ def test_dedup_store_probe_io_bounded_as_store_grows(spark, tmp_path):
     path = str(tmp_path / "store_growth")
     store = MinHashDedupStore(spark, path, sig_match_frac=0.5)
 
-    def grow(ids):
+    def grow(start, n):
         # every doc's token set is disjoint from every other's, so each
         # batch genuinely grows the store (no cross-doc near-dups)
-        b = spark.createDataFrame(
-            [(i, " ".join(f"w{i}x{j}" for j in range(12))) for i in ids],
-            "doc_id LONG, text STRING",
+        b = spark.range(start, start + n).selectExpr(
+            "id AS doc_id",
+            "concat_ws(' ', transform(sequence(0, 11), "
+            "j -> concat('w', id, 'x', j))) AS text",
         )
         store.process_batch(b, "text", "doc_id")
 
-    probe_batch = spark.createDataFrame(
-        [(999, "totally novel probe words qq ww ee rr tt yy uu ii oo pp")],
-        "doc_id LONG, text STRING",
-    )
-    sig = minhash_signatures(probe_batch, "text", "doc_id", store.num_hashes, store.k)
-    bk = _band_key_rows(sig, store.num_hashes, store.bands)
+    def band_keys(texts):
+        batch = spark.createDataFrame(
+            [(10**9 + i, t) for i, t in enumerate(texts)], "doc_id LONG, text STRING"
+        )
+        sig = minhash_signatures(batch, "text", "doc_id", store.num_hashes, store.k)
+        return _band_key_rows(sig, store.num_hashes, store.bands).localCheckpoint()
 
-    grow(range(0, 40))
-    store.compact()
-    files_small = _scan_num_files(store._pruned_band_key_scan(bk))
-    total_small = len(
-        list((tmp_path / "store_growth" / "band_keys").rglob("*.parquet"))
+    bk = band_keys(["totally novel probe words qq ww ee rr tt yy uu ii oo pp"])
+    bk_multi = band_keys(
+        [f"novel probe number {i} words qq ww ee rr tt yy uu ii" for i in range(4)]
     )
-
-    for start in (40, 80, 120):
-        grow(range(start, start + 40))
-    store.compact()
-    files_large = _scan_num_files(store._pruned_band_key_scan(bk))
-    total_large = len(
-        list((tmp_path / "store_growth" / "band_keys").rglob("*.parquet"))
+    touched = (
+        bk_multi.select(store._band_keys.bucket(store._bk_hash())).distinct().count()
     )
+    assert touched > 10
 
-    # the store grew (more buckets now populated) but the probe's file
-    # count did not grow beyond its own touched-bucket bound
+    def measure():
+        store.compact()
+        files = _scan_num_files(store._pruned_band_key_scan(bk))
+        total = spark.read.parquet(f"{path}/band_keys").count()
+        read = scan_rows(store._pruned_band_key_scan(bk_multi))
+        # each touched bucket: its own rows plus at most a page each side
+        page = _COMPACT_PAGE_ROWS
+        assert read <= touched * (total // store.num_buckets + 2 * page), (
+            read, touched, total,
+        )
+        return files, total, read
+
+    grow(0, 2_000)
+    files_small, total_small, read_small = measure()
+    grow(2_000, 8_000)
+    files_large, total_large, read_large = measure()
+
+    # the store grew (more band-key rows) but the probe's file count did
+    # not grow beyond its own touched-bucket bound
     assert total_large > total_small
     assert files_large <= max(files_small, 6)  # ≤ bands buckets for 1 doc
+    # the many-bucket probe read a touched-bucket share, not the store
+    assert read_large < total_large / 2, (read_large, total_large)
     # and both pruning levels are visible in the plan
-    plan = store._pruned_band_key_scan(bk)._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "bkt" in plan
-    assert "PushedFilters" in plan and "In(bkh" in plan, plan
+    plan = full_plan(store._pruned_band_key_scan(bk))
+    assert re.search(r"PushedFilters: \[[^\n]*\b(EqualTo|GreaterThanOrEqual)\(bkt,", plan), plan
+    assert re.search(r"PushedFilters: \[[^\n]*\b(In|EqualTo)\(bkh,", plan), plan
 
 
 def test_exact_store_probe_pushes_hash_filter(spark, tmp_path):
-    """ExactDedupStore's probe must push both the bucket partition
-    filter and the In(content_hash) data filter into the store scan."""
+    """ExactDedupStore's probe must push both the bkt bucket filter and
+    the content_hash data filter into the store scan."""
+    import re
+
     from fluent_plugin_sql_spark.operators.dedup import ExactDedupStore
 
     path = str(tmp_path / "xstore_push")
@@ -649,14 +669,9 @@ def test_exact_store_probe_pushes_hash_filter(spark, tmp_path):
     )
     store.process_batch(b1, "text", "doc_id")
     b2 = spark.createDataFrame([(4, "aaa"), (5, "new")], "doc_id LONG, text STRING")
-    plan = (
-        store.probe_new(b2, "text", "doc_id")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "PartitionFilters" in plan and "bkt" in plan
-    assert "In(content_hash" in plan, plan
+    plan = full_plan(store.probe_new(b2, "text", "doc_id"))
+    assert re.search(r"PushedFilters: \[[^\n]*\b(EqualTo|GreaterThanOrEqual)\(bkt,", plan), plan
+    assert re.search(r"PushedFilters: \[[^\n]*\b(In|EqualTo)\(content_hash,", plan), plan
     surv = store.probe_new(b2, "text", "doc_id")
     assert {r["doc_id"] for r in surv.collect()} == {5}
 
@@ -1113,7 +1128,7 @@ class TestSimHashDedupStore:
 
     def test_probe_never_shuffles_store_side(self, spark, tmp_path):
         """Same scale contract as the sibling stores: store side streams
-        through a BroadcastHashJoin, bucket ids push as partition
+        through a BroadcastHashJoin, bucket ids push as In
         filters, block-key hashes push as an In data filter."""
         import re
 
@@ -1133,18 +1148,16 @@ class TestSimHashDedupStore:
         blocks = store._block_rows(sk)
 
         scan = store._pruned_block_scan(blocks)
-        scan_plan = scan._jdf.queryExecution().executedPlan().toString()
-        pfs = re.findall(r"PartitionFilters: \[([^\]]*)\]", scan_plan)
-        assert any("bkt" in p for p in pfs), scan_plan
+        scan_plan = full_plan(scan)
+        assert re.search(r"PushedFilters: \[[^\n]*\b(EqualTo|GreaterThanOrEqual)\(bkt,", scan_plan), scan_plan
         assert "bvh" in scan_plan  # pushed In filter reaches the scan
 
         probe = store._dup_ids(blocks)
-        plan = probe._jdf.queryExecution().executedPlan().toString()
+        plan = full_plan(probe)
         # the store-side join must be broadcast (batch side broadcast);
         # the batch-internal self-join is tiny either way
         assert "BroadcastHashJoin" in plan
-        pfs = re.findall(r"PartitionFilters: \[([^\]]*)\]", plan)
-        assert any("bkt" in p for p in pfs), plan
+        assert re.search(r"PushedFilters: \[[^\n]*\b(EqualTo|GreaterThanOrEqual)\(bkt,", plan), plan
         assert {r["dup"] for r in probe.collect()} == {3}
 
     def test_replay_converges(self, spark, tmp_path):

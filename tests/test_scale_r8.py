@@ -90,12 +90,16 @@ def test_dedup_store_probe_io_flat_at_1m_docs(spark, tmp_path):
     compacted probe's files-read stays at its touched-bucket bound and
     its actual bytes-read stays o(store) — the store grew 5x between the
     two measure points, so linear-in-store I/O would show a ~5x byte
-    blowup and fail the bound below."""
+    blowup and fail the bound below.  A probe of 4 docs touches more
+    than 10 buckets (past Spark's parquet In threshold, where an isin
+    pushes as one min-max range): its rows and bytes read must stay a
+    touched-bucket share of the store's."""
     from fluent_plugin_sql_spark.operators.dedup import (
         MinHashDedupStore,
         _band_key_rows,
         minhash_signatures,
     )
+    from conftest import scan_rows
     from test_llm_ops import _scan_num_files
 
     path = str(tmp_path / "store_1m")
@@ -119,38 +123,70 @@ def test_dedup_store_probe_io_flat_at_1m_docs(spark, tmp_path):
         probe_batch, "text", "doc_id", store.num_hashes, store.k
     )
     bk = _band_key_rows(sig, store.num_hashes, store.bands).localCheckpoint()
+    multi_batch = spark.createDataFrame(
+        [(10**9 + i, f"novel probe number {i} words qq ww ee rr tt yy uu ii")
+         for i in range(1, 5)],
+        "doc_id LONG, text STRING",
+    )
+    sig_multi = minhash_signatures(
+        multi_batch, "text", "doc_id", store.num_hashes, store.k
+    )
+    bk_multi = _band_key_rows(
+        sig_multi, store.num_hashes, store.bands
+    ).localCheckpoint()
+    touched = (
+        bk_multi.select(store._band_keys.bucket(store._bk_hash())).distinct().count()
+    )
+    assert touched > 10
 
     def measure():
         store.compact()
-        scan = store._pruned_band_key_scan(bk)
-        files = _scan_num_files(scan)
-        b0 = _fs_bytes_read(spark)
-        scan.collect()
-        scan_bytes = _fs_bytes_read(spark) - b0
-        t0 = time.monotonic()
-        b1 = _fs_bytes_read(spark)
-        n_dups = store.probe_dups(probe_batch, "text", "doc_id").count()
-        probe_bytes = _fs_bytes_read(spark) - b1
-        wall = time.monotonic() - t0
-        assert n_dups == 0
-        return files, scan_bytes, probe_bytes, wall
+        # parquet's vectored reads bypass the Hadoop FileSystem
+        # statistics, which would then count the footers alone
+        spark.conf.set("parquet.hadoop.vectored.io.enabled", "false")
+        try:
+            scan = store._pruned_band_key_scan(bk)
+            files = _scan_num_files(scan)
+            b0 = _fs_bytes_read(spark)
+            scan.collect()
+            scan_bytes = _fs_bytes_read(spark) - b0
+            t0 = time.monotonic()
+            b1 = _fs_bytes_read(spark)
+            n_dups = store.probe_dups(probe_batch, "text", "doc_id").count()
+            probe_bytes = _fs_bytes_read(spark) - b1
+            wall = time.monotonic() - t0
+            assert n_dups == 0
+            b2 = _fs_bytes_read(spark)
+            multi_rows = scan_rows(store._pruned_band_key_scan(bk_multi))
+            multi_bytes = _fs_bytes_read(spark) - b2
+        finally:
+            spark.conf.unset("parquet.hadoop.vectored.io.enabled")
+        store_rows = spark.read.parquet(f"{path}/band_keys").count()
+        store_bytes = sum(
+            os.path.getsize(os.path.join(d, f))
+            for d, _, fs in os.walk(f"{path}/band_keys")
+            for f in fs if f.endswith(".parquet")
+        )
+        return (files, scan_bytes, probe_bytes, wall,
+                (multi_rows, store_rows, multi_bytes, store_bytes))
 
     t_build0 = time.monotonic()
     for i in range(4):
         store.process_batch(batch_df(i * batch_n), "text", "doc_id")
-    files_s, scan_b_s, probe_b_s, wall_s = measure()
+    files_s, scan_b_s, probe_b_s, wall_s, multi_s = measure()
 
     for i in range(4, n_batches):
         store.process_batch(batch_df(i * batch_n), "text", "doc_id")
     build_wall = time.monotonic() - t_build0
-    files_l, scan_b_l, probe_b_l, wall_l = measure()
+    files_l, scan_b_l, probe_b_l, wall_l, multi_l = measure()
 
     print(
         f"\n1M-doc store proof: store=200k docs -> files={files_s} "
         f"scan_bytes={scan_b_s} probe_bytes={probe_b_s} wall={wall_s:.2f}s; "
         f"store=1M docs -> files={files_l} scan_bytes={scan_b_l} "
         f"probe_bytes={probe_b_l} wall={wall_l:.2f}s; "
-        f"build_wall={build_wall:.1f}s"
+        f"build_wall={build_wall:.1f}s; {touched}-bucket probe "
+        f"(rows, of store rows, bytes, of store bytes) {multi_s} -> {multi_l}"
     )
     # files-read: bounded by the probe's touched buckets, NOT store size
     assert files_l <= max(files_s, 6)
@@ -158,6 +194,12 @@ def test_dedup_store_probe_io_flat_at_1m_docs(spark, tmp_path):
     # under proportional growth (footers + matched pages only)
     assert scan_b_l <= max(2 * scan_b_s, 4 << 20), (scan_b_s, scan_b_l)
     assert probe_b_l <= max(2 * probe_b_s, 8 << 20), (probe_b_s, probe_b_l)
+    # many buckets: a touched-bucket share of the store (x3 slack for the
+    # page on each side of a bucket), not the whole compacted table
+    share = touched / store.num_buckets
+    rows_l, store_rows_l, bytes_l, store_bytes_l = multi_l
+    assert rows_l <= 3 * share * store_rows_l, (multi_l, share)
+    assert bytes_l <= 3 * share * store_bytes_l, (multi_l, share)
 
 
 def test_embedding_dup_pairs_expected_dim_skips_scan(spark):

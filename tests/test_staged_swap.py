@@ -121,6 +121,38 @@ def _lake_merge(spark, tmp):
                     lambda: merge_into_parquet(spark, path, updates, ["k"]))
 
 
+def _v1_migration(spark, tmp):
+    """A layout-1 exact store rewritten once to layout 2 by its first
+    mutation.  The heal re-runs that migration as after a crash before
+    the version was recorded: the metadata loses ``layout`` again, the
+    store re-opens and compacts."""
+    from test_key_table import write_v1_copy
+
+    from fluent_plugin_sql_spark.fs import _StoreFS
+    from fluent_plugin_sql_spark.operators.dedup import ExactDedupStore
+
+    v2, path = str(tmp / "v2"), str(tmp / "xstore")
+    docs = spark.createDataFrame(
+        [(i, f"text {i}") for i in range(12)], "doc_id LONG, text STRING"
+    )
+    ExactDedupStore(spark, v2).process_batch(docs, "text", "doc_id")
+    write_v1_copy(spark, v2, path)
+
+    def migrate():
+        meta_fs = _StoreFS(spark, path)  # keeps the meta file's checksum
+        meta = meta_fs.read_meta()
+        meta.pop("layout", None)
+        meta_fs.write_meta(meta)
+        store = ExactDedupStore(spark, path)
+        assert store.layout == 1
+        store.compact()
+        assert meta_fs.read_meta()["layout"] == 2
+        assert not [d for d in os.listdir(f"{path}/hashes") if d.startswith("bkt=")]
+
+    migrate()
+    return SwapUser(path, "hashes", "_compact_hashes", "_old_hashes", migrate)
+
+
 USERS = {
     "dedup_compact": _dedup_compact,
     "ivf_compact": _ivf_compact,
@@ -128,6 +160,7 @@ USERS = {
     "drift_write": _drift_write,
     "lake_compact": _lake_compact,
     "lake_merge": _lake_merge,
+    "v1_migration": _v1_migration,
 }
 
 
