@@ -84,7 +84,7 @@ def _sq_l2_sql(vec_expr: str, literal: list[float]) -> str:
     """The same fold against a DRIVER-SIDE literal vector, generated as
     one SQL string: building it from ``F.lit`` Columns costs one py4j
     round-trip per component (the measured driver stall documented in
-    similarity._hyperplane_bucket_sql); as a string it crosses py4j
+    similarity._hyperplane_buckets_sql); as a string it crosses py4j
     once and codegens flat."""
     arr = "array(" + ",".join(_sql_double(x) for x in literal) + ")"
     return (

@@ -23,7 +23,9 @@ across runs and partitionings, which is all they need.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+import itertools
+
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -109,6 +111,24 @@ def jaccard_dup_pairs(
     )
 
 
+def _q(name: str) -> str:
+    """A column name as a quoted Spark SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _token_hashes_sql(text_col: str) -> str:
+    return f"transform(split({_q(text_col)}, ' '), x -> xxhash64(x)) AS _th"
+
+
+def _shingle_hashes_sql(k: int) -> str:
+    parts = ", ".join(f"element_at(_th, i + {j + 1})" for j in range(k))
+    return (
+        f"CASE WHEN size(_th) >= {k} "
+        f"THEN transform(sequence(0, size(_th) - {k}), i -> xxhash64({parts})) "
+        "ELSE CAST(array() AS ARRAY<BIGINT>) END AS shs"
+    )
+
+
 def shingle_hash_arrays(
     df: DataFrame, text_col: str, id_col: str, k: int = 3
 ) -> DataFrame:
@@ -127,21 +147,11 @@ def shingle_hash_arrays(
 
     No shingle dedup — downstream MIN-aggregation is insensitive to
     duplicate shingles, and skipping array_distinct is measurably faster.
+    SQL text, as in :func:`minhash_signatures`.
     """
-    toks = tokens(text_col)
-    staged = df.select(
-        F.col(id_col).alias("doc"),
-        F.transform(toks, lambda x: F.xxhash64(x)).alias("_th"),
+    return df.selectExpr(f"{_q(id_col)} AS doc", _token_hashes_sql(text_col)).selectExpr(
+        "doc", _shingle_hashes_sql(k)
     )
-    th = F.col("_th")
-    shs = F.when(
-        F.size(th) >= k,
-        F.transform(
-            F.sequence(F.lit(0), F.size(th) - k),
-            lambda i: F.xxhash64(*[F.element_at(th, i + j + 1) for j in range(k)]),
-        ),
-    ).otherwise(F.array().cast("array<bigint>"))
-    return staged.select("doc", shs.alias("shs"))
 
 
 def minhash_signatures(
@@ -182,17 +192,38 @@ def minhash_signatures(
     formulation costs thousands of py4j round-trips of driver time per
     call; selectExpr strings parse JVM-side in one hop).
     """
-    m = num_hashes
+    slots, fills = _signature_sql(num_hashes)
     shs = shingle_hash_arrays(df, text_col, id_col, k)
+    return shs.selectExpr("doc", *slots).selectExpr("doc", *fills)
+
+
+def _signature_sql(m: int) -> tuple[list[str], list[str]]:
+    """The slot (``r{i}`` from ``shs``) and densified fill (``h{i}``)
+    select items of an ``m``-slot signature."""
     slots = [f"array_min(filter(shs, s -> pmod(s, {m}) = {i})) as r{i}" for i in range(m)]
-    raw = shs.selectExpr("doc", *slots)
     fills = [
         "coalesce("
         + ", ".join(f"r{(i + j) % m}" for j in range(m))
         + f", xxhash64({i}L)) as h{i}"
         for i in range(m)
     ]
-    return raw.selectExpr("doc", *fills)
+    return slots, fills
+
+
+def with_minhash_signature(
+    df: DataFrame, text_col: str, num_hashes: int = 32, k: int = 3
+) -> DataFrame:
+    """``df``'s own columns plus ``h0..h{n-1}``, the
+    :func:`minhash_signatures` of each row — a lazy map.  ``df``'s
+    columns ride through the staged projections packed in one struct
+    (``_in``), so no name of ``df`` can meet a staging column."""
+    slots, fills = _signature_sql(num_hashes)
+    return (
+        df.selectExpr("struct(*) AS _in", _token_hashes_sql(text_col))
+        .selectExpr("_in", _shingle_hashes_sql(k))
+        .selectExpr("_in", *slots)
+        .selectExpr("_in.*", *fills)
+    )
 
 
 def _bucket_pair_expr(star_bucket_threshold: int | None) -> str:
@@ -258,7 +289,7 @@ def minhash_lsh_dup_pairs(
     # collision (≈ rows²/2⁶⁵ ≈ 1e-9 at 300k band rows) only creates a
     # spurious candidate that exact verification rejects.
     band_cols = [
-        F.xxhash64(*[F.col(f"h{b * r + j}") for j in range(r)]).alias(f"band{b}")
+        f"xxhash64({', '.join(f'h{b * r + j}' for j in range(r))}) AS band{b}"
         for b in range(bands)
     ]
     stack_expr = (
@@ -266,7 +297,7 @@ def minhash_lsh_dup_pairs(
         + ", ".join(f"{b}, band{b}" for b in range(bands))
         + ") as (band, band_key)"
     )
-    band_keys = sig.select("doc", *band_cols).selectExpr("doc", stack_expr)
+    band_keys = sig.selectExpr("doc", *band_cols).selectExpr("doc", stack_expr)
     # candidate pairs by BUCKET EXPANSION, not a band self-join: group the
     # band keys into buckets and explode each bucket's doc list into its
     # i<j pairs.  ONE key-shuffle total (a self-join shuffles both sides
@@ -280,18 +311,17 @@ def minhash_lsh_dup_pairs(
         .agg(F.collect_list("doc").alias("docs"))
         .where(F.size("docs") > 1)
     )
-    candidates = (
+    # consumed by TWO broadcast joins below; each broadcast plans as its
+    # own job, so an unmaterialized plan would recompute the whole
+    # signature pipeline per consumer.  Eager localCheckpoint
+    # materializes exactly once, truncates lineage, and is freed on
+    # DataFrame GC (a bare cache() would accumulate executor storage
+    # across calls in a long-lived poll-loop driver).  No driver
+    # collect: stays distributed.
+    candidates, n_candidates = pin_counted(
         buckets.selectExpr(_bucket_pair_expr(star_bucket_threshold))
         .select("p.doc_a", "p.doc_b")
         .distinct()
-        # consumed by TWO broadcast joins below; each broadcast plans as
-        # its own job, so an unmaterialized plan would recompute the whole
-        # signature pipeline per consumer.  Eager localCheckpoint
-        # materializes exactly once, truncates lineage, and is freed on
-        # DataFrame GC (a bare cache() would accumulate executor storage
-        # across calls in a long-lived poll-loop driver).  No driver
-        # collect: stays distributed.
-        .localCheckpoint(eager=True)
     )
     # verify ONLY candidate docs: restrict the CORPUS before shingling,
     # and verify over per-doc DISTINCT shingle-HASH sets with
@@ -304,15 +334,14 @@ def minhash_lsh_dup_pairs(
     # broadcast the candidate neighborhood only while it is actually
     # small: a pathological corpus (everything near-identical) can make
     # the candidate set a large fraction of the input, and force-
-    # broadcasting that OOMs the driver/executors at scale.  candidates
-    # is already materialized (localCheckpoint above), so the count is a
-    # cheap scan; above the threshold the hints are dropped and AQE
-    # picks the join strategy (shuffle, or its own broadcast if the
-    # runtime sizes allow).  Output is identical either way — the hint
-    # only changes the physical plan.
+    # broadcasting that OOMs the driver/executors at scale.  The count
+    # comes from the pin's own job (pin_counted); above the threshold
+    # the hints are dropped and AQE picks the join strategy (shuffle, or
+    # its own broadcast if the runtime sizes allow).  Output is
+    # identical either way — the hint only changes the physical plan.
     hint = (
         F.broadcast
-        if candidates.count() <= broadcast_verify_threshold
+        if n_candidates <= broadcast_verify_threshold
         else (lambda d: d)
     )
     cand_ids = (
@@ -885,12 +914,18 @@ _COMPACT_FILE_BYTES = 128 << 20
 _COMPACT_PAGE_ROWS = 1_000
 
 
-def _band_key_rows(sig: DataFrame, num_hashes: int, bands: int) -> DataFrame:
+def _band_key_rows(
+    sig: DataFrame, num_hashes: int, bands: int, carry: dict[str, str] | None = None
+) -> DataFrame:
     """(doc, band, band_key) unpivot of a signature matrix — stack() is a
-    zero-shuffle generator (same construction as minhash_lsh_dup_pairs)."""
+    zero-shuffle generator (same construction as minhash_lsh_dup_pairs).
+    ``carry`` maps more output names to SQL over ``sig``, kept on every
+    row.  SQL text: one JVM call per projection, where a Column tree
+    costs one per node."""
+    carry = carry or {}
     r = num_hashes // bands
     band_cols = [
-        F.concat_ws(",", *[F.col(f"h{b * r + j}") for j in range(r)]).alias(f"band{b}")
+        f"concat_ws(',', {', '.join(f'h{b * r + j}' for j in range(r))}) AS band{b}"
         for b in range(bands)
     ]
     stack_expr = (
@@ -898,7 +933,9 @@ def _band_key_rows(sig: DataFrame, num_hashes: int, bands: int) -> DataFrame:
         + ", ".join(f"{b}, band{b}" for b in range(bands))
         + ") as (band, band_key)"
     )
-    return sig.select("doc", *band_cols).selectExpr("doc", stack_expr)
+    return sig.selectExpr(
+        "doc", *[f"{sql} AS {name}" for name, sql in carry.items()], *band_cols
+    ).selectExpr("doc", *carry, stack_expr)
 
 
 def _sql_lit(v) -> str:
@@ -906,6 +943,51 @@ def _sql_lit(v) -> str:
     if isinstance(v, str):
         return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
     return f"{v}L"
+
+
+def _id_list_sql(ids: list) -> str | None:
+    """``ids`` as a SQL literal list, or None if one of them is not an
+    int or a str (those alone have a literal form here)."""
+    if any(type(i) not in (int, str) for i in ids):
+        return None
+    return ", ".join(map(_sql_lit, ids))
+
+
+def _id_frame(spark, ids: list, name: str, dtype: T.DataType) -> DataFrame:
+    """The ints or strs ``ids`` as a one-column local relation of type
+    ``dtype``: collecting it runs no Spark job."""
+    t = dtype.simpleString()
+    if not ids:
+        return spark.sql(f"SELECT CAST(NULL AS {t}) AS {name} WHERE false")
+    values = ", ".join(f"({_sql_lit(i)})" for i in ids)
+    return spark.sql(f"SELECT CAST(v AS {t}) AS {name} FROM VALUES {values} AS ids(v)")
+
+
+def drop_ids(df: DataFrame, id_col: str, ids: DataFrame, keep: bool = False) -> DataFrame:
+    """``df`` without (with ``keep``: only) the rows whose id is in the
+    one column of ``ids`` — a probe's result over a pinned ``df``.  Up
+    to ``_MAX_PUSHED_KEYS`` ids are collected and applied as one
+    literal ``IN`` filter, so no later action re-runs the probe that
+    produced them; past that (or for ids with no literal form) a join
+    with ``ids`` pinned.  A NULL id is never in ``ids``."""
+    got = [r[0] for r in ids.limit(_MAX_PUSHED_KEYS + 1).collect()]
+    lits = _id_list_sql(got) if len(got) <= _MAX_PUSHED_KEYS else None
+    if lits is None:
+        pinned = ids.toDF(id_col).localCheckpoint(eager=True)
+        return df.join(pinned, id_col, "left_semi" if keep else "left_anti")
+    if not got:
+        return df.where(F.lit(False)) if keep else df
+    member = f"coalesce({_q(id_col)} IN ({lits}), false)"
+    return df.where(F.expr(member if keep else f"NOT {member}"))
+
+
+def pin_counted(df: DataFrame) -> tuple[DataFrame, int]:
+    """``df`` pinned by one eager ``localCheckpoint``, and its row
+    count from an ``Observation`` that the same job fills: no count
+    job, and no wait beyond the pin."""
+    rows = Observation()
+    pinned = df.observe(rows, F.count(F.lit(1)).alias("rows")).localCheckpoint(eager=True)
+    return pinned, rows.get["rows"]
 
 
 def _in_runs(col: str, values: list[int]) -> str:
@@ -1012,61 +1094,79 @@ class _KeyTable:
         # read with it skips the one-task schema-inference job
         self.schema = None
 
-    def bucket(self, key):
-        """The bucket id of a key column (see the class table)."""
-        return F.pmod(
-            F.hash(key) if self.hash_key else key, F.lit(self.num_buckets)
-        ).cast("int")
+    def bucket_sql(self, key: str) -> str:
+        """SQL for the bucket id of the key expression ``key`` (see the
+        class table)."""
+        k = f"hash({key})" if self.hash_key else key
+        return f"CAST(pmod({k}, {self.num_buckets}) AS INT)"
 
     def _read(self) -> DataFrame:
         reader = self.fs.spark.read
         if self.schema is not None:
-            reader = reader.schema(self.schema)
+            return reader.schema(self.schema).parquet(f"{self.fs.path}/{self.sub}")
         store = reader.parquet(f"{self.fs.path}/{self.sub}")
         self.schema = store.schema
         return store
 
+    def probe_pairs(self, keys: DataFrame) -> list[tuple] | None:
+        """The distinct (key, bucket) pairs of ``keys`` (one column,
+        named like the key), or None past ``_MAX_PUSHED_KEYS`` of them.
+        One collect, deduplicated on the driver: a ``distinct`` would
+        add a shuffle, and so a Spark job, to every probe.  Only when
+        the rows alone pass the cap does a second collect take the
+        distinct pairs."""
+        k = _q(self.key)
+        pairs = keys.selectExpr(k, self.bucket_sql(k))
+        rows = pairs.limit(_MAX_PUSHED_KEYS + 1).collect()
+        if len(rows) > _MAX_PUSHED_KEYS:
+            rows = pairs.distinct().limit(_MAX_PUSHED_KEYS + 1).collect()
+        if len(rows) > _MAX_PUSHED_KEYS:
+            return None
+        return list(dict.fromkeys(tuple(r) for r in rows))
+
     def scan(self, keys: DataFrame) -> DataFrame:
         """The pruned read of the table for the probe keys in ``keys``
-        (one column, named like the key).  One driver collect fetches
-        the distinct (key, bucket) pairs; past ``_MAX_PUSHED_KEYS`` of
-        them the scan keeps the bucket filter only, from one collect of
-        the distinct buckets."""
-        k = F.col(self.key)
-        pairs = (
-            keys.select(k, self.bucket(k)).distinct()
-            .limit(_MAX_PUSHED_KEYS + 1).collect()
-        )
-        store = self._read()
-        if len(pairs) <= _MAX_PUSHED_KEYS:
-            by_bucket: dict[int, list] = {}
-            for key, b in pairs:
-                by_bucket.setdefault(b, []).append(key)
-            # each bucket with its own keys: a key's value range meets a
-            # page in EVERY bucket, so one key list for all buckets would
-            # keep each touched bucket whole.  The runs stay a conjunct of
-            # their own, the form a layout-1 tree prunes directories by.
-            per_bucket = " OR ".join(
-                f"(`{self.part}` = {b} AND `{self.key}` IN "
-                f"({', '.join(map(_sql_lit, ks))}))"
-                for b, ks in sorted(by_bucket.items())
-            ) or "false"
-            return store.where(
-                F.expr(f"({_in_runs(self.part, sorted(by_bucket))}) AND ({per_bucket})")
-            )
+        (one column, named like the key): :meth:`scan_pairs` of their
+        :meth:`probe_pairs`.  Past ``_MAX_PUSHED_KEYS`` of them the scan
+        keeps the bucket filter only, from one collect of the distinct
+        buckets."""
+        pairs = self.probe_pairs(keys)
+        if pairs is not None:
+            return self.scan_pairs(pairs)
         # degenerate mega-batch: keep the bucket filter only
-        buckets = [r[0] for r in keys.select(self.bucket(k)).distinct().collect()]
-        return store.where(F.expr(_in_runs(self.part, sorted(buckets))))
+        bucket = self.bucket_sql(_q(self.key))
+        buckets = [r[0] for r in keys.selectExpr(bucket).distinct().collect()]
+        return self._read().where(F.expr(_in_runs(self.part, sorted(buckets))))
+
+    def scan_pairs(self, pairs: list[tuple]) -> DataFrame:
+        """The read of the table's rows whose key is one of ``pairs``'
+        keys (at most ``_MAX_PUSHED_KEYS`` (key, bucket) pairs)."""
+        by_bucket: dict[int, list] = {}
+        for key, b in pairs:
+            by_bucket.setdefault(b, []).append(key)
+        # each bucket with its own keys: a key's value range meets a
+        # page in EVERY bucket, so one key list for all buckets would
+        # keep each touched bucket whole.  The runs stay a conjunct of
+        # their own, the form a layout-1 tree prunes directories by.
+        per_bucket = " OR ".join(
+            f"(`{self.part}` = {b} AND `{self.key}` IN "
+            f"({', '.join(map(_sql_lit, ks))}))"
+            for b, ks in sorted(by_bucket.items())
+        ) or "false"
+        return self._read().where(
+            F.expr(f"({_in_runs(self.part, sorted(by_bucket))}) AND ({per_bucket})")
+        )
 
     def append(self, rows: DataFrame) -> None:
         """Append ``rows`` (which carry the key column) with their bucket,
-        as one file sorted by (bucket, key).  ``repartition(1)`` rather
-        than ``coalesce(1)``: the shuffle keeps the stage that computes
-        the rows (MinHash signing, the SimHash fold) parallel, and only
-        the sort and the write run in one task."""
-        rows = rows.withColumn(self.part, self.bucket(F.col(self.key)))
+        as one file sorted by (bucket, key).  ``coalesce(1)`` adds no
+        shuffle, so the append is one Spark job, but the rows are then
+        computed in that one task: callers hand in rows read from a
+        pinned frame (the stage runner's feature pin, or a signature or
+        sketch they pinned themselves)."""
+        rows = rows.withColumn(self.part, F.expr(self.bucket_sql(_q(self.key))))
         (
-            rows.repartition(1).sortWithinPartitions(self.part, self.key)
+            rows.coalesce(1).sortWithinPartitions(self.part, self.key)
             .write.mode("append").parquet(f"{self.fs.path}/{self.sub}")
         )
         if self.schema is None:  # as a read reports it: all nullable
@@ -1174,6 +1274,8 @@ class MinHashDedupStore(_KeyTableStore):
     """
 
     _LAYOUT = ("num_buckets", "layout")
+    # batch-internal buckets above this many docs pair star-wise
+    _STAR_BUCKET = 1024
 
     def __init__(
         self,
@@ -1222,23 +1324,23 @@ class MinHashDedupStore(_KeyTableStore):
         return [f"h{i}" for i in range(self.num_hashes)]
 
     def _est_match(self, a_prefix: str, b_prefix: str):
-        """Fraction of equal signature slots (estimated Jaccard)."""
-        return (
-            sum(
-                F.when(
-                    F.col(f"{a_prefix}.h{i}") == F.col(f"{b_prefix}.h{i}"), 1
-                ).otherwise(0)
-                for i in range(self.num_hashes)
-            )
-            / F.lit(float(self.num_hashes))
+        """Fraction of equal signature slots (estimated Jaccard), as SQL
+        text: a Column tree of the same sum costs a JVM call per node."""
+        equal = " + ".join(
+            f"CASE WHEN {a_prefix}.h{i} = {b_prefix}.h{i} THEN 1 ELSE 0 END"
+            for i in range(self.num_hashes)
         )
+        return F.expr(f"({equal}) / {float(self.num_hashes)}D")
+
+    # 64-bit hash of a (band, band_key) row — stored as the ``bkh``
+    # column, doubling as the bucket discriminator (``pmod`` of it) and
+    # the second-level pushed-filter key.  MUST match on the write and
+    # probe sides.
+    _BKH = "xxhash64(band, band_key)"
 
     def _bk_hash(self):
-        """64-bit hash of a (band, band_key) row — stored as the ``bkh``
-        column, doubling as the bucket discriminator (``pmod`` of it) and
-        the second-level pushed-filter key.  MUST match on the write and
-        probe sides."""
-        return F.xxhash64("band", "band_key")
+        """:attr:`_BKH` as a Column."""
+        return F.expr(self._BKH)
 
     def _candidate_pairs(self, bk: DataFrame) -> DataFrame:
         """(new doc, old doc) band-key collisions batch × store: the
@@ -1269,32 +1371,32 @@ class MinHashDedupStore(_KeyTableStore):
         )  # small; feeds the signature-key collect + join
         # the probe reads the candidates' signatures, not their buckets'
         store_sig = self._signatures.scan(cand.select(F.col("old_doc").alias("doc")))
+        batch_sig = cand.alias("c").join(
+            F.broadcast(sig.alias("n")), F.expr("c.doc = n.doc")
+        ).selectExpr("c.doc", "c.old_doc", *[f"n.h{i}" for i in range(self.num_hashes)])
         return (
             store_sig.alias("o")
-            .join(
-                F.broadcast(
-                    cand.join(F.broadcast(sig.alias("n")), cand["doc"] == F.col("n.doc")).select(
-                        cand["doc"], cand["old_doc"], *[f"n.h{i}" for i in range(self.num_hashes)]
-                    )
-                ).alias("n"),
-                F.col("n.old_doc") == F.col("o.doc"),
-            )
+            .join(F.broadcast(batch_sig).alias("n"), F.expr("n.old_doc = o.doc"))
             .where(self._est_match("n", "o") >= self.sig_match_frac)
-            .select(F.col("n.doc").alias("dup"))
+            .selectExpr("n.doc AS dup")
             .distinct()
         )
 
-    def sign(self, df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-        """The batch's signature matrix (``doc, h0..h{n-1}``), eagerly
-        checkpointed.  Signing is the probe/absorb cycle's expensive map
-        (O(shingles) per row); computing it once here and handing the
-        result to BOTH :meth:`probe_dups` and :meth:`absorb` halves the
-        per-batch signature work of the split at-least-once sequence
-        (probe → sink → absorb) without adding hidden store state — the
-        handoff is an explicit caller-owned DataFrame."""
-        return minhash_signatures(
-            df, text_col, id_col, self.num_hashes, self.k
-        ).localCheckpoint(eager=True)
+    def sign(
+        self, df: DataFrame, text_col: str, id_col: str, keep_columns: bool = False
+    ) -> DataFrame:
+        """The batch's signature matrix (``doc, h0..h{n-1}``) as a lazy
+        map; with ``keep_columns``, ``df``'s own columns plus
+        ``h0..h{n-1}`` (:func:`with_minhash_signature`, the stage
+        runner's feature pass).  Signing is the probe/absorb cycle's
+        expensive map (O(shingles) per row): pin the result before more
+        than one action reads it, and hand it to BOTH
+        :meth:`probe_dups` and :meth:`absorb` — an explicit caller-owned
+        DataFrame, not hidden store state.  :meth:`process_batch` pins
+        its own; the stage runner pins its whole feature frame once."""
+        if keep_columns:
+            return with_minhash_signature(df, text_col, self.num_hashes, self.k)
+        return minhash_signatures(df, text_col, id_col, self.num_hashes, self.k)
 
     def probe_dups(
         self,
@@ -1302,16 +1404,95 @@ class MinHashDedupStore(_KeyTableStore):
         text_col: str,
         id_col: str,
         sig: DataFrame | None = None,
+        features: bool = False,
     ) -> DataFrame:
         """Read-only: ids in ``df`` that are near-dups of the store OR of a
         lower-id row in the same batch.  ``process_batch`` = this + absorb.
-        ``sig``: optionally the result of :meth:`sign` over ``df`` (skips
-        re-signing)."""
-        if sig is None:
-            sig = self.sign(df, text_col, id_col)
+        ``sig``: optionally the result of :meth:`sign` over ``df``, pinned
+        (skips re-signing; ``df`` is then not read).  ``features``: ``df``
+        is the stage runner's pinned feature frame, whose
+        ``h0..h{n-1}`` columns are read as the signatures."""
+        if features:
+            sig = self._feature_sig(df, id_col)
+        elif sig is None:
+            sig = self.sign(df, text_col, id_col).localCheckpoint(eager=True)
         return self._dup_ids(sig)
 
+    def _feature_sig(self, df: DataFrame, id_col: str) -> DataFrame:
+        """The (doc, h0..h{n-1}) signature rows of a frame that carries
+        ``h0..h{n-1}`` (``sign(keep_columns=True)``)."""
+        return df.selectExpr(f"{_q(id_col)} AS doc", *self._sig_cols())
+
+    def _near(self, a: tuple, b: tuple) -> bool:
+        """:meth:`_est_match` of two signatures on the driver (the same
+        double division and comparison)."""
+        same = sum(x == y for x, y in zip(a, b))
+        return same / float(self.num_hashes) >= self.sig_match_frac
+
+    def _dup_ids_small(self, sig: DataFrame) -> DataFrame | None:
+        """:meth:`_dup_ids` on the driver, for a batch of at most
+        ``_MAX_PUSHED_KEYS`` band-key rows whose doc ids are ints or
+        strs (else None).  Three collects, and no join, shuffle or
+        broadcast: the batch's band keys with their signatures, the
+        store's band-key rows for those keys, and the stored signatures
+        of the candidates they name (both scans pruned per
+        :class:`_KeyTable`).  Candidates and verification are those of
+        the Spark plan: band-key collisions, star pairs in a bucket of
+        more than ``_STAR_BUCKET`` docs, the lower id kept, and
+        :meth:`_near`."""
+        packed = f"array({', '.join(self._sig_cols())})"
+        bkh = self._BKH
+        rows = (
+            _band_key_rows(sig, self.num_hashes, self.bands, carry={"_h": packed})
+            .selectExpr("doc", "band", "band_key", "_h", self._band_keys.bucket_sql(bkh), bkh)
+            .limit(_MAX_PUSHED_KEYS + 1).collect()
+        )
+        rows = [r for r in rows if r[0] is not None]
+        if len(rows) > _MAX_PUSHED_KEYS or _id_list_sql([r[0] for r in rows]) is None:
+            return None
+        sigs = {r[0]: tuple(r[3]) for r in rows}
+        buckets: dict[tuple, list] = {}
+        for r in rows:
+            buckets.setdefault((r[1], r[2]), []).append(r[0])
+        dups = set()
+        for members in buckets.values():
+            ds = sorted(members)
+            pairs = (
+                [(ds[0], x) for x in ds[1:]] if len(ds) > self._STAR_BUCKET
+                else itertools.combinations(ds, 2)
+            )
+            dups.update(b for a, b in pairs if self._near(sigs[a], sigs[b]))
+        if self._exists("band_keys"):
+            keys = {(r[-1], r[-2]) for r in rows}  # (bkh, its bucket)
+            stored = self._band_keys.scan_pairs(list(keys)).selectExpr(
+                "doc", "band", "band_key", self._signatures.bucket_sql("doc")
+            ).collect()
+            # (old doc, its signatures bucket, the batch docs it collides with)
+            hits = [
+                (old, b, buckets[(band, key)])
+                for old, band, key, b in stored
+                if old is not None and (band, key) in buckets
+            ]
+            if hits:
+                old_sigs = {
+                    r[0]: tuple(r[1])
+                    for r in self._signatures.scan_pairs(list({(o, b) for o, b, _ in hits}))
+                    .selectExpr("doc", packed).collect()
+                }
+                dups.update(
+                    new for old, _, news in hits for new in news
+                    if old in old_sigs and self._near(sigs[new], old_sigs[old])
+                )
+        return _id_frame(self.spark, list(dups), "dup", sig.schema["doc"].dataType)
+
     def _dup_ids(self, sig: DataFrame) -> DataFrame:
+        """The ``dup`` ids of the batch signed in ``sig``: near copies of
+        the store or of a lower id in the batch.  A small batch is
+        matched on the driver (:meth:`_dup_ids_small`); a larger one by
+        this Spark plan."""
+        small = self._dup_ids_small(sig)
+        if small is not None:
+            return small
         bk = _band_key_rows(sig, self.num_hashes, self.bands)
         dup_ids = self._cross_batch_dups(bk, sig)
 
@@ -1329,13 +1510,13 @@ class MinHashDedupStore(_KeyTableStore):
             .where(F.size("docs") > 1)
         )
         internal = (
-            buckets.selectExpr(_bucket_pair_expr(star_bucket_threshold=1024))
-            .select("p.doc_a", "p.doc_b")
+            buckets.selectExpr(_bucket_pair_expr(self._STAR_BUCKET))
+            .selectExpr("p.doc_a", "p.doc_b")
             .distinct()
-            .join(sig.alias("a"), F.col("doc_a") == F.col("a.doc"))
-            .join(sig.alias("b"), F.col("doc_b") == F.col("b.doc"))
+            .join(sig.alias("a"), F.expr("doc_a = a.doc"))
+            .join(sig.alias("b"), F.expr("doc_b = b.doc"))
             .where(self._est_match("a", "b") >= self.sig_match_frac)
-            .select(F.col("doc_b").alias("dup"))  # keep the lower id
+            .selectExpr("doc_b AS dup")  # keep the lower id
             .distinct()
         )
         return internal if dup_ids is None else dup_ids.unionByName(internal).distinct()
@@ -1346,6 +1527,7 @@ class MinHashDedupStore(_KeyTableStore):
         text_col: str,
         id_col: str,
         sig: DataFrame | None = None,
+        features: bool = False,
     ) -> None:
         """Mutating half of the split contract: record ``survivors`` (rows
         the caller has already probed AND sunk) as accepted.
@@ -1357,16 +1539,25 @@ class MinHashDedupStore(_KeyTableStore):
         the re-signed path; replay safety is unchanged (a replayed
         caller without the handoff just re-signs).  Without ``sig`` the
         rows are signed here — a pure map, callable on any
-        replayed/pinned DataFrame."""
-        if survivors.isEmpty():  # an append of no rows still writes a file
+        replayed/pinned DataFrame.  Either way the survivors'
+        signatures are pinned once, and both tables append from them.
+
+        ``features``: ``survivors`` are the stage runner's pinned
+        survivors, which carry ``h0..h{n-1}`` (``sign(keep_columns=True)``)
+        and which the runner absorbs only when its observed row count
+        is non-zero: absorb appends those columns as they are, with no
+        semi-join and no emptiness job."""
+        if features:
+            sig_keep = self._feature_sig(survivors, id_col)
+        elif survivors.isEmpty():  # an append of no rows still writes a file
             return
-        if sig is None:
+        elif sig is None:
             sig_keep = minhash_signatures(
                 survivors, text_col, id_col, self.num_hashes, self.k
-            )
+            ).localCheckpoint(eager=True)
         else:
             keep = survivors.select(F.col(id_col).alias("doc"))
-            sig_keep = sig.join(keep, "doc", "left_semi")
+            sig_keep = sig.join(keep, "doc", "left_semi").localCheckpoint(eager=True)
         with self._store_fs.lock("absorb"):
             self._begin_absorb()
             self._band_keys.append(
@@ -1382,7 +1573,7 @@ class MinHashDedupStore(_KeyTableStore):
         split ``probe_dups`` → sink → ``absorb`` sequence instead — this
         form mutates the store before the caller can sink, so a crash in
         between drops the batch on replay (see class docstring)."""
-        sig = self.sign(df, text_col, id_col)
+        sig = self.sign(df, text_col, id_col).localCheckpoint(eager=True)
         dups = self.probe_dups(df, text_col, id_col, sig=sig)
         survivors = df.join(
             dups.withColumnRenamed("dup", id_col), id_col, "left_anti"
@@ -1429,11 +1620,56 @@ class ExactDedupStore(_KeyTableStore):
     def _exists(self) -> bool:
         return self._store_fs.has_data("hashes")
 
-    def probe_new(self, df: DataFrame, text_col: str, id_col: str) -> DataFrame:
+    @staticmethod
+    def with_content_hash(df: DataFrame, text_col: str) -> DataFrame:
+        """``df`` plus ``content_hash``, md5 of ``text_col`` — the stage
+        runner's feature column for this store (a lazy map)."""
+        return df.select("*", F.md5(F.col(text_col)).alias("content_hash"))
+
+    def probe_new(
+        self, df: DataFrame, text_col: str, id_col: str, features: bool = False
+    ) -> DataFrame:
         """Read-only: the subset of ``df`` that is NOT already in the
-        store and NOT a lower-id duplicate within the batch.  The store
-        scan is pruned per :class:`_KeyTable`."""
-        hashed = df.withColumn("content_hash", F.md5(F.col(text_col)))
+        store and NOT a lower-id duplicate within the batch, with its
+        ``content_hash`` column.  ``features``: ``df`` already carries
+        ``content_hash`` (md5 of ``text_col``, the stage runner's
+        feature pass), which is then read rather than recomputed.
+
+        Up to ``_MAX_PUSHED_KEYS`` rows, one collect brings each row's
+        id, hash and bucket to the driver.  The lowest id per hash is
+        picked there, so the batch-internal dedup is a filter on ids,
+        and the store scan pushes the batch's hashes (:class:`_KeyTable`)
+        and joins as a broadcast.  Rows with a NULL id or text never
+        survive.  Larger batches dedup in Spark (:meth:`_probe_new_large`)."""
+        hashed = df if features else df.withColumn("content_hash", F.md5(F.col(text_col)))
+        q = _q(id_col)
+        rows = (
+            hashed.selectExpr(q, "content_hash", self._hashes.bucket_sql("content_hash"))
+            .limit(_MAX_PUSHED_KEYS + 1).collect()
+        )
+        lowest: dict = {}
+        for i, h, _ in rows:
+            if i is not None and h is not None and (h not in lowest or i < lowest[h]):
+                lowest[h] = i
+        dups = [i for i, h, _ in rows if i is not None and h in lowest and i != lowest[h]]
+        not_dup = _id_list_sql(dups)
+        if len(rows) > _MAX_PUSHED_KEYS or not_dup is None:
+            return self._probe_new_large(hashed, id_col)
+        firsts = hashed.where(F.expr(
+            f"{q} IS NOT NULL AND content_hash IS NOT NULL"
+            + (f" AND NOT {q} IN ({not_dup})" if dups else "")
+        ))
+        if not self._exists():
+            return firsts
+        # the pushed filter matches the batch's hashes exactly
+        seen = self._hashes.scan_pairs(
+            list(dict.fromkeys((h, b) for _, h, b in rows if h is not None))
+        ).select("content_hash")
+        return firsts.join(F.broadcast(seen), "content_hash", "left_anti")
+
+    def _probe_new_large(self, hashed: DataFrame, id_col: str) -> DataFrame:
+        """:meth:`probe_new` in Spark, for a batch of more rows than the
+        driver takes (or with ids that are no SQL literal)."""
         # batch-internal: keep the lowest id per content hash (groupBy-min
         # + broadcast join back keeps map-side combine; renamed key avoids
         # self-join ambiguity)
@@ -1459,17 +1695,29 @@ class ExactDedupStore(_KeyTableStore):
         )
         return firsts.join(F.broadcast(seen), "content_hash", "left_anti")
 
-    def absorb(self, survivors: DataFrame, text_col: str, id_col: str) -> None:
+    def absorb(
+        self, survivors: DataFrame, text_col: str, id_col: str, features: bool = False
+    ) -> None:
         """Record ``survivors`` (already probed and sunk by the caller)
         as accepted — the mutating half of the at-least-once split (sink
-        BEFORE absorb; see :class:`MinHashDedupStore` docstring)."""
-        if survivors.isEmpty():  # an append of no rows still writes a file
+        BEFORE absorb; see :class:`MinHashDedupStore` docstring).
+
+        ``features``: ``survivors`` are the stage runner's pinned
+        survivors, which carry ``content_hash``, hold one row per hash
+        (the probe kept one) and are absorbed only when the runner's
+        observed row count is non-zero: their hashes append as they
+        are, with no md5, distinct or emptiness job."""
+        if features:
+            hashes = survivors.select("content_hash")
+        elif survivors.isEmpty():  # an append of no rows still writes a file
             return
+        else:
+            hashes = survivors.select(
+                F.md5(F.col(text_col)).alias("content_hash")
+            ).distinct()
         with self._store_fs.lock("absorb"):
             self._begin_absorb()
-            self._hashes.append(
-                survivors.select(F.md5(F.col(text_col)).alias("content_hash")).distinct()
-            )
+            self._hashes.append(hashes)
 
     def process_batch(self, df: DataFrame, text_col: str, id_col: str) -> DataFrame:
         """Probe + absorb in one call: return the exact-dup-free subset
@@ -2190,17 +2438,31 @@ class SimHashDedupStore(_KeyTableStore):
         MUST match on write and probe sides."""
         return F.xxhash64("blk_idx", "blk_val")
 
-    def _sketch(self, df: DataFrame, text_col: str, id_col: str) -> DataFrame:
+    @staticmethod
+    def with_token_hashes(df: DataFrame, text_col: str) -> DataFrame:
+        """``df`` plus ``hs``, its rows' portable token hashes — the
+        stage runner's feature column for this store (a lazy map)."""
+        return df.select("*", token_hashes(text_col).alias("hs"))
+
+    def _sketch(
+        self, df: DataFrame, text_col: str, id_col: str, features: bool = False
+    ) -> DataFrame:
         """(doc, sk): portable 60-bit SimHash per row — a pure map.
 
-        The token-hash array is materialized (eager localCheckpoint)
-        BEFORE the 60-bit fold: without the barrier, projection collapse
-        substitutes the md5 transform into every one of the 60 per-bit
-        passes — the 60× recompute simhash_dup_pairs documents (79 s at
-        sf0.1 when it regressed there)."""
-        hs = df.select(
-            F.col(id_col).alias("doc"), token_hashes(text_col).alias("hs")
-        ).localCheckpoint(eager=True)
+        The token-hash array is materialized BEFORE the 60-bit fold:
+        without the barrier, projection collapse substitutes the md5
+        transform into every one of the 60 per-bit passes — the 60×
+        recompute simhash_dup_pairs documents (79 s at sf0.1 when it
+        regressed there).  With ``features``, ``df`` is the stage
+        runner's pinned feature frame and carries them
+        (:meth:`with_token_hashes`); otherwise they are computed here
+        and pinned (eager localCheckpoint)."""
+        if features:
+            hs = df.select(F.col(id_col).alias("doc"), "hs")
+        else:
+            hs = df.select(
+                F.col(id_col).alias("doc"), token_hashes(text_col).alias("hs")
+            ).localCheckpoint(eager=True)
         return hs.select("doc", simhash60_from_hashes("hs").alias("sk"))
 
     def _block_rows(self, sk: DataFrame) -> DataFrame:
@@ -2260,19 +2522,31 @@ class SimHashDedupStore(_KeyTableStore):
         )
         return cross.unionByName(internal).distinct()
 
-    def probe_dups(self, df: DataFrame, text_col: str, id_col: str) -> DataFrame:
+    def probe_dups(
+        self, df: DataFrame, text_col: str, id_col: str, features: bool = False
+    ) -> DataFrame:
         """Read-only: ids in ``df`` within ``max_hamming`` of the store
-        or of a lower-id row in the same batch."""
-        sk = self._sketch(df, text_col, id_col).localCheckpoint(eager=True)
+        or of a lower-id row in the same batch.  ``features``: ``df``
+        carries ``hs`` (:meth:`_sketch`)."""
+        sk = self._sketch(df, text_col, id_col, features).localCheckpoint(eager=True)
         return self._dup_ids(self._block_rows(sk))
 
-    def absorb(self, survivors: DataFrame, text_col: str, id_col: str) -> None:
+    def absorb(
+        self, survivors: DataFrame, text_col: str, id_col: str, features: bool = False
+    ) -> None:
         """Record ``survivors`` (already probed and sunk) as accepted.
         Re-derives the sketches — a pure map, so the method stays
-        callable on a replayed/pinned DataFrame with no handoff state."""
-        if survivors.isEmpty():  # an append of no rows still writes a file
+        callable on a replayed/pinned DataFrame with no handoff state.
+        ``features``: ``survivors`` are the stage runner's pinned
+        survivors, which carry ``hs`` and are absorbed only when the
+        runner's observed row count is non-zero (no emptiness job)."""
+        if features:
+            sk = self._sketch(survivors, text_col, id_col, features=True)
+        elif survivors.isEmpty():  # an append of no rows still writes a file
             return
-        blocks = self._block_rows(self._sketch(survivors, text_col, id_col))
+        else:  # pinned, since the append computes its rows in one task
+            sk = self._sketch(survivors, text_col, id_col).localCheckpoint(eager=True)
+        blocks = self._block_rows(sk)
         with self._store_fs.lock("absorb"):
             self._begin_absorb()
             self._blocks.append(blocks.withColumn("bvh", self._bvh()))

@@ -170,7 +170,7 @@ class RollupStore:
             # for an 80-bin histogram).  The expressions are emitted as
             # SQL strings — a Column-tree build of nb+2 conditional sums
             # costs ~1 s of py4j round-trips per absorb (same driver
-            # stall as similarity._hyperplane_bucket_sql documents).
+            # stall as similarity._hyperplane_buckets_sql documents).
             bin_projs = []
             taken = {n.lower() for n in df.columns}
             for c, (lo, hi, nb) in self.hist_cols.items():

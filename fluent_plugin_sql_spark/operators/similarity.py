@@ -202,26 +202,6 @@ def _plane_components(table: int, plane: int, dim: int) -> list[float]:
     return out
 
 
-def _hyperplane_bucket_sql(
-    vec_expr: str, num_planes: int = 8, table: int = 0, dim: int = 64
-) -> str:
-    """SQL text for one hash table's bucket id: the sign-bit string of
-    ``num_planes`` projections onto deterministic literal hyperplanes.
-
-    Returns a STRING, not a Column tree: building this as nested Column
-    objects cost one py4j round-trip per literal (num_tables × num_planes
-    × dim ≈ 3,072 calls per side — a measured 13 s driver stall at
-    sf0.01, the same gotcha fixed in dedup.py's OPH signature generator).
-    As one generated string the whole expression crosses py4j once and
-    parses JVM-side; the projection itself is flat codegen arithmetic.
-    """
-    planes = _planes_literal_sql([table], num_planes, dim)
-    return (
-        f"concat_ws('', transform({planes}[0], pl -> "
-        f"CASE WHEN {_proj_sql(vec_expr)} >= 0.0 THEN '1' ELSE '0' END))"
-    )
-
-
 def _planes_literal_sql(tables: list[int], num_planes: int, dim: int) -> str:
     """SQL literal ``array<array<array<double>>>`` of hyperplanes indexed
     [table][plane][dim].  Being foldable, Catalyst constant-folds it into
@@ -253,25 +233,24 @@ def _hyperplane_buckets_sql(
     vec_expr: str, num_planes: int, num_tables: int, dim: int = 64
 ) -> str:
     """SQL text for the multi-table LSH bucket array (``'t:bits'`` per
-    table).  More tables → higher recall (a true neighbor is found if ANY
-    table buckets it with the query); candidate cost grows linearly with
-    tables, still sublinear in corpus size."""
+    table): per table, the sign-bit string of ``num_planes`` projections
+    onto deterministic literal hyperplanes.  More tables → higher recall
+    (a true neighbor is found if ANY table buckets it with the query);
+    candidate cost grows linearly with tables, still sublinear in corpus
+    size.
+
+    Returns a STRING, not a Column tree: building this as nested Column
+    objects cost one py4j round-trip per literal (num_tables × num_planes
+    × dim ≈ 3,072 calls per side — a measured 13 s driver stall at
+    sf0.01, the same gotcha fixed in dedup.py's OPH signature generator).
+    As one generated string the whole expression crosses py4j once and
+    parses JVM-side; the projection itself is flat codegen arithmetic."""
     planes = _planes_literal_sql(list(range(num_tables)), num_planes, dim)
     return (
         f"transform({planes}, (tp, t) -> "
         "concat(cast(t AS string), ':', concat_ws('', transform(tp, pl -> "
         f"CASE WHEN {_proj_sql(vec_expr)} >= 0.0 THEN '1' ELSE '0' END))))"
     )
-
-
-def hyperplane_bucket(
-    vec: str, num_planes: int = 8, table: int = 0, dim: int = 64
-) -> Column:
-    """Random-hyperplane LSH bucket id for a vector column (one hash
-    table).  ``vec`` is the COLUMN NAME (SQL text), not a Column — the
-    expression is generated as a single SQL string; see
-    :func:`_hyperplane_bucket_sql` for why."""
-    return F.expr(_hyperplane_bucket_sql(vec, num_planes, table, dim))
 
 
 def hyperplane_buckets(
@@ -367,7 +346,7 @@ def lsh_topk(
     tests/test_scale_r8.py.
 
     The bucket expressions are generated SQL strings (one py4j crossing
-    per side), not Column trees — see :func:`_hyperplane_bucket_sql`.
+    per side), not Column trees — see :func:`_hyperplane_buckets_sql`.
     """
     cand = _lsh_candidates(
         corpus, queries, vec_col, id_col, num_planes, num_tables, dim

@@ -1,5 +1,4 @@
 from .stream import (  # noqa: F401
-    sessionized_stream,
     stream_from_parquet_dir,
     stream_to_sql_output,
     windowed_stream,

@@ -2,17 +2,21 @@
 
 A curation micro-batch is a chain of stages over the batch's rows.
 *Filter* stages (quality filter, exact / SimHash / MinHash / embedding
-dedup) probe the batch read-only and hand the survivors on; *follower*
-stages (rollup, IVF index) only record what reached the sink.
-:func:`run_stages` runs the chain in the one order that keeps delivery
-at-least-once; :func:`stage_handler` wraps it as a ``foreachBatch``
-handler with the periodic compaction; :func:`stages_from_config` builds
-the chain from ``Pipeline.run_streaming``'s source config (CONFIG.md).
+dedup) add their per-row features to the batch in one lazy projection,
+then probe the pinned features read-only and hand the survivors on;
+*follower* stages (rollup, IVF index) only record what reached the
+sink.  :func:`run_stages` runs the chain in the one order that keeps
+delivery at-least-once; :func:`stage_handler` wraps it as a
+``foreachBatch`` handler with the periodic compaction;
+:func:`stages_from_config` builds the chain from
+``Pipeline.run_streaming``'s source config (CONFIG.md).
 
 Each adapter calls its store's public methods at batch time, and the
-per-batch handoff (MinHash signatures, embedding centroid assignment)
-travels from ``probe`` to ``absorb`` through the runner, never as hidden
-stage state.
+per-batch handoff (the embedding centroid assignment) travels from
+``probe`` to ``absorb`` through the runner, never as hidden stage
+state.  The text stores' features (``content_hash``, the MinHash
+``h0..h{n-1}``, the SimHash token hashes ``hs``) are columns of the
+pinned frame, which probe and absorb both read.
 """
 
 from __future__ import annotations
@@ -31,6 +35,8 @@ from ..operators.dedup import (
     ExactDedupStore,
     MinHashDedupStore,
     SimHashDedupStore,
+    drop_ids,
+    pin_counted,
 )
 from ..operators.rollup import RollupStore
 from ..operators.similarity import append_ivf_index, build_ivf_index, compact_ivf_index
@@ -41,10 +47,16 @@ log = logging.getLogger(__name__)
 class Stage:
     """The stage protocol; every method defaults to a no-op.
 
-    ``probe(df) -> (survivors, handoff)`` is read-only.
-    ``absorb(pinned, handoff, batch_key)`` records the pinned survivors
-    that reached the sink, given this stage's own probe handoff (None
-    for followers).  ``compact()`` is the periodic maintenance."""
+    ``features(df)`` adds the columns this filter's probe and absorb
+    read, or drops rows, as a lazy map over the raw batch.
+    ``probe(df) -> (survivors, handoff)`` is read-only and runs on the
+    pinned features.  ``absorb(pinned, handoff, batch_key)`` records the
+    pinned survivors that reached the sink, given this stage's own probe
+    handoff (None for followers, whose frame has the input columns
+    only).  ``compact()`` is the periodic maintenance."""
+
+    def features(self, df: DataFrame) -> DataFrame:
+        return df
 
     def probe(self, df: DataFrame) -> tuple[DataFrame, Any]:
         return df, None
@@ -56,18 +68,15 @@ class Stage:
         pass
 
 
-def _drop_dups(df: DataFrame, dups: DataFrame, id_col: str) -> DataFrame:
-    return df.join(dups.withColumnRenamed("dup", id_col), id_col, "left_anti")
-
-
 class QualityStage(Stage):
-    """Stateless quality gate (functions.text.quality_predicate)."""
+    """Stateless quality gate (functions.text.quality_predicate), applied
+    in the feature pass: failing rows are never signed or pinned."""
 
     def __init__(self, cfg: dict[str, Any]):
         self.cfg = cfg
 
-    def probe(self, df):
-        return df.where(quality_predicate(self.cfg, self.cfg.get("text_col", "text"))), None
+    def features(self, df):
+        return df.where(quality_predicate(self.cfg, self.cfg.get("text_col", "text")))
 
 
 class _StoreStage(Stage):
@@ -79,31 +88,48 @@ class _StoreStage(Stage):
 
 
 class ExactStage(_StoreStage):
+    """``content_hash`` is a feature column; the survivors are the
+    probe's ids kept in the pinned frame."""
+
+    def features(self, df):
+        return self.store.with_content_hash(df, self.col)
+
     def probe(self, df):
-        return self.store.probe_new(df, self.col, self.id_col).drop("content_hash"), None
+        new = self.store.probe_new(df, self.col, self.id_col, features=True)
+        return drop_ids(df, self.id_col, new.select(self.id_col), keep=True), None
 
     def absorb(self, pinned, handoff, batch_key):
-        self.store.absorb(pinned, self.col, self.id_col)
+        self.store.absorb(pinned, self.col, self.id_col, features=True)
 
 
 class SimHashStage(_StoreStage):
+    """The token hashes ``hs`` are a feature column; the probe pins the
+    sketches it folds from them."""
+
+    def features(self, df):
+        return self.store.with_token_hashes(df, self.col)
+
     def probe(self, df):
-        return _drop_dups(df, self.store.probe_dups(df, self.col, self.id_col), self.id_col), None
+        dups = self.store.probe_dups(df, self.col, self.id_col, features=True)
+        return drop_ids(df, self.id_col, dups), None
 
     def absorb(self, pinned, handoff, batch_key):
-        self.store.absorb(pinned, self.col, self.id_col)
+        self.store.absorb(pinned, self.col, self.id_col, features=True)
 
 
 class MinHashStage(_StoreStage):
-    """Signs once; probe and absorb share the signatures."""
+    """Signs in the feature pass: the probe and the absorb read the
+    pinned ``h0..h{n-1}`` columns, so each row is signed once."""
+
+    def features(self, df):
+        return self.store.sign(df, self.col, self.id_col, keep_columns=True)
 
     def probe(self, df):
-        sig = self.store.sign(df, self.col, self.id_col)
-        dups = self.store.probe_dups(df, self.col, self.id_col, sig=sig)
-        return _drop_dups(df, dups, self.id_col), sig
+        dups = self.store.probe_dups(df, self.col, self.id_col, features=True)
+        return drop_ids(df, self.id_col, dups), None
 
-    def absorb(self, pinned, sig, batch_key):
-        self.store.absorb(pinned, self.col, self.id_col, sig=sig)
+    def absorb(self, pinned, handoff, batch_key):
+        self.store.absorb(pinned, self.col, self.id_col, features=True)
 
 
 class EmbeddingStage(_StoreStage):
@@ -118,7 +144,7 @@ class EmbeddingStage(_StoreStage):
     def probe(self, df):
         assigned = self.store.assign_probes(df, self.col, self.id_col)
         dups = self.store.probe_dups(df, self.col, self.id_col, probes=assigned)
-        return _drop_dups(df, dups, self.id_col), assigned
+        return drop_ids(df, self.id_col, dups), assigned
 
     def absorb(self, pinned, assigned, batch_key):
         self.store.absorb(pinned, self.col, self.id_col, assigned=assigned)
@@ -191,11 +217,21 @@ def run_stages(
     sink: Callable[[DataFrame], None],
     batch_key: Any,
 ) -> DataFrame:
-    """Run one batch through the chain and return the pinned survivors.
+    """Run one batch through the chain and return what reached the sink.
 
-    Order: every filter probes (read-only, in declared order) → the
-    survivors are pinned once → ``sink`` → followers absorb → filters
-    absorb.  This is what makes delivery at-least-once: a crash between
+    Order: one feature pass (every filter's ``features``, in declared
+    order, as one lazy projection of ``df``) is pinned → every filter
+    probes the pinned features (read-only, in declared order, each on
+    the previous one's survivors) → the survivors are pinned → ``sink``
+    → followers absorb → filters absorb.  Each probe's result is a
+    small set of ids applied to the pinned features
+    (:func:`~..operators.dedup.drop_ids`), so neither the survivors pin
+    nor a later probe recomputes the source read, the quality filter or
+    an earlier probe.  The sink and the followers get exactly ``df``'s
+    columns; the filters absorb the pinned survivors with their
+    features, and only when that pin's observed row count is non-zero.
+
+    This order is what makes delivery at-least-once: a crash between
     sink and absorb re-emits one batch's rows on replay, while the
     reverse order would make a replayed batch look like dups of itself
     and drop it (at-most-once loss).  Followers absorb before any filter
@@ -205,17 +241,31 @@ def run_stages(
     filter absorbs leaves the later store without this batch: on replay
     the earlier store already filters it, so near copies that only the
     later store would catch can still reach the sink."""
-    survivors, handoffs = df, []
+    columns = df.columns
+    features = df
     for stage in filters:
-        survivors, handoff = stage.probe(survivors)
-        handoffs.append(handoff)
-    pinned = survivors.localCheckpoint(eager=True)
-    sink(pinned)
+        features = stage.features(features)
+    names = features.columns
+    clash = sorted({c for c in names if names.count(c) > 1})
+    if clash:
+        raise ValueError(
+            f"input column(s) {clash} collide with the curation stages' "
+            "feature columns; rename them in the source"
+        )
+    survivors, rows = pin_counted(features)
+    handoffs: list[Any] = [None] * len(filters)
+    if filters and rows:
+        for i, stage in enumerate(filters):
+            survivors, handoffs[i] = stage.probe(survivors)
+        survivors, rows = pin_counted(survivors)
+    out = survivors.select(*columns)
+    sink(out)
     for stage in followers:
-        stage.absorb(pinned, None, batch_key)
-    for stage, handoff in zip(filters, handoffs):
-        stage.absorb(pinned, handoff, batch_key)
-    return pinned
+        stage.absorb(out, None, batch_key)
+    if rows:
+        for stage, handoff in zip(filters, handoffs):
+            stage.absorb(survivors, handoff, batch_key)
+    return out
 
 
 def stage_handler(
@@ -229,7 +279,9 @@ def stage_handler(
     (0/None disables).  Each absorb of survivors appends one small file
     per state table (the IVF and embedding stores: one per touched
     bucket);
-    compaction keeps probes from decaying into file-open cost."""
+    compaction keeps probes from decaying into file-open cost.  Per
+    batch the text stores cost one feature pin, one survivors pin, the
+    probes' collects and one Spark job per appended table."""
     batches = [0]
 
     def handle(batch_df: DataFrame, epoch_id: int) -> None:

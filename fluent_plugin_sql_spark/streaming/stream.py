@@ -82,30 +82,6 @@ def windowed_stream(
     )
 
 
-def sessionized_stream(
-    df: DataFrame,
-    ts_col: str = "ts",
-    gap: str = "4 hours",
-    watermark: str = "8 hours",
-    key: str = "user_id",
-) -> DataFrame:
-    """Watermarked session windows (same semantics as the batch
-    `session_windows` query; state closes once the watermark passes
-    session_end + gap)."""
-    df = ensure_event_time(df, ts_col)
-    return (
-        df.withWatermark(ts_col, watermark)
-        .groupBy(F.session_window(ts_col, gap).alias("w"), key)
-        .agg(F.count("*").alias("n_events"))
-        .select(
-            key,
-            F.col("w.start").alias("session_start"),
-            F.col("w.end").alias("session_end"),
-            "n_events",
-        )
-    )
-
-
 def stream_to_sql_output(
     df: DataFrame,
     output: SQLOutput,

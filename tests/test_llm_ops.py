@@ -622,7 +622,7 @@ def test_dedup_store_probe_io_bounded_as_store_grows(spark, tmp_path):
         [f"novel probe number {i} words qq ww ee rr tt yy uu ii" for i in range(4)]
     )
     touched = (
-        bk_multi.select(store._band_keys.bucket(store._bk_hash())).distinct().count()
+        bk_multi.selectExpr(store._band_keys.bucket_sql(store._BKH)).distinct().count()
     )
     assert touched > 10
 

@@ -1,7 +1,8 @@
 """The streaming curation stage runner (streaming.stages) under
-``Pipeline.run_streaming`` and ``near_dedup_stream``: the probe → pin →
-sink → absorb order, the compaction cadence, and crash/replay at the
-sink and absorb boundaries."""
+``Pipeline.run_streaming`` and ``near_dedup_stream``: the feature pin →
+probe → pin → sink → absorb order, the Spark jobs of one micro-batch,
+the compaction cadence, and crash/replay at the sink and absorb
+boundaries."""
 
 from __future__ import annotations
 
@@ -9,6 +10,7 @@ import datetime
 import os
 
 import pytest
+from conftest import spark_jobs
 from pyspark.sql import functions as F
 from pyspark.sql.utils import StreamingQueryException
 
@@ -102,9 +104,9 @@ def _spy(monkeypatch, events, owner, name):
 
 
 BATCH_ORDER = [
+    "MinHashDedupStore.sign",  # the feature pass signs before any probe
     "QualityStage.probe",
     "ExactDedupStore.probe_new",
-    "MinHashDedupStore.sign",
     "MinHashDedupStore.probe_dups",
     "SQLOutput.write_batch",
     "RollupStore.absorb",
@@ -149,6 +151,54 @@ def test_run_streaming_stage_order_and_compaction_cadence(
         assert tail == []
     # junk, the exact copy and the near copy never reach the sink
     assert sorted(_sink_ids(spark, tmp_path)) == [0, 1, 2, 3, 4, 6, 9, 10]
+
+
+# Spark jobs of one micro-batch of the chain above once its stores hold
+# data: the feature pin, the exact probe's collect and the collect of
+# its survivors (the store scan broadcast, then the ids), the MinHash
+# probe's three collects, the survivors pin, the sink (route collect,
+# write), the rollup (3) and one append per state table (3)
+MICRO_BATCH_JOBS = 16
+
+
+def test_micro_batch_spark_jobs_and_sink_columns(spark, tmp_path, monkeypatch):
+    """A micro-batch of quality → exact → MinHash → rollup → parquet sink
+    over non-empty stores runs ``MICRO_BATCH_JOBS`` Spark jobs, give or
+    take the one job of adaptive execution, and the sink and the rollup
+    get exactly the batch's input columns: no feature column leaks."""
+    from fluent_plugin_sql_spark.streaming import stages
+
+    jobs: list[int] = []
+    real_run = stages.run_stages
+
+    def run_stages(filters, followers, df, sink, batch_key):
+        schemas = []
+
+        def checked_sink(out):
+            schemas.append(out.schema)
+            sink(out)
+
+        with spark_jobs(spark) as c:
+            real_run(filters, followers, df, checked_sink, batch_key)
+        jobs.append(c.jobs)
+        assert schemas == [df.schema]
+
+    rolled = []
+    real_absorb = RollupStore.absorb
+
+    def absorb(self, df, key):
+        rolled.append(df.columns)
+        return real_absorb(self, df, key)
+
+    monkeypatch.setattr(stages, "run_stages", run_stages)
+    monkeypatch.setattr(RollupStore, "absorb", absorb)
+    _write_source(spark, tmp_path, 3)
+    _drain(spark, _config(tmp_path), f"{tmp_path}/ckpt")
+
+    assert len(jobs) == 3
+    assert all(MICRO_BATCH_JOBS - 1 <= n <= MICRO_BATCH_JOBS + 1 for n in jobs[1:]), jobs
+    assert rolled == [["doc_id", "text", "ts"]] * 3
+    assert sorted(_sink_ids(spark, tmp_path)) == [0, 1, 2, 3, 4, 6, 9, 10, 12, 15, 16]
 
 
 def test_near_dedup_stream_signs_probes_sinks_then_absorbs(spark, tmp_path, monkeypatch):
