@@ -1276,6 +1276,14 @@ class MinHashDedupStore(_KeyTableStore):
     _LAYOUT = ("num_buckets", "layout")
     # batch-internal buckets above this many docs pair star-wise
     _STAR_BUCKET = 1024
+    # The largest batch, in docs, that a probe matches on the driver
+    # (:meth:`_dup_ids_small`); larger ones run the Spark plan.  Median
+    # ms of 5 alternating runs, driver / Spark, against a 20k-doc store
+    # of the perfbench corpus on a 4-core box: 50 docs 1,535 / 2,235;
+    # 1k 2,438 / 3,285; 2.5k 3,279 / 4,105; 5k 3,823 / 3,973; 10k
+    # 5,494 / 5,662; 16k 6,330 / 6,126.  Past 5k the two are within
+    # 4%, and the driver's Python loops grow with the batch.
+    _DRIVER_DOCS = 5_000
 
     def __init__(
         self,
@@ -1389,34 +1397,27 @@ class MinHashDedupStore(_KeyTableStore):
         map; with ``keep_columns``, ``df``'s own columns plus
         ``h0..h{n-1}`` (:func:`with_minhash_signature`, the stage
         runner's feature pass).  Signing is the probe/absorb cycle's
-        expensive map (O(shingles) per row): pin the result before more
-        than one action reads it, and hand it to BOTH
-        :meth:`probe_dups` and :meth:`absorb` — an explicit caller-owned
-        DataFrame, not hidden store state.  :meth:`process_batch` pins
-        its own; the stage runner pins its whole feature frame once."""
+        expensive map (O(shingles) per row): pin the ``keep_columns``
+        frame once and hand it to :meth:`probe_dups` and, as the
+        survivors, to :meth:`absorb` with ``features`` — an explicit
+        caller-owned DataFrame, not hidden store state.
+        :meth:`process_batch` and the stage runner both do so."""
         if keep_columns:
             return with_minhash_signature(df, text_col, self.num_hashes, self.k)
         return minhash_signatures(df, text_col, id_col, self.num_hashes, self.k)
 
     def probe_dups(
-        self,
-        df: DataFrame,
-        text_col: str,
-        id_col: str,
-        sig: DataFrame | None = None,
-        features: bool = False,
+        self, df: DataFrame, text_col: str, id_col: str, features: bool = False
     ) -> DataFrame:
         """Read-only: ids in ``df`` that are near-dups of the store OR of a
         lower-id row in the same batch.  ``process_batch`` = this + absorb.
-        ``sig``: optionally the result of :meth:`sign` over ``df``, pinned
-        (skips re-signing; ``df`` is then not read).  ``features``: ``df``
-        is the stage runner's pinned feature frame, whose
-        ``h0..h{n-1}`` columns are read as the signatures."""
+        ``features``: ``df`` is a pinned frame that carries
+        ``h0..h{n-1}`` (``sign(keep_columns=True)``, as the stage runner's
+        feature pass), read as the signatures; otherwise ``df`` is
+        signed here and the signatures pinned."""
         if features:
-            sig = self._feature_sig(df, id_col)
-        elif sig is None:
-            sig = self.sign(df, text_col, id_col).localCheckpoint(eager=True)
-        return self._dup_ids(sig)
+            return self._dup_ids(self._feature_sig(df, id_col))
+        return self._dup_ids(self.sign(df, text_col, id_col).localCheckpoint(eager=True))
 
     def _feature_sig(self, df: DataFrame, id_col: str) -> DataFrame:
         """The (doc, h0..h{n-1}) signature rows of a frame that carries
@@ -1431,29 +1432,52 @@ class MinHashDedupStore(_KeyTableStore):
 
     def _dup_ids_small(self, sig: DataFrame) -> DataFrame | None:
         """:meth:`_dup_ids` on the driver, for a batch of at most
-        ``_MAX_PUSHED_KEYS`` band-key rows whose doc ids are ints or
-        strs (else None).  Three collects, and no join, shuffle or
-        broadcast: the batch's band keys with their signatures, the
-        store's band-key rows for those keys, and the stored signatures
-        of the candidates they name (both scans pruned per
-        :class:`_KeyTable`).  Candidates and verification are those of
+        ``_DRIVER_DOCS`` docs whose ids are ints or strs; None (the
+        Spark plan runs) for any other batch, or once the store's rows
+        that collide with the batch pass ``_MAX_PUSHED_KEYS`` (the
+        candidates they name are no more).  Three collects, and no
+        join, shuffle or broadcast: the batch's band keys with their
+        signatures, the store's band-key rows for those keys, and the
+        stored signatures of the candidates they name (both scans
+        pruned per :class:`_KeyTable`).  Candidates and verification are those of
         the Spark plan: band-key collisions, star pairs in a bucket of
         more than ``_STAR_BUCKET`` docs, the lower id kept, and
         :meth:`_near`."""
+        cap = min(self._DRIVER_DOCS * self.bands, _MAX_PUSHED_KEYS)
         packed = f"array({', '.join(self._sig_cols())})"
         bkh = self._BKH
         rows = (
             _band_key_rows(sig, self.num_hashes, self.bands, carry={"_h": packed})
             .selectExpr("doc", "band", "band_key", "_h", self._band_keys.bucket_sql(bkh), bkh)
-            .limit(_MAX_PUSHED_KEYS + 1).collect()
+            .limit(cap + 1).collect()
         )
-        rows = [r for r in rows if r[0] is not None]
-        if len(rows) > _MAX_PUSHED_KEYS or _id_list_sql([r[0] for r in rows]) is None:
+        if len(rows) > cap:
             return None
-        sigs = {r[0]: tuple(r[3]) for r in rows}
+        rows = [r for r in rows if r[0] is not None]
+        if _id_list_sql([r[0] for r in rows]) is None:
+            return None
         buckets: dict[tuple, list] = {}
         for r in rows:
             buckets.setdefault((r[1], r[2]), []).append(r[0])
+        hits = []  # (old doc, its signatures bucket, the batch docs it collides with)
+        if self._exists("band_keys"):
+            keys = {(r[-1], r[-2]) for r in rows}  # (bkh, its bucket)
+            # one partition: a limit over several is collected by one
+            # Spark job per try (the first reads one partition)
+            stored = (
+                self._band_keys.scan_pairs(list(keys))
+                .selectExpr("doc", "band", "band_key", self._signatures.bucket_sql("doc"))
+                .coalesce(1).limit(_MAX_PUSHED_KEYS + 1).collect()
+            )
+            if len(stored) > _MAX_PUSHED_KEYS:
+                return None
+            hits = [
+                (old, b, buckets[(band, key)])
+                for old, band, key, b in stored
+                if old is not None and (band, key) in buckets
+            ]
+        candidates = list({(old, b) for old, b, _ in hits})
+        sigs = {r[0]: tuple(r[3]) for r in rows}
         dups = set()
         for members in buckets.values():
             ds = sorted(members)
@@ -1461,28 +1485,19 @@ class MinHashDedupStore(_KeyTableStore):
                 [(ds[0], x) for x in ds[1:]] if len(ds) > self._STAR_BUCKET
                 else itertools.combinations(ds, 2)
             )
-            dups.update(b for a, b in pairs if self._near(sigs[a], sigs[b]))
-        if self._exists("band_keys"):
-            keys = {(r[-1], r[-2]) for r in rows}  # (bkh, its bucket)
-            stored = self._band_keys.scan_pairs(list(keys)).selectExpr(
-                "doc", "band", "band_key", self._signatures.bucket_sql("doc")
-            ).collect()
-            # (old doc, its signatures bucket, the batch docs it collides with)
-            hits = [
-                (old, b, buckets[(band, key)])
-                for old, band, key, b in stored
-                if old is not None and (band, key) in buckets
-            ]
-            if hits:
-                old_sigs = {
-                    r[0]: tuple(r[1])
-                    for r in self._signatures.scan_pairs(list({(o, b) for o, b, _ in hits}))
-                    .selectExpr("doc", packed).collect()
-                }
-                dups.update(
-                    new for old, _, news in hits for new in news
-                    if old in old_sigs and self._near(sigs[new], old_sigs[old])
-                )
+            for a, b in pairs:
+                if b not in dups and self._near(sigs[a], sigs[b]):
+                    dups.add(b)
+        if candidates:
+            old_sigs = {
+                r[0]: tuple(r[1])
+                for r in self._signatures.scan_pairs(candidates)
+                .selectExpr("doc", packed).collect()
+            }
+            dups.update(
+                new for old, _, news in hits for new in news
+                if old in old_sigs and self._near(sigs[new], old_sigs[old])
+            )
         return _id_frame(self.spark, list(dups), "dup", sig.schema["doc"].dataType)
 
     def _dup_ids(self, sig: DataFrame) -> DataFrame:
@@ -1522,49 +1537,34 @@ class MinHashDedupStore(_KeyTableStore):
         return internal if dup_ids is None else dup_ids.unionByName(internal).distinct()
 
     def absorb(
-        self,
-        survivors: DataFrame,
-        text_col: str,
-        id_col: str,
-        sig: DataFrame | None = None,
-        features: bool = False,
+        self, survivors: DataFrame, text_col: str, id_col: str, features: bool = False
     ) -> None:
         """Mutating half of the split contract: record ``survivors`` (rows
         the caller has already probed AND sunk) as accepted.
 
-        ``sig``: optionally the :meth:`sign` output for a SUPERSET of
-        ``survivors`` (the probe half's batch) — absorb then appends its
-        semi-join on the survivor ids instead of re-signing.  Signing is
-        deterministic per row, so the stored state is bit-identical to
-        the re-signed path; replay safety is unchanged (a replayed
-        caller without the handoff just re-signs).  Without ``sig`` the
-        rows are signed here — a pure map, callable on any
-        replayed/pinned DataFrame.  Either way the survivors'
-        signatures are pinned once, and both tables append from them.
-
-        ``features``: ``survivors`` are the stage runner's pinned
-        survivors, which carry ``h0..h{n-1}`` (``sign(keep_columns=True)``)
-        and which the runner absorbs only when its observed row count
-        is non-zero: absorb appends those columns as they are, with no
-        semi-join and no emptiness job."""
+        ``features``: ``survivors`` are pinned, carry ``h0..h{n-1}``
+        (``sign(keep_columns=True)``) and hold at least one row, as the
+        stage runner's survivors (absorbed only when the runner's
+        observed row count is non-zero) and :meth:`process_batch`'s do:
+        absorb appends those columns as they are, with no re-signing
+        and no emptiness job.  Otherwise the rows are signed here — a
+        pure map, callable on any replayed/pinned DataFrame — and the
+        signatures pinned once, with their row count observed by the
+        same job.  Signing is deterministic per row, so both forms store
+        identical rows."""
         if features:
-            sig_keep = self._feature_sig(survivors, id_col)
-        elif survivors.isEmpty():  # an append of no rows still writes a file
-            return
-        elif sig is None:
-            sig_keep = minhash_signatures(
-                survivors, text_col, id_col, self.num_hashes, self.k
-            ).localCheckpoint(eager=True)
+            sig = self._feature_sig(survivors, id_col)
         else:
-            keep = survivors.select(F.col(id_col).alias("doc"))
-            sig_keep = sig.join(keep, "doc", "left_semi").localCheckpoint(eager=True)
+            sig, rows = pin_counted(self.sign(survivors, text_col, id_col))
+            if not rows:  # an append of no rows still writes a file
+                return
         with self._store_fs.lock("absorb"):
             self._begin_absorb()
             self._band_keys.append(
-                _band_key_rows(sig_keep, self.num_hashes, self.bands)
+                _band_key_rows(sig, self.num_hashes, self.bands)
                 .withColumn("bkh", self._bk_hash())
             )
-            self._signatures.append(sig_keep)
+            self._signatures.append(sig)
 
     def process_batch(self, df: DataFrame, text_col: str, id_col: str) -> DataFrame:
         """Probe + absorb in one call (batch jobs, gate queries): return
@@ -1572,14 +1572,15 @@ class MinHashDedupStore(_KeyTableStore):
         Output columns = input columns.  Streaming callers should use the
         split ``probe_dups`` → sink → ``absorb`` sequence instead — this
         form mutates the store before the caller can sink, so a crash in
-        between drops the batch on replay (see class docstring)."""
-        sig = self.sign(df, text_col, id_col).localCheckpoint(eager=True)
-        dups = self.probe_dups(df, text_col, id_col, sig=sig)
-        survivors = df.join(
-            dups.withColumnRenamed("dup", id_col), id_col, "left_anti"
-        ).localCheckpoint(eager=True)  # pin BEFORE the store mutates
-        self.absorb(survivors, text_col, id_col, sig=sig)
-        return survivors
+        between drops the batch on replay (see class docstring).  Signs
+        once: the probe and the absorb read one pinned signed frame."""
+        signed = self.sign(df, text_col, id_col, keep_columns=True).localCheckpoint(eager=True)
+        dups = self.probe_dups(signed, text_col, id_col, features=True)
+        # pin BEFORE the store mutates
+        survivors, rows = pin_counted(drop_ids(signed, id_col, dups))
+        if rows:
+            self.absorb(survivors, text_col, id_col, features=True)
+        return survivors.select(*df.columns)
 
 
 class ExactDedupStore(_KeyTableStore):
@@ -1603,6 +1604,14 @@ class ExactDedupStore(_KeyTableStore):
     """
 
     _LAYOUT = ("num_buckets", "layout")
+    # The largest batch, in rows, that a probe dedups on the driver
+    # (:meth:`probe_new`); larger ones run :meth:`_probe_new_large`.
+    # Median ms of 5 alternating runs, driver / Spark, against a
+    # 20k-doc store of the perfbench corpus on a 4-core box: 50 rows
+    # 252 / 530; 1k 567 / 985; 5k 501 / 834; 16k 910 / 1,348; 50k
+    # 2,588 / 3,353; 100k 4,193 / 5,536.  Larger batches were not
+    # measured.
+    _DRIVER_ROWS = 100_000
 
     def __init__(self, spark, path: str, num_buckets: int = 256):
         self.spark = spark
@@ -1635,7 +1644,7 @@ class ExactDedupStore(_KeyTableStore):
         ``content_hash`` (md5 of ``text_col``, the stage runner's
         feature pass), which is then read rather than recomputed.
 
-        Up to ``_MAX_PUSHED_KEYS`` rows, one collect brings each row's
+        Up to ``_DRIVER_ROWS`` rows, one collect brings each row's
         id, hash and bucket to the driver.  The lowest id per hash is
         picked there, so the batch-internal dedup is a filter on ids,
         and the store scan pushes the batch's hashes (:class:`_KeyTable`)
@@ -1643,9 +1652,10 @@ class ExactDedupStore(_KeyTableStore):
         survive.  Larger batches dedup in Spark (:meth:`_probe_new_large`)."""
         hashed = df if features else df.withColumn("content_hash", F.md5(F.col(text_col)))
         q = _q(id_col)
+        cap = min(self._DRIVER_ROWS, _MAX_PUSHED_KEYS)
         rows = (
             hashed.selectExpr(q, "content_hash", self._hashes.bucket_sql("content_hash"))
-            .limit(_MAX_PUSHED_KEYS + 1).collect()
+            .limit(cap + 1).collect()
         )
         lowest: dict = {}
         for i, h, _ in rows:
@@ -1653,7 +1663,7 @@ class ExactDedupStore(_KeyTableStore):
                 lowest[h] = i
         dups = [i for i, h, _ in rows if i is not None and h in lowest and i != lowest[h]]
         not_dup = _id_list_sql(dups)
-        if len(rows) > _MAX_PUSHED_KEYS or not_dup is None:
+        if len(rows) > cap or not_dup is None:
             return self._probe_new_large(hashed, id_col)
         firsts = hashed.where(F.expr(
             f"{q} IS NOT NULL AND content_hash IS NOT NULL"
@@ -1702,11 +1712,13 @@ class ExactDedupStore(_KeyTableStore):
         as accepted — the mutating half of the at-least-once split (sink
         BEFORE absorb; see :class:`MinHashDedupStore` docstring).
 
-        ``features``: ``survivors`` are the stage runner's pinned
-        survivors, which carry ``content_hash``, hold one row per hash
-        (the probe kept one) and are absorbed only when the runner's
-        observed row count is non-zero: their hashes append as they
-        are, with no md5, distinct or emptiness job."""
+        ``features``: ``survivors`` are a :meth:`probe_new` result,
+        pinned and of at least one row, as the stage runner's survivors
+        (absorbed only when the runner's observed row count is
+        non-zero) and :meth:`process_batch`'s are: they carry
+        ``content_hash`` and hold one row per hash (the probe kept
+        one), so their hashes append as they are, with no md5, distinct
+        or emptiness job."""
         if features:
             hashes = survivors.select("content_hash")
         elif survivors.isEmpty():  # an append of no rows still writes a file
@@ -1725,13 +1737,11 @@ class ExactDedupStore(_KeyTableStore):
         within the batch by lowest id) and absorb the survivors' content
         hashes.  Output columns = input columns.  Streaming callers
         should sink between ``probe_new`` and ``absorb`` instead."""
-        survivors = (
-            self.probe_new(df, text_col, id_col)
-            .drop("content_hash")
-            .localCheckpoint(eager=True)  # pin BEFORE the store mutates
-        )
-        self.absorb(survivors, text_col, id_col)
-        return survivors
+        # pin BEFORE the store mutates
+        survivors, rows = pin_counted(self.probe_new(df, text_col, id_col))
+        if rows:
+            self.absorb(survivors, text_col, id_col, features=True)
+        return survivors.select(*df.columns)
 
 
 class EmbeddingDedupStore:
@@ -2456,7 +2466,9 @@ class SimHashDedupStore(_KeyTableStore):
         regressed there).  With ``features``, ``df`` is the stage
         runner's pinned feature frame and carries them
         (:meth:`with_token_hashes`); otherwise they are computed here
-        and pinned (eager localCheckpoint)."""
+        and pinned (eager localCheckpoint).  Probe and absorb pin the
+        fold too, so it runs in the pin's parallel tasks, not in the one
+        task of an absorb's append (:meth:`_KeyTable.append`)."""
         if features:
             hs = df.select(F.col(id_col).alias("doc"), "hs")
         else:
@@ -2536,16 +2548,13 @@ class SimHashDedupStore(_KeyTableStore):
     ) -> None:
         """Record ``survivors`` (already probed and sunk) as accepted.
         Re-derives the sketches — a pure map, so the method stays
-        callable on a replayed/pinned DataFrame with no handoff state.
+        callable on a replayed/pinned DataFrame with no handoff state;
+        the sketch pin's observed row count is the emptiness check.
         ``features``: ``survivors`` are the stage runner's pinned
-        survivors, which carry ``hs`` and are absorbed only when the
-        runner's observed row count is non-zero (no emptiness job)."""
-        if features:
-            sk = self._sketch(survivors, text_col, id_col, features=True)
-        elif survivors.isEmpty():  # an append of no rows still writes a file
+        survivors, which carry ``hs``."""
+        sk, rows = pin_counted(self._sketch(survivors, text_col, id_col, features))
+        if not rows:  # an append of no rows still writes a file
             return
-        else:  # pinned, since the append computes its rows in one task
-            sk = self._sketch(survivors, text_col, id_col).localCheckpoint(eager=True)
         blocks = self._block_rows(sk)
         with self._store_fs.lock("absorb"):
             self._begin_absorb()
@@ -2554,10 +2563,12 @@ class SimHashDedupStore(_KeyTableStore):
     def process_batch(self, df: DataFrame, text_col: str, id_col: str) -> DataFrame:
         """Probe + absorb in one call (batch jobs, gate queries): return
         the near-dup-free subset of ``df`` and absorb it.  Streaming
-        callers should sink between ``probe_dups`` and ``absorb``."""
-        dups = self.probe_dups(df, text_col, id_col)
-        survivors = df.join(
-            dups.withColumnRenamed("dup", id_col), id_col, "left_anti"
-        ).localCheckpoint(eager=True)  # pin BEFORE the store mutates
-        self.absorb(survivors, text_col, id_col)
-        return survivors
+        callers should sink between ``probe_dups`` and ``absorb``.
+        Hashes the tokens once: the probe and the absorb read one pinned
+        frame that carries them."""
+        hashed = self.with_token_hashes(df, text_col).localCheckpoint(eager=True)
+        dups = self.probe_dups(hashed, text_col, id_col, features=True)
+        # pin BEFORE the store mutates
+        survivors = drop_ids(hashed, id_col, dups).localCheckpoint(eager=True)
+        self.absorb(survivors, text_col, id_col, features=True)
+        return survivors.select(*df.columns)

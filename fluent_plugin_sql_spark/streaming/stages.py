@@ -281,7 +281,9 @@ def stage_handler(
     bucket);
     compaction keeps probes from decaying into file-open cost.  Per
     batch the text stores cost one feature pin, one survivors pin, the
-    probes' collects and one Spark job per appended table."""
+    probes' collects and one Spark job per appended table (the SimHash
+    store adds the pin of the sketches it folds, in its probe and in
+    its absorb)."""
     batches = [0]
 
     def handle(batch_df: DataFrame, epoch_id: int) -> None:

@@ -1,7 +1,8 @@
 """The streaming feature pass and the store code it reads: MinHash
 signatures as feature columns (bit-identical to ``minhash_signatures``
 on the dirty documents), the MinHash store's driver-side matching of a
-small batch against its Spark plan, the py4j round trips of one probe,
+small batch against its Spark plan and its fallback to that plan past
+the stored-row cap, the py4j round trips of one probe,
 and the candidate count of ``minhash_lsh_dup_pairs`` taken from its pin
 (no count job)."""
 
@@ -116,6 +117,25 @@ def test_small_batch_matching_equals_the_spark_plan(spark, tmp_path, monkeypatch
     assert small == spark_plan
     assert 10 in small and 20 not in small
     assert len(small & {11, 12, 13, 14, 15}) >= 3
+
+
+def test_small_batch_matching_caps_the_store_rows_it_collects(spark, tmp_path, monkeypatch):
+    """Past ``_MAX_PUSHED_KEYS`` stored band-key rows colliding with the
+    batch (templated text), the driver-side match gives up and the Spark
+    plan finds the same dups."""
+    store = MinHashDedupStore(spark, str(tmp_path / "near"), sig_match_frac=0.5)
+    copies = spark.createDataFrame([(i, BASE) for i in range(1, 13)], "doc_id LONG, text STRING")
+    store.absorb(copies, "text", "doc_id")  # 12 copies share every band key
+    batch = _batch(spark).unionByName(
+        spark.createDataFrame([(30, BASE)], "doc_id LONG, text STRING")
+    ).where("doc_id IN (10, 20, 30)")
+    sig = store.sign(batch, "text", "doc_id").localCheckpoint(eager=True)
+    want = {r[0] for r in store._dup_ids(sig).collect()}
+    assert store._dup_ids_small(sig) is not None and want == {10, 30}
+    # the batch's 18 band keys fit; the 72+ stored rows they hit do not
+    monkeypatch.setattr(dedup, "_MAX_PUSHED_KEYS", 20)
+    assert store._dup_ids_small(sig) is None
+    assert {r[0] for r in store._dup_ids(sig).collect()} == want
 
 
 def test_probe_dups_py4j_round_trips_are_bounded(spark, tmp_path):

@@ -75,12 +75,10 @@ def stores(spark, tmp_path_factory):
     return built, batch
 
 
-def _probe(kind, store, batch, sig=None):
-    """The store's probe call; ``sig`` is the MinHash ``sign`` handoff."""
+def _probe(kind, store, batch):
+    """The store's probe call."""
     if kind == "exact":
         return store.probe_new(batch, "text", "doc_id")
-    if kind == "minhash":
-        return store.probe_dups(batch, "text", "doc_id", sig=sig)
     return store.probe_dups(batch, "text", "doc_id")
 
 
@@ -153,7 +151,6 @@ def test_partition_only_fallback_finds_the_same_dups(stores, kind, monkeypatch):
 def test_one_collect_per_pruned_scan(spark, stores, kind, collects, monkeypatch):
     built, batch = stores
     store = built[kind]
-    sig = store.sign(batch, "text", "doc_id") if kind == "minhash" else None
     frame_cls = type(batch)  # the session's concrete DataFrame class
     calls = []
     real_collect = frame_cls.collect
@@ -163,7 +160,7 @@ def test_one_collect_per_pruned_scan(spark, stores, kind, collects, monkeypatch)
         return real_collect(self)
 
     monkeypatch.setattr(frame_cls, "collect", counting_collect)
-    _probe(kind, store, batch, sig)
+    _probe(kind, store, batch)
     assert len(calls) == collects
 
 

@@ -1426,8 +1426,9 @@ def test_brute_force_topk_partial_window_group_limit(spark):
 
 
 def test_minhash_store_sig_handoff_identical(spark, tmp_path):
-    """The sign-once handoff (sign → probe_dups(sig=) → absorb(sig=))
-    must leave the store in EXACTLY the state the re-sign path does —
+    """The sign-once handoff (``sign(keep_columns=True)`` pinned →
+    ``probe_dups(features=True)`` → ``absorb(features=True)``) must
+    leave the store in EXACTLY the state the re-sign path does —
     signing is deterministic per row, so both the probe decisions and
     the appended band_keys/signatures rows must match row-for-row."""
     from fluent_plugin_sql_spark.operators.dedup import MinHashDedupStore
@@ -1455,13 +1456,13 @@ def test_minhash_store_sig_handoff_identical(spark, tmp_path):
     # path B: sign-once handoff
     pb = str(tmp_path / "b")
     sb = MinHashDedupStore(spark, pb, sig_match_frac=0.5)
-    sig = sb.sign(batch, "text", "doc_id")
-    dups_b = {r[0] for r in sb.probe_dups(batch, "text", "doc_id", sig=sig).collect()}
-    surv_b = batch.join(
+    signed = sb.sign(batch, "text", "doc_id", keep_columns=True).localCheckpoint(eager=True)
+    dups_b = {r[0] for r in sb.probe_dups(signed, "text", "doc_id", features=True).collect()}
+    surv_b = signed.join(
         spark.createDataFrame([(d,) for d in dups_b] or [(None,)], "doc_id LONG"),
         "doc_id", "left_anti",
     ).localCheckpoint(eager=True)
-    sb.absorb(surv_b, "text", "doc_id", sig=sig)
+    sb.absorb(surv_b, "text", "doc_id", features=True)
 
     assert dups_a == dups_b == {3}
     for sub in ("band_keys", "signatures"):
